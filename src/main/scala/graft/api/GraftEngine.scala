@@ -4,7 +4,7 @@ import graft.CkptOps
 
 import graft.TestData
 import graft.functions.{MinHashLsh, VectorOps => V}
-import graft.operators.{EmbedDedup, GraphOps, TextAnalysis, TextOps, TrainedQuantize, Vectors}
+import graft.operators.{EmbedDedup, GraphOps, TextAnalysis, TextOps, TrainedQuantize}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

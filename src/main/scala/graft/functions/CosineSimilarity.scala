@@ -39,16 +39,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
-    if (n != y.numElements()) return null
-    var dot = 0.0; var nx = 0.0; var ny = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = x.getDouble(i); val yv = y.getDouble(i)
-      dot += xv * yv; nx += xv * xv; ny += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
+    if (n != y.numElements() ||
+        (0 until n).exists(i => x.isNullAt(i) || y.isNullAt(i))) null
+    else CosineSimilarity.cosine(x.toDoubleArray(), y.toDoubleArray())
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -78,4 +71,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |}
        """.stripMargin
     })
+}
+
+object CosineSimilarity {
+  /** The one fused loop over equal-length vectors: dot, ‖x‖² and ‖y‖²
+    * accumulated left to right. The interpreted path above and the
+    * packed-graph descent ([[graft.operators.BeamDescent]]) call
+    * it; `doGenCode` emits the same loop as Java, so all three agree
+    * bit for bit.
+    */
+  def cosine(x: Array[Double], y: Array[Double]): Double = {
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var i = 0
+    while (i < x.length) {
+      val xv = x(i); val yv = y(i)
+      dot += xv * yv; nx += xv * xv; ny += yv * yv
+      i += 1
+    }
+    dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
 }

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.CkptOps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.TestData
@@ -78,27 +79,6 @@ object AnnSearch {
       .select(col("qid"), col("id"), col("qscore"))
   }
 
-  /** [[beamCut]] for a candidate frame that already CARRIES its
-    * query vector — (qid, id, qv) in, (qid, id, qscore, qv) out
-    * (r19, guide §1.2/§3.1): the descent's beams thread qv through
-    * the hops, so each cut pays ONE broadcast-collect job
-    * (candidates) instead of two (candidates + queries). The beam
-    * stays ≤ |queries|·b rows — qv adds dim doubles per row to a
-    * structurally tiny frame. Values identical to [[beamCut]]: same
-    * corpus join, same r4-quantized cosine (qv per qid is the same
-    * vector), same window cut.
-    */
-  private[graft] def beamCutQ(e: DataFrame, cands: DataFrame,
-                              b: Int): DataFrame = {
-    val wBeam = Window.partitionBy("qid")
-      .orderBy(col("qscore").desc, col("id"))
-    e.join(broadcast(cands), col("vec_id") === col("id"))
-      .withColumn("qscore", r4(V.cosine(col("embedding"), col("qv"))))
-      .withColumn("rn", row_number().over(wBeam))
-      .filter(col("rn") <= b)
-      .select(col("qid"), col("id"), col("qscore"), col("qv"))
-  }
-
   /** HNSW-lite LEVEL-PARAMETERIZED membership (round 17, VERDICT r16
     * #7 — the hierarchy was hard-wired at 2 layers; at 100× corpus
     * the descent wants ⌈log_M n⌉ levels): level k keeps the nodes
@@ -108,11 +88,14 @@ object AnnSearch {
     * and level 1 is BIT-IDENTICAL to the original layer-1 sample
     * (digit 2 == 0 ⇔ the historical 2-digit value % 16 == 0).
     */
-  private[graft] def hnswLayer(e: DataFrame, lvl: Int): DataFrame = {
-    val m = math.pow(16, lvl).toLong
-    e.filter(conv(substring(md5(col("vec_id").cast("string")), 1, lvl + 1),
-      16, 10).cast("long") % m === 0)
-  }
+  private[graft] def hnswLayer(e: DataFrame, lvl: Int): DataFrame =
+    e.filter(hnswLevel(lvl))
+
+  /** The level-`lvl` membership predicate over `vec_id` behind
+    * [[hnswLayer]]. */
+  private def hnswLevel(lvl: Int): Column =
+    conv(substring(md5(col("vec_id").cast("string")), 1, lvl + 1),
+      16, 10).cast("long") % math.pow(16, lvl).toLong === 0
 
   /** Level-1 membership (1/16 hash sample — see [[hnswLayer]]). */
   private[graft] def hnswLayer1(e: DataFrame): DataFrame =
@@ -204,6 +187,72 @@ object AnnSearch {
 
   private[graft] def hnswL1Edges(s: SparkSession, d: String): DataFrame =
     hnswLayerEdges(s, d, 1)
+
+  /** Packed [[BeamDescent]] graphs, broadcast once per (session,
+    * fixture, key family). Each packs only the frames its key reads, so
+    * `ann_graph_topk` never builds HNSW layers. The broadcasts live as
+    * long as the session; freeing them belongs to the explicit
+    * `release()` of ROADMAP item 3.
+    */
+  private val descentMemo = new graft.SessionMemo[Broadcast[BeamDescent.Graph]]
+
+  private def vectorOf(r: Row): (Long, Array[Double]) =
+    r.getLong(0) -> r.getSeq[Double](1).toArray
+
+  /** The HNSW descent: enter at the apex (min id of level 2), walk
+    * levels 2 and 1 with beam 4 for 2 hops on their symmetrized top-3
+    * edges (handing down 1, then 3 nodes), finish with 4 beam-8 hops on
+    * the degree-8 layer-0 search graph ([[hnswL0SearchAdj]] — the r12
+    * recall fix: beam-8 over the degree-3 graph measured recall@5 mean
+    * 0.33 with one dead query) and read out the top 5.
+    */
+  private def hnswDescent(s: SparkSession, d: String): Broadcast[BeamDescent.Graph] =
+    descentMemo.getOrElseUpdate(s,
+      graft.sources.WriteOnce.inputTag(d, "embeddings") + "#hnsw", {
+        val rows = TestData.embeddings(s, d).select(col("vec_id"),
+          col("embedding"), hnswLevel(1), hnswLevel(2)).collect()
+        val Seq(l1, l2) = Seq(2, 3).map(i => rows.collect {
+          case r if r.getBoolean(i) => r.getLong(0) })
+        val edges = hnswLayerEdges(s, d, 2).select(lit(2), col("src"), col("nn"))
+          .union(hnswLayerEdges(s, d, 1).select(lit(1), col("src"), col("nn")))
+          .union(hnswL0SearchAdj(s, d).select(lit(0), col("src"), col("dst")))
+          .collect().groupBy(_.getInt(0))
+          .map { case (l, rs) => l -> rs.map(r => (r.getLong(1), r.getLong(2))).toSeq }
+          .withDefaultValue(Nil)
+        val g = BeamDescent.pack(rows.map(vectorOf),
+          seeds = l2.minOption, seedsSkipQuery = false, Seq(
+            BeamDescent.Level(Some(l2), edges(2), beam = 4, hops = 2, keep = 1),
+            BeamDescent.Level(Some(l1), edges(1), beam = 4, hops = 2, keep = 3),
+            BeamDescent.Level(None, edges(0), beam = 8, hops = 4, keep = 5)))
+        s.sparkContext.broadcast(g)
+      })
+
+  /** The kNN-graph descent: enter at ids < 8 (minus the query), walk 3
+    * beam-8 hops on the fixture's top-3 graph, read out the top 5. */
+  private def knnDescent(s: SparkSession, d: String): Broadcast[BeamDescent.Graph] =
+    descentMemo.getOrElseUpdate(s,
+      graft.sources.WriteOnce.inputTag(d, "embeddings") + "#knn", {
+        val vecs = TestData.embeddings(s, d)
+          .select("vec_id", "embedding").collect().map(vectorOf)
+        val edges = GraphOps.fixtureKnnEdges(s, d).select("a", "b").collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        s.sparkContext.broadcast(BeamDescent.pack(vecs,
+          seeds = vecs.map(_._1).filter(_ < 8), seedsSkipQuery = true,
+          Seq(BeamDescent.Level(None, edges, beam = 8, hops = 3, keep = 5))))
+      })
+
+  /** Search the packed graph for vec_id < 3. The query vectors come
+    * from the packed graph itself, so a call reads no parquet (whose
+    * schema read alone is one more Spark job).
+    */
+  private def descentTop5(s: SparkSession,
+                          g: Broadcast[BeamDescent.Graph]): DataFrame = {
+    import s.implicits._
+    val v = g.value
+    val queries = v.ids.indices.filter(v.ids(_) < 3)
+      .map(i => (v.ids(i), v.vecs(i))).toDF("qid", "qv")
+    BeamDescent.search(queries, g)
+  }
 
   val defs: Map[String, Q] = Map(
     "ann_ivf_topk" -> ((s, d) =>
@@ -698,55 +747,14 @@ object AnnSearch {
     // Graph-index ANN (HNSW/NSW-family): bounded beam search over the
     // stored kNN graph built for graph_triangle_count. Fixed entry
     // seeds (vec_id < 8), hop count H=3 and beam width B=8 make the
-    // search DETERMINISTIC and fully SQL-expressible — each hop is
-    // one equi-join of the (tiny, broadcast) beam against the
-    // adjacency table, then a rescore + top-B cut on the r4-quantized
-    // cosine. At 100 TB the adjacency is a bucketed table and each
-    // hop touches B·degree rows per query — cost is independent of
-    // corpus size, the property that makes graph indexes the
-    // low-latency ANN family. The corpus is NEVER broadcast: every
-    // per-hop join broadcasts the beam/candidate side (hinted, so the
-    // plan survives a 100× corpus without re-planning).
-    // frontierPlanned (r19): the descent's exchanges are all
-    // frontier-bounded (≤ |queries|·B rows), so the whole chain is
-    // built in the non-AQE scope — one scheduling round-trip per
-    // AQE stage was the measured cost (see graft.frontierPlanned).
-    "ann_graph_topk" -> ((s, d) => graft.frontierPlanned(s) {
-      val e = TestData.embeddings(s, d)
-      val edges = GraphOps.fixtureKnnEdges(s, d)
-      val adj = edges.select(col("a").as("src"), col("b").as("dst"))
-        .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      val queries = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val wBeam = Window.partitionBy("qid")
-        .orderBy(col("qscore").desc, col("id"))
-      // the beam carries qv (r19, see beamCutQ): one broadcast-
-      // collect job per cut instead of two
-      def cut(cands: DataFrame, b: Int): DataFrame =
-        beamCutQ(e, cands, b)
-      val entry = queries.crossJoin(
-          e.filter(col("vec_id") < 8).select(col("vec_id").as("id")))
-        .filter(col("id") =!= col("qid"))
-        .select("qid", "id", "qv")
-      // Each hop references the previous beam TWICE (the neighbor
-      // expansion and the union back in) — without materialization
-      // the final plan recomputes beam 0 2^H times. The beam is ≤
-      // |queries|·B rows, so checkpointing it per hop is the 100 TB
-      // shape too (graph searches carry tiny frontier state).
-      var beam = cut(entry, 8).ckpt()
-      for (_ <- 1 to 3) {
-        val nbrs = broadcast(beam).join(adj, col("id") === col("src"))
-          .select(col("qid"), col("dst").as("id"), col("qv"))
-        val cands = beam.select("qid", "id", "qv").union(nbrs)
-          .filter(col("id") =!= col("qid")).distinct()
-        beam = cut(cands, 8).ckpt()
-      }
-      beam.withColumn("rnk", row_number().over(wBeam))
-        .filter(col("rnk") <= 5)
-        .select(col("qid"), col("rnk"), col("id").as("nn_id"),
-                col("qscore").as("cos"))
-        .orderBy("qid", "rnk")
-    }),
+    // search DETERMINISTIC; each hop rescores beam ∪ neighbours and
+    // cuts the top-B on the r4-quantized cosine, so a hop touches
+    // B·degree vectors per query — cost independent of corpus size,
+    // the property that makes graph indexes the low-latency ANN
+    // family. The whole descent runs in one map over the query frame
+    // against the broadcast packed graph (BeamDescent).
+    "ann_graph_topk" -> ((s, d) =>
+      descentTop5(s, knnDescent(s, d))),
 
     // HNSW-LITE BUILD (round 11; LEVEL-PARAMETERIZED round 17,
     // VERDICT r16 #7): the layered kNN graph — the production ANN
@@ -770,97 +778,16 @@ object AnnSearch {
         .orderBy("layer", "src", "rnk")
     }),
 
-    // HNSW-LITE SEARCH (round 11): layered beam descent — start at
-    // the layer-1 apex (min id in the layer: the deterministic
-    // entry point), route 2 greedy beam-4 hops along the SPARSE
-    // layer-1 edges, hand the best layer-1 node down as the entry
-    // for 2 beam-8 hops along the dense layer-0 kNN graph, then
-    // read out the true-cosine top-5. Every hop is one broadcast
-    // candidate join + bounded cut (the ann_graph_topk beam
-    // machinery; frontier state ≤ |queries|·beam rows at any corpus
-    // size, checkpointed per hop). Self may ride the apex seed (a
-    // routing waypoint) but every HOP filters it from candidates,
-    // so the post-hop beams and the readout are self-free —
-    // mirrored. Recall@5 vs brute force pinned in PropertySpec
-    // alongside the layer-law sample-rate pin.
-    // frontierPlanned (r19): see ann_graph_topk — every descent
-    // exchange is frontier-bounded, AQE's per-stage round-trips were
-    // the measured fixed cost (82 jobs → 45; hop FUSION was tried
-    // both under AQE (82→107 jobs, 4.7→6.8 s) and under non-AQE
-    // (stages 79→87, tasks 1298→1961, 3.9→6.1 s) and REVERTED:
-    // column pruning specializes the duplicated beam subtrees, so
-    // exchange/stage reuse never fires and the doubly-referenced
-    // segments re-execute. Per-hop ckpt + non-AQE is the floor.
-    "ann_hnsw_topk" -> ((s, d) => graft.frontierPlanned(s) {
-      val e = TestData.embeddings(s, d)
-      // routing cuts score against each LAYER subset, not the corpus
-      // — every routing candidate id is a member of its level, so a
-      // level's routing jobs scan |corpus|/16^level (measured: the
-      // full-corpus form was the slowest new r11 key). The descent
-      // is LEVEL-PARAMETERIZED (round 17, VERDICT r16 #7): enter at
-      // the TOP level's apex, per level walk 2 beam-4 hops on that
-      // level's top-3 adjacency, hand the best nodes down one level
-      // (1 seed between routing levels, 3 into layer 0 — the r12
-      // recall calibration), finish with 4 beam-8 hops on the
-      // degree-8 layer-0 search graph. Beam-job count is
-      // levels × (1 seed + hops) — structural, never data-sized.
-      val levels = List(2, 1) // top → bottom routing levels
-      val layers = levels.map(l => l -> hnswLayer(e, l).ckpt()).toMap
-      val adjs = levels.map { l =>
-        val le = hnswLayerEdges(s, d, l)
-        l -> le.select(col("src"), col("nn").as("dst"))
-          .union(le.select(col("nn").as("src"), col("src").as("dst")))
-          .distinct()
-          .ckpt() // 2 hop consumers per level (r18): un-checkpointed,
-                  // the symmetrize+distinct exchange re-ran per hop
-      }.toMap
-      // degree-8 SEARCH adjacency (see hnswL0SearchAdj) — the r12
-      // recall fix; the declared build output stays top-3
-      val l0adj = hnswL0SearchAdj(s, d)
-      val queries = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val apex = layers(levels.head).agg(min("vec_id").as("id"))
-      def hop(corpus: DataFrame, beam: DataFrame, adj: DataFrame,
-              b: Int): DataFrame = {
-        // broadcast(beam) (r18, guide §3.1): the frontier is ≤
-        // |queries|·b rows but rides a checkpoint (LogicalRDD, no
-        // size stats), so without the hint the planner sort-merges
-        // and SHUFFLES THE ADJACENCY every hop — the offsets-only
-        // broadcast pattern applied to the beam. The beam carries qv
-        // (r19, see beamCutQ) so the cut pays one broadcast, not two.
-        val nbrs = broadcast(beam).join(adj, col("id") === col("src"))
-          .select(col("qid"), col("dst").as("id"), col("qv"))
-        val cands = beam.select("qid", "id", "qv").union(nbrs)
-          .filter(col("id") =!= col("qid")).distinct()
-        beamCutQ(corpus, cands, b).ckpt()
-      }
-      val wBest = Window.partitionBy("qid")
-        .orderBy(col("qscore").desc, col("id"))
-      // the apex seed may BE a query id — keep it (a routing
-      // waypoint, dropped from candidates at the next hop and absent
-      // from the readout); filtering it here would orphan that query
-      var entrySeed: DataFrame =
-        queries.crossJoin(broadcast(apex)).select("qid", "id", "qv")
-      for (l <- levels) {
-        var route = beamCutQ(layers(l), entrySeed, 4).ckpt()
-        for (_ <- 1 to 2) route = hop(layers(l), route, adjs(l), 4)
-        // hand down: 1 best node between routing levels, 3 into L0
-        val width = if (l == levels.last) 3 else 1
-        entrySeed = route.withColumn("rn", row_number().over(wBest))
-          .filter(col("rn") <= width).select("qid", "id", "qv")
-      }
-      // 3 entries + 4 hops on degree-8 (r12: the degree-3 graph + 2
-      // entries + 3 hops measured recall@5 mean 0.33 with one dead
-      // query; this shape clears the 0.6 floor with every query
-      // >= 0.2 — the PropertySpec pin)
-      var beam = beamCutQ(e, entrySeed, 8).ckpt()
-      for (_ <- 1 to 4) beam = hop(e, beam, l0adj, 8)
-      beam.withColumn("rnk", row_number().over(wBest))
-        .filter(col("rnk") <= 5)
-        .select(col("qid"), col("rnk"), col("id").as("nn_id"),
-          col("qscore").as("cos"))
-        .orderBy("qid", "rnk")
-    }),
+    // HNSW-LITE SEARCH (round 11; LEVEL-PARAMETERIZED round 17):
+    // layered beam descent from the top level's apex down to the
+    // layer-0 search graph (stages in hnswDescent). Routing cuts keep
+    // only members of their level, so the work is structural —
+    // levels × hops × beam·degree per query — never data-sized. Self
+    // may ride the apex seed (a routing waypoint) but every hop drops
+    // it, so the readout is self-free — mirrored. Recall@5 vs brute
+    // force pinned in PropertySpec alongside the layer-law pin.
+    "ann_hnsw_topk" -> ((s, d) =>
+      descentTop5(s, hnswDescent(s, d))),
 
     // HNSW SEARCH-PARAMETER SWEEP (round 13): the tuning curve the
     // flagship HNSW family lacked — ann_probe_sweep gives IVF's
@@ -879,14 +806,10 @@ object AnnSearch {
     // beam vary, exactly HNSW's ef-search knobs. Monotone properties
     // pinned in PropertySpec: n_scanned strictly increases in beam
     // and recall@5 is non-decreasing in beam at fixed entries.
-    // r19 note (measure, don't guess — both attempts REVERTED): the
-    // ann_hnsw_topk wins were tried here too and measured a wash to
-    // WORSE interleaved vs the r18 shape (r18 2.62-2.88 s; with
-    // frontierPlanned + qv-threading 2.91-2.94; with qv-threading
-    // alone 2.82-2.89): the sweep's cost sits in the 6-setting
-    // tagged cutS windows, not the queries broadcasts, and the
-    // non-AQE scope's non-coalesced exchanges (67 → 1076 tasks) eat
-    // the job-count win on these wider frames. Kept at r18 shape.
+    // The sweep stays on the per-hop DataFrame descent: no benchmark
+    // workload runs it, and r19 measured its tagged-frame shape worse
+    // under every re-plan tried (2.62-2.88 s at r18 vs 2.82-2.94 s).
+    // Running its six settings through BeamDescent is open work.
     "ann_hnsw_sweep" -> ((s, d) => {
       import s.implicits._
       val e = TestData.embeddings(s, d)

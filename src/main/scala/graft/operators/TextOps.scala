@@ -2548,7 +2548,6 @@ object TextOps {
 
   private def lshTuningOracle: String = {
     val perR = Seq(2, 3, 6).map { r =>
-      val bands = 18 / r
       s"""b$r AS (
          |${tuningBandsSql(r)}),
          |c$r AS (

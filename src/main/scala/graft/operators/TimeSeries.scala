@@ -4416,7 +4416,6 @@ object TimeSeries {
     // protocol). Additivity CIF_p + CIF_e ≈ 1 − S pinned in
     // EngineApiSpec within micro slack.
     "events_competing_risks" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val pu = TestData.events(s, d)
         .withColumn("ts_us", unix_micros(col("ts")))
         .groupBy("user_id")

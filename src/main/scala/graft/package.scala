@@ -30,39 +30,4 @@ package object graft {
       df.localCheckpoint(eager = false)
     }
   }
-
-  /** Build a STRUCTURALLY FRONTIER-BOUNDED plan chain without
-    * adaptive query execution (r19, guide §1.2 — job count).
-    *
-    * Rationale: AQE materializes every Exchange as its own query
-    * stage — one driver scheduling round-trip per stage, SEQUENTIAL
-    * along a dependency chain, and (with lazy localCheckpoint) the
-    * stages of each `.ckpt()` site finalize eagerly at construction.
-    * For an iterative beam/frontier descent every exchange is
-    * provably tiny (≤ |queries|·beam rows at ANY corpus size — the
-    * same boundedness argument behind `broadcast(beam)`), so
-    * runtime re-optimization has nothing to improve; the round
-    * trips are pure cost. Measured on ann_hnsw_topk (sf0.1,
-    * local[32], with the beamCutQ qv-threading): 82 → 24 jobs,
-    * interleaved A/B medians 4.20-4.35 → 2.84-2.87 s — identical
-    * values (oracle-diffed both scales). The toggle is SCOPED to the
-    * construction of the bounded chain and restored in `finally`
-    * (the withStateFanout/withSkewJoinConf precedent); corpus-sized
-    * scans inside the chain ride broadcast joins map-side, so no
-    * data-sized exchange loses AQE handling. The final readout
-    * DataFrame is physically planned at action time, AFTER the
-    * scope exits, so consumers keep AQE.
-    *
-    * This is deliberately NOT a local[32] tune: on a cluster the
-    * per-stage driver round-trip is strictly more expensive, and
-    * the frontier stays ≤ |queries|·beam there too.
-    */
-  def frontierPlanned[T](s: org.apache.spark.sql.SparkSession)
-                        (body: => T): T = {
-    val k = "spark.sql.adaptive.enabled"
-    val saved = s.conf.getOption(k)
-    s.conf.set(k, "false")
-    try body
-    finally saved.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-  }
 }

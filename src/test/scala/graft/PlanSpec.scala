@@ -442,9 +442,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graph ANN beam search broadcasts the beam, never the corpus") {
-    // ann_graph_topk checkpoints each (tiny) beam between hops, so
-    // the declared key's final plan is checkpoint scans; the per-hop
-    // scoring shape is pinned on the exposed pre-checkpoint hop.
+    // The DataFrame beam cut behind GraftEngine.graphSearch and
+    // ann_hnsw_sweep (which checkpoint each beam between hops); the
+    // per-hop scoring shape is pinned on the exposed pre-checkpoint cut.
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val e = TestData.embeddings(spark, sfDir)

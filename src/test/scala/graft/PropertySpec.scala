@@ -602,26 +602,96 @@ class PropertySpec extends SparkSpec {
       "every query must produce results")
   }
 
-  test("HNSW descent job count is structural: levels x (seed + hops) + layer cuts") {
-    // VERDICT r16 #7: the level-parameterized descent's cost is a
-    // FIXED number of frontier-sized beam jobs — never data-sized.
-    // Each beamCut/hop/layer-subset checkpoints exactly once, so the
-    // CkptAudit interceptor counts the structure: 2 routing levels x
-    // (1 seed cut + 2 hops) + layer-0 (1 entry cut + 4 hops) + the 2
-    // layer-subset checkpoints + the 2 routing-adjacency checkpoints
-    // (r18) = 15. Memos are warmed first so only the key's own
-    // lambda records.
-    AnnSearch.defs("ann_hnsw_topk")(spark, sfDir) // warm the memos
-    val buf = scala.collection.mutable.Buffer[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-    CkptAudit.sink = buf
-    try AnnSearch.defs("ann_hnsw_topk")(spark, sfDir)
-    finally CkptAudit.sink = null
-    // r18: +2 — the two routing-level adjacencies checkpoint once
-    // each (their symmetrize+distinct exchange previously re-ran in
-    // every hop); still structural, never data-sized.
-    assert(buf.length === 15,
-      s"descent checkpoint count drifted (structure changed?): ${buf.length}")
+  test("graph ANN descents run in at most 3 Spark jobs and no checkpoint") {
+    // BeamDescent walks the broadcast packed graph inside the one job
+    // that maps the sorted query frame: a call pays the sort's range
+    // sample, its map stage and the result stage, never a job per hop
+    // (the per-hop DataFrame descent ran 26 and 12). Memos are warmed
+    // first so only the keys' own calls count.
+    val keys = Seq("ann_hnsw_topk", "ann_graph_topk")
+    keys.foreach(k => AnnSearch.defs(k)(spark, sfDir).collect())
+    val sc = spark.sparkContext
+    // LiveListenerBus.waitUntilEmpty is Spark-internal: reach it by
+    // reflection so every onJobStart of the call has been delivered
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try keys.foreach { k =>
+      val ckpts = scala.collection.mutable.Buffer[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+      jobs.set(0)
+      CkptAudit.sink = ckpts
+      try AnnSearch.defs(k)(spark, sfDir).collect()
+      finally CkptAudit.sink = null
+      drain()
+      assert(jobs.get >= 1 && jobs.get <= 3, s"$k ran ${jobs.get} Spark jobs")
+      assert(ckpts.isEmpty, s"$k recorded ${ckpts.length} .ckpt() sites")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("BeamDescent equals GraftEngine.graphSearch row for row") {
+    // graphSearch keeps the per-hop DataFrame descent (AnnSearch.
+    // beamCut), so it is the reference for the packed kernel. Query
+    // ids lie outside the corpus (graphSearch never drops the query's
+    // own id). Generated: isolated nodes, seeds without neighbours or
+    // without vectors, edges to missing ids, beams wider than the
+    // reachable set, 0 hops, zero vectors (NaN cosine, r4 0.0), empty
+    // query frames, and coarse {-1, 0, 1} vectors whose r4 ties pin the
+    // id-asc tie-break.
+    import org.scalacheck.{Gen, Prop, Test => SC}
+    import org.scalacheck.Prop.propBoolean
+    val engine = new graft.api.GraftEngine(spark)
+    val gen = for {
+      n <- Gen.choose(1, 60)
+      dim <- Gen.choose(2, 8)
+      coarse <- Gen.oneOf(true, false)
+      elem = if (coarse) Gen.choose(-1, 1).map(_.toDouble)
+             else Gen.choose(-1.0, 1.0)
+      vec = Gen.frequency(1 -> Gen.const(List.fill(dim)(0.0)),
+                          8 -> Gen.listOfN(dim, elem))
+      vs <- Gen.listOfN(n, vec)
+      id = (i: Int) => 3L * i // sparse ids: id order is not position
+      nEdges <- Gen.choose(0, 2 * n)
+      edges <- Gen.listOfN(nEdges,
+        Gen.zip(Gen.choose(0, n), Gen.choose(0, n - 1)))
+      seeds <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.choose(0, n)))
+      qs <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, vec))
+      beam <- Gen.choose(1, 10)
+      hops <- Gen.choose(0, 3)
+      k <- Gen.choose(1, 10)
+    } yield (vs.zipWithIndex.map { case (v, i) => (id(i), v) },
+      edges.map { case (a, b) => (id(a), id(b)) }, seeds.distinct.map(id),
+      qs.zipWithIndex.map { case (v, j) => (1000L + j, v) }, beam, hops, k)
+    // no shrinking: every shrink step would rerun both Spark descents
+    val prop = Prop.forAllNoShrink(gen) {
+      case (vecs, edges, seeds, qs, beam, hops, k) =>
+        val queries = qs.toDF("qid", "qv")
+        val entry = (for ((q, _) <- qs; e <- seeds) yield (q, e)).toDF("qid", "id")
+        val ref = engine.graphSearch(vecs.toDF("id", "embedding"),
+            edges.toDF("a", "b"), queries, entry, hops, beam, k)
+          .select("qid", "rnk", "id", "cos").as[(Long, Int, Long, Double)]
+          .collect().sortBy(r => (r._1, r._2)).toSeq
+        val g = spark.sparkContext.broadcast(BeamDescent.pack(
+          vecs.map { case (i, v) => (i, v.toArray) }, seeds,
+          seedsSkipQuery = false,
+          Seq(BeamDescent.Level(None, edges, beam, hops, k))))
+        val got = try BeamDescent.search(queries, g)
+            .as[(Long, Int, Long, Double)].collect().toSeq
+          finally g.destroy()
+        (got == ref) :| s"kernel $got\nreference $ref"
+    }
+    val res = SC.check(SC.Parameters.default.withMinSuccessfulTests(30)
+      .withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("neighbor jaccard: bounded by min degree, in (0, 1], consistent with wedges") {

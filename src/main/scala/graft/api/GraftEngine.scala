@@ -70,8 +70,14 @@ class GraftEngine(val spark: SparkSession) {
   /** Build an IVF index: assign every vector to its nearest centroid
     * and EAGERLY write cluster-partitioned parquet (vectors included,
     * so [[ivfSearch]] can read the index back). Returns the written
-    * assignment. This is the one eager method on this class — it is
-    * a sink, not a plan.
+    * assignment, one row per corpus row. This is the one eager method
+    * on this class — it is a sink, not a plan.
+    *
+    * Layout: one file per inverted list. The assignment is hash-
+    * repartitioned by `cluster` before the partitioned write, so one
+    * task writes each `cluster=<k>` directory; without it every input
+    * split would write a file into every cluster (splits × k files,
+    * and every probe opens all of them).
     */
   def buildIvfIndex(corpus: DataFrame, centroids: DataFrame,
                     path: String): DataFrame = {
@@ -80,7 +86,8 @@ class GraftEngine(val spark: SparkSession) {
       Seq("vec_id", "embedding"))
       .withColumnRenamed("vec_id", "id")
       .select("id", "embedding", "cluster", "dist")
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(path)
+    assigned.repartition(col("cluster"))
+      .write.mode("overwrite").partitionBy("cluster").parquet(path)
     assigned
   }
 
@@ -93,12 +100,8 @@ class GraftEngine(val spark: SparkSession) {
                 queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val index = spark.read.parquet(indexPath)
     val q = queries.select(col("id").as("qid"), col("embedding").as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("qdist", V.sqDist(col("qv"), col("cv")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nProbe)
-      .select(col("qid"), col("qv"), col("cid").as("probe_cluster"))
+    val probes = V.nearestCentroids(q, col("qv"), centroids, Seq("qid", "qv"), nProbe)
+      .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
     val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
     index.join(broadcast(probes), col("cluster") === col("probe_cluster"))
       .filter(col("id") =!= col("qid"))

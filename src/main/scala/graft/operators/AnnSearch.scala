@@ -43,12 +43,8 @@ object AnnSearch {
     // query side: 5 queries, each probing its 2 nearest centroids
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("qdist", V.sqDist(col("qv"), col("cv")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 2)
-      .select(col("qid"), col("qv"), col("cid").as("probe_cluster"))
+    val probes = V.nearestCentroids(queries, col("qv"), cents, Seq("qid", "qv"), 2)
+      .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
     // search only the probed partitions
     val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
     assigned.join(broadcast(probes), col("cluster") === col("probe_cluster"))
@@ -150,14 +146,10 @@ object AnnSearch {
     val assigned = V.assignToCentroids(corpus, cents,
         Seq("vec_id", "embedding"))
       .select(col("vec_id"), col("embedding"), col("cluster"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-    val probes = queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("qdist", V.sqDist(col("qv"), col("cv")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 2)
-      .select(col("qid"), col("qv"), col("cid").as("probe_cluster"))
+    val probes = V.nearestCentroids(
+        queries.select(col("vec_id").as("qid"), col("embedding").as("qv")),
+        col("qv"), cents, Seq("qid", "qv"), 2)
+      .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
     val topk = udaf(new graft.functions.TopKByScore(k))
     assigned
       .join(probes.hint("shuffle_hash"),
@@ -279,12 +271,8 @@ object AnnSearch {
           .select(col("vec_id"), col("embedding"), col("cluster"))
       val queries = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val wProbe = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-      val probes = queries.crossJoin(broadcast(cents))
-        .withColumn("qdist", V.sqDist(col("qv"), col("cv")))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 2)
-        .select(col("qid"), col("qv"), col("cid").as("probe_cluster"))
+      val probes = V.nearestCentroids(queries, col("qv"), cents, Seq("qid", "qv"), 2)
+        .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
       val wTop = Window.partitionBy("qid")
         .orderBy(col("score").desc, col("vec_id"))
       assigned.join(broadcast(probes), col("cluster") === col("probe_cluster"))
@@ -462,12 +450,9 @@ object AnnSearch {
         .withColumn("rnk", row_number().over(wTruth))
         .filter(col("rnk") <= 5)
         .select(col("qid").as("tq"), col("vec_id").as("tn"))
-      val wProbe = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-      val probeRanks = queries.crossJoin(broadcast(cents))
-        .withColumn("qdist", V.sqDist(col("qv"), col("cv")))
-        .withColumn("pr", row_number().over(wProbe))
-        .select(col("qid"), col("qv"), col("cid").as("probe_cluster"),
-          col("pr"))
+      val probeRanks = V.nearestCentroids(queries, col("qv"), cents, Seq("qid", "qv"), 4)
+        .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"),
+          col("rank").as("pr"))
       val sweep = s.range(1, 5).select(col("id").cast("int").as("np"))
       val probes = probeRanks.crossJoin(sweep).filter(col("pr") <= col("np"))
       val wTop = Window.partitionBy("np", "qid")
@@ -681,12 +666,8 @@ object AnnSearch {
       val stored = graft.sources.IndexStore.readIvfIndex(s, d)
       val queries = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val wProbe = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-      val probes = queries.crossJoin(broadcast(cents))
-        .withColumn("qdist", V.sqDist(col("qv"), col("cv")))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 2)
-        .select(col("qid"), col("qv"), col("cid").as("probe_cluster"))
+      val probes = V.nearestCentroids(queries, col("qv"), cents, Seq("qid", "qv"), 2)
+        .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
       val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
       stored.join(broadcast(probes), col("cluster") === col("probe_cluster"))
         .filter(col("vec_id") =!= col("qid"))

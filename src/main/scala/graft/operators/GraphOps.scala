@@ -381,19 +381,15 @@ object GraphOps {
 
   private[graft] def directedKnn(s: SparkSession, d: String,
                                  k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.functions.{VectorOps => V}
     val e = TestData.embeddings(s, d)
     val cents = Vectors.fixedCentroids(e)
     val assigned = V.assignToCentroids(e, cents, Seq("vec_id", "embedding"))
       .select(col("vec_id"), col("embedding"), col("cluster"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("qdist"), col("cid"))
-    val probes = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("qdist", V.sqDist(col("qv"), col("cv")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 2)
-      .select(col("qid"), col("qv"), col("cid").as("probe_cluster"))
+    val probes = V.nearestCentroids(
+        e.select(col("vec_id").as("qid"), col("embedding").as("qv")),
+        col("qv"), cents, Seq("qid", "qv"), 2)
+      .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
     // Top-3 per query via the bounded-heap Aggregator (same tie
     // protocol as the window form — score DESC, id ASC — so the
     // oracle's row_number formulation is unchanged): the candidate

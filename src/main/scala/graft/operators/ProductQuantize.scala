@@ -39,14 +39,11 @@ object ProductQuantize {
     subSplit(e.filter(col("vec_id") < K))
       .select(col("sub"), col("vec_id").as("code"), col("sv").as("cw"))
 
-  /** Nearest-codeword assignment: (vec_id, sub, code, dist). */
+  /** Nearest-codeword assignment: (vec_id, sub, code, dist), dist the
+    * squared L2 to the codeword.
+    */
   private[graft] def assignCodes(e: DataFrame): DataFrame =
-    subSplit(e).join(broadcast(codebook(e)), "sub")
-      .withColumn("d", V.sqDist(col("sv"), col("cw")))
-      .groupBy("vec_id", "sub")
-      .agg(min(struct(col("d"), col("code"))).as("m"))
-      .select(col("vec_id"), col("sub"),
-              col("m.code").as("code"), col("m.d").as("dist"))
+    TrainedQuantize.encodeErr(e, codebook(e))
 
   val defs: Map[String, Q] = Map(
     "vec_pq_encode" -> ((s, d) => {
@@ -125,13 +122,12 @@ object ProductQuantize {
       val cb = sub.filter(col("vec_id") < K)
         .select(col("m").as("cm"), col("sub").as("csub"),
           col("vec_id").as("code"), col("sv").as("cw"))
-      val asg = sub.join(broadcast(cb),
-          col("m") === col("cm") && col("sub") === col("csub"))
-        .withColumn("dd", V.sqDist(col("sv"), col("cw")))
-        .groupBy("m", "vec_id", "sub")
-        .agg(min(struct(col("dd"), col("code"))).as("best"))
+      val asg = V.nearestCentroids(sub, col("sv"),
+          cb.select(col("cm").as("m"), col("csub").as("sub"),
+            col("code").as("cid"), col("cw").as("cv")),
+          Seq("m", "vec_id", "sub"), by = Seq("m", "sub"))
         .select(col("m"), col("vec_id"), col("sub"),
-          col("best.code").as("code"), col("best.dd").as("dist"))
+          col("cluster").as("code"), col("d2").as("dist"))
         .ckpt() // consumers: distortion + ADC codes
       val distortion = asg
         .withColumn("d_u", floor(col("dist") * 1000000 + 0.5).cast("long"))
@@ -257,13 +253,12 @@ object ProductQuantize {
       val cb = sub.filter(col("vec_id") < K)
         .select(col("m").as("cm"), col("sub").as("csub"),
           col("vec_id").as("code"), col("sv").as("cw"))
-      val asg = sub.join(broadcast(cb),
-          col("m") === col("cm") && col("sub") === col("csub"))
-        .withColumn("dd", V.sqDist(col("sv"), col("cw")))
-        .groupBy("m", "vec_id", "sub")
-        .agg(min(struct(col("dd"), col("code"))).as("best"))
+      val asg = V.nearestCentroids(sub, col("sv"),
+          cb.select(col("cm").as("m"), col("csub").as("sub"),
+            col("code").as("cid"), col("cw").as("cv")),
+          Seq("m", "vec_id", "sub"), by = Seq("m", "sub"))
         .select(col("m"), col("vec_id"), col("sub"),
-          col("best.code").as("code"))
+          col("cluster").as("code"))
       val dtable = sub.filter(col("vec_id") < 5)
         .select(col("m").as("qm"), col("sub").as("qsub"),
           col("vec_id").as("pqid"), col("sv").as("qsv"))
@@ -315,10 +310,8 @@ object ProductQuantize {
       val assigned = V.assignToCentroids(e, cents, Seq("vec_id"))
         .select("vec_id", "cluster")
       val qv = e.filter(col("vec_id") === 42).select(col("embedding").as("qv"))
-      val probes = cents.crossJoin(broadcast(qv))
-        .withColumn("qd", V.sqDist(col("cv"), col("qv")))
-        .orderBy(col("qd"), col("cid")).limit(2)
-        .select(col("cid").as("probe_cluster"))
+      val probes = V.nearestCentroids(qv, col("qv"), cents, Nil, 2)
+        .select(col("cluster").as("probe_cluster"))
       val probedVecs = assigned
         .join(broadcast(probes), col("cluster") === col("probe_cluster"))
         .select("vec_id")

@@ -428,12 +428,11 @@ object TrainedQuantize {
     * codebook: (vec_id, sub, code, dist) — the shared encode shape.
     */
   private[graft] def encodeErr(e: DataFrame, codebook: DataFrame): DataFrame =
-    ProductQuantize.subSplit(e).join(broadcast(codebook), "sub")
-      .withColumn("d", V.sqDist(col("sv"), col("cw")))
-      .groupBy("vec_id", "sub")
-      .agg(min(struct(col("d"), col("code"))).as("m"))
+    V.nearestCentroids(ProductQuantize.subSplit(e), col("sv"),
+        codebook.select(col("sub"), col("code").as("cid"), col("cw").as("cv")),
+        Seq("vec_id", "sub"), by = Seq("sub"))
       .select(col("vec_id"), col("sub"),
-              col("m.code").as("code"), col("m.d").as("dist"))
+              col("cluster").as("code"), col("d2").as("dist"))
 
   // Oracle-omitted by design (iterative k-means); see TrainedSpec for
   // the trained-beats-fixed distortion properties.

@@ -21,9 +21,10 @@ import graft.functions.{VectorCentroid, VectorOps => V}
   *     blocking key, never full cross-product; the LSH variant in
   *     §2.J is the declared 100 TB escape hatch.
   *   - `kmeans_assign_fixed` is the IVF coarse quantizer: broadcast
-  *     k centroids, one pass over the corpus, argmin by windowless
-  *     struct-min — this plus `partitionBy(cluster)` parquet is the
-  *     reference's S4 index build restated as a Spark pipeline.
+  *     the packed k centroids, one map-side pass over the corpus with
+  *     the nearest-centroid kernel — this plus `partitionBy(cluster)`
+  *     parquet is the reference's S4 index build restated as a Spark
+  *     pipeline.
   */
 object Vectors {
   type Q = (SparkSession, String) => DataFrame
@@ -346,8 +347,8 @@ object Vectors {
     }),
 
     // IVF coarse quantization with fixed centroids (= vectors 0..3):
-    // broadcast centroids, argmin via lexicographic struct-min — one
-    // corpus pass, no window shuffle.
+    // broadcast packed centroids, argmin by the nearest-centroid
+    // kernel — one map-side corpus pass, no shuffle.
     "kmeans_assign_fixed" -> ((s, d) => {
       val e = TestData.embeddings(s, d)
       V.assignToCentroids(e, Vectors.fixedCentroids(e), Seq("vec_id"))
@@ -499,14 +500,10 @@ object Vectors {
       val anchors = e.filter(col("vec_id") < 100)
         .select(col("vec_id").as("aid"), col("label").as("albl"),
           col("embedding").as("av"))
-      val wProbe = Window.partitionBy("aid")
-        .orderBy(col("qdist"), col("cid"))
-      val probes = anchors.crossJoin(broadcast(cents))
-        .withColumn("qdist", V.sqDist(col("av"), col("cv")))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 2)
+      val probes = V.nearestCentroids(anchors, col("av"), cents,
+          Seq("aid", "albl", "av"), 2)
         .select(col("aid"), col("albl"), col("av"),
-          col("cid").as("probe_cluster"))
+          col("cluster").as("probe_cluster"))
       val scored = assigned
         .join(probes.hint("shuffle_hash"),
           col("cluster") === col("probe_cluster"))

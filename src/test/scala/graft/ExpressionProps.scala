@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSimilarity, SortedIntersectCount}
+import graft.functions.{CosineSimilarity, SortedIntersectCount, SquaredL2}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
@@ -10,7 +10,9 @@ import org.scalacheck.Prop.propBoolean
 /** ScalaCheck properties for the custom Catalyst expressions,
   * evaluated at the expression level (interpreted eval; codegen
   * parity is covered by the query-level suites which run through
-  * whole-stage codegen).
+  * whole-stage codegen). `sq_dist` is also evaluated through a
+  * DataFrame in a session that forbids the interpreted fallback, so
+  * its generated code is compared too.
   */
 object ExpressionProps extends Properties("graft.expressions") {
 
@@ -50,6 +52,86 @@ object ExpressionProps extends Properties("graft.expressions") {
     Prop.forAll(vec, Gen.choose(0.1, 100.0)) { (a, k) =>
       val scaled = a.map(_ * k)
       math.abs(cosEval(scaled, a).asInstanceOf[Double] - 1.0) < 1e-9
+    }
+
+  // ---- squared L2 ----
+
+  private val l2Elem: Gen[java.lang.Double] = Gen.frequency(
+    40 -> Gen.choose(-10.0, 10.0).map(Double.box),
+    1 -> Gen.const(null), 1 -> Gen.const(Double.NaN),
+    1 -> Gen.const(Double.PositiveInfinity),
+    1 -> Gen.const(Double.NegativeInfinity), 1 -> Gen.const(-0.0))
+
+  private val l2Vec: Gen[Seq[java.lang.Double]] = Gen.frequency(
+    1 -> Gen.const(null), 1 -> Gen.const(Seq.empty),
+    12 -> Gen.choose(1, 64).flatMap(Gen.listOfN(_, l2Elem)))
+
+  // b mostly matches a's length, so most pairs are non-NULL
+  private val l2Pair: Gen[(Seq[java.lang.Double], Seq[java.lang.Double])] =
+    for {
+      a <- l2Vec
+      b <- Gen.frequency(1 -> l2Vec,
+        3 -> Gen.listOfN(Option(a).fold(0)(_.length), l2Elem))
+    } yield (a, b)
+
+  private def l2Literal(v: Seq[java.lang.Double]): Literal =
+    Literal(if (v == null) null
+            else new org.apache.spark.sql.catalyst.util.GenericArrayData(v.toArray[Any]),
+            ArrayType(DoubleType))
+
+  // generated code that fails to compile throws instead of silently
+  // running the interpreted path
+  private lazy val codegenOnly = {
+    val s = SparkSpec.session.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
+
+  // ARRAY<FLOAT> copies of each pair (af, bf) check the implicit cast:
+  // the kernel must equal the HOF over the columns widened to
+  // ARRAY<DOUBLE>, never read 4-byte elements as doubles.
+  private def floats(v: Seq[java.lang.Double]): Seq[java.lang.Float] =
+    if (v == null) null
+    else v.map(d => if (d == null) null else java.lang.Float.valueOf(d.floatValue))
+
+  property("sq_dist is bit-identical to the HOF form, interpreted and codegen'd") =
+    Prop.forAllNoShrink(Gen.choose(1, 30).flatMap(Gen.listOfN(_, l2Pair))) { pairs =>
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.functions.col
+      import org.apache.spark.sql.types.{FloatType, StructField, StructType}
+      val spark = codegenOnly
+      val schema = StructType(Seq(StructField("id", LongType),
+        StructField("a", ArrayType(DoubleType)), StructField("b", ArrayType(DoubleType)),
+        StructField("af", ArrayType(FloatType)), StructField("bf", ArrayType(FloatType))))
+      // an RDD source keeps the projection out of local-relation
+      // constant folding, so the kernel runs in whole-stage codegen
+      val rows = pairs.zipWithIndex.map { case ((a, b), i) =>
+        Row(i.toLong, a, b, floats(a), floats(b)) }
+      val wide = ArrayType(DoubleType)
+      val got = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        .select(col("id"),
+          graft.functions.VectorOps.sqDist(col("a"), col("b")),
+          VectorReference.sqDistHof(col("a"), col("b")),
+          graft.functions.VectorOps.sqDist(col("af"), col("bf")),
+          VectorReference.sqDistHof(col("af").cast(wide), col("bf").cast(wide)))
+        .collect().sortBy(_.getLong(0))
+      // Raw bits, except that every NaN is one NaN (doubleToLongBits):
+      // the JVM leaves the sign and payload of a NaN result open, and
+      // when a propagated NaN meets a generated one (Inf − Inf) the JIT
+      // may commute the add and return either.
+      def bits(r: Row, i: Int): Option[Long] =
+        if (r.isNullAt(i)) None
+        else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+      def bitsOf(v: Any): Option[Long] =
+        Option(v).map(d => java.lang.Double.doubleToLongBits(d.asInstanceOf[Double]))
+      val bad = got.filter { r =>
+        val (a, b) = pairs(r.getLong(0).toInt)
+        val interpreted = bitsOf(SquaredL2(l2Literal(a), l2Literal(b)).eval(null))
+        bits(r, 1) != bits(r, 2) || interpreted != bits(r, 2) || bits(r, 3) != bits(r, 4)
+      }
+      (got.length == pairs.length && bad.isEmpty) :|
+        s"rows ${got.length}/${pairs.length}; mismatches: ${bad.mkString("; ")}"
     }
 
   private val sortedLongs: Gen[Array[Long]] =

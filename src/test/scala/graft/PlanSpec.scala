@@ -425,6 +425,61 @@ class PlanSpec extends SparkSpec {
     assert(line.contains("*("), s"cosine projection fell out of codegen: $line")
   }
 
+  test("IVF vector math runs as codegen'd kernels, never interpreted HOFs") {
+    // sq_dist and nearest_centroid replaced aggregate(zip_with(..))
+    // HOFs (CodegenFallback: boxed per element, operator pulled out of
+    // whole-stage codegen) and an assignment that grouped on
+    // (vec_id, embedding) — a SortAggregate whose comparator re-ran
+    // the array-key normalization on every comparison. Checkpointed
+    // stages are planned too (CkptAudit), and AQE is off so the
+    // physical plans carry their codegen stages without running. The
+    // index write runs with the interpreted fallback off: generated
+    // code that fails to compile fails the test.
+    import org.apache.spark.sql.functions.col
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.codegen.fallback", "false")
+    s2.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val index = java.nio.file.Files.createTempDirectory("ivf_layout").toString
+    val rec = scala.collection.mutable.ArrayBuffer[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+    CkptAudit.sink = rec
+    val built = try {
+      val fromKeys = Seq("kmeans_lloyd", "triplet_mine_bucketed", "ann_ivf_pq_topk")
+        .map(k => k -> SparkEntry.queries(k)(s2, sfDir))
+      val e = TestData.embeddings(s2, sfDir)
+        .select(col("vec_id").as("id"), col("embedding"))
+      val cents = e.filter(col("id") < 8)
+        .select(col("id").as("cid"), col("embedding").as("cv"))
+      val engine = new graft.api.GraftEngine(s2)
+      val assigned = engine.buildIvfIndex(e, cents, index)
+      fromKeys ++ Seq("buildIvfIndex" -> assigned,
+        "ivfSearch" -> engine.ivfSearch(index, cents, e.filter(col("id") < 5), 5, 2))
+    } finally CkptAudit.sink = null
+    val plans = built.map { case (k, df) => k -> df.queryExecution.executedPlan.toString } ++
+      rec.zipWithIndex.map { case (p, i) =>
+        s"checkpointed stage $i" -> org.apache.spark.sql.graft.Bridge.dataset(s2, p)
+          .queryExecution.executedPlan.toString }
+    val hof = """\b(zip_with|aggregate)\(""".r
+    for ((k, p) <- plans) {
+      assert(!p.contains("SortAggregate"), s"$k plans a SortAggregate:\n$p")
+      assert(!p.toLowerCase.contains("knownfloatingpointnormalized"),
+        s"$k groups or joins on normalized float keys:\n$p")
+      assert(hof.findFirstIn(p).isEmpty, s"$k evaluates an interpreted vector HOF:\n$p")
+      for (line <- p.linesIterator
+           if line.contains("sq_dist(") || line.contains("nearest_centroid("))
+        assert(line.contains("*("), s"$k: kernel projection fell out of codegen: $line")
+    }
+    val all = plans.map(_._2).mkString("\n")
+    assert(all.contains("nearest_centroid(") && all.contains("sq_dist("), all.take(2000))
+    // the facade index holds one file per inverted list
+    val dirs = new java.io.File(index).listFiles().filter(_.getName.startsWith("cluster="))
+    assert(dirs.length == 8, dirs.map(_.getName).mkString(", "))
+    for (d <- dirs)
+      assert(d.list().count(_.endsWith(".parquet")) == 1,
+        s"${d.getName} holds ${d.list().mkString(", ")}")
+  }
+
   test("partition-scoped merge reads only touched partitions (pruned scan)") {
     import spark.implicits._
     val dir = java.nio.file.Files

@@ -694,6 +694,97 @@ class PropertySpec extends SparkSpec {
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
+  test("assignToCentroids and the n-nearest probe equal their cross-join forms row for row") {
+    // VectorReference.assignToCentroids is the k× cross join + groupBy
+    // form the one-pass argmin replaced, and VectorReference.probe the
+    // cross join + row_number window the n-nearest probe replaced
+    // (n = 1..4, ranks compared too). Generated: coarse {-1, 0, 1}
+    // vectors and duplicated centroid vectors under distinct cids
+    // (ties go to the least cid, whatever the table order), null,
+    // short and NaN/null-element embeddings (NULL distance sorts
+    // first, NaN last), short centroids, empty centroid tables, Int
+    // and Long cids, driver-local and distributed centroid tables,
+    // ARRAY<FLOAT> embeddings and centroids (the references see them
+    // widened to ARRAY<DOUBLE>), n <= 0 (no rows) and key columns with
+    // and without the embedding.
+    // Ids are unique, as at every caller: the reference's groupBy
+    // would merge duplicates. Vectors are compared with -0.0 == 0.0
+    // because the reference groups on (and so normalizes) them.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test => SC}
+    import org.scalacheck.Prop.propBoolean
+    val elem = Gen.frequency(
+      30 -> Gen.choose(-1, 1).map(_.toDouble), 10 -> Gen.choose(-1.0, 1.0),
+      1 -> Gen.const(-0.0), 1 -> Gen.const(Double.NaN), 1 -> Gen.const(null))
+    def vec(dim: Int): Gen[Seq[Any]] = Gen.frequency(
+      1 -> Gen.const(null), 1 -> Gen.listOfN(dim - 1, elem),
+      16 -> Gen.listOfN(dim, elem))
+    val gen = for {
+      dim <- Gen.choose(1, 4)
+      n <- Gen.choose(0, 30)
+      vs <- Gen.listOfN(n, vec(dim))
+      k <- Gen.frequency(1 -> Gen.const(0), 8 -> Gen.choose(1, 6))
+      cvs <- Gen.listOfN(k, vec(dim))
+      dups <- Gen.listOfN(k, Gen.oneOf(true, false))
+      picked <- Gen.pick(k, 0 until 50)
+      order <- Gen.listOfN(k, Gen.choose(0, 1000))
+      cids = picked.zip(order).sortBy(_._2).map(_._1) // table order != cid order
+      longCid <- Gen.oneOf(true, false)
+      localTable <- Gen.oneOf(true, false)
+      withEmb <- Gen.oneOf(true, false)
+      nProbe <- Gen.frequency(1 -> Gen.choose(-2, 0), 6 -> Gen.choose(1, 4))
+      floatEmb <- Gen.frequency(3 -> Gen.const(false), 1 -> Gen.const(true))
+      floatCv <- Gen.frequency(3 -> Gen.const(false), 1 -> Gen.const(true))
+    } yield {
+      // a duplicated centroid copies its predecessor's vector
+      val cv = cvs.indices.map(j => if (j > 0 && dups(j)) cvs(j - 1) else cvs(j))
+      (vs, cids.toSeq.zip(cv), longCid, localTable, withEmb, nProbe, floatEmb, floatCv)
+    }
+    def key(v: Any): Any = v match {
+      case d: Double => if (d == 0.0) 0L else java.lang.Double.doubleToLongBits(d)
+      case f: Float => key(f.toDouble)
+      case s: scala.collection.Seq[_] => s.map(key)
+      case o => o
+    }
+    // no shrinking: every shrink step would rerun both Spark plans
+    val prop = Prop.forAllNoShrink(gen) {
+      case (vs, cents, longCid, localTable, withEmb, nProbe, floatEmb, floatCv) =>
+        def column(name: String, asFloat: Boolean) =
+          StructField(name, ArrayType(if (asFloat) FloatType else DoubleType))
+        def values(v: Seq[Any], asFloat: Boolean): Seq[Any] =
+          if (v == null || !asFloat) v
+          else v.map { case d: Double => d.toFloat; case o => o }
+        def widened(df: org.apache.spark.sql.DataFrame, c: String) =
+          df.withColumn(c, col(c).cast(ArrayType(DoubleType)))
+        val corpus = spark.createDataFrame(spark.sparkContext.parallelize(
+            vs.zipWithIndex.map { case (v, i) => Row(3L * i, values(v, floatEmb)) }, 3),
+          StructType(Seq(StructField("vec_id", LongType), column("embedding", floatEmb))))
+        val cidType = if (longCid) LongType else IntegerType
+        val centRows = cents.map { case (c, v) =>
+          Row(if (longCid) c.toLong else c, values(v, floatCv)) }
+        val centSchema = StructType(Seq(StructField("cid", cidType), column("cv", floatCv)))
+        val table =
+          if (localTable) spark.createDataFrame(java.util.Arrays.asList(centRows: _*), centSchema)
+          else spark.createDataFrame(spark.sparkContext.parallelize(centRows, 2), centSchema)
+        val (corpusRef, tableRef) = (widened(corpus, "embedding"), widened(table, "cv"))
+        val keys = if (withEmb) Seq("vec_id", "embedding") else Seq("vec_id")
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => r.toSeq.map(key)).sortBy(_.head.asInstanceOf[Long]).toSeq
+        val got = rows(V.assignToCentroids(corpus, table, keys))
+        val ref = rows(VectorReference.assignToCentroids(corpusRef, tableRef, keys))
+        val probed = rows(V.nearestCentroids(corpus, col("embedding"), table,
+          Seq("vec_id"), nProbe).select("vec_id", "cluster", "rank"))
+        val probedRef = rows(VectorReference.probe(corpusRef, tableRef, Seq("vec_id"), nProbe))
+        ((got == ref) :| s"kernel $got\nreference $ref") &&
+          ((probed.sortBy(_.toString) == probedRef.sortBy(_.toString)) :|
+            s"probe $probed\nreference $probedRef")
+    }
+    val res = SC.check(SC.Parameters.default.withMinSuccessfulTests(40)
+      .withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("neighbor jaccard: bounded by min degree, in (0, 1], consistent with wedges") {
     val rows = GraphOps.defs("graph_neighbor_jaccard")(spark, sfDir)
       .select("x", "y", "n_common", "dx", "dy", "j_u")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for declared keys to files — the
@@ -13,18 +12,9 @@ object ExplainDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val filter = if (args.length > 3)
-      args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq else Seq.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val keys = SparkEntry.queries.toSeq.filter { case (n, _) =>
-      filter.isEmpty || filter.exists(n.contains) }
+    val keys = Harness.keys(args.lift(3))
     // An automated plan-evidence run must not look successful when
     // every key failed (ADVICE r18): count failures, exit non-zero.
     var failed = 0

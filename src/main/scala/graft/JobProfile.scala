@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Per-key job/stage census — optimization-round measurement tooling
@@ -15,16 +14,8 @@ import org.apache.spark.scheduler._
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val filter = if (args.length > 1)
-      args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq else Seq.empty
     val runs = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     TestData.enableCache()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings")
@@ -44,8 +35,7 @@ object JobProfile {
         }
         override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
       })
-    val keys = SparkEntry.queries.toSeq.filter { case (n, _) =>
-      filter.isEmpty || filter.exists(n.contains) }.sortBy(_._1)
+    val keys = Harness.keys(args.lift(1)).sortBy(_._1)
     for ((name, fn) <- keys) {
       // warm-up run (memoized stages, codegen, broadcast relations)
       try fn(spark, sfDir).count() catch { case e: Throwable =>

@@ -5,6 +5,7 @@ import graft.CkptOps
 import graft.TestData
 import graft.functions.{MinHashLsh, VectorOps => V}
 import graft.operators.{EmbedDedup, GraphOps, TextAnalysis, TextOps, TrainedQuantize}
+import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,8 +41,10 @@ import org.apache.spark.sql.functions._
   *
   * Conventions: embeddings tables carry (id: LONG, embedding:
   * ARRAY<DOUBLE>, …); documents tables carry (id: LONG, text:
-  * STRING, …). All methods return lazy plans except [[buildIvfIndex]]
-  * (an explicit sink).
+  * STRING, …). All methods return lazy plans except the two eager
+  * sinks [[buildIvfIndex]] and [[compactIvfIndex]]; they, the
+  * [[appendToIvfIndex]] stream and [[ivfSearch]] share one stored
+  * layout, owned by `graft.sources.IndexStore`.
   */
 object GraftEngine {
   /** Mined contrastive triplet. */
@@ -68,48 +71,27 @@ class GraftEngine(val spark: SparkSession) {
   }
 
   /** Build an IVF index: assign every vector to its nearest centroid
-    * and EAGERLY write cluster-partitioned parquet (vectors included,
-    * so [[ivfSearch]] can read the index back). Returns the written
-    * assignment, one row per corpus row. This is the one eager method
-    * on this class — it is a sink, not a plan.
-    *
-    * Layout: one file per inverted list. The assignment is hash-
-    * repartitioned by `cluster` before the partitioned write, so one
-    * task writes each `cluster=<k>` directory; without it every input
-    * split would write a file into every cluster (splits × k files,
-    * and every probe opens all of them).
+    * and EAGERLY write it to `path` in the `IndexStore` layout, one
+    * file per inverted list (vectors included, so [[ivfSearch]] can
+    * read the index back). Replaces any index at `path`. Returns the
+    * assignment (id, embedding, cluster, dist), one row per corpus row.
     */
   def buildIvfIndex(corpus: DataFrame, centroids: DataFrame,
-                    path: String): DataFrame = {
-    val assigned = V.assignToCentroids(
-      corpus.withColumnRenamed("id", "vec_id"), centroids,
-      Seq("vec_id", "embedding"))
-      .withColumnRenamed("vec_id", "id")
-      .select("id", "embedding", "cluster", "dist")
-    assigned.repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(path)
-    assigned
-  }
+                    path: String): DataFrame =
+    IndexStore.build(corpus.withColumnRenamed("id", "vec_id"), centroids, path)
+      .select(col("vec_id").as("id"), col("embedding"), col("cluster"), col("dist"))
 
-  /** ANN search against a [[buildIvfIndex]]-written index: each query
-    * probes its `nProbe` nearest centroid partitions (partition
-    * pruning on the cluster column makes that a selective read) and
-    * takes top-k by cosine within them.
+  /** ANN search against an index written by [[buildIvfIndex]],
+    * [[appendToIvfIndex]] and [[compactIvfIndex]]: each query probes
+    * its `nProbe` nearest centroid partitions (partition pruning on the
+    * cluster column makes that a selective read) and takes top-k by
+    * cosine within them.
     */
   def ivfSearch(indexPath: String, centroids: DataFrame,
-                queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val index = spark.read.parquet(indexPath)
-    val q = queries.select(col("id").as("qid"), col("embedding").as("qv"))
-    val probes = V.nearestCentroids(q, col("qv"), centroids, Seq("qid", "qv"), nProbe)
-      .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
-    val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("id"))
-    index.join(broadcast(probes), col("cluster") === col("probe_cluster"))
-      .filter(col("id") =!= col("qid"))
-      .withColumn("score", V.cosine(col("embedding"), col("qv")))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id").as("neighborId"), col("score"))
-  }
+                queries: DataFrame, k: Int, nProbe: Int): DataFrame =
+    IndexStore.search(IndexStore.read(spark, indexPath), centroids,
+        queries.select(col("id").as("qid"), col("embedding").as("qv")), k, nProbe)
+      .select(col("qid"), col("rank"), col("vec_id").as("neighborId"), col("score"))
 
   /** Exact-dedup survivors of a (id, text) table: min id per
     * canonical content hash.
@@ -380,22 +362,22 @@ class GraftEngine(val spark: SparkSession) {
     TrainedQuantize.trainCentroids(embeddings, k, seed)
 
   /** Continuously maintain an IVF index: append each micro-batch of
-    * streaming vectors (vec_id, embedding) into the stored
-    * cluster-partitioned layout, idempotently by batchId. Call
+    * streaming vectors (vec_id, embedding) into the stored index,
+    * idempotently by batchId (`IndexStore.ivfAppendBatch`). Call
     * `.start()` on the returned writer.
     */
   def appendToIvfIndex(vectors: DataFrame, centroids: DataFrame,
                        indexPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.streaming.StreamOps.ivfIndexAppendSink(vectors, centroids, indexPath)
+    vectors.writeStream.foreachBatch(IndexStore.ivfAppendBatch(centroids, indexPath) _)
 
-  /** Fold the small per-batch files produced by [[appendToIvfIndex]]
-    * into one file per cluster (content unchanged, reads stay
-    * pruned) — the maintenance job that keeps streaming-fed indexes
-    * scannable.
+  /** EAGERLY fold every generation of the index — the built one and
+    * the small per-batch files produced by [[appendToIvfIndex]] — into
+    * one file per cluster (content unchanged, reads stay pruned): the
+    * maintenance job that keeps streaming-fed indexes scannable.
     */
   def compactIvfIndex(indexPath: String): Unit =
-    graft.streaming.StreamOps.compactIvfIndex(spark, indexPath)
+    IndexStore.compactIvfIndex(spark, indexPath)
 
   /** Okapi BM25 (k1=1.2, b=0.75) scores of every (id, text) document
     * for a bag-of-words query — the lexical arm of hybrid retrieval.
@@ -4850,7 +4832,7 @@ class GraftEngine(val spark: SparkSession) {
     * depth-truncated BFS, normalized by (N−1). Unreached nodes
     * contribute exactly 0 (the harmonic form's point).
     */
-  def harmonicCloseness(nodes: DataFrame, idCol: String,
+  def harmonicCloseness(nodes: DataFrame,
                         edges: DataFrame, seeds: DataFrame,
                         seedCol: String, depth: Int = 4): DataFrame =
     GraphOps.closenessCore(

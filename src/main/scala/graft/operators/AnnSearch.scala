@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.TestData
 import graft.TestData.r4
 import graft.functions.{VectorOps => V}
+import graft.sources.IndexStore
 
 /** IVF-probed approximate nearest-neighbor search — the scale path
   * for similarity search (north star: similarity search at 100 TB).
@@ -39,21 +40,13 @@ object AnnSearch {
     val cents = Vectors.fixedCentroids(e)
     // corpus side: nearest centroid per vector (the stored partition key)
     val assigned = V.assignToCentroids(e, cents, Seq("vec_id", "embedding"))
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-    // query side: 5 queries, each probing its 2 nearest centroids
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = V.nearestCentroids(queries, col("qv"), cents, Seq("qid", "qv"), 2)
-      .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
-    // search only the probed partitions
-    val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-    assigned.join(broadcast(probes), col("cluster") === col("probe_cluster"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("score", V.cosine(col("embedding"), col("qv")))
-      .withColumn("rnk", row_number().over(wTop))
-      .filter(col("rnk") <= 5)
-      .select(col("qid"), col("rnk"), col("vec_id").as("nn_id"), col("score"))
+    IndexStore.search(assigned, cents, fixtureQueries(e), 5, 2)
+      .select(col("qid"), col("rank").as("rnk"), col("vec_id").as("nn_id"), col("score"))
   }
+
+  /** The 5 fixture queries (qid, qv) of the IVF search keys. */
+  private def fixtureQueries(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qv"))
 
   /** One beam-search hop's scoring cut: join the (tiny) candidate
     * set against the corpus — candidate side BROADCAST by hint, so
@@ -268,19 +261,8 @@ object AnnSearch {
       val assigned =
         V.assignToCentroids(e, cents, Seq("vec_id", "embedding", "label"))
           .filter(col("label") === 3)
-          .select(col("vec_id"), col("embedding"), col("cluster"))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val probes = V.nearestCentroids(queries, col("qv"), cents, Seq("qid", "qv"), 2)
-        .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
-      val wTop = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col("vec_id"))
-      assigned.join(broadcast(probes), col("cluster") === col("probe_cluster"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("score", V.cosine(col("embedding"), col("qv")))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 3)
-        .select(col("qid"), col("rnk"), col("vec_id").as("nn_id"),
+      IndexStore.search(assigned, cents, fixtureQueries(e), 3, 2)
+        .select(col("qid"), col("rank").as("rnk"), col("vec_id").as("nn_id"),
                 r4(col("score")).as("cos"))
         .orderBy("qid", "rnk")
     }),
@@ -653,8 +635,7 @@ object AnnSearch {
     }),
 
     // The end-to-end IVF story: search the STORED index. The corpus
-    // side is the `partitionBy(cluster)` parquet layout written by
-    // `IndexStore` (the same layout `pipeline_index_build` produces),
+    // side is the cluster-partitioned parquet layout of `IndexStore`,
     // and the probe join is on the partition column — so Spark's
     // dynamic partition pruning turns "probe 2 of k clusters" into
     // reading only those cluster directories. Round 1 recomputed
@@ -662,19 +643,9 @@ object AnnSearch {
     // path; this is the plan a 100 TB vector DB actually runs.
     "ann_ivf_pruned_topk" -> ((s, d) => {
       val e = TestData.embeddings(s, d)
-      val cents = Vectors.fixedCentroids(e)
-      val stored = graft.sources.IndexStore.readIvfIndex(s, d)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val probes = V.nearestCentroids(queries, col("qv"), cents, Seq("qid", "qv"), 2)
-        .select(col("qid"), col("qv"), col("cluster").as("probe_cluster"))
-      val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-      stored.join(broadcast(probes), col("cluster") === col("probe_cluster"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("score", V.cosine(col("embedding"), col("qv")))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 5)
-        .select(col("qid"), col("rnk"), col("vec_id").as("nn_id"),
+      IndexStore.search(IndexStore.readIvfIndex(s, d), Vectors.fixedCentroids(e),
+          fixtureQueries(e), 5, 2)
+        .select(col("qid"), col("rank").as("rnk"), col("vec_id").as("nn_id"),
                 r4(col("score")).as("cos"))
         .orderBy("qid", "rnk")
     }),

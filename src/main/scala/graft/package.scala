@@ -27,6 +27,10 @@ package object graft {
       // of a job of its own, and LocalRDDCheckpointData completes any
       // missing partitions at that job's end. Values are identical;
       // multi-consumer reuse is identical after the first action.
+      // Both claims need every checkpointed stage to be deterministic:
+      // a partition not yet persisted is computed from the lineage when
+      // a consumer first needs it, so a nondeterministic stage could
+      // hand its consumers different rows.
       df.localCheckpoint(eager = false)
     }
   }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.CkptOps
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -117,114 +115,10 @@ object StreamOps {
       .select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
   }
 
-  /** Vector record for the streaming index-append pipeline. */
+  /** Vector record for the streaming index append
+    * (`GraftEngine.appendToIvfIndex`).
+    */
   case class Vec(vec_id: Long, embedding: Array[Double])
-
-  /** Marker file recording the highest append batchId already folded
-    * into the `batch=-1` compacted partition. Without it, a batch
-    * replayed AFTER compaction (stream restart from an older
-    * checkpoint) would dynamically overwrite its now-empty
-    * `cluster=✱/batch=N` partitions and duplicate vectors that
-    * already live in `batch=-1`.
-    */
-  private def compactionMarker(indexPath: String) =
-    new org.apache.hadoop.fs.Path(indexPath, "_COMPACTED_THROUGH")
-
-  /** Highest batchId folded into `batch=-1` by [[compactIvfIndex]];
-    * −1 when never compacted. One FS stat + tiny read per call.
-    */
-  def compactedThrough(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String): Long = {
-    val p = compactionMarker(indexPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
-    }
-  }
-
-  private def writeCompactionMarker(spark: org.apache.spark.sql.SparkSession,
-                                    indexPath: String, through: Long): Unit = {
-    val p = compactionMarker(indexPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(through.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** One micro-batch of vectors appended into a cluster-partitioned
-    * IVF index layout (the same `cluster=<k>` directory scheme
-    * `IndexStore` / `pipeline_index_build` write). Idempotent by
-    * batchId: the layout is partitioned by (cluster, batch) and
-    * written with DYNAMIC partition overwrite, so a replayed batch
-    * replaces its own partitions instead of duplicating rows —
-    * assignment is deterministic, so the replacement is exact.
-    * Batches at or below the `_COMPACTED_THROUGH` marker are SKIPPED:
-    * their rows already live in `batch=-1`, so replaying them would
-    * duplicate (see [[compactIvfIndex]]). Reads of `cluster = k` stay
-    * partition-pruned because `cluster` remains the leading partition
-    * directory.
-    */
-  def ivfAppendBatch(centroids: DataFrame, indexPath: String)
-                    (batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= compactedThrough(batch.sparkSession, indexPath)) return
-    val assigned = graft.functions.VectorOps
-      .assignToCentroids(batch, centroids, Seq("vec_id", "embedding"))
-      .select(col("vec_id"), col("embedding"),
-              col("cluster"), lit(batchId).as("batch"))
-    assigned.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cluster", "batch").parquet(indexPath)
-  }
-
-  /** Streaming index maintenance: incoming vectors are coarse-
-    * quantized against the broadcast centroids and appended into the
-    * stored IVF layout via [[ivfAppendBatch]] — the point where the
-    * streaming surface meets the index build. Call `.start()` on the
-    * returned writer.
-    */
-  def ivfIndexAppendSink(vectors: DataFrame, centroids: DataFrame,
-                         indexPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch(ivfAppendBatch(centroids, indexPath) _)
-
-  /** Compact an appended IVF index: many small per-batch files (the
-    * by-product of streaming appends) are rewritten into one file
-    * per cluster under a single `batch=-1` partition. Small-file
-    * accumulation is THE failure mode of streaming appends at scale
-    * — scan cost grows with file count, not data size. The snapshot
-    * is materialized (`localCheckpoint`) before the overwrite so the
-    * rewrite never reads the files it is replacing. The max folded
-    * batchId is persisted to `_COMPACTED_THROUGH` so a later
-    * checkpoint-replay of an already-compacted batch is skipped by
-    * [[ivfAppendBatch]] instead of duplicating rows. MUST NOT run
-    * while an append stream on the same path is active: the static
-    * overwrite races with an in-flight dynamic append and can drop
-    * its batch — pause the stream (or run between micro-batch
-    * triggers) first. At 100 TB this runs per hot cluster on a
-    * schedule rather than whole-index.
-    */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexPath: String): Unit = {
-    val snap = spark.read.parquet(indexPath)
-      .select(col("vec_id"), col("embedding"), col("cluster"), col("batch"))
-      .ckpt()
-    // Partition-value inference may type `batch` as INT — cast before
-    // getLong.
-    val maxBatchRow = snap.agg(
-      max(when(col("batch") >= 0L, col("batch").cast("long"))).as("mb")).first()
-    val through = math.max(
-      if (maxBatchRow.isNullAt(0)) -1L else maxBatchRow.getLong(0),
-      compactedThrough(spark, indexPath))
-    snap.drop("batch").withColumn("batch", lit(-1L))
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster", "batch")
-      .parquet(indexPath)
-    writeCompactionMarker(spark, indexPath, through)
-  }
 
   /** The Spark 4 `transformWithState` form of [[runningUserStats]]:
     * a `StatefulProcessor` with explicit `ValueState` — the current

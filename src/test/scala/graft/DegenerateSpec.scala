@@ -1415,7 +1415,7 @@ class DegenerateSpec extends SparkSpec {
       spark.sparkContext.parallelize(rows.map(Row(_)), 1), ns)
     // empty graph, one seed: reaches only itself, hc = 0, zero-node
     // normalization reads NULL (never a throw)
-    assertClean(engine.harmonicCloseness(nf2(Nil), "x", ef2(Nil),
+    assertClean(engine.harmonicCloseness(nf2(Nil), ef2(Nil),
       nf2(Seq(1L)), "x"), "closeness/empty-graph")
     // deg-1 endpoints exist in the weight frame: the guarded
     // 1e6/ln(deg) definition site must not ANSI-throw
@@ -1658,5 +1658,17 @@ class DegenerateSpec extends SparkSpec {
       assertClean(engine.transitionEntropy(f, "f", "t"), s"transEnt/$n")
       assertClean(engine.markovStationary(f, "f", "t"), s"markov/$n")
     }
+  }
+
+  test("an IVF index built from an empty corpus searches to 0 rows and compacts") {
+    import spark.implicits._
+    val corpus = Seq.empty[(Long, Seq[Double])].toDF("id", "embedding")
+    val cents = Seq((0, Seq(0.0, 0.0)), (1, Seq(1.0, 1.0))).toDF("cid", "cv")
+    val queries = Seq((7L, Seq(0.5, 0.5))).toDF("id", "embedding")
+    val path = java.nio.file.Files.createTempDirectory("ivf_empty").toString
+    assert(engine.buildIvfIndex(corpus, cents, path).count() === 0)
+    assert(engine.ivfSearch(path, cents, queries, 5, 2).count() === 0)
+    engine.compactIvfIndex(path)
+    assert(engine.ivfSearch(path, cents, queries, 5, 2).count() === 0)
   }
 }

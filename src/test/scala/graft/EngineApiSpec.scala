@@ -1860,7 +1860,7 @@ class EngineApiSpec extends SparkSpec {
     val d = sf("sf0.001")
     val edges = graft.operators.GraphOps.fixtureKnnEdges(spark, d)
     val nodes = TestData.embeddings(spark, d)
-    assert(engine.harmonicCloseness(nodes, "vec_id", edges,
+    assert(engine.harmonicCloseness(nodes, edges,
         nodes.filter($"vec_id" < 8).select($"vec_id".as("s")), "s")
       .collect().map(_.toSeq).toSeq ===
       SparkEntry.queries("graph_closeness_sample")(spark, d)

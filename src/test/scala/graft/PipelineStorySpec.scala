@@ -1,7 +1,6 @@
 package graft
 
 import graft.api.GraftEngine
-import graft.streaming.StreamOps
 import graft.streaming.StreamOps.Vec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -46,35 +45,38 @@ class PipelineStorySpec extends SparkSpec {
     assert(hits.count() === 15)
     assert(hits.groupBy("qid").count().collect().forall(_.getLong(1) == 5))
 
-    // 4. Keep it fresh: stream new vectors in, then compact.
+    // 4. Keep it fresh: stream 4 new vectors into the same index. Each
+    //    is a copy of a corpus vector with its first component moved,
+    //    so a query with its embedding finds it at rank 1, not the
+    //    original.
     val before = spark.read.parquet(path).count()
     val input = MemoryStream[Vec](spark)
-    // the append layout adds a batch partition dimension; append into
-    // a copy of the stored layout shape
-    val appendPath = "/root/repo/target/tmp/story_ivf_appends"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(appendPath))
-    val centsForAppend = cents
-    val q = engine.appendToIvfIndex(input.toDF(), centsForAppend, appendPath).start()
+    val q = engine.appendToIvfIndex(input.toDF(), cents, path).start()
+    val novel = corpus.limit(4)
+      .select(col("id"), col("embedding")).as[(Long, Array[Double])]
+      .collect().map { case (i, e) => Vec(i + 1000000L, (e(0) + 1.0) +: e.tail) }
     try {
-      val novel = corpus.limit(4)
-        .select(col("id"), col("embedding")).as[(Long, Array[Double])]
-        .collect().map { case (i, e) => Vec(i + 1000000L, e) }
       input.addData(novel.toIndexedSeq)
       q.processAllAvailable()
-      engine.compactIvfIndex(appendPath)
-      val appended = spark.read.parquet(appendPath)
-      assert(appended.count() === 4)
-      // appended vectors are cluster-assigned with the SAME trained
-      // centroids, so per-cluster pruned reads line up with the base
-      // index's partitioning scheme
-      assert(appended.select("cluster").distinct().count() <= 4)
     } finally q.stop()
-    assert(spark.read.parquet(path).count() === before,
-      "base index untouched by the append stream")
+    assert(spark.read.parquet(path).count() === before + 4)
+    val probe = Seq((-1L, novel(0).embedding)).toDF("id", "embedding")
+    def answer(): Seq[(Int, Long)] = engine.ivfSearch(path, cents, probe, k = 5, nProbe = 2)
+      .select("rank", "neighborId").as[(Int, Long)].collect().toSeq.sorted
+    val fresh = answer()
+    assert(fresh.head === ((1, novel(0).vec_id)), s"a search sees the appended vector: $fresh")
+
+    // 5. Compact: the same answer, from one file per inverted list.
+    engine.compactIvfIndex(path)
+    assert(spark.read.parquet(path).count() === before + 4)
+    assert(answer() === fresh, "compaction keeps every answer")
+    val lists = new java.io.File(path).listFiles().filter(_.getName.startsWith("cluster="))
+    assert(lists.nonEmpty)
+    for (l <- lists) {
+      assert(l.list().toSeq === Seq("batch=-1"), s"${l.getName} holds ${l.list().mkString(", ")}")
+      val files = new java.io.File(l, "batch=-1").list().filter(_.endsWith(".parquet"))
+      assert(files.length === 1, s"${l.getName} holds ${files.mkString(", ")}")
+    }
   }
 
   test("curation journey: sample → dedup in vector space → prefiltered enrich") {

@@ -472,12 +472,16 @@ class PlanSpec extends SparkSpec {
     }
     val all = plans.map(_._2).mkString("\n")
     assert(all.contains("nearest_centroid(") && all.contains("sq_dist("), all.take(2000))
-    // the facade index holds one file per inverted list
+    // the facade index holds one file per inverted list, in the
+    // compacted generation batch=-1
     val dirs = new java.io.File(index).listFiles().filter(_.getName.startsWith("cluster="))
     assert(dirs.length == 8, dirs.map(_.getName).mkString(", "))
-    for (d <- dirs)
-      assert(d.list().count(_.endsWith(".parquet")) == 1,
-        s"${d.getName} holds ${d.list().mkString(", ")}")
+    for (d <- dirs) {
+      assert(d.list().toSeq == Seq("batch=-1"), s"${d.getName} holds ${d.list().mkString(", ")}")
+      val files = new java.io.File(d, "batch=-1").list()
+      assert(files.count(_.endsWith(".parquet")) == 1,
+        s"${d.getName}/batch=-1 holds ${files.mkString(", ")}")
+    }
   }
 
   test("partition-scoped merge reads only touched partitions (pruned scan)") {

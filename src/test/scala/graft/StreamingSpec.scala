@@ -209,6 +209,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch IVF append keeps the stored index pruned, correct, idempotent") {
     import StreamOps.Vec
+    import graft.sources.IndexStore
     import org.apache.spark.sql.functions.col
     val dir = "/root/repo/target/tmp/stream_ivf_append"
     def rm(f: java.io.File): Unit = {
@@ -219,7 +220,7 @@ class StreamingSpec extends SparkSpec {
     val cents = Seq((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))
       .toDF("cid", "cv")
     val input = MemoryStream[Vec](spark)
-    val q = StreamOps.ivfIndexAppendSink(input.toDF(), cents, dir).start()
+    val q = new graft.api.GraftEngine(spark).appendToIvfIndex(input.toDF(), cents, dir).start()
     try {
       input.addData(Vec(1, Array(0.1, 0.2)), Vec(2, Array(9.9, 10.0)))
       q.processAllAvailable()
@@ -234,13 +235,13 @@ class StreamingSpec extends SparkSpec {
         s"cluster filter must prune partitions:\n${p.take(600)}")
       assert(near0.select("vec_id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
       // Replaying a batch overwrites its own partitions (no dupes).
-      StreamOps.ivfAppendBatch(cents, dir)(
+      IndexStore.ivfAppendBatch(cents, dir)(
         Seq(Vec(3, Array(0.3, 0.1))).toDF("vec_id", "embedding"), 1L)
       assert(spark.read.parquet(dir).count() === 3,
         "replayed batch must replace, not duplicate")
       // Compaction folds the per-batch files into one file per
       // cluster; content and pruned reads are unchanged.
-      StreamOps.compactIvfIndex(spark, dir)
+      IndexStore.compactIvfIndex(spark, dir)
       val compacted = spark.read.parquet(dir)
       assert(compacted.count() === 3)
       assert(compacted.select("batch").distinct().as[Long].collect().toSeq
@@ -257,8 +258,8 @@ class StreamingSpec extends SparkSpec {
       // Replay AFTER compaction: batches folded into batch=-1 are
       // recorded in _COMPACTED_THROUGH and must be skipped, not
       // re-appended (a restart from an older checkpoint replays them).
-      assert(StreamOps.compactedThrough(spark, dir) === 1L)
-      StreamOps.ivfAppendBatch(cents, dir)(
+      assert(IndexStore.compactedThrough(spark, dir) === 1L)
+      IndexStore.ivfAppendBatch(cents, dir)(
         Seq(Vec(3, Array(0.3, 0.1))).toDF("vec_id", "embedding"), 1L)
       val postReplay = spark.read.parquet(dir)
       assert(postReplay.count() === 3,
@@ -266,7 +267,7 @@ class StreamingSpec extends SparkSpec {
       assert(postReplay.select("batch").distinct().as[Long].collect().toSeq
         === Seq(-1L), "replay after compaction must not recreate batch dirs")
       // A genuinely NEW batch (id above the marker) still appends.
-      StreamOps.ivfAppendBatch(cents, dir)(
+      IndexStore.ivfAppendBatch(cents, dir)(
         Seq(Vec(4, Array(10.2, 9.8))).toDF("vec_id", "embedding"), 2L)
       assert(spark.read.parquet(dir).count() === 4,
         "new batches above the compaction marker must still append")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §0.1 / §7.
+/** Entry-point contract — see SURVEY.md (repo root) §0.1 / §7.
   *
   * `queries` is the declared operator inventory (SURVEY.md §2): one
   * key per implemented operator, each locally diffed against DuckDB

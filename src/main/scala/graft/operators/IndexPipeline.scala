@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
 import graft.functions.{VectorOps => V}
 
 /** The reference's whole pipeline (README.md:2: corpus → dedup →
@@ -45,7 +46,7 @@ object IndexPipeline {
         .assignToCentroids(embedded, cents, Seq("vec_id", "label"))
         .select("vec_id", "label", "cluster", "dist")
       // Write the index shards, partitioned by cluster.
-      val tmp = "/root/repo/target/tmp/pipeline_index_build"
+      val tmp = WriteOnce.path("pipeline_index_build")
       assigned.write.mode("overwrite").partitionBy("cluster").parquet(tmp)
       // Read back through partition discovery → shard summary.
       s.read.parquet(tmp)

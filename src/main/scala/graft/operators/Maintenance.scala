@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
+import org.apache.spark.network.util.JavaUtils
 
 /** Table-maintenance operators: the jobs that keep a 100 TB dataset
   * servable between analytic runs (north star, BASELINE.json:6) — CDC upsert (MERGE) as a
@@ -38,7 +40,7 @@ object Maintenance {
   private[graft] def publishSnapshot(base: String, id: Int, df: DataFrame,
       tag: String, keyCol: String, retain: Int): Unit = {
     val dir = new java.io.File(base, s"snap_$id").getAbsolutePath
-    graft.sources.WriteOnce.ensure(dir, tag) {
+    WriteOnce.ensure(dir, tag) {
       df.write.mode("overwrite").parquet(dir)
     }
     val marker = new java.io.File(dir, "_GRAFT_PUBLISHED")
@@ -52,11 +54,8 @@ object Maintenance {
         s"snapshot audit failed on $dir — not publishing")
       java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
     }
-    publishedIds(base).dropRight(retain).foreach { old =>
-      val victim = new java.io.File(base, s"snap_$old")
-      victim.listFiles().foreach(_.delete())
-      victim.delete()
-    }
+    publishedIds(base).dropRight(retain).foreach(old =>
+      JavaUtils.deleteQuietly(new java.io.File(base, s"snap_$old")))
   }
 
   /** Time travel: the newest published snapshot with id ≤ `asOf`.
@@ -95,10 +94,7 @@ object Maintenance {
           coalesce(col("u_price"), col("o_totalprice")).as("price"),
           when(col("u_key").isNotNull, lit("U"))
             .otherwise(col("o_orderstatus")).as("status"))
-      val tag = graft.sources.WriteOnce.inputTag(d, "orders")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/merge_upsert", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
+      val dir = WriteOnce.sink("merge_upsert", d, "orders") { dir =>
         merged.write.mode("overwrite").parquet(dir)
       }
       s.read.parquet(dir)
@@ -126,10 +122,7 @@ object Maintenance {
         .select(col("o_orderkey"), col("o_totalprice").as("price"),
           col("o_orderstatus").as("status"),
           expr("CAST(o_custkey % 8 AS INT)").as("pt"))
-      val tag = graft.sources.WriteOnce.inputTag(d, "orders")
-      val snapDir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/merge_part_snapshot", tag)
-      graft.sources.WriteOnce.ensure(snapDir, tag) {
+      val snapDir = WriteOnce.sink("merge_part_snapshot", d, "orders") { snapDir =>
         base.write.mode("overwrite").partitionBy("pt").parquet(snapDir)
       }
       // update batch touches partitions {0, 1} only
@@ -138,9 +131,7 @@ object Maintenance {
         .select(col("o_orderkey").as("u_key"),
           (col("o_totalprice") * lit(1.1)).as("u_price"),
           expr("CAST(o_custkey % 8 AS INT)").as("u_pt"))
-      val appliedDir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/merge_part_applied", tag)
-      graft.sources.WriteOnce.ensure(appliedDir, tag) {
+      WriteOnce.sink("merge_part_applied", d, "orders") { appliedDir =>
         val touched = upd.select("u_pt").distinct()
           .collect().map(_.getInt(0)).sorted
         val scoped = s.read.parquet(snapDir)
@@ -189,17 +180,12 @@ object Maintenance {
     "sink_compact_files" -> ((s, d) => {
       val ev = TestData.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val smallDir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/compact_small", tag)
-      graft.sources.WriteOnce.ensure(smallDir, tag) {
+      val smallDir = WriteOnce.sink("compact_small", d, "events") { smallDir =>
         ev.repartition(16, col("event_id"))
           .write.mode("overwrite").partitionBy("event_type")
           .parquet(smallDir)
       }
-      val compactDir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/compact_out", tag)
-      graft.sources.WriteOnce.ensure(compactDir, tag) {
+      val compactDir = WriteOnce.sink("compact_out", d, "events") { compactDir =>
         s.read.parquet(smallDir)
           .repartition(col("event_type"))
           .write.mode("overwrite").partitionBy("event_type")
@@ -228,10 +214,7 @@ object Maintenance {
       val curated = TestData.documents(s, d)
         .filter(size(split(col("text"), " ")) >= 20)
         .select("doc_id", "lang", "source", "n_chars")
-      val tag = graft.sources.WriteOnce.inputTag(d, "documents")
-      val staging = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/wap_staging", tag)
-      graft.sources.WriteOnce.ensure(staging, tag) {
+      val staging = WriteOnce.sink("wap_staging", d, "documents") { staging =>
         curated.write.mode("overwrite").parquet(staging)
       }
       val marker = new java.io.File(staging, "_GRAFT_PUBLISHED")
@@ -274,9 +257,8 @@ object Maintenance {
         .withColumn("n_chars",
           when(expr("doc_id % 10 = 4"), col("n_chars") + lit(1000))
             .otherwise(col("n_chars")))
-      val tag = graft.sources.WriteOnce.inputTag(d, "documents")
-      val base = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/snap_store", tag)
+      val tag = WriteOnce.inputTag(d, "documents")
+      val base = WriteOnce.path("snap_store", d, "documents")
       publishSnapshot(base, 1, gen1, tag, "doc_id", retain = 2)
       publishSnapshot(base, 2, gen2, tag, "doc_id", retain = 2)
       def summarize(df: DataFrame, id: Int) = df.groupBy("lang")
@@ -311,9 +293,8 @@ object Maintenance {
         .unionByName(gen1.filter(expr("doc_id % 10 = 5"))
           .select((col("doc_id") + lit(10000000L)).as("doc_id"),
             col("lang"), (col("n_chars") + lit(7)).as("n_chars")))
-      val tag = graft.sources.WriteOnce.inputTag(d, "documents")
-      val base = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/snap_store_diff", tag)
+      val tag = WriteOnce.inputTag(d, "documents")
+      val base = WriteOnce.path("snap_store_diff", d, "documents")
       publishSnapshot(base, 1, gen1, tag, "doc_id", retain = 2)
       publishSnapshot(base, 2, gen2, tag, "doc_id", retain = 2)
       val v1 = readAsOf(s, base, 1)
@@ -352,10 +333,7 @@ object Maintenance {
     "sink_content_checksum" -> ((s, d) => {
       val docs = TestData.documents(s, d)
         .select("doc_id", "lang", "text")
-      val tag = graft.sources.WriteOnce.inputTag(d, "documents")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/checksum_sink", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
+      val dir = WriteOnce.sink("checksum_sink", d, "documents") { dir =>
         docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
       }
       s.read.parquet(dir)
@@ -388,10 +366,7 @@ object Maintenance {
         .withColumn("z", expr(
           "aggregate(sequence(0, 9), 0L, (acc, i) -> " +
             "acc + shiftleft((x >> i) & 1, 2*i) + shiftleft((y >> i) & 1, 2*i + 1))"))
-      val tag = graft.sources.WriteOnce.inputTag(d, "orders")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/zorder_sink", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
+      val dir = WriteOnce.sink("zorder_sink", d, "orders") { dir =>
         o.repartitionByRange(8, col("z")).sortWithinPartitions("z")
           .write.mode("overwrite").parquet(dir)
       }

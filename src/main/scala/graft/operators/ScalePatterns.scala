@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
+import graft.withConf
+import org.apache.spark.network.util.JavaUtils
 
 /** Scale-pattern operators: the shuffle-shaping techniques a 100 TB
   * deployment leans on, each oracle-checked for exactness.
@@ -24,59 +27,41 @@ import graft.TestData.r4
 object ScalePatterns {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Make `name` available as a bucketed catalog table over `df`,
-    * writing only when no committed bucket files exist for the same
-    * input `tag` (sf dir). Three cases:
-    *   1. table registered + files fresh → no-op;
-    *   2. files fresh but catalog (in-memory, per-session) forgot the
-    *      table → re-register the existing directory as an external
-    *      bucketed table, no rewrite;
-    *   3. stale/missing files → full bucketed rewrite.
+  /** Make a bucketed catalog table over `df` — `table` of `sfDir`,
+    * bucketed by `key` — available and return its name (`base` plus
+    * the input's hash). The files live in the session warehouse and
+    * are rewritten only when `WriteOnce.ensure` finds no committed
+    * write for the same input; a catalog (in-memory, per-session)
+    * that forgot the table gets the existing directory re-registered
+    * as an external bucketed table, with no rewrite.
     */
-  private def ensureBucketedTable(s: SparkSession, name: String, key: String,
-                                  tag: String, df: => DataFrame): Unit =
-    synchronized {
-      val wh = new java.io.File(
-        new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
-      val loc = new java.io.File(wh, name)
-      val marker = new java.io.File(wh, s"$name.inputtag")
-      val fresh = marker.exists() && new java.io.File(loc, "_SUCCESS").exists() &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath),
-          java.nio.charset.StandardCharsets.UTF_8) == tag
-      if (fresh && s.catalog.tableExists(name)) return
-      if (fresh) {
-        // case 2: files are valid; rebuild only the catalog entry
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        s.sql(s"""CREATE TABLE $name (${df.schema.toDDL})
-                 |USING PARQUET
-                 |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-                 |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
-      } else {
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        if (loc.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(loc)
-        }
-        df.write.mode("overwrite").bucketBy(8, key).sortBy(key)
-          .saveAsTable(name)
-        java.nio.file.Files.write(marker.toPath,
-          tag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
+  private def ensureBucketedTable(s: SparkSession, base: String, key: String,
+      sfDir: String, table: String)(df: => DataFrame): String = synchronized {
+    val name = WriteOnce.tagged(base, sfDir, table)
+    val loc = new java.io.File(
+      new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, name)
+    WriteOnce.ensure(loc.getAbsolutePath, WriteOnce.inputTag(sfDir, table)) {
+      s.sql(s"DROP TABLE IF EXISTS $name")
+      JavaUtils.deleteQuietly(loc)
+      df.write.mode("overwrite").bucketBy(8, key).sortBy(key)
+        .saveAsTable(name)
     }
+    if (!s.catalog.tableExists(name))
+      s.sql(s"""CREATE TABLE $name (${df.schema.toDDL})
+               |USING PARQUET
+               |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
+               |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
+    name
+  }
 
   /** Scoped AQE-skew-join configuration: thresholds scaled from the
     * 256 MB production default down to fixture-sized partitions so
     * the skew split actually exercises at sf0.001–0.1; broadcast is
     * disabled for the scope (a broadcast join would hide the skew
-    * machinery this key demonstrates). Restores every key in
-    * `finally` — declared keys run sequentially (the
-    * `withStateFanout` precedent).
+    * machinery this key demonstrates).
     */
-  private[graft] def withSkewJoinConf[T](s: SparkSession)(body: => T): T = {
-    val scoped = Map(
+  private[graft] def withSkewJoinConf[T](s: SparkSession)(body: => T): T =
+    withConf(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256b",
@@ -86,12 +71,7 @@ object ScalePatterns {
       // demonstration must fire at every fixture scale
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = scoped.keys.map(k => k -> s.conf.getOption(k)).toMap
-    try { scoped.foreach { case (k, v) => s.conf.set(k, v) }; body }
-    finally saved.foreach { case (k, o) =>
-      o.fold(s.conf.unset(k))(v => s.conf.set(k, v)) }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** The forced-skew join behind `join_skew_aqe` (exposed for
     * PlanSpec): 75 % of events collapse onto one hot key, SMJ pinned
@@ -136,13 +116,9 @@ object ScalePatterns {
       // Table name carries a short hash of the input tag so the
       // sf0.01 (Verify) and sf0.1 (Bench) bucket sets coexist in the
       // warehouse instead of evicting each other every round.
-      val oTag = graft.sources.WriteOnce.inputTag(d, "orders")
-      val cTag = graft.sources.WriteOnce.inputTag(d, "customer")
-      val oName = graft.sources.WriteOnce.dirFor("graft_orders_b", oTag)
-      val cName = graft.sources.WriteOnce.dirFor("graft_customer_b", cTag)
-      ensureBucketedTable(s, oName, "o_custkey", oTag,
+      val oName = ensureBucketedTable(s, "graft_orders_b", "o_custkey", d, "orders")(
         TestData.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"))
-      ensureBucketedTable(s, cName, "c_custkey", cTag,
+      val cName = ensureBucketedTable(s, "graft_customer_b", "c_custkey", d, "customer")(
         TestData.customer(s, d).select("c_custkey", "c_mktsegment"))
       // merge hint: pin SMJ so the plan demonstrates bucketed
       // co-location (no exchange, no sort — PlanSpec) instead of a

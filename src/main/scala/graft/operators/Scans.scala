@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
 
 /** §2.A scans / sources / sinks (SURVEY.md).
   *
@@ -55,17 +56,12 @@ object Scans {
     // (re-writing history is not an option); the merged read costs one
     // footer fetch per file extra, nothing else.
     "scan_merge_schema" -> ((s, d) => {
-      val tag0 = graft.sources.WriteOnce.inputTag(d, "part")
-      val oldGen = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/merge_schema_old", tag0)
-      val newGen = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/merge_schema_new", tag0)
-      graft.sources.WriteOnce.ensure(oldGen, tag0) {
+      val oldGen = WriteOnce.sink("merge_schema_old", d, "part") { oldGen =>
         TestData.part(s, d).filter(col("p_partkey") % 2 === 0)
           .select("p_partkey", "p_name", "p_brand")
           .write.mode("overwrite").parquet(oldGen)
       }
-      graft.sources.WriteOnce.ensure(newGen, tag0) {
+      val newGen = WriteOnce.sink("merge_schema_new", d, "part") { newGen =>
         TestData.part(s, d).filter(col("p_partkey") % 2 === 1)
           .select("p_partkey", "p_name", "p_brand", "p_retailprice")
           .write.mode("overwrite").parquet(newGen)
@@ -103,18 +99,13 @@ object Scans {
     // generation; analysis never fails, and at 100 TB the per-day
     // aggregate still pushes projection into both scans.
     "scan_schema_drift" -> ((s, d) => {
-      val tag0 = graft.sources.WriteOnce.inputTag(d, "events")
-      val oldGen = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/drift_old", tag0)
-      val newGen = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/drift_new", tag0)
       val ev = TestData.events(s, d)
-      graft.sources.WriteOnce.ensure(oldGen, tag0) {
+      val oldGen = WriteOnce.sink("drift_old", d, "events") { oldGen =>
         ev.filter(col("event_id") % 2 === 0)
           .withColumn("ts", unix_micros(col("ts")))
           .write.mode("overwrite").parquet(oldGen)
       }
-      graft.sources.WriteOnce.ensure(newGen, tag0) {
+      val newGen = WriteOnce.sink("drift_new", d, "events") { newGen =>
         ev.filter(col("event_id") % 2 === 1)
           .write.mode("overwrite").parquet(newGen)
       }
@@ -133,10 +124,7 @@ object Scans {
     }),
 
     "sink_parquet_partitioned" -> ((s, d) => {
-      val tag0 = graft.sources.WriteOnce.inputTag(d, "events")
-      val tmp = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/sink_parquet_partitioned", tag0)
-      graft.sources.WriteOnce.ensure(tmp, tag0) {
+      val tmp = WriteOnce.sink("sink_parquet_partitioned", d, "events") { tmp =>
         TestData.events(s, d).write.mode("overwrite")
           .partitionBy("event_type").parquet(tmp)
       }
@@ -228,10 +216,7 @@ object Scans {
     // here — the write is single-file-per-partition; the audit shape
     // is what scales).
     "scan_file_provenance" -> ((s, d) => {
-      val tag0 = graft.sources.WriteOnce.inputTag(d, "orders")
-      val tmp = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/scan_file_provenance", tag0)
-      graft.sources.WriteOnce.ensure(tmp, tag0) {
+      val tmp = WriteOnce.sink("scan_file_provenance", d, "orders") { tmp =>
         provenanceStage(s, d)
           .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
       }

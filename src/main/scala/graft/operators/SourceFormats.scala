@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
 import graft.sources.FileFormats
 
 /** CSV / JSON source-and-sink round-trips: write a fixture table in
@@ -41,7 +42,7 @@ object SourceFormats {
   val defs: Map[String, Q] = Map(
     "source_csv_roundtrip" -> ((s, d) => {
       val back = FileFormats.csvRoundTrip(s, TestData.part(s, d), partSchema,
-        "/root/repo/target/tmp/source_csv_roundtrip")
+        WriteOnce.path("source_csv_roundtrip"))
       back.groupBy("p_brand")
         .agg(count(lit(1)).as("n"), r4(sum("p_retailprice")).as("sum_price"),
              max("p_size").as("max_size"))
@@ -50,7 +51,7 @@ object SourceFormats {
 
     "source_json_roundtrip" -> ((s, d) => {
       val back = FileFormats.jsonRoundTrip(s, TestData.customer(s, d),
-        customerSchema, "/root/repo/target/tmp/source_json_roundtrip")
+        customerSchema, WriteOnce.path("source_json_roundtrip"))
       back.groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), r4(sum("c_acctbal")).as("sum_bal"))
         .orderBy("c_mktsegment")
@@ -60,7 +61,7 @@ object SourceFormats {
       val back = FileFormats.orcRoundTrip(s,
         TestData.orders(s, d).select("o_orderkey", "o_custkey",
           "o_orderstatus", "o_totalprice"),
-        ordersSchema, "/root/repo/target/tmp/source_orc_roundtrip")
+        ordersSchema, WriteOnce.path("source_orc_roundtrip"))
       back.groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), r4(sum("o_totalprice")).as("sum_price"),
              min("o_orderkey").as("min_key"))
@@ -78,7 +79,7 @@ object SourceFormats {
         .select(concat_ws("\t", col("doc_id"), col("lang"),
           col("text")).as("value"))
       val back = FileFormats.textRoundTrip(s, lines,
-        "/root/repo/target/tmp/source_text_roundtrip")
+        WriteOnce.path("source_text_roundtrip"))
       back
         .withColumn("f", split(col("value"), "\t", 3))
         .select(col("f").getItem(0).cast("long").as("doc_id"),
@@ -97,7 +98,7 @@ object SourceFormats {
     // Emits good/corrupt counts + an aggregate over the parsed rows,
     // so silent row drops or mis-routed lines hash-fail.
     "source_json_corrupt" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/source_json_corrupt"
+      val path = WriteOnce.path("source_json_corrupt")
       TestData.customer(s, d)
         .select(when(col("c_custkey") % 10 === 3,
             concat(lit("NOT{JSON:"), col("c_custkey")))
@@ -121,7 +122,7 @@ object SourceFormats {
     // text preserved — count + checksum both populations so a silent
     // drop OR a mis-parse of either side hash-fails.
     "source_csv_corrupt" -> ((s, d) => {
-      val path = "/root/repo/target/tmp/source_csv_corrupt"
+      val path = WriteOnce.path("source_csv_corrupt")
       TestData.customer(s, d)
         .select(when(col("c_custkey") % 10 === 3,
             concat(lit("X"), col("c_custkey"), lit(",Y")))
@@ -151,12 +152,11 @@ object SourceFormats {
     // independent derivation from the generating table — a truncated
     // write, lost file, or encoding drift fails the gate.
     "source_binaryfile" -> ((s, d) => {
-      val tag = graft.sources.WriteOnce.inputTag(d, "documents")
       val media = graft.multimodal.Multimodal
         .fromDocuments(TestData.documents(s, d))
         .filter(col("doc_id") % 7 === 0)
       val back = FileFormats.binaryFilesRoundTrip(s, media, "doc_id",
-        "content", "/root/repo/target/tmp/source_binaryfile", tag)
+        "content", "source_binaryfile", d, "documents")
       back.select(
           regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1)
             .cast("long").as("doc_id"),

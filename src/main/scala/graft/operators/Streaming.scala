@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
+import graft.withConf
+import org.apache.spark.network.util.JavaUtils
 
 /** §2.K streaming analytics over `events` (SURVEY.md).
   *
@@ -163,12 +166,7 @@ object Streaming {
     "stream_availablenow_agg" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_an_source", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
-        batch.write.mode("overwrite").parquet(dir)
-      }
+      val dir = eventsReplay(d, batch)
       val qn = s"graft_stream_an_${streamSeq.incrementAndGet()}"
       withStateFanout(s) {
         val q = s.readStream.schema(batch.schema).parquet(dir)
@@ -191,12 +189,7 @@ object Streaming {
     "stream_availablenow_dedup" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_an_source", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
-        batch.write.mode("overwrite").parquet(dir)
-      }
+      val dir = eventsReplay(d, batch)
       val qn = s"graft_stream_dedup_${streamSeq.incrementAndGet()}"
       withStateFanout(s) {
         val q = s.readStream.schema(batch.schema).parquet(dir)
@@ -222,12 +215,7 @@ object Streaming {
     "stream_availablenow_join" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_an_source", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
-        batch.write.mode("overwrite").parquet(dir)
-      }
+      val dir = eventsReplay(d, batch)
       def side(tpe: String, idAs: String, tsAs: String) =
         s.readStream.schema(batch.schema).parquet(dir)
           .filter(col("event_type") === tpe)
@@ -266,12 +254,7 @@ object Streaming {
     "stream_availablenow_left_join" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_an_source", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
-        batch.write.mode("overwrite").parquet(dir)
-      }
+      val dir = eventsReplay(d, batch)
       def side(tpe: String, idAs: String, tsAs: String) =
         s.readStream.schema(batch.schema).parquet(dir)
           .filter(col("event_type") === tpe)
@@ -309,12 +292,7 @@ object Streaming {
     "stream_availablenow_sessionize" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_an_source", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
-        batch.write.mode("overwrite").parquet(dir)
-      }
+      val dir = eventsReplay(d, batch)
       val qn = s"graft_stream_sess_${streamSeq.incrementAndGet()}"
       withStateFanout(s) {
         val q = s.readStream.schema(batch.schema).parquet(dir)
@@ -345,21 +323,12 @@ object Streaming {
     "stream_foreachbatch_upsert" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_an_source", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
-        batch.write.mode("overwrite").parquet(dir)
-      }
-      val snap = s"/root/repo/target/tmp/fb_upsert_${streamSeq.incrementAndGet()}"
+      val dir = eventsReplay(d, batch)
+      val snap = WriteOnce.path(s"fb_upsert_${streamSeq.incrementAndGet()}")
       // The per-JVM sequence restarts across invocations (Verify at
       // one scale, then another) while the directory persists — a
       // stale snapshot would be merged into. Start from an empty dir.
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(snap))
+      JavaUtils.deleteQuietly(new java.io.File(snap))
       withStateFanout(s) {
         val q = s.readStream.schema(batch.schema).parquet(dir)
           .writeStream
@@ -418,10 +387,8 @@ object Streaming {
         .unionByName(gen2.filter(expr("doc_id % 10 = 8"))
           .select((col("doc_id") + lit(20000000L)).as("doc_id"),
             col("lang"), (col("n_chars") + lit(11)).as("n_chars")))
-      val tag = graft.sources.WriteOnce.inputTag(d, "documents")
-      val srcDir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_cdf_src", tag)
-      graft.sources.WriteOnce.ensure(srcDir, tag) {
+      val tag = WriteOnce.inputTag(d, "documents")
+      val srcDir = WriteOnce.sink("stream_cdf_src", d, "documents") { srcDir =>
         val dir = new java.io.File(srcDir); dir.mkdirs()
         for ((df, g) <- Seq(gen1, gen2, gen3).zipWithIndex.map {
             case (df, i) => (df, i + 1) }) {
@@ -436,20 +403,15 @@ object Streaming {
           // FileStreamSource admits files in mtime order — force one
           // generation per micro-batch, in generation order.
           dest.setLastModified(1700000000000L + g * 60000L)
-          new java.io.File(stage).listFiles().foreach(_.delete())
-          new java.io.File(stage).delete()
+          JavaUtils.deleteQuietly(new java.io.File(stage))
         }
         java.nio.file.Files.write(
           new java.io.File(dir, "_SUCCESS").toPath, Array.emptyByteArray)
       }
       val seq = streamSeq.incrementAndGet()
-      val snapBase = s"/root/repo/target/tmp/stream_cdf_snap_$seq"
-      val cdfDir = s"/root/repo/target/tmp/stream_cdf_out_$seq"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(snapBase)); rm(new java.io.File(cdfDir))
+      val snapBase = WriteOnce.path(s"stream_cdf_snap_$seq")
+      val cdfDir = WriteOnce.path(s"stream_cdf_out_$seq")
+      Seq(snapBase, cdfDir).foreach(p => JavaUtils.deleteQuietly(new java.io.File(p)))
       new java.io.File(snapBase).mkdirs()
       val schema = gen1.withColumn("gen", lit(1)).schema
       withStateFanout(s) {
@@ -500,17 +462,10 @@ object Streaming {
       import org.apache.spark.sql.streaming.Trigger
       import graft.streaming.StreamOps
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_an_source", tag)
-      graft.sources.WriteOnce.ensure(dir, tag) {
-        batch.write.mode("overwrite").parquet(dir)
-      }
+      val dir = eventsReplay(d, batch)
       val qn = s"graft_stream_tws_${streamSeq.incrementAndGet()}"
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         import s.implicits._
         val events = s.readStream.schema(batch.schema).parquet(dir)
           .as[StreamOps.Event]
@@ -521,11 +476,6 @@ object Streaming {
             .outputMode("update").trigger(Trigger.AvailableNow()).start()
           try q.awaitTermination(120000) finally q.stop()
         }
-      } finally prev match {
-        case Some(v) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
       s.table(qn)
         .groupBy("user_id")
@@ -545,16 +495,11 @@ object Streaming {
     "stream_availablenow_union" -> ((s, d) => {
       import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
-      val tag = graft.sources.WriteOnce.inputTag(d, "events")
-      val dirA = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_un_a", tag)
-      val dirB = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/stream_un_b", tag)
-      graft.sources.WriteOnce.ensure(dirA, tag) {
+      val dirA = WriteOnce.sink("stream_un_a", d, "events") { dirA =>
         batch.filter(col("event_type") === "click")
           .write.mode("overwrite").parquet(dirA)
       }
-      graft.sources.WriteOnce.ensure(dirB, tag) {
+      val dirB = WriteOnce.sink("stream_un_b", d, "events") { dirB =>
         batch.filter(col("event_type") === "purchase")
           .write.mode("overwrite").parquet(dirB)
       }
@@ -580,20 +525,12 @@ object Streaming {
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Scope the shuffle/state fan-out of a gate streaming query to the
-    * fixture's state volume. Streaming stateful operators bind
-    * `spark.sql.shuffle.partitions` at query START as the state-store
-    * partition count, and every state partition costs per-micro-batch
-    * delta files + fsyncs — so fan-out must track STATE SIZE (≤2k
-    * distinct users in the replay gate), not core count: at 32
-    * partitions the stream-stream join spent ~3× its runtime writing
-    * near-empty state files (measured round 7). At production scale
-    * this is the same sizing knob batch shuffle.partitions is — raise
-    * it with key cardinality; the query shape is unchanged. Restored
-    * in a finally so the downstream batch aggregate (and every other
-    * key — Verify/Bench run keys sequentially) keeps the session
-    * fan-out.
+  /** The events fixture as a parquet dir for the file-stream replays;
+    * every AvailableNow key reads the same one.
     */
+  private def eventsReplay(d: String, batch: DataFrame): String =
+    WriteOnce.sink("stream_an_source", d, "events")(batch.write.mode("overwrite").parquet(_))
+
   /** Ephemeral-checkpoint base for the gate's one-shot streaming
     * queries (r19, guide §6 / VERDICT r18 #4): with no explicit
     * location Spark puts the temp checkpoint (offset/commit WAL +
@@ -612,29 +549,27 @@ object Streaming {
     else None
   }
 
-  private def withStateFanout[T](s: SparkSession, n: Int = 8)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    val prevCkpt = s.conf.getOption("spark.sql.streaming.checkpointLocation")
-    shmCkptBase.foreach(b =>
-      s.conf.set("spark.sql.streaming.checkpointLocation", b))
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      shmCkptBase.foreach { b =>
-        prevCkpt.fold(s.conf.unset("spark.sql.streaming.checkpointLocation"))(
-          v => s.conf.set("spark.sql.streaming.checkpointLocation", v))
-        // the queries inside body are stopped by now and never
-        // restarted (unique name per invocation) — reclaim the RAM
-        try {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(new java.io.File(b))
-        } catch { case _: Throwable => () }
-      }
+  /** Scope the shuffle/state fan-out of a gate streaming query to the
+    * fixture's state volume. Streaming stateful operators bind
+    * `spark.sql.shuffle.partitions` at query START as the state-store
+    * partition count, and every state partition costs per-micro-batch
+    * delta files + fsyncs — so fan-out must track STATE SIZE (≤2k
+    * distinct users in the replay gate), not core count: at 32
+    * partitions the stream-stream join spent ~3× its runtime writing
+    * near-empty state files (measured round 7). At production scale
+    * this is the same sizing knob batch shuffle.partitions is — raise
+    * it with key cardinality; the query shape is unchanged. Restored
+    * on exit so the downstream batch aggregate (and every other
+    * key — Verify/Bench run keys sequentially) keeps the session
+    * fan-out.
+    */
+  private def withStateFanout[T](s: SparkSession)(body: => T): T =
+    withConf(s, Seq("spark.sql.shuffle.partitions" -> "8") ++
+        shmCkptBase.map("spark.sql.streaming.checkpointLocation" -> _): _*) {
+      // the queries inside body are stopped by now and never
+      // restarted (unique name per invocation) — reclaim the RAM
+      try body finally shmCkptBase.foreach(b => JavaUtils.deleteQuietly(new java.io.File(b)))
     }
-  }
 
   val oracles: Map[String, String] = Map(
     // The CDF oracle re-derives all three generations from the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
 
 /** Time-series shaping: calendar gap-fill, and partition-pruned
   * read-back of a partitioned sink.
@@ -1671,7 +1672,7 @@ object TimeSeries {
   private[graft] def eventTransitions(
       s: SparkSession, d: String): (DataFrame, DataFrame) =
     transMemo.getOrElseUpdate(s,
-      graft.sources.WriteOnce.inputTag(d, "events"), {
+      WriteOnce.inputTag(d, "events"), {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy("ts", "event_id")
         val tr = TestData.events(s, d)
@@ -2519,10 +2520,7 @@ object TimeSeries {
     // the file for date-range scans — the sort-order lever for
     // scan-heavy workloads at 100 TB.
     "sink_sorted_clustered" -> ((s, d) => {
-      val tag0 = graft.sources.WriteOnce.inputTag(d, "lineitem")
-      val tmp = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/sink_sorted_clustered", tag0)
-      graft.sources.WriteOnce.ensure(tmp, tag0) {
+      val tmp = WriteOnce.sink("sink_sorted_clustered", d, "lineitem") { tmp =>
         TestData.lineitem(s, d)
           .repartitionByRange(4, col("l_shipdate"))
           .sortWithinPartitions("l_shipdate")
@@ -2537,10 +2535,7 @@ object TimeSeries {
     }),
 
     "sink_partition_prune" -> ((s, d) => {
-      val tag0 = graft.sources.WriteOnce.inputTag(d, "events")
-      val tmp = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/sink_partition_prune", tag0)
-      graft.sources.WriteOnce.ensure(tmp, tag0) {
+      val tmp = WriteOnce.sink("sink_partition_prune", d, "events") { tmp =>
         TestData.events(s, d).write.mode("overwrite")
           .partitionBy("event_type").parquet(tmp)
       }

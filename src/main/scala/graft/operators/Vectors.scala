@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.TestData
 import graft.TestData.r4
+import graft.sources.WriteOnce
 import graft.functions.{VectorCentroid, VectorOps => V}
 
 /** §2.I vector / embedding operators — the reference's domain core
@@ -398,14 +399,6 @@ object Vectors {
         .filter(col("vec_id") % 53 === 0).select(col("vec_id").as("tid"))
       val touched = s0.join(broadcast(tomb), col("vec_id") === col("tid"))
         .select("cluster").distinct().collect().map(_.get(0)).toSeq
-      val tag = graft.sources.WriteOnce.inputTag(d, "embeddings")
-      val dir = graft.sources.WriteOnce.dirFor(
-        "/root/repo/target/tmp/ivf_compact", tag)
-      if (touched.nonEmpty) graft.sources.WriteOnce.ensure(dir, tag) {
-        s0.filter(col("cluster").isInCollection(touched))
-          .join(broadcast(tomb), col("vec_id") === col("tid"), "left_anti")
-          .write.mode("overwrite").partitionBy("cluster").parquet(dir)
-      }
       // Untouched clusters read from the live index; touched ones
       // from the compacted dir — skipped entirely when no tombstone
       // landed (an empty compacted dir has no schema to infer).
@@ -415,8 +408,14 @@ object Vectors {
           .select("vec_id", "cluster")
       val after =
         if (touched.isEmpty) untouched
-        else s.read.parquet(dir).select("vec_id", "cluster")
-          .unionByName(untouched)
+        else {
+          val dir = WriteOnce.sink("ivf_compact", d, "embeddings") { dir =>
+            s0.filter(col("cluster").isInCollection(touched))
+              .join(broadcast(tomb), col("vec_id") === col("tid"), "left_anti")
+              .write.mode("overwrite").partitionBy("cluster").parquet(dir)
+          }
+          s.read.parquet(dir).select("vec_id", "cluster").unionByName(untouched)
+        }
       val before = s0.groupBy("cluster").agg(count(lit(1)).as("n_before"))
       // LEFT join from `before` + coalesce: a cluster whose vectors
       // are ALL tombstoned must still report (n_after = 0,

@@ -57,17 +57,17 @@ object FileFormats {
     * ingest path (an image/audio crawl lands as one object per
     * asset, and Spark lists + reads them in parallel, one partition
     * per file batch). EXECUTORS write their partitions' files
-    * directly (foreachPartition, no driver collect); on a cluster
-    * `base` would be shared storage. WriteOnce skips the fan-out
-    * write when the committed file set for this input already
-    * exists.
+    * directly (foreachPartition, no driver collect); on a cluster the
+    * sink root would be shared storage. The files land in the
+    * per-input sink `name` for `table` of `sfDir`, and WriteOnce skips
+    * the fan-out write when the committed file set for this input
+    * already exists.
     */
   def binaryFilesRoundTrip(spark: SparkSession, payloads: DataFrame,
-      idCol: String, contentCol: String, base: String,
-      tag: String): DataFrame = {
+      idCol: String, contentCol: String, name: String, sfDir: String,
+      table: String): DataFrame = {
     import org.apache.spark.sql.{functions => F, Row}
-    val dir = WriteOnce.dirFor(base, tag)
-    WriteOnce.ensure(dir, tag) {
+    val dir = WriteOnce.sink(name, sfDir, table) { dir =>
       val d = new java.io.File(dir)
       d.mkdirs()
       Option(d.listFiles()).getOrElse(Array.empty)

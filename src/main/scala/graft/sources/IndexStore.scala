@@ -40,23 +40,15 @@ object IndexStore {
     StructField("cluster", IntegerType),
     StructField("batch", LongType)))
 
-  def ivfIndexPath(sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"/root/repo/target/tmp/ivf_index_${Version}_$tag"
-  }
-
   /** The fixture index over the 4 fixed centroids, built if absent;
     * returns its path. The skip marker is content-sensitive (size +
     * mtime of the input fixture), so a regenerated fixture rebuilds it.
     */
-  def ensureIvfIndex(s: SparkSession, d: String): String = {
-    val path = ivfIndexPath(d)
-    WriteOnce.ensure(path, WriteOnce.inputTag(d, "embeddings")) {
+  def ensureIvfIndex(s: SparkSession, d: String): String =
+    WriteOnce.sink(s"ivf_index_$Version", d, "embeddings") { path =>
       val e = TestData.embeddings(s, d)
       build(e, Vectors.fixedCentroids(e), path)
     }
-    path
-  }
 
   def readIvfIndex(s: SparkSession, d: String): DataFrame =
     read(s, ensureIvfIndex(s, d))

@@ -4,20 +4,32 @@ import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-/** Skip-if-already-written guard for deterministic sinks.
+/** Where every on-disk sink lives, and the skip-if-already-written
+  * guard for the deterministic ones.
   *
   * Several declared queries write a sink and read it back
   * (`sink_parquet_partitioned`, `sink_partition_prune`,
-  * `sink_sorted_clustered`, the bucketed-join tables). Their outputs
-  * are pure functions of the input fixture, so rewriting them on
-  * every Bench/Verify invocation only inflates timings. `ensure`
-  * runs the write only when the committed output (`_SUCCESS`) plus a
-  * `_GRAFT_TAG` marker recording the input (sf dir) is absent or
-  * stale — so switching scale factors still rewrites, while repeat
-  * runs at the same scale reuse the files. Underscore-prefixed
-  * marker files are invisible to parquet readers.
+  * `sink_sorted_clustered`, the fixture IVF index, the streaming
+  * replays). All of them live under [[root]]: `target/tmp` under the
+  * JVM's working directory, resolved once. Tests, `run` and the
+  * benchmark all start in the checkout, so each checkout keeps its own
+  * sinks — a run from a second checkout (an A/B against a parent
+  * commit, a scratch copy) never reuses or races on another's files.
+  * `ensure` is synchronized only within one JVM; per-checkout roots
+  * are what keep separate JVMs apart.
+  *
+  * Their outputs are pure functions of the input fixture, so rewriting
+  * them on every Bench/Verify invocation only inflates timings.
+  * `ensure` runs the write only when the committed output (`_SUCCESS`)
+  * plus a `_GRAFT_TAG` marker recording the input is absent or stale —
+  * so switching scale factors or regenerating a fixture still
+  * rewrites, while repeat runs on the same input reuse the files.
+  * Underscore-prefixed marker files are invisible to parquet readers.
   */
 object WriteOnce {
+
+  /** The one directory every sink lives under. */
+  val root: String = new File("target/tmp").getAbsolutePath
 
   /** Content-sensitive tag for a fixture table: path + size + mtime.
     * If the driver regenerates the fixture between rounds (same path,
@@ -29,18 +41,38 @@ object WriteOnce {
     s"${f.getAbsolutePath}:${f.length()}:${f.lastModified()}"
   }
 
-  /** Per-input sink directory: `base` suffixed with a short hash of
-    * the content tag, so sinks for different scale factors coexist
-    * instead of evicting each other (Verify at sf0.01 and Bench at
-    * sf0.1 alternate in every driver round — a single shared path
-    * made each one rewrite the other's committed sink).
+  /** Per-input name: `name` suffixed with a short hash of the input
+    * tag of `table` in `sfDir`, so sinks for different scale factors
+    * coexist instead of evicting each other (Verify at sf0.01 and
+    * Bench at sf0.1 alternate — a single shared name made each one
+    * rewrite the other's committed sink).
     */
-  def dirFor(base: String, tag: String): String = {
+  def tagged(name: String, sfDir: String, table: String): String = {
     val h = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(tag.getBytes(UTF_8)).take(4).map("%02x".format(_)).mkString
-    s"${base}_$h"
+      .digest(inputTag(sfDir, table).getBytes(UTF_8))
+      .take(4).map("%02x".format(_)).mkString
+    s"${name}_$h"
   }
 
+  /** The fixed-name sink `name`: rewritten by its owner on every use. */
+  def path(name: String): String = s"$root/$name"
+
+  /** The per-input sink `name` for `table` of `sfDir`. */
+  def path(name: String, sfDir: String, table: String): String =
+    path(tagged(name, sfDir, table))
+
+  /** The per-input sink `name` for `table` of `sfDir`, written by
+    * `write(dir)` unless a committed write for the same input exists;
+    * returns its path.
+    */
+  def sink(name: String, sfDir: String, table: String)(write: String => Unit): String = {
+    val dir = path(name, sfDir, table)
+    ensure(dir, inputTag(sfDir, table))(write(dir))
+  }
+
+  /** Run `write` unless `path` holds a committed write (`_SUCCESS`)
+    * stamped with `tag`; then stamp it. Returns `path`.
+    */
   def ensure(path: String, tag: String)(write: => Unit): String = synchronized {
     val marker = new File(path, "_GRAFT_TAG")
     val fresh = new File(path, "_SUCCESS").exists() && marker.exists() &&

@@ -28,7 +28,7 @@ class EngineApiSpec extends SparkSpec {
   }
 
   test("buildIvfIndex writes a searchable cluster-partitioned index") {
-    val path = "/root/repo/target/tmp/engine_ivf_index"
+    val path = java.nio.file.Files.createTempDirectory("engine_ivf_index").toString
     val cents = operators.Vectors.fixedCentroids(
       emb.withColumnRenamed("id", "vec_id"))
     val assigned = engine.buildIvfIndex(emb, cents, path)
@@ -249,7 +249,7 @@ class EngineApiSpec extends SparkSpec {
   test("trainCentroids feeds buildIvfIndex/ivfSearch end-to-end") {
     val cents = engine.trainCentroids(emb, k = 4, seed = 7L)
     assert(cents.count() === 4)
-    val path = "/root/repo/target/tmp/engine_ivf_trained"
+    val path = java.nio.file.Files.createTempDirectory("engine_ivf_trained").toString
     engine.buildIvfIndex(emb, cents, path)
     val res = engine.ivfSearch(path, cents, emb.filter(col("id") < 3),
                                k = 5, nProbe = 2)

@@ -18,11 +18,8 @@ class MaintenanceSpec extends SparkSpec {
   test("sink_compact_files collapses fragmented partitions to one file each") {
     val d = sf("sf0.001")
     graft.operators.Maintenance.defs("sink_compact_files")(spark, d).collect()
-    val tag = graft.sources.WriteOnce.inputTag(d, "events")
-    val small = new java.io.File(graft.sources.WriteOnce.dirFor(
-      "/root/repo/target/tmp/compact_small", tag))
-    val comp = new java.io.File(graft.sources.WriteOnce.dirFor(
-      "/root/repo/target/tmp/compact_out", tag))
+    val small = new java.io.File(graft.sources.WriteOnce.path("compact_small", d, "events"))
+    val comp = new java.io.File(graft.sources.WriteOnce.path("compact_out", d, "events"))
     val before = perDir(small)
     val after = perDir(comp)
     assert(before.keySet == after.keySet, "same partition directories")
@@ -36,7 +33,7 @@ class MaintenanceSpec extends SparkSpec {
     import spark.implicits._
     // stage a snapshot with a duplicate key directly (bypassing the
     // declared key's curation), then run the same audit gate
-    val dir = "/root/repo/target/tmp/wap_bad_" + System.nanoTime()
+    val dir = java.nio.file.Files.createTempDirectory("wap_bad").toString
     Seq((1L, "en", 10L), (1L, "en", 12L), (2L, "de", 9L))
       .toDF("doc_id", "lang", "n_chars")
       .write.mode("overwrite").parquet(dir)
@@ -57,7 +54,7 @@ class MaintenanceSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.sum
     val M = graft.operators.Maintenance
-    val base = "/root/repo/target/tmp/snapstore_spec_" + System.nanoTime()
+    val base = java.nio.file.Files.createTempDirectory("snapstore_spec").toString
     val tag = "spec"
     def gen(i: Int) = Seq((1L, i.toLong), (2L, i.toLong)).toDF("id", "v")
     M.publishSnapshot(base, 1, gen(1), tag, "id", retain = 2)
@@ -106,9 +103,7 @@ class MaintenanceSpec extends SparkSpec {
   test("sink_write_audit_publish publishes the audited snapshot once") {
     val d = sf("sf0.001")
     graft.operators.Maintenance.defs("sink_write_audit_publish")(spark, d).collect()
-    val tag = graft.sources.WriteOnce.inputTag(d, "documents")
-    val staging = graft.sources.WriteOnce.dirFor(
-      "/root/repo/target/tmp/wap_staging", tag)
+    val staging = graft.sources.WriteOnce.path("wap_staging", d, "documents")
     assert(new java.io.File(staging, "_GRAFT_PUBLISHED").exists(),
       "audit-passing snapshot must carry the published marker")
   }

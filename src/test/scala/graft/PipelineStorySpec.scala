@@ -36,7 +36,7 @@ class PipelineStorySpec extends SparkSpec {
     // 2. Index build over the deduped corpus's embeddings.
     val corpus = emb.join(reps, "id")
     val cents = engine.trainCentroids(corpus, k = 4, seed = 11L)
-    val path = "/root/repo/target/tmp/story_ivf_index"
+    val path = java.nio.file.Files.createTempDirectory("story_ivf_index").toString
     engine.buildIvfIndex(corpus, cents, path)
 
     // 3. Search the stored index.

@@ -181,13 +181,7 @@ class StreamingSpec extends SparkSpec {
     // The idempotent-sink pattern: foreachBatch keys output by
     // batchId so a replayed batch overwrites instead of duplicating.
     import org.apache.spark.sql.DataFrame
-    val dir = "/root/repo/target/tmp/foreach_batch_sink"
-    // clear stale batch dirs from prior runs
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(dir))
+    val dir = java.nio.file.Files.createTempDirectory("foreach_batch_sink").toString
     val input = MemoryStream[Event](spark)
     val q = input.toDF()
       .writeStream
@@ -211,12 +205,7 @@ class StreamingSpec extends SparkSpec {
     import StreamOps.Vec
     import graft.sources.IndexStore
     import org.apache.spark.sql.functions.col
-    val dir = "/root/repo/target/tmp/stream_ivf_append"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(dir))
+    val dir = java.nio.file.Files.createTempDirectory("stream_ivf_append").toString
     val cents = Seq((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))
       .toDF("cid", "cv")
     val input = MemoryStream[Vec](spark)
@@ -338,7 +327,7 @@ class StreamingSpec extends SparkSpec {
     // processed with Trigger.AvailableNow — results must equal the
     // batch run of the same Catalyst expressions.
     import org.apache.spark.sql.streaming.Trigger
-    val dir = "/root/repo/target/tmp/stream_file_source"
+    val dir = java.nio.file.Files.createTempDirectory("stream_file_source").toString
     val batchDf = TestData.events(spark, sf("sf0.001"))
     batchDf.write.mode("overwrite").parquet(dir)
     val streamIn = spark.readStream.schema(batchDf.schema).parquet(dir)

@@ -12,8 +12,10 @@ state, after JVM start, set-up and warm-up):
     whose stack holds at least one matching frame anywhere. The families
     are `hof` (Spark's interpreted higher-order functions: zip_with,
     aggregate, transform, ...), `janino` (code generation and compilation),
-    `sorter` (Spark's external sorters and TimSort) and `shuffle` (shuffle
-    writers, readers and exchanges).
+    `sorter` (Spark's external sorters and TimSort), `shuffle` (shuffle
+    writers, readers and exchanges), `catalyst` (driver-side planning: rule
+    executors, the analyzer and optimizer, and adaptive re-planning) and
+    `scheduler` (the DAG and task schedulers).
 
 A sample is one stack of one running Java thread, taken every 10-20 ms by the
 `profile` settings, so shares are shares of on-CPU Java time; JIT compiler
@@ -51,6 +53,13 @@ FAMILIES = {
     "shuffle": r"org\.apache\.spark\.shuffle\."
                r"|org\.apache\.spark\.sql\.execution\.exchange\."
                r"|org\.apache\.spark\.storage\.ShuffleBlockFetcherIterator\b",
+    "catalyst": r"org\.apache\.spark\.sql\.catalyst\.rules\.RuleExecutor\b"
+                r"|org\.apache\.spark\.sql\.catalyst\.analysis\.Analyzer\b"
+                r"|org\.apache\.spark\.sql\.catalyst\.optimizer\.Optimizer\b"
+                r"|org\.apache\.spark\.sql\.execution\.adaptive\.AdaptiveSparkPlanExec\$*"
+                r"\.(\$anonfun\$)?(reOptimize|createQueryStages|newQueryStage"
+                r"|optimizeQueryStage|applyPhysicalRules)\b",
+    "scheduler": r"org\.apache\.spark\.scheduler\.(DAGScheduler|TaskSchedulerImpl)\b",
 }
 
 TIME = re.compile(r"startTime = (\d\d:\d\d:\d\d(?:\.\d+)?)(?: \((\d{4}-\d\d-\d\d)\))?")

@@ -345,10 +345,14 @@ class GraftEngine(val spark: SparkSession) {
   /** Collapse a near-dup pair list (id_a, id_b) into connected
     * components: returns (id, component) with component = min id in
     * the cluster — pick one survivor per component, not per pair.
-    * Iterative min-label propagation; rounds = cluster diameter.
+    * `id`, `id_a` and `id_b` are integral. Union-find with a local
+    * finish (`GraphOps.connectedComponents`): a pair list of up to
+    * `GraphOps.LocalEdges` edges is resolved on the driver in one
+    * pass, a longer one first shrinks in distributed rounds; any
+    * cluster diameter converges.
     */
   def dedupComponents(ids: DataFrame, pairs: DataFrame): DataFrame =
-    GraphOps.minLabelComponents(
+    GraphOps.connectedComponents(
       ids.select(col("id")),
       pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
       .select(col("id"), col("comp").as("component"))

@@ -2,110 +2,227 @@ package graft.operators
 
 import graft.CkptOps
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.storage.StorageLevel
 import graft.TestData
 
 /** Dedup cluster formation: connected components over the near-dup
-  * pair graph (Jaccard > 0.9, same-lang) via iterative min-label
-  * propagation — the final step of a real dedup pipeline (pick one
-  * survivor per component, not per pair).
+  * pair graph (Jaccard > 0.9, same-lang) — the final step of a real
+  * dedup pipeline (pick one survivor per component, not per pair).
   *
-  * The loop is the Spark-idiomatic iterative-algorithm shape: each
-  * round joins labels to neighbors, takes the per-node min, and
-  * `localCheckpoint`s to cut lineage; convergence is detected with a
-  * driver-side count of changed labels. Rounds needed = graph
-  * diameter, which for near-dup clusters (dense cliques) is small.
-  * At 100 TB the same loop runs with edges/labels partitioned by id
-  * — each round is one shuffle join, no driver-side data.
+  * [[GraphOps.connectedComponents]] is union-find with contraction in
+  * the shape of Kiveris et al., "Connected Components in MapReduce and
+  * Beyond" (SoCC 2014), with a local finish: distributed rounds shrink
+  * the edge list until it fits the driver ([[GraphOps.LocalEdges]]),
+  * which ends it with one union-find. Rounds grow with log |nodes|,
+  * not with the diameter; a near-dup pair list of a few thousand edges
+  * never leaves the local finish. At 100 TB the rounds run over edges
+  * partitioned by node and the driver holds at most `LocalEdges` edges.
   */
 object GraphOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Connected components by iterative min-label propagation over an
-    * undirected pair list. `ids`: one column `id` (the node universe);
-    * `pairs`: (src, dst) with each undirected edge listed once.
-    * Returns (id, comp) with comp = min node id in the component.
+  /** The most edges the local finish collects: 16 MB of longs. */
+  val LocalEdges: Long = 1L << 20
+
+  /** Connected components of an undirected pair list. `ids`: one
+    * integral column `id` (the node universe); `pairs`: (src, dst),
+    * each undirected edge in either direction, any number of times.
+    * Returns (id, comp), one row per `ids` row, comp = the min id of
+    * its component, typed as `id`. An edge with a null endpoint or an
+    * endpoint outside `ids` contributes nothing.
     *
-    * Each round is one shuffle join + per-node min; `localCheckpoint`
-    * cuts lineage so plan size stays constant across rounds; the
-    * driver holds only two longs. Convergence detection: labels only
-    * ever decrease, so sum(comp) is strictly decreasing until the
-    * fixpoint — one cheap scan of the checkpointed labels per round
-    * instead of a self-join + count. Rounds needed = graph diameter
-    * (small for near-dup cliques).
+    * While the edge list holds more than `localEdges` edges, a
+    * distributed round shrinks it: per-partition union-finds hook every
+    * node to a smaller one of its component ([[minRootHooks]]), pointer
+    * jumping ([[jumpPointers]]) takes each node to the root of its hook
+    * tree, and the edges are contracted through those roots
+    * ([[contract]]). The edge list left is collected and a driver
+    * union-find with min roots turns it into a node → root
+    * `LocalRelation`, broadcast-joined onto `ids`; the rounds' maps are
+    * resolved first, again by pointer jumping. The tests pass
+    * `localEdges` = 0 to force the rounds.
     */
-  def minLabelComponents(ids: DataFrame, pairs: DataFrame): DataFrame = {
-    // The label/edge tables are tiny relative to the corpus (two
-    // longs per node / edge); per-round 32-way shuffles of a few
-    // thousand rows are pure per-partition overhead × rounds, and
-    // the dominant source of this query's wall-time variance. Pin a
-    // small fan-out with EXPLICIT repartition on the join/group keys
-    // — never by mutating session-global spark.sql.shuffle.partitions,
-    // which races with concurrent queries on a shared session and
-    // leaks on crash. localCheckpoint preserves the hash partitioning,
-    // so each round's join reuses it without a fresh exchange. At
-    // 100 TB, size P to |labels| / target-rows-per-partition instead.
-    // `localCheckpoint` captures the physical hash partitioning in
-    // its LogicalRDD, and the `shuffle_hash` hints stop AQE from
-    // flipping the tiny sides to broadcast (which would discard that
-    // partitioning) — so each round's two joins reuse the
-    // checkpointed (dst,P)/(id,P) layouts with NO new exchange, and
-    // the only per-round shuffle is the src re-key feeding the
-    // neighbor-min aggregate. That is the minimum for label
-    // propagation (edges are consumed keyed by dst, produced keyed
-    // by src).
-    val P = 8
-    // Materialize the pair list ONCE before mirroring it: the union's
-    // two branches otherwise re-run the caller's entire edge lineage
-    // (for the fixture, the full blocked Jaccard join) twice — the
-    // self-union variant of the self-join-recompute trap. The pair
-    // list itself is tiny (two longs per edge), so the extra
-    // materialization is free relative to one saved edge-stage run.
-    val p0 = pairs.ckpt()
-    val edges = p0
-      .union(p0.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(P, col("dst"))
-      .ckpt()
-    var labels = ids.select(col("id"), col("id").as("comp"))
-      .repartition(P, col("id"))
-      .ckpt()
-    def propagate(lbl: DataFrame): DataFrame = {
-      val nbr = edges.join(lbl.hint("shuffle_hash"), col("dst") === col("id"))
-        .repartition(P, col("src"))
-        .groupBy(col("src")).agg(min(col("comp")).as("nbrComp"))
-      lbl.join(nbr.hint("shuffle_hash"), col("id") === col("src"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"))
+  def connectedComponents(ids: DataFrame, pairs: DataFrame): DataFrame =
+    connectedComponents(ids, pairs, LocalEdges)
+
+  private[graft] def connectedComponents(ids: DataFrame, pairs: DataFrame,
+                                         localEdges: Long): DataFrame = {
+    val s = ids.sparkSession
+    import s.implicits._
+    val idType = ids.schema("id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"component ids must be integral, not $idType")
+    val id = col("id").cast(LongType)
+    val nodes = ids.select(id.as("n"))
+    // Both semi joins drop null endpoints too; least/greatest would not.
+    var edges = pairs.select(col("src").cast(LongType).as("a"),
+        col("dst").cast(LongType).as("b"))
+      .join(nodes, col("a") === col("n"), "left_semi")
+      .join(nodes, col("b") === col("n"), "left_semi")
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")), greatest(col("a"), col("b")))
+      .as[(Long, Long)].rdd
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val maps = scala.collection.mutable.Buffer.empty[RDD[(Long, Long)]]
+    val parts = s.sessionState.conf.numShufflePartitions
+    var lastNodes = Long.MaxValue
+    var small = collectIfSmall(edges, localEdges)
+    while (small.isEmpty) {
+      val hooks = minRootHooks(edges, parts, salt = maps.length + 1L)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // Each component's largest node hooks below itself and so leaves
+      // the edge list: a round that kept every node has a fault.
+      val nodeCount = hooks.count()
+      if (nodeCount >= lastNodes)
+        throw new IllegalStateException(s"connected components: a round " +
+          s"kept all $nodeCount nodes of the edge list")
+      lastNodes = nodeCount
+      maps += jumpPointers(hooks.filter { case (v, m) => m < v }, parts)
+      val next = contract(edges, maps.last, parts)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      small = collectIfSmall(next, localEdges)
+      Seq(hooks, edges).foreach(_.unpersist(blocking = false))
+      edges = next
     }
-    var prevSum = labels.agg(sum(col("comp")).cast("long")).first().getLong(0)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 25) {
-      // TWO propagation steps per materialization: labels only ever
-      // decrease, so overshooting the fixpoint by one step is free,
-      // and halving the checkpoint + convergence-scan jobs halves the
-      // loop's fixed overhead (rounds ≈ graph diameter, so the loop
-      // is overhead-bound for the dense near-dup cliques).
-      val next = propagate(propagate(labels)).ckpt()
-      val s2 = next.agg(sum(col("comp")).cast("long")).first().getLong(0)
-      labels = next
-      converged = s2 == prevSum
-      prevSum = s2
-      iter += 1
+    edges.unpersist(blocking = false)
+    val (node, root) = minRoots(small.get)
+    val finish = broadcast(node.indices.filter(i => node(i) != root(i))
+      .map(i => (node(i), root(i))).toDF("node", "root"))
+    val rep =
+      if (maps.isEmpty) ids.select(col("id"), id.as("rep"))
+      else {
+        // A node leaves the edge list in the round that maps it, so the
+        // rounds' maps are one forest of depth ≤ the round count.
+        val ptr = jumpPointers(s.sparkContext.union(maps.toSeq), parts)
+          .toDF("v", "p")
+        ids.select(col("id")).join(ptr, id === col("v"), "left")
+          .select(col("id"), coalesce(col("p"), id).as("rep"))
+      }
+    rep.join(finish, col("rep") === col("node"), "left")
+      .select(col("id"),
+        coalesce(col("root"), col("rep")).cast(idType).as("comp"))
+  }
+
+  /** The edges if there are at most `localEdges` of them. One job counts
+    * them and brings back each partition's edges up to its 1/P share of
+    * `localEdges`, so the driver never holds more; a second job collects
+    * them only when a partition held more than its share.
+    */
+  private def collectIfSmall(edges: RDD[(Long, Long)], localEdges: Long)
+      : Option[Array[(Long, Long)]] = {
+    val share = localEdges / math.max(1, edges.getNumPartitions)
+    val parts = edges.mapPartitions { it =>
+      val kept = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      var n = 0L
+      it.foreach { e => n += 1; if (n <= share) kept += e }
+      Iterator((n, kept.toArray))
+    }.collect()
+    if (parts.map(_._1).sum > localEdges) None
+    else if (parts.forall { case (n, kept) => n == kept.length })
+      Some(parts.flatMap(_._2))
+    else Some(edges.collect())
+  }
+
+  /** Min-root union-find over `edges`: (nodes ascending, each node's
+    * root = the min node of its component). Ids are ascending, so
+    * index order is id order and the min root is the min index.
+    */
+  private def minRoots(edges: Array[(Long, Long)]): (Array[Long], Array[Long]) = {
+    val ends = new Array[Long](2 * edges.length)
+    for (i <- edges.indices) {
+      ends(2 * i) = edges(i)._1; ends(2 * i + 1) = edges(i)._2
     }
-    labels
+    java.util.Arrays.sort(ends)
+    var n = 0
+    for (v <- ends) if (n == 0 || ends(n - 1) != v) { ends(n) = v; n += 1 }
+    val node = java.util.Arrays.copyOf(ends, n)
+    val parent = Array.range(0, n)
+    def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    for ((a, b) <- edges) {
+      val ra = find(java.util.Arrays.binarySearch(node, a))
+      val rb = find(java.util.Arrays.binarySearch(node, b))
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    }
+    (node, Array.tabulate(n)(i => node(find(i))))
+  }
+
+  /** One round's hooks: v → the least local root of v, for every node
+    * of `edges` (a < b). Each edge goes to the partitions of both its
+    * endpoints, hashed with a per-round `salt`, so every partition holds
+    * the whole neighbourhood of each of its nodes, and a min-root
+    * union-find runs per partition. A node's hook is at most the least
+    * id within two hops of it; a node that is its own hook is a root.
+    */
+  private def minRootHooks(edges: RDD[(Long, Long)], parts: Int,
+                           salt: Long): RDD[(Long, Long)] = {
+    def part(v: Long): Int = Math.floorMod(java.lang.Long.hashCode(
+      scala.util.hashing.byteswap64(v ^ (salt * 0x9E3779B97F4A7C15L))), parts)
+    edges.flatMap { case e @ (a, b) =>
+        val (pa, pb) = (part(a), part(b))
+        if (pa == pb) Iterator((pa, e)) else Iterator((pa, e), (pb, e))
+      }
+      .partitionBy(new HashPartitioner(parts))
+      .mapPartitions { it =>
+        val (node, root) = minRoots(it.map(_._2).toArray)
+        node.iterator.zip(root.iterator)
+      }
+      .reduceByKey(math.min(_, _), parts)
+  }
+
+  /** The edge list through `rep` (v → its root; absent = itself):
+    * distinct (root a, root b) with a < b, self-loops dropped. */
+  private def contract(edges: RDD[(Long, Long)], rep: RDD[(Long, Long)],
+                       parts: Int): RDD[(Long, Long)] =
+    edges.leftOuterJoin(rep, parts)
+      .map { case (a, (b, ra)) => (b, ra.getOrElse(a)) }
+      .leftOuterJoin(rep, parts)
+      .flatMap { case (b, (ra, rb)) =>
+        val r = rb.getOrElse(b)
+        if (ra == r) None else Some((math.min(ra, r), math.max(ra, r)))
+      }
+      .distinct(parts)
+
+  /** Pointer jumping over a forest of v → p (p < v): v → the root of
+    * its tree, as a local checkpoint. Each pass sets p(v) = p(p(v)); a
+    * tree of depth d takes ⌈log2 d⌉ + 1 passes, so 64 cover any depth
+    * of Long ids and needing more throws.
+    */
+  private def jumpPointers(ptr0: RDD[(Long, Long)], parts: Int): RDD[(Long, Long)] = {
+    val passes = scala.collection.mutable.Buffer.empty[RDD[_]]
+    var ptr = ptr0
+    var moved = true
+    while (moved) {
+      if (passes.length == 64)
+        throw new IllegalStateException("pointer jumping passed 64 passes")
+      val next = ptr.map(_.swap).leftOuterJoin(ptr, parts)
+        .map { case (p, (v, pp)) => (v, (pp.getOrElse(p), pp.isDefined)) }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      passes += next
+      moved = next.filter(_._2._2).count() > 0
+      ptr = next.mapValues(_._1)
+    }
+    ptr.localCheckpoint()
+    ptr.count()
+    passes.foreach(_.unpersist(blocking = false))
+    ptr
   }
 
   /** Per-session memo of the fixture's component labels: the edge
-    * stage + propagation loop is a pure function of the documents
-    * fixture, and TWO declared keys (`dedup_components`,
-    * `dedup_survivors`) consume it in the same run — materialize once
-    * (the result is already a `localCheckpoint`ed few-thousand-row
-    * frame) instead of re-running the whole pipeline per key. Keyed
-    * by session identity + the content tag of the input parquet, so a
-    * regenerated fixture recomputes. The generic
-    * `minLabelComponents`/facade path is untouched.
+    * stage + components are a pure function of the documents fixture,
+    * and four declared keys (`dedup_components`, `dedup_survivors`,
+    * `dedup_storage_savings`, `dedup_cluster_stats`) consume them in
+    * the same run — compute once instead of per key.
+    * Keyed by session identity + the content tag of the input parquet,
+    * so a regenerated fixture recomputes.
     */
   private val componentsMemo = new graft.SessionMemo[DataFrame]
 
@@ -119,7 +236,7 @@ object GraphOps {
         // shape), shared with dedup_jaccard_pairs.
         val pairs = TextOps.fixtureJaccardPairs(s, d)
           .select(col("id_a").as("src"), col("id_b").as("dst"))
-        minLabelComponents(docs.select(col("doc_id").as("id")), pairs)
+        connectedComponents(docs.select(col("doc_id").as("id")), pairs)
       })
 
   /** Undirected edge list (a < b) of the IVF-probed top-3 cosine
@@ -465,7 +582,8 @@ object GraphOps {
     // edge-grain persist per level cost more than the AQE broadcast
     // deg join they replace. Same moral as the two probes below —
     // on these tiny per-round frames AQE broadcasts are near-free.
-    // MEASURED AND REJECTED (r19): the minLabelComponents recipe —
+    // MEASURED AND REJECTED (r19): the minLabelComponents recipe
+    // (now the test reference, ComponentsReference.minLabelComponents) —
     // adj/deg/labels repartitioned by their join keys at the ckpts +
     // shuffle_hash hints so every per-round join is zero-exchange
     // co-partitioned SHJ — made all three louvain keys ~2x SLOWER
@@ -933,13 +1051,13 @@ object GraphOps {
     // verify, TextOps.fixtureMinhashPairs) instead of the exact-
     // Jaccard edge list — the composition a 100 TB corpus actually
     // runs, since the exact all-pairs edge stage is the part LSH
-    // exists to replace. Same iterative min-label propagation; the
-    // oracle embeds the full mirrored LSH pipeline as the edge CTE of
-    // the recursive reachability query.
+    // exists to replace. Same connectedComponents as
+    // dedup_components; the oracle embeds the full mirrored LSH
+    // pipeline as the edge CTE of the recursive reachability query.
     "dedup_minhash_components" -> ((s, d) => {
       val pairs = TextOps.fixtureMinhashPairs(s, d)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
-      minLabelComponents(
+      connectedComponents(
           TestData.documents(s, d).select(col("doc_id").as("id")), pairs)
         .select(col("id").as("doc_id"), col("comp").as("component"))
         .orderBy("doc_id")
@@ -964,9 +1082,9 @@ object GraphOps {
     // DEDUP STORAGE SAVINGS (round 14): the document-corpus sibling
     // of multimodal_dedup_savings — the storage-ROI line a dedup
     // proposal leads with ("dropping near-dup members saves X% of
-    // bytes"). Survivor = the min-label member (its id equals its
-    // component label by min-propagation construction — the
-    // dedup_survivors convention); savings = Σ n_chars over
+    // bytes"). Survivor = the component's min-id member (its id
+    // equals its component label — the dedup_survivors
+    // convention); savings = Σ n_chars over
     // non-survivors. Rides the memoized component frame; one
     // doc-grain join + a 1-row readout with one guarded r4 ratio.
     "dedup_storage_savings" -> ((s, d) => {

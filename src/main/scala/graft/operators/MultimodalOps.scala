@@ -94,7 +94,7 @@ object MultimodalOps {
   private def fixtureMediaComponents(s: SparkSession, d: String): DataFrame =
     componentsMemo.getOrElseUpdate(s,
       graft.sources.WriteOnce.inputTag(d, "documents"),
-      GraphOps.minLabelComponents(
+      GraphOps.connectedComponents(
         fixtureBlockhashSigs(s, d).select(col("doc_id").as("id")),
         fixtureBlockhashPairs(s, d)
           .select(col("id_a").as("src"), col("id_b").as("dst"))))
@@ -385,9 +385,9 @@ object MultimodalOps {
     // the media dedup story (exact copies → multimodal_dedup,
     // near-dup pairs → blockhash_pairs, GROUPS → here) exactly as
     // dedup_components closes dedup_jaccard_pairs for text. Reuses
-    // the generic min-label propagation (per-round cost ∝ |pairs|,
-    // diameter-bounded rounds); component id = min doc_id, the same
-    // survivor convention as every dedup family.
+    // GraphOps.connectedComponents (the pair list fits its driver
+    // finish, so one union-find on the driver); component id = min
+    // doc_id, the same survivor convention as every dedup family.
     "multimodal_dedup_components" -> ((s, d) =>
       fixtureMediaComponents(s, d)
         .select(col("id").as("doc_id"), col("comp").as("component"))

@@ -1665,10 +1665,54 @@ class DegenerateSpec extends SparkSpec {
     val corpus = Seq.empty[(Long, Seq[Double])].toDF("id", "embedding")
     val cents = Seq((0, Seq(0.0, 0.0)), (1, Seq(1.0, 1.0))).toDF("cid", "cv")
     val queries = Seq((7L, Seq(0.5, 0.5))).toDF("id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("ivf_empty").toString
-    assert(engine.buildIvfIndex(corpus, cents, path).count() === 0)
-    assert(engine.ivfSearch(path, cents, queries, 5, 2).count() === 0)
-    engine.compactIvfIndex(path)
-    assert(engine.ivfSearch(path, cents, queries, 5, 2).count() === 0)
+    withTempDir("ivf_empty") { path =>
+      assert(engine.buildIvfIndex(corpus, cents, path).count() === 0)
+      assert(engine.ivfSearch(path, cents, queries, 5, 2).count() === 0)
+      engine.compactIvfIndex(path)
+      assert(engine.ivfSearch(path, cents, queries, 5, 2).count() === 0)
+    }
+  }
+
+  test("connected components converge on long chains and odd shapes") {
+    // Each shape has its own id range, so one call checks them all;
+    // both the driver finish and the forced distributed rounds run.
+    // The 52- and 200-node paths need more than 25 two-hop rounds of
+    // label propagation.
+    import spark.implicits._
+    import graft.operators.GraphOps
+    val rnd = new scala.util.Random(17)
+    def path(from: Long, n: Int) = (from until from + n - 1).map(i => (i, i + 1))
+    val shapes: Seq[(Seq[Long], Seq[(Long, Long)], Long => Long)] = Seq(
+      ((1L to 52L), path(1L, 52), _ => 1L),
+      ((101L to 300L), path(101L, 200), _ => 101L),
+      // a star whose centre is its largest id
+      ((401L to 431L), (401L to 430L).map(i => (431L, i)), _ => 401L),
+      ((501L to 510L), path(501L, 10) :+ ((510L, 501L)), _ => 501L),
+      (Seq(601L), Seq((601L, 601L)), _ => 601L),
+      ((701L to 703L), Seq((701L, 702L), (702L, 701L), (701L, 702L), (703L, 702L)),
+        _ => 701L),
+      (Seq(801L, 802L), Nil, identity),
+      // 900 and -1 are outside `ids`: they must not join 901..903
+      (Seq(901L, 902L, 903L), Seq((901L, 900L), (900L, 902L), (-1L, 903L),
+        (902L, -1L)), identity))
+    val ids = shapes.flatMap(_._1)
+    val pairs = rnd.shuffle(shapes.flatMap(_._2).map { case (a, b) =>
+      (Option(a), Option(b)) } ++ Seq((None, Some(901L)), (Some(902L), None)))
+    val expected = shapes.flatMap { case (ns, _, c) => ns.map(n => n -> c(n)) }
+      .sorted
+    val idsDf = ids.toDF("id")
+    val pairsDf = pairs.toDF("src", "dst")
+    for (localEdges <- Seq(GraphOps.LocalEdges, 0L)) {
+      val got = GraphOps.connectedComponents(idsDf, pairsDf, localEdges)
+      assert(got.schema("comp").dataType === LongType)
+      assert(got.as[(Long, Long)].collect().sorted.toSeq === expected,
+        s"localEdges = $localEdges")
+      val empty = GraphOps.connectedComponents(idsDf,
+        Seq.empty[(Long, Long)].toDF("src", "dst"), localEdges)
+      assert(empty.as[(Long, Long)].collect().sorted.toSeq ===
+        ids.sorted.map(i => (i, i)), s"no pairs, localEdges = $localEdges")
+    }
+    intercept[IllegalArgumentException](GraphOps.connectedComponents(
+      Seq("a", "b").toDF("id"), Seq(("a", "b")).toDF("src", "dst")))
   }
 }

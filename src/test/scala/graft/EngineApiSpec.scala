@@ -28,27 +28,28 @@ class EngineApiSpec extends SparkSpec {
   }
 
   test("buildIvfIndex writes a searchable cluster-partitioned index") {
-    val path = java.nio.file.Files.createTempDirectory("engine_ivf_index").toString
-    val cents = operators.Vectors.fixedCentroids(
-      emb.withColumnRenamed("id", "vec_id"))
-    val assigned = engine.buildIvfIndex(emb, cents, path)
-    val back = spark.read.parquet(path)
-    assert(back.count() === emb.count())
-    assert(back.select("cluster").distinct().count() === 4)
-    assert(back.columns.contains("embedding"), "index must carry the vectors")
-    assert(assigned.count() === emb.count())
+    withTempDir("engine_ivf_index") { path =>
+      val cents = operators.Vectors.fixedCentroids(
+        emb.withColumnRenamed("id", "vec_id"))
+      val assigned = engine.buildIvfIndex(emb, cents, path)
+      val back = spark.read.parquet(path)
+      assert(back.count() === emb.count())
+      assert(back.select("cluster").distinct().count() === 4)
+      assert(back.columns.contains("embedding"), "index must carry the vectors")
+      assert(assigned.count() === emb.count())
 
-    // and the index answers queries: ivfSearch over the written files
-    val res = engine.ivfSearch(path, cents, emb.filter(col("id") < 3),
-                               k = 5, nProbe = 2).collect()
-    assert(res.length === 15)
-    assert(res.forall(r => r.getLong(2) != r.getLong(0)), "no self-matches")
-    // probing 2 of 4 partitions: results must overlap brute-force top-5
-    val brute = engine.knn(emb, emb.filter(col("id") < 3), 5)
-      .select("qid", "neighborId").collect()
-      .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val hit = res.count(r => brute(r.getLong(0)).contains(r.getLong(2)))
-    assert(hit >= 5, s"IVF search diverged too far from brute force: $hit/15")
+      // and the index answers queries: ivfSearch over the written files
+      val res = engine.ivfSearch(path, cents, emb.filter(col("id") < 3),
+                                 k = 5, nProbe = 2).collect()
+      assert(res.length === 15)
+      assert(res.forall(r => r.getLong(2) != r.getLong(0)), "no self-matches")
+      // probing 2 of 4 partitions: results must overlap brute-force top-5
+      val brute = engine.knn(emb, emb.filter(col("id") < 3), 5)
+        .select("qid", "neighborId").collect()
+        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+      val hit = res.count(r => brute(r.getLong(0)).contains(r.getLong(2)))
+      assert(hit >= 5, s"IVF search diverged too far from brute force: $hit/15")
+    }
   }
 
   test("sortedNeighborhoodDuplicates finds planted adjacent near-dups within budget") {
@@ -249,11 +250,12 @@ class EngineApiSpec extends SparkSpec {
   test("trainCentroids feeds buildIvfIndex/ivfSearch end-to-end") {
     val cents = engine.trainCentroids(emb, k = 4, seed = 7L)
     assert(cents.count() === 4)
-    val path = java.nio.file.Files.createTempDirectory("engine_ivf_trained").toString
-    engine.buildIvfIndex(emb, cents, path)
-    val res = engine.ivfSearch(path, cents, emb.filter(col("id") < 3),
-                               k = 5, nProbe = 2)
-    assert(res.count() === 15)
+    withTempDir("engine_ivf_trained") { path =>
+      engine.buildIvfIndex(emb, cents, path)
+      val res = engine.ivfSearch(path, cents, emb.filter(col("id") < 3),
+                                 k = 5, nProbe = 2)
+      assert(res.count() === 15)
+    }
   }
 
   test("bm25 + rrfFuse build a hybrid ranking through the facade") {
@@ -310,30 +312,30 @@ class EngineApiSpec extends SparkSpec {
   }
 
   test("mergeUpsertPartitioned rewrites only touched partitions") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("merge_part_test").toString
-    val base = Seq((1L, "a", 10.0, 0), (2L, "b", 20.0, 0),
-                   (3L, "c", 30.0, 1), (4L, "d", 40.0, 2))
-      .toDF("id", "name", "v", "pt")
-    base.write.mode("overwrite").partitionBy("pt").parquet(dir)
-    def files(p: Int): Map[String, Long] = {
-      val d = new java.io.File(s"$dir/pt=$p")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
+    withTempDir("merge_part_test") { dir =>
+      val base = Seq((1L, "a", 10.0, 0), (2L, "b", 20.0, 0),
+                     (3L, "c", 30.0, 1), (4L, "d", 40.0, 2))
+        .toDF("id", "name", "v", "pt")
+      base.write.mode("overwrite").partitionBy("pt").parquet(dir)
+      def files(p: Int): Map[String, Long] = {
+        val d = new java.io.File(s"$dir/pt=$p")
+        d.listFiles().filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getName -> f.lastModified()).toMap
+      }
+      val before1 = files(1); val before2 = files(2)
+      // update touches only pt=0 (match on id=2 + insert id=9)
+      val upd = Seq((2L, "B", 200.0, 0), (9L, "z", 90.0, 0))
+        .toDF("id", "name", "v", "pt")
+      engine.mergeUpsertPartitioned(spark, dir, upd, "id", "pt")
+      val got = spark.read.parquet(dir)
+        .select("id", "name", "v").as[(Long, String, Double)]
+        .collect().sortBy(_._1)
+      assert(got.toSeq === Seq((1L, "a", 10.0), (2L, "B", 200.0),
+        (3L, "c", 30.0), (4L, "d", 40.0), (9L, "z", 90.0)))
+      // untouched partitions keep their exact committed files
+      assert(files(1) === before1 && files(2) === before2,
+        "untouched partitions must not be rewritten")
     }
-    val before1 = files(1); val before2 = files(2)
-    // update touches only pt=0 (match on id=2 + insert id=9)
-    val upd = Seq((2L, "B", 200.0, 0), (9L, "z", 90.0, 0))
-      .toDF("id", "name", "v", "pt")
-    engine.mergeUpsertPartitioned(spark, dir, upd, "id", "pt")
-    val got = spark.read.parquet(dir)
-      .select("id", "name", "v").as[(Long, String, Double)]
-      .collect().sortBy(_._1)
-    assert(got.toSeq === Seq((1L, "a", 10.0), (2L, "B", 200.0),
-      (3L, "c", 30.0), (4L, "d", 40.0), (9L, "z", 90.0)))
-    // untouched partitions keep their exact committed files
-    assert(files(1) === before1 && files(2) === before2,
-      "untouched partitions must not be rewritten")
   }
 
   test("zOrderKey interleaves bits and bounds both dims per key range") {

@@ -33,48 +33,50 @@ class MaintenanceSpec extends SparkSpec {
     import spark.implicits._
     // stage a snapshot with a duplicate key directly (bypassing the
     // declared key's curation), then run the same audit gate
-    val dir = java.nio.file.Files.createTempDirectory("wap_bad").toString
-    Seq((1L, "en", 10L), (1L, "en", 12L), (2L, "de", 9L))
-      .toDF("doc_id", "lang", "n_chars")
-      .write.mode("overwrite").parquet(dir)
-    val staged = spark.read.parquet(dir)
-    val bad = staged.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)) -
-        org.apache.spark.sql.functions.countDistinct($"doc_id")).head().getLong(0)
-    assert(bad > 0, "audit must detect the duplicate key")
-    // the declared key's gate would throw here — marker never written
-    intercept[IllegalArgumentException] {
-      require(bad == 0L, "WAP audit failed — not publishing")
+    withTempDir("wap_bad") { dir =>
+      Seq((1L, "en", 10L), (1L, "en", 12L), (2L, "de", 9L))
+        .toDF("doc_id", "lang", "n_chars")
+        .write.mode("overwrite").parquet(dir)
+      val staged = spark.read.parquet(dir)
+      val bad = staged.agg(
+        org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)) -
+          org.apache.spark.sql.functions.countDistinct($"doc_id")).head().getLong(0)
+      assert(bad > 0, "audit must detect the duplicate key")
+      // the declared key's gate would throw here — marker never written
+      intercept[IllegalArgumentException] {
+        require(bad == 0L, "WAP audit failed — not publishing")
+      }
+      assert(!new java.io.File(dir, "_GRAFT_PUBLISHED").exists())
     }
-    assert(!new java.io.File(dir, "_GRAFT_PUBLISHED").exists())
   }
 
   test("snapshot store: retention expires the eldest, as-of serves the elder while live") {
     import spark.implicits._
     import org.apache.spark.sql.functions.sum
     val M = graft.operators.Maintenance
-    val base = java.nio.file.Files.createTempDirectory("snapstore_spec").toString
-    val tag = "spec"
-    def gen(i: Int) = Seq((1L, i.toLong), (2L, i.toLong)).toDF("id", "v")
-    M.publishSnapshot(base, 1, gen(1), tag, "id", retain = 2)
-    M.publishSnapshot(base, 2, gen(2), tag, "id", retain = 2)
-    assert(M.publishedIds(base) == Seq(1, 2))
-    assert(M.readAsOf(spark, base, 1).agg(sum($"v")).head().getLong(0) == 2L,
-      "as-of 1 must read generation 1")
-    M.publishSnapshot(base, 3, gen(3), tag, "id", retain = 2)
-    assert(M.publishedIds(base) == Seq(2, 3), "third publish expires snap_1")
-    assert(!new java.io.File(base, "snap_1").exists())
-    intercept[IllegalArgumentException] { M.readAsOf(spark, base, 1) }
-    // a snapshot failing audit (duplicate key) never publishes;
-    // as-of keeps serving the newest published elder
-    intercept[IllegalArgumentException] {
-      M.publishSnapshot(base, 4,
-        Seq((1L, 9L), (1L, 9L)).toDF("id", "v"), tag, "id", retain = 2)
+    withTempDir("snapstore_spec") { base =>
+      val tag = "spec"
+      def gen(i: Int) = Seq((1L, i.toLong), (2L, i.toLong)).toDF("id", "v")
+      M.publishSnapshot(base, 1, gen(1), tag, "id", retain = 2)
+      M.publishSnapshot(base, 2, gen(2), tag, "id", retain = 2)
+      assert(M.publishedIds(base) == Seq(1, 2))
+      assert(M.readAsOf(spark, base, 1).agg(sum($"v")).head().getLong(0) == 2L,
+        "as-of 1 must read generation 1")
+      M.publishSnapshot(base, 3, gen(3), tag, "id", retain = 2)
+      assert(M.publishedIds(base) == Seq(2, 3), "third publish expires snap_1")
+      assert(!new java.io.File(base, "snap_1").exists())
+      intercept[IllegalArgumentException] { M.readAsOf(spark, base, 1) }
+      // a snapshot failing audit (duplicate key) never publishes;
+      // as-of keeps serving the newest published elder
+      intercept[IllegalArgumentException] {
+        M.publishSnapshot(base, 4,
+          Seq((1L, 9L), (1L, 9L)).toDF("id", "v"), tag, "id", retain = 2)
+      }
+      assert(M.publishedIds(base) == Seq(2, 3))
+      assert(M.readAsOf(spark, base, 4).agg(sum($"v")).head().getLong(0) == 6L,
+        "as-of past a failed publish falls back to the elder snapshot")
     }
-    assert(M.publishedIds(base) == Seq(2, 3))
-    assert(M.readAsOf(spark, base, 4).agg(sum($"v")).head().getLong(0) == 6L,
-      "as-of past a failed publish falls back to the elder snapshot")
   }
 
   test("stream CDF: each micro-batch delta equals the batch's planted changes") {

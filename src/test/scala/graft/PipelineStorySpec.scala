@@ -36,46 +36,47 @@ class PipelineStorySpec extends SparkSpec {
     // 2. Index build over the deduped corpus's embeddings.
     val corpus = emb.join(reps, "id")
     val cents = engine.trainCentroids(corpus, k = 4, seed = 11L)
-    val path = java.nio.file.Files.createTempDirectory("story_ivf_index").toString
-    engine.buildIvfIndex(corpus, cents, path)
+    withTempDir("story_ivf_index") { path =>
+      engine.buildIvfIndex(corpus, cents, path)
 
-    // 3. Search the stored index.
-    val queries = corpus.limit(3)
-    val hits = engine.ivfSearch(path, cents, queries, k = 5, nProbe = 2)
-    assert(hits.count() === 15)
-    assert(hits.groupBy("qid").count().collect().forall(_.getLong(1) == 5))
+      // 3. Search the stored index.
+      val queries = corpus.limit(3)
+      val hits = engine.ivfSearch(path, cents, queries, k = 5, nProbe = 2)
+      assert(hits.count() === 15)
+      assert(hits.groupBy("qid").count().collect().forall(_.getLong(1) == 5))
 
-    // 4. Keep it fresh: stream 4 new vectors into the same index. Each
-    //    is a copy of a corpus vector with its first component moved,
-    //    so a query with its embedding finds it at rank 1, not the
-    //    original.
-    val before = spark.read.parquet(path).count()
-    val input = MemoryStream[Vec](spark)
-    val q = engine.appendToIvfIndex(input.toDF(), cents, path).start()
-    val novel = corpus.limit(4)
-      .select(col("id"), col("embedding")).as[(Long, Array[Double])]
-      .collect().map { case (i, e) => Vec(i + 1000000L, (e(0) + 1.0) +: e.tail) }
-    try {
-      input.addData(novel.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(spark.read.parquet(path).count() === before + 4)
-    val probe = Seq((-1L, novel(0).embedding)).toDF("id", "embedding")
-    def answer(): Seq[(Int, Long)] = engine.ivfSearch(path, cents, probe, k = 5, nProbe = 2)
-      .select("rank", "neighborId").as[(Int, Long)].collect().toSeq.sorted
-    val fresh = answer()
-    assert(fresh.head === ((1, novel(0).vec_id)), s"a search sees the appended vector: $fresh")
+      // 4. Keep it fresh: stream 4 new vectors into the same index. Each
+      //    is a copy of a corpus vector with its first component moved,
+      //    so a query with its embedding finds it at rank 1, not the
+      //    original.
+      val before = spark.read.parquet(path).count()
+      val input = MemoryStream[Vec](spark)
+      val q = engine.appendToIvfIndex(input.toDF(), cents, path).start()
+      val novel = corpus.limit(4)
+        .select(col("id"), col("embedding")).as[(Long, Array[Double])]
+        .collect().map { case (i, e) => Vec(i + 1000000L, (e(0) + 1.0) +: e.tail) }
+      try {
+        input.addData(novel.toIndexedSeq)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.read.parquet(path).count() === before + 4)
+      val probe = Seq((-1L, novel(0).embedding)).toDF("id", "embedding")
+      def answer(): Seq[(Int, Long)] = engine.ivfSearch(path, cents, probe, k = 5, nProbe = 2)
+        .select("rank", "neighborId").as[(Int, Long)].collect().toSeq.sorted
+      val fresh = answer()
+      assert(fresh.head === ((1, novel(0).vec_id)), s"a search sees the appended vector: $fresh")
 
-    // 5. Compact: the same answer, from one file per inverted list.
-    engine.compactIvfIndex(path)
-    assert(spark.read.parquet(path).count() === before + 4)
-    assert(answer() === fresh, "compaction keeps every answer")
-    val lists = new java.io.File(path).listFiles().filter(_.getName.startsWith("cluster="))
-    assert(lists.nonEmpty)
-    for (l <- lists) {
-      assert(l.list().toSeq === Seq("batch=-1"), s"${l.getName} holds ${l.list().mkString(", ")}")
-      val files = new java.io.File(l, "batch=-1").list().filter(_.endsWith(".parquet"))
-      assert(files.length === 1, s"${l.getName} holds ${files.mkString(", ")}")
+      // 5. Compact: the same answer, from one file per inverted list.
+      engine.compactIvfIndex(path)
+      assert(spark.read.parquet(path).count() === before + 4)
+      assert(answer() === fresh, "compaction keeps every answer")
+      val lists = new java.io.File(path).listFiles().filter(_.getName.startsWith("cluster="))
+      assert(lists.nonEmpty)
+      for (l <- lists) {
+        assert(l.list().toSeq === Seq("batch=-1"), s"${l.getName} holds ${l.list().mkString(", ")}")
+        val files = new java.io.File(l, "batch=-1").list().filter(_.endsWith(".parquet"))
+        assert(files.length === 1, s"${l.getName} holds ${files.mkString(", ")}")
+      }
     }
   }
 

@@ -440,64 +440,65 @@ class PlanSpec extends SparkSpec {
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     s2.conf.set("spark.sql.codegen.fallback", "false")
     s2.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    val index = java.nio.file.Files.createTempDirectory("ivf_layout").toString
-    val rec = scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-    CkptAudit.sink = rec
-    val built = try {
-      val fromKeys = Seq("kmeans_lloyd", "triplet_mine_bucketed", "ann_ivf_pq_topk")
-        .map(k => k -> SparkEntry.queries(k)(s2, sfDir))
-      val e = TestData.embeddings(s2, sfDir)
-        .select(col("vec_id").as("id"), col("embedding"))
-      val cents = e.filter(col("id") < 8)
-        .select(col("id").as("cid"), col("embedding").as("cv"))
-      val engine = new graft.api.GraftEngine(s2)
-      val assigned = engine.buildIvfIndex(e, cents, index)
-      fromKeys ++ Seq("buildIvfIndex" -> assigned,
-        "ivfSearch" -> engine.ivfSearch(index, cents, e.filter(col("id") < 5), 5, 2))
-    } finally CkptAudit.sink = null
-    val plans = built.map { case (k, df) => k -> df.queryExecution.executedPlan.toString } ++
-      rec.zipWithIndex.map { case (p, i) =>
-        s"checkpointed stage $i" -> org.apache.spark.sql.graft.Bridge.dataset(s2, p)
-          .queryExecution.executedPlan.toString }
-    val hof = """\b(zip_with|aggregate)\(""".r
-    for ((k, p) <- plans) {
-      assert(!p.contains("SortAggregate"), s"$k plans a SortAggregate:\n$p")
-      assert(!p.toLowerCase.contains("knownfloatingpointnormalized"),
-        s"$k groups or joins on normalized float keys:\n$p")
-      assert(hof.findFirstIn(p).isEmpty, s"$k evaluates an interpreted vector HOF:\n$p")
-      for (line <- p.linesIterator
-           if line.contains("sq_dist(") || line.contains("nearest_centroid("))
-        assert(line.contains("*("), s"$k: kernel projection fell out of codegen: $line")
-    }
-    val all = plans.map(_._2).mkString("\n")
-    assert(all.contains("nearest_centroid(") && all.contains("sq_dist("), all.take(2000))
-    // the facade index holds one file per inverted list, in the
-    // compacted generation batch=-1
-    val dirs = new java.io.File(index).listFiles().filter(_.getName.startsWith("cluster="))
-    assert(dirs.length == 8, dirs.map(_.getName).mkString(", "))
-    for (d <- dirs) {
-      assert(d.list().toSeq == Seq("batch=-1"), s"${d.getName} holds ${d.list().mkString(", ")}")
-      val files = new java.io.File(d, "batch=-1").list()
-      assert(files.count(_.endsWith(".parquet")) == 1,
-        s"${d.getName}/batch=-1 holds ${files.mkString(", ")}")
+    withTempDir("ivf_layout") { index =>
+      val rec = scala.collection.mutable.ArrayBuffer[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+      CkptAudit.sink = rec
+      val built = try {
+        val fromKeys = Seq("kmeans_lloyd", "triplet_mine_bucketed", "ann_ivf_pq_topk")
+          .map(k => k -> SparkEntry.queries(k)(s2, sfDir))
+        val e = TestData.embeddings(s2, sfDir)
+          .select(col("vec_id").as("id"), col("embedding"))
+        val cents = e.filter(col("id") < 8)
+          .select(col("id").as("cid"), col("embedding").as("cv"))
+        val engine = new graft.api.GraftEngine(s2)
+        val assigned = engine.buildIvfIndex(e, cents, index)
+        fromKeys ++ Seq("buildIvfIndex" -> assigned,
+          "ivfSearch" -> engine.ivfSearch(index, cents, e.filter(col("id") < 5), 5, 2))
+      } finally CkptAudit.sink = null
+      val plans = built.map { case (k, df) => k -> df.queryExecution.executedPlan.toString } ++
+        rec.zipWithIndex.map { case (p, i) =>
+          s"checkpointed stage $i" -> org.apache.spark.sql.graft.Bridge.dataset(s2, p)
+            .queryExecution.executedPlan.toString }
+      val hof = """\b(zip_with|aggregate)\(""".r
+      for ((k, p) <- plans) {
+        assert(!p.contains("SortAggregate"), s"$k plans a SortAggregate:\n$p")
+        assert(!p.toLowerCase.contains("knownfloatingpointnormalized"),
+          s"$k groups or joins on normalized float keys:\n$p")
+        assert(hof.findFirstIn(p).isEmpty, s"$k evaluates an interpreted vector HOF:\n$p")
+        for (line <- p.linesIterator
+             if line.contains("sq_dist(") || line.contains("nearest_centroid("))
+          assert(line.contains("*("), s"$k: kernel projection fell out of codegen: $line")
+      }
+      val all = plans.map(_._2).mkString("\n")
+      assert(all.contains("nearest_centroid(") && all.contains("sq_dist("), all.take(2000))
+      // the facade index holds one file per inverted list, in the
+      // compacted generation batch=-1
+      val dirs = new java.io.File(index).listFiles().filter(_.getName.startsWith("cluster="))
+      assert(dirs.length == 8, dirs.map(_.getName).mkString(", "))
+      for (d <- dirs) {
+        assert(d.list().toSeq == Seq("batch=-1"), s"${d.getName} holds ${d.list().mkString(", ")}")
+        val files = new java.io.File(d, "batch=-1").list()
+        assert(files.count(_.endsWith(".parquet")) == 1,
+          s"${d.getName}/batch=-1 holds ${files.mkString(", ")}")
+      }
     }
   }
 
   test("partition-scoped merge reads only touched partitions (pruned scan)") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("merge_prune_plan").toString
-    Seq((1L, 10.0, 0), (2L, 20.0, 1), (3L, 30.0, 2))
-      .toDF("id", "v", "pt")
-      .write.mode("overwrite").partitionBy("pt").parquet(dir)
-    val upd = Seq((9L, 90.0, 0)).toDF("id", "v", "pt")
-    val p = new graft.api.GraftEngine(spark).touchedSlice(spark, dir, upd, "pt")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters: [") && p.contains("pt"),
-      s"touched-partition IN list must prune directories:\n${p.take(800)}")
-    assert(!p.contains("PartitionFilters: []"),
-      s"empty partition filter = full snapshot scan:\n${p.take(800)}")
+    withTempDir("merge_prune_plan") { dir =>
+      Seq((1L, 10.0, 0), (2L, 20.0, 1), (3L, 30.0, 2))
+        .toDF("id", "v", "pt")
+        .write.mode("overwrite").partitionBy("pt").parquet(dir)
+      val upd = Seq((9L, 90.0, 0)).toDF("id", "v", "pt")
+      val p = new graft.api.GraftEngine(spark).touchedSlice(spark, dir, upd, "pt")
+        .queryExecution.executedPlan.toString
+      assert(p.contains("PartitionFilters: [") && p.contains("pt"),
+        s"touched-partition IN list must prune directories:\n${p.take(800)}")
+      assert(!p.contains("PartitionFilters: []"),
+        s"empty partition filter = full snapshot scan:\n${p.take(800)}")
+    }
   }
 
   test("graph ANN beam search broadcasts the beam, never the corpus") {

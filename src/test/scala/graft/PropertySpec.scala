@@ -610,32 +610,16 @@ class PropertySpec extends SparkSpec {
     // first so only the keys' own calls count.
     val keys = Seq("ann_hnsw_topk", "ann_graph_topk")
     keys.foreach(k => AnnSearch.defs(k)(spark, sfDir).collect())
-    val sc = spark.sparkContext
-    // LiveListenerBus.waitUntilEmpty is Spark-internal: reach it by
-    // reflection so every onJobStart of the call has been delivered
-    def drain(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    drain()
-    sc.addSparkListener(listener)
-    try keys.foreach { k =>
+    keys.foreach { k =>
       val ckpts = scala.collection.mutable.Buffer[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-      jobs.set(0)
       CkptAudit.sink = ckpts
-      try AnnSearch.defs(k)(spark, sfDir).collect()
-      finally CkptAudit.sink = null
-      drain()
-      assert(jobs.get >= 1 && jobs.get <= 3, s"$k ran ${jobs.get} Spark jobs")
+      val (_, jobs) =
+        try countJobs(AnnSearch.defs(k)(spark, sfDir).collect())
+        finally CkptAudit.sink = null
+      assert(jobs >= 1 && jobs <= 3, s"$k ran $jobs Spark jobs")
       assert(ckpts.isEmpty, s"$k recorded ${ckpts.length} .ckpt() sites")
-    } finally sc.removeSparkListener(listener)
+    }
   }
 
   test("BeamDescent equals GraftEngine.graphSearch row for row") {
@@ -783,6 +767,89 @@ class PropertySpec extends SparkSpec {
     val res = SC.check(SC.Parameters.default.withMinSuccessfulTests(40)
       .withWorkers(1), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("connectedComponents equals ComponentsReference row for row") {
+    // ComponentsReference.minLabelComponents is the label propagation
+    // connectedComponents replaced, run to its fixpoint. Generated:
+    // unions of cliques, paths of 50-300 nodes (ids shuffled along the
+    // path), random sparse graphs with self-loops and repeated edges,
+    // edges to ids left out of `ids`, null endpoints, Int and Long ids.
+    // Both the driver finish and the forced distributed rounds
+    // (localEdges = 0) must match, comp column type included.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test => SC}
+    import org.scalacheck.Prop.propBoolean
+    val cliques = for {
+      k <- Gen.choose(1, 12)
+      sizes <- Gen.listOfN(k, Gen.choose(1, 8))
+    } yield {
+      val starts = sizes.scanLeft(0)(_ + _)
+      (starts.last, sizes.zip(starts).flatMap { case (n, s0) =>
+        for (i <- s0 until s0 + n; j <- i + 1 until s0 + n) yield (i, j) })
+    }
+    val paths = Gen.choose(50, 300).map(n => (n, (0 until n - 1).map(i => (i, i + 1))))
+    val sparse = for {
+      n <- Gen.choose(1, 300)
+      m <- Gen.choose(0, n)
+      es <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
+    } yield (n, es)
+    val gen = for {
+      g <- Gen.frequency(3 -> cliques, 1 -> paths, 3 -> sparse)
+      seed <- Gen.choose(0L, Long.MaxValue)
+      perm = new scala.util.Random(seed).shuffle((0 until g._1).toVector)
+      left <- Gen.listOf(Gen.choose(0, g._1 - 1)).map(_.take(3).toSet)
+      nulls <- Gen.choose(0, 2)
+      longIds <- Gen.oneOf(true, false)
+    } yield (g._1, g._2.map { case (a, b) => (perm(a), perm(b)) }, left, nulls, longIds)
+    // no shrinking: every shrink step would rerun the reference's rounds
+    val prop = Prop.forAllNoShrink(gen) { case (n, es, left, nulls, longIds) =>
+      val t = if (longIds) LongType else IntegerType
+      def v(i: Int): Any = if (longIds) 7L * i else 7 * i
+      val ids = spark.createDataFrame(spark.sparkContext.parallelize(
+          (0 until n).filterNot(left).map(i => Row(v(i))), 2),
+        StructType(Seq(StructField("id", t))))
+      val pairRows = es.map { case (a, b) => Row(v(a), v(b)) } ++
+        (0 until nulls).map(i => if (i % 2 == 0) Row(null, v(0)) else Row(v(0), null))
+      val pairs = spark.createDataFrame(spark.sparkContext.parallelize(pairRows, 3),
+        StructType(Seq(StructField("src", t), StructField("dst", t))))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        (df.schema("comp").dataType,
+          df.collect().map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong))
+            .sorted.toSeq)
+      val ref = rows(ComponentsReference.minLabelComponents(ids, pairs))
+      Seq(GraphOps.LocalEdges, 0L).map { le =>
+        val got = rows(GraphOps.connectedComponents(ids, pairs, le))
+        (got == ref) :| s"localEdges $le: $got\nreference $ref"
+      }.reduce(_ && _)
+    }
+    val res = SC.check(SC.Parameters.default.withMinSuccessfulTests(16)
+      .withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("connected components: a warm dedup_minhash_components runs at most 8 jobs, the facade 5") {
+    // The MinHash pair list is far under GraphOps.LocalEdges, so the
+    // components are one driver union-find: the key pays the edge
+    // filter's broadcast and collect, the broadcast of the node → root
+    // table and its sort, whatever the diameter. Memos are warmed first.
+    val key = GraphOps.defs("dedup_minhash_components")
+    key(spark, sfDir).collect()
+    val ckpts = scala.collection.mutable.Buffer[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+    CkptAudit.sink = ckpts
+    val (_, jobs) =
+      try countJobs(key(spark, sfDir).collect())
+      finally CkptAudit.sink = null
+    assert(jobs >= 1 && jobs <= 8, s"dedup_minhash_components ran $jobs Spark jobs")
+    assert(ckpts.isEmpty, s"dedup_minhash_components recorded ${ckpts.length} .ckpt() sites")
+    val engine = new graft.api.GraftEngine(spark)
+    val ids = (1L to 200L).toDF("id")
+    val pairs = (1L to 199L).filter(_ % 5 != 0).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (comps, facadeJobs) = countJobs(engine.dedupComponents(ids, pairs).collect())
+    assert(comps.map(_.getLong(1)).distinct.length === 40)
+    assert(facadeJobs >= 1 && facadeJobs <= 5, s"dedupComponents ran $facadeJobs Spark jobs")
   }
 
   test("neighbor jaccard: bounded by min degree, in (0, 1], consistent with wedges") {

@@ -181,86 +181,88 @@ class StreamingSpec extends SparkSpec {
     // The idempotent-sink pattern: foreachBatch keys output by
     // batchId so a replayed batch overwrites instead of duplicating.
     import org.apache.spark.sql.DataFrame
-    val dir = java.nio.file.Files.createTempDirectory("foreach_batch_sink").toString
-    val input = MemoryStream[Event](spark)
-    val q = input.toDF()
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
-      }
-      .start()
-    try {
-      input.addData(ev(1, 0), ev(2, 1))
-      q.processAllAvailable()
-      input.addData(ev(3, 2))
-      q.processAllAvailable()
-      val written = spark.read.parquet(s"$dir/batch=*")
-      assert(written.count() === 3)
-      assert(written.select("event_id").as[Long].collect().sorted.toSeq
-        === Seq(1L, 2L, 3L))
-    } finally q.stop()
+    withTempDir("foreach_batch_sink") { dir =>
+      val input = MemoryStream[Event](spark)
+      val q = input.toDF()
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+        }
+        .start()
+      try {
+        input.addData(ev(1, 0), ev(2, 1))
+        q.processAllAvailable()
+        input.addData(ev(3, 2))
+        q.processAllAvailable()
+        val written = spark.read.parquet(s"$dir/batch=*")
+        assert(written.count() === 3)
+        assert(written.select("event_id").as[Long].collect().sorted.toSeq
+          === Seq(1L, 2L, 3L))
+      } finally q.stop()
+    }
   }
 
   test("foreachBatch IVF append keeps the stored index pruned, correct, idempotent") {
     import StreamOps.Vec
     import graft.sources.IndexStore
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("stream_ivf_append").toString
-    val cents = Seq((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))
-      .toDF("cid", "cv")
-    val input = MemoryStream[Vec](spark)
-    val q = new graft.api.GraftEngine(spark).appendToIvfIndex(input.toDF(), cents, dir).start()
-    try {
-      input.addData(Vec(1, Array(0.1, 0.2)), Vec(2, Array(9.9, 10.0)))
-      q.processAllAvailable()
-      input.addData(Vec(3, Array(0.3, 0.1)))
-      q.processAllAvailable()
-      val idx = spark.read.parquet(dir)
-      assert(idx.count() === 3, "appends across micro-batches must accumulate")
-      // Reads by cluster stay partition-pruned on the stored layout.
-      val near0 = idx.filter(col("cluster") === 0)
-      val p = near0.queryExecution.executedPlan.toString
-      assert(p.contains("PartitionFilters: [") && p.contains("cluster"),
-        s"cluster filter must prune partitions:\n${p.take(600)}")
-      assert(near0.select("vec_id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
-      // Replaying a batch overwrites its own partitions (no dupes).
-      IndexStore.ivfAppendBatch(cents, dir)(
-        Seq(Vec(3, Array(0.3, 0.1))).toDF("vec_id", "embedding"), 1L)
-      assert(spark.read.parquet(dir).count() === 3,
-        "replayed batch must replace, not duplicate")
-      // Compaction folds the per-batch files into one file per
-      // cluster; content and pruned reads are unchanged.
-      IndexStore.compactIvfIndex(spark, dir)
-      val compacted = spark.read.parquet(dir)
-      assert(compacted.count() === 3)
-      assert(compacted.select("batch").distinct().as[Long].collect().toSeq
-        === Seq(-1L), "all rows must live in the compacted partition")
-      assert(compacted.filter(col("cluster") === 0)
-        .select("vec_id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
-      val filesPerCluster = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("cluster=")).map { cd =>
-          cd.listFiles().filter(_.getName.startsWith("batch="))
-            .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
-        }
-      assert(filesPerCluster.forall(_ == 1),
-        s"each cluster must compact to one file, got ${filesPerCluster.toSeq}")
-      // Replay AFTER compaction: batches folded into batch=-1 are
-      // recorded in _COMPACTED_THROUGH and must be skipped, not
-      // re-appended (a restart from an older checkpoint replays them).
-      assert(IndexStore.compactedThrough(spark, dir) === 1L)
-      IndexStore.ivfAppendBatch(cents, dir)(
-        Seq(Vec(3, Array(0.3, 0.1))).toDF("vec_id", "embedding"), 1L)
-      val postReplay = spark.read.parquet(dir)
-      assert(postReplay.count() === 3,
-        "batch replayed after compaction must be skipped, not duplicated")
-      assert(postReplay.select("batch").distinct().as[Long].collect().toSeq
-        === Seq(-1L), "replay after compaction must not recreate batch dirs")
-      // A genuinely NEW batch (id above the marker) still appends.
-      IndexStore.ivfAppendBatch(cents, dir)(
-        Seq(Vec(4, Array(10.2, 9.8))).toDF("vec_id", "embedding"), 2L)
-      assert(spark.read.parquet(dir).count() === 4,
-        "new batches above the compaction marker must still append")
-    } finally q.stop()
+    withTempDir("stream_ivf_append") { dir =>
+      val cents = Seq((0, Array(0.0, 0.0)), (1, Array(10.0, 10.0)))
+        .toDF("cid", "cv")
+      val input = MemoryStream[Vec](spark)
+      val q = new graft.api.GraftEngine(spark).appendToIvfIndex(input.toDF(), cents, dir).start()
+      try {
+        input.addData(Vec(1, Array(0.1, 0.2)), Vec(2, Array(9.9, 10.0)))
+        q.processAllAvailable()
+        input.addData(Vec(3, Array(0.3, 0.1)))
+        q.processAllAvailable()
+        val idx = spark.read.parquet(dir)
+        assert(idx.count() === 3, "appends across micro-batches must accumulate")
+        // Reads by cluster stay partition-pruned on the stored layout.
+        val near0 = idx.filter(col("cluster") === 0)
+        val p = near0.queryExecution.executedPlan.toString
+        assert(p.contains("PartitionFilters: [") && p.contains("cluster"),
+          s"cluster filter must prune partitions:\n${p.take(600)}")
+        assert(near0.select("vec_id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
+        // Replaying a batch overwrites its own partitions (no dupes).
+        IndexStore.ivfAppendBatch(cents, dir)(
+          Seq(Vec(3, Array(0.3, 0.1))).toDF("vec_id", "embedding"), 1L)
+        assert(spark.read.parquet(dir).count() === 3,
+          "replayed batch must replace, not duplicate")
+        // Compaction folds the per-batch files into one file per
+        // cluster; content and pruned reads are unchanged.
+        IndexStore.compactIvfIndex(spark, dir)
+        val compacted = spark.read.parquet(dir)
+        assert(compacted.count() === 3)
+        assert(compacted.select("batch").distinct().as[Long].collect().toSeq
+          === Seq(-1L), "all rows must live in the compacted partition")
+        assert(compacted.filter(col("cluster") === 0)
+          .select("vec_id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
+        val filesPerCluster = new java.io.File(dir).listFiles()
+          .filter(_.getName.startsWith("cluster=")).map { cd =>
+            cd.listFiles().filter(_.getName.startsWith("batch="))
+              .flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
+          }
+        assert(filesPerCluster.forall(_ == 1),
+          s"each cluster must compact to one file, got ${filesPerCluster.toSeq}")
+        // Replay AFTER compaction: batches folded into batch=-1 are
+        // recorded in _COMPACTED_THROUGH and must be skipped, not
+        // re-appended (a restart from an older checkpoint replays them).
+        assert(IndexStore.compactedThrough(spark, dir) === 1L)
+        IndexStore.ivfAppendBatch(cents, dir)(
+          Seq(Vec(3, Array(0.3, 0.1))).toDF("vec_id", "embedding"), 1L)
+        val postReplay = spark.read.parquet(dir)
+        assert(postReplay.count() === 3,
+          "batch replayed after compaction must be skipped, not duplicated")
+        assert(postReplay.select("batch").distinct().as[Long].collect().toSeq
+          === Seq(-1L), "replay after compaction must not recreate batch dirs")
+        // A genuinely NEW batch (id above the marker) still appends.
+        IndexStore.ivfAppendBatch(cents, dir)(
+          Seq(Vec(4, Array(10.2, 9.8))).toDF("vec_id", "embedding"), 2L)
+        assert(spark.read.parquet(dir).count() === 4,
+          "new batches above the compaction marker must still append")
+      } finally q.stop()
+    }
   }
 
   test("stream-stream join pairs purchases with in-window clicks only") {
@@ -327,29 +329,30 @@ class StreamingSpec extends SparkSpec {
     // processed with Trigger.AvailableNow — results must equal the
     // batch run of the same Catalyst expressions.
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("stream_file_source").toString
-    val batchDf = TestData.events(spark, sf("sf0.001"))
-    batchDf.write.mode("overwrite").parquet(dir)
-    val streamIn = spark.readStream.schema(batchDf.schema).parquet(dir)
-    val q = StreamOps.tumblingCounts(streamIn, "1 hour", "10 minutes")
-      .writeStream.format("memory").queryName("file_stream_agg")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start()
-    try {
-      q.awaitTermination(60000)
-      val streamed = spark.table("file_stream_agg")
-        .select("window_start", "event_type", "n")
-        .as[(Timestamp, String, Long)].collect().toSet
-      val batch = graft.operators.Streaming.defs("stream_tumbling_agg")(
-          spark, sf("sf0.001"))
-        .select("window_start", "event_type", "n")
-        .as[(Timestamp, String, Long)].collect().toSet
-      // Append mode emits only watermark-closed windows — every
-      // emitted window must match its batch counterpart exactly.
-      assert(streamed.nonEmpty)
-      assert(streamed.subsetOf(batch),
-        s"streamed windows diverge from batch: ${streamed.diff(batch).take(3)}")
-    } finally q.stop()
+    withTempDir("stream_file_source") { dir =>
+      val batchDf = TestData.events(spark, sf("sf0.001"))
+      batchDf.write.mode("overwrite").parquet(dir)
+      val streamIn = spark.readStream.schema(batchDf.schema).parquet(dir)
+      val q = StreamOps.tumblingCounts(streamIn, "1 hour", "10 minutes")
+        .writeStream.format("memory").queryName("file_stream_agg")
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow()).start()
+      try {
+        q.awaitTermination(60000)
+        val streamed = spark.table("file_stream_agg")
+          .select("window_start", "event_type", "n")
+          .as[(Timestamp, String, Long)].collect().toSet
+        val batch = graft.operators.Streaming.defs("stream_tumbling_agg")(
+            spark, sf("sf0.001"))
+          .select("window_start", "event_type", "n")
+          .as[(Timestamp, String, Long)].collect().toSet
+        // Append mode emits only watermark-closed windows — every
+        // emitted window must match its batch counterpart exactly.
+        assert(streamed.nonEmpty)
+        assert(streamed.subsetOf(batch),
+          s"streamed windows diverge from batch: ${streamed.diff(batch).take(3)}")
+      } finally q.stop()
+    }
   }
 
   test("session windows merge events within gap across micro-batches") {

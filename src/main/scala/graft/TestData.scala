@@ -7,10 +7,15 @@ import org.apache.spark.sql.functions._
   * (`/root/testdata/sf*` — see TESTDATA.md / FIXTURES.md).
   *
   * Design notes (SURVEY.md §1.2 / M0):
-  *   - Parquet carries its own schema; we read it as-is (no inference
-  *     pass happens for parquet) and normalize only where the physical
-  *     type needs care (`events.ts` is INT64 TIMESTAMP(NANOS) which
-  *     Spark 4.1.2 rejects by default).
+  *   - Parquet carries its own schema; we read it as-is and normalize
+  *     only where the physical type needs care (`events.ts` is INT64
+  *     TIMESTAMP(NANOS) which Spark 4.1.2 rejects by default). Reading
+  *     it is not free: with no declared schema, every [[table]] call
+  *     runs a Spark job that lists the file and reads its footer
+  *     ("parquet at TestData.scala"), one job per key call that reads
+  *     a fixture. `IndexStore` declares its schema and skips that job;
+  *     doing the same here is part of ROADMAP item 3 (the CPU spent
+  *     outside the tasks).
   *   - `events.ts` recipe verified in the survey session: read as
   *     epoch-nanos Long via `spark.sql.legacy.parquet.nanosAsLong`,
   *     then truncating-divide to micros. DuckDB reads the same column

@@ -13,9 +13,15 @@ import org.apache.spark.sql.functions._
 /** User-facing library facade: the capabilities a CloudVectorDB user
   * runs today (triplet mining, embedding indexing, similarity
   * search, dedup — reference README.md:2), exposed as typed
-  * DataFrame→DataFrame methods over caller-supplied tables. The
-  * declared harness queries in `graft.operators` are thin
-  * fixture-bound instantiations of these same shapes.
+  * DataFrame→DataFrame methods over caller-supplied tables.
+  *
+  * One body per computation: where a method and a declared key in
+  * `graft.operators` compute the same thing, both call one `*Core` in
+  * the key's operator object (e.g. `Stats.welchTCore`). The key passes
+  * its fixture frame; the method passes the caller's frame renamed to
+  * the core's columns and renames the output back where its API names
+  * differ. The key's expression is the oracle-checked one. Methods
+  * never copy a key's body (`TwinBodySpec` fails on a copy).
   *
   * Method families (one line each; see each method's scaladoc):
   *  - similarity search: [[knn]], [[buildIvfIndex]] /
@@ -1700,25 +1706,8 @@ class GraftEngine(val spark: SparkSession) {
   def degreeAssortativity(edges: DataFrame): DataFrame = {
     val adj = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = adj.groupBy("src").agg(count(lit(1)).as("deg"))
-    adj
-      .join(deg.select(col("src").as("sx"), col("deg").as("dx")),
-        col("src") === col("sx"))
-      .join(deg.select(col("src").as("sy"), col("deg").as("dy")),
-        col("dst") === col("sy"))
-      .agg(count(lit(1)).as("n_edges_directed"),
-        sum("dx").as("sx_"), sum("dy").as("sy_"),
-        sum(col("dx") * col("dy")).as("sxy"),
-        sum(col("dx") * col("dx")).as("sxx"),
-        sum(col("dy") * col("dy")).as("syy"))
-      .withColumn("assortativity", TestData.r4(
-        (col("n_edges_directed") * col("sxy") - col("sx_") * col("sy_"))
-          .cast("double")
-          / sqrt((col("n_edges_directed") * col("sxx")
-              - col("sx_") * col("sx_")).cast("double")
-            * (col("n_edges_directed") * col("syy")
-              - col("sy_") * col("sy_")).cast("double"))))
-      .select("n_edges_directed", "assortativity")
+    graft.operators.GraphOps.degreeAssortativityCore(adj,
+      adj.groupBy("src").agg(count(lit(1)).as("deg")))
   }
 
   /** Theil–Sen robust trend of an integer series (see `ts_theil_sen`):
@@ -1748,47 +1737,16 @@ class GraftEngine(val spark: SparkSession) {
     * expects (user_id, ts); first-seen via the user-grain min-day
     * aggregate, no calendar fanout.
     */
-  def newReturning(events: DataFrame): DataFrame = {
-    val ud = events
-      .select(col("user_id"), to_date(col("ts")).as("pday")).distinct()
-    val first = ud.groupBy("user_id").agg(min("pday").as("fday"))
-    ud.join(first, "user_id")
-      .groupBy(col("pday"))
-      .agg(count(lit(1)).as("dau"),
-        sum(when(col("pday") === col("fday"), 1L).otherwise(0L))
-          .as("new_users"))
-      .withColumn("returning_users", col("dau") - col("new_users"))
-      .withColumn("new_ratio",
-        TestData.r4(col("new_users").cast("double") / col("dau")))
-      .select(col("pday").cast("timestamp").as("day"), col("dau"),
-        col("new_users"), col("returning_users"), col("new_ratio"))
-      .orderBy("day")
-  }
+  def newReturning(events: DataFrame): DataFrame =
+    graft.operators.TimeSeries.newReturningCore(events)
 
   /** Weekly churn (see `events_churn_weekly`): expects (user_id, ts);
     * the distinct user-week pair table left-joins itself shifted one
     * week forward. The last week has no successor and reports full
     * churn (right-censoring).
     */
-  def churnWeekly(events: DataFrame): DataFrame = {
-    val uw = events
-      .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
-      .distinct()
-    val nxt = uw.select(col("user_id").as("uid2"),
-      (col("wk") - expr("INTERVAL 7 DAYS")).as("wk2"))
-    uw.join(nxt,
-        col("user_id") === col("uid2") && col("wk") === col("wk2"), "left")
-      .groupBy("wk")
-      .agg(count(lit(1)).as("n_active"),
-        sum(when(col("uid2").isNotNull, 1L).otherwise(0L))
-          .as("n_retained"))
-      .withColumn("n_churned", col("n_active") - col("n_retained"))
-      .withColumn("churn_rate",
-        TestData.r4(col("n_churned").cast("double") / col("n_active")))
-      .select(col("wk").as("week"), col("n_active"), col("n_retained"),
-        col("n_churned"), col("churn_rate"))
-      .orderBy("week")
-  }
+  def churnWeekly(events: DataFrame): DataFrame =
+    graft.operators.TimeSeries.churnWeeklyCore(events)
   /** Herfindahl–Hirschman concentration per group (see
     * `agg_hhi_concentration`): unit shares of INTEGER `centsCol` in
     * exact PPM, HHI = Σ share_ppm² DIV 1e6 (ANSI-safe by
@@ -1936,20 +1894,8 @@ class GraftEngine(val spark: SparkSession) {
     * occurrence; the distinct-day count folds through a (cell, date)
     * pre-aggregate. Expects a `ts` column.
     */
-  def seasonalityHeatmap(events: DataFrame): DataFrame = {
-    val cellDay = events
-      .groupBy(
-        expr("(((dayofweek(ts) + 5) % 7) + 1)").as("iso_dow"),
-        hour(col("ts")).as("hr"),
-        to_date(col("ts")).as("pday"))
-      .agg(count(lit(1)).as("n"))
-    cellDay.groupBy("iso_dow", "hr")
-      .agg(sum("n").as("n_events"), count(lit(1)).as("n_days"))
-      .withColumn("avg_per_day",
-        TestData.r4(col("n_events").cast("double") / col("n_days")))
-      .select("iso_dow", "hr", "n_events", "n_days", "avg_per_day")
-      .orderBy("iso_dow", "hr")
-  }
+  def seasonalityHeatmap(events: DataFrame): DataFrame =
+    graft.operators.TimeSeries.seasonalityHeatmapCore(events)
 
   /** Two-group value-distinct cell table shared by [[mannWhitney]]
     * and [[ksTest]]: one row per distinct value of `valueCol` (an
@@ -1969,41 +1915,9 @@ class GraftEngine(val spark: SparkSession) {
     */
   def mannWhitney(df: DataFrame, valueCol: String, groupCol: String,
                   aLabel: String = "control",
-                  bLabel: String = "treatment"): DataFrame = {
-    val W = Window.orderBy("x")
-    twoGroupCells(df, valueCol, groupCol, aLabel, bLabel)
-      .withColumn("cum_cc_lt",
-        coalesce(sum("cc").over(
-          W.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .agg(sum("cc").as("n_control"), sum("ct").as("n_treatment"),
-        sum(col("ct") * (lit(2L) * col("cum_cc_lt") + col("cc")))
-          .as("u2_treatment"),
-        // t³ < 2^63 needs t < 2^21 per cell — overflow mode is an
-        // explicit NULL tie_sum/z, never an ANSI throw (key parity).
-        sum(when(col("cc") + col("ct") < lit(2097152L),
-          (col("cc") + col("ct")) * (col("cc") + col("ct"))
-            * (col("cc") + col("ct")) - (col("cc") + col("ct"))))
-          .as("tie_raw"),
-        max(col("cc") + col("ct")).as("t_max"))
-      .withColumn("tie_sum",
-        when(col("t_max") < lit(2097152L), col("tie_raw")))
-      // N ≤ 1 ⇒ the tie-correction divides by N(N−1) = 0, an ANSI
-      // throw in Spark 4 (double x/0 errors under ANSI) but NULL in
-      // DuckDB — guard so both engines read NULL var_u ⇒ NULL z.
-      .withColumn("var_u",
-        when(col("n_control") + col("n_treatment") > 1,
-          (col("n_control") * col("n_treatment")).cast("double")
-            * ((col("n_control") + col("n_treatment") + 1).cast("double")
-              - col("tie_sum").cast("double")
-                / ((col("n_control") + col("n_treatment"))
-                  * (col("n_control") + col("n_treatment") - 1))
-                  .cast("double"))
-            / 12.0))
-      .withColumn("z", when(col("var_u") > 0, TestData.r4(
-        ((col("u2_treatment") - col("n_control") * col("n_treatment"))
-          .cast("double") / 2.0) / sqrt(col("var_u")))))
-      .select("n_control", "n_treatment", "u2_treatment", "tie_sum", "z")
-  }
+                  bLabel: String = "treatment"): DataFrame =
+    graft.operators.Stats.mannWhitneyCore(
+      twoGroupCells(df, valueCol, groupCol, aLabel, bLabel))
 
   /** Two-sample Kolmogorov-Smirnov (see `agg_ks_test`): integer
     * cross-multiplied D numerator over the value grid + asymptotic
@@ -2011,70 +1925,17 @@ class GraftEngine(val spark: SparkSession) {
     */
   def ksTest(df: DataFrame, valueCol: String, groupCol: String,
              aLabel: String = "control",
-             bLabel: String = "treatment"): DataFrame = {
-    val W = Window.orderBy("x")
-    twoGroupCells(df, valueCol, groupCol, aLabel, bLabel)
-      .withColumn("cum_cc", sum("cc").over(
-        W.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("cum_ct", sum("ct").over(
-        W.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("n_c", sum("cc").over(Window.partitionBy()))
-      .withColumn("n_t", sum("ct").over(Window.partitionBy()))
-      .agg(max("n_c").as("n_control"), max("n_t").as("n_treatment"),
-        max(abs(col("cum_cc") * col("n_t") - col("cum_ct") * col("n_c")))
-          .as("d_num"))
-      .withColumn("d_stat",
-        when(col("n_control") > 0 && col("n_treatment") > 0,
-          TestData.r4(col("d_num").cast("double")
-            / (col("n_control") * col("n_treatment")).cast("double"))))
-      .withColumn("p_approx",
-        when(col("n_control") > 0 && col("n_treatment") > 0,
-          TestData.r4(least(lit(1.0),
-            lit(2.0) * exp(lit(-2.0)
-              * pow(col("d_num").cast("double")
-                  / (col("n_control") * col("n_treatment"))
-                    .cast("double"), 2)
-              * (col("n_control") * col("n_treatment")).cast("double")
-              / (col("n_control") + col("n_treatment"))
-                .cast("double"))))))
-      .select("n_control", "n_treatment", "d_num", "d_stat", "p_approx")
-  }
+             bLabel: String = "treatment"): DataFrame =
+    graft.operators.Stats.ksTestCore(
+      twoGroupCells(df, valueCol, groupCol, aLabel, bLabel))
 
   /** Cramér's V (see `agg_cramers_v`): χ² effect size of the
     * `colA` × `colB` association over the FULL grid (zero cells
     * included); per-cell terms micro-quantized before the sum.
     */
-  def cramersV(df: DataFrame, colA: String, colB: String): DataFrame = {
-    val f = df.select(col(colA).as("ka"), col(colB).as("kb"))
-    val cells = f.groupBy("ka", "kb").agg(count(lit(1)).as("cnt"))
-    val grid = f.select("ka").distinct()
-      .crossJoin(f.select("kb").distinct())
-      .join(cells, Seq("ka", "kb"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-    grid
-      .withColumn("r_i", sum("cnt").over(Window.partitionBy("ka")))
-      .withColumn("c_j", sum("cnt").over(Window.partitionBy("kb")))
-      .withColumn("n", sum("cnt").over(Window.partitionBy()))
-      .withColumn("e", (col("r_i") * col("c_j")).cast("double")
-        / col("n").cast("double"))
-      .withColumn("term_u", floor(
-        (col("cnt").cast("double") - col("e"))
-          * (col("cnt").cast("double") - col("e")) / col("e")
-          * 1000000 + 0.5).cast("long"))
-      .agg(max("n").as("n_rows"), countDistinct("ka").as("n_r"),
-        countDistinct("kb").as("n_c"), sum("term_u").as("chi2_micro"))
-      // Single-category dimension ⇒ min(r,c)−1 = 0 ⇒ V undefined:
-      // NULL, never an ANSI x/0 throw (DegenerateSpec pins).
-      .withColumn("cramers_v",
-        when(col("n_rows") > 0
-          && least(col("n_r") - 1, col("n_c") - 1) > 0,
-          TestData.r4(sqrt(
-            (col("chi2_micro").cast("double") / 1000000.0)
-              / (col("n_rows")
-                * least(col("n_r") - 1, col("n_c") - 1))
-                .cast("double")))))
-      .select("n_rows", "n_r", "n_c", "chi2_micro", "cramers_v")
-  }
+  def cramersV(df: DataFrame, colA: String, colB: String): DataFrame =
+    graft.operators.Stats.cramersVCore(
+      df.select(col(colA).as("nationkey"), col(colB).as("c_mktsegment")))
 
   /** Spearman ρ per group (see `agg_spearman_rho`) over two
     * integer-quantized columns; rank grids are the value DOMAINS.
@@ -2118,25 +1979,10 @@ class GraftEngine(val spark: SparkSession) {
     * transcendentals only. |ρ| = 1 or n ≤ 3 reads NULL bounds.
     */
   def spearmanCi(df: DataFrame, groupCol: String, xCol: String,
-                 yCol: String): DataFrame = {
-    def tanhE(x: Column): Column =
-      (exp(lit(2.0) * x) - 1.0) / (exp(lit(2.0) * x) + 1.0)
-    spearmanRho(df, groupCol, xCol, yCol)
-      .withColumn("zr", when(col("rho").isNotNull
-          && abs(col("rho")) < 1.0,
-        lit(0.5) * log((lit(1.0) + col("rho"))
-          / (lit(1.0) - col("rho")))))
-      .withColumn("se", when(col("n") > 3,
-        lit(1.0) / sqrt((col("n") - 3).cast("double"))))
-      .select(col(groupCol), col("n"), col("rho"),
-        when(col("zr").isNotNull && col("se").isNotNull,
-          TestData.r4(tanhE(col("zr") - lit(1.959964) * col("se"))))
-          .as("ci_lo"),
-        when(col("zr").isNotNull && col("se").isNotNull,
-          TestData.r4(tanhE(col("zr") + lit(1.959964) * col("se"))))
-          .as("ci_hi"))
-      .orderBy(groupCol)
-  }
+                 yCol: String): DataFrame =
+    graft.operators.Stats.spearmanCiCore(
+        spearmanRho(df, groupCol, xCol, yCol).withColumnRenamed(groupCol, "flag"))
+      .withColumnRenamed("flag", groupCol)
 
   /** Kendall τ-b per group (see `agg_kendall_tau`) over two
     * integer-quantized columns: concordant/discordant counts from a
@@ -2145,38 +1991,11 @@ class GraftEngine(val spark: SparkSession) {
     * the (n0−n1)(n0−n2) product multiplies DOUBLES.
     */
   def kendallTau(df: DataFrame, groupCol: String, xCol: String,
-                 yCol: String): DataFrame = {
-    val li = df.select(col(groupCol).as("g"), col(xCol).as("qx"),
-      col(yCol).as("qy"))
-    val cells = li.groupBy("g", "qx", "qy").agg(count(lit(1)).as("c"))
-      .ckpt()
-    val cd = cells.as("a").join(cells.as("b"),
-        col("a.g") === col("b.g")
-          && col("a.qx") < col("b.qx") && col("a.qy") =!= col("b.qy"))
-      .groupBy(col("a.g").as("g"))
-      .agg(sum(when(col("a.qy") < col("b.qy"),
-          col("a.c") * col("b.c")).otherwise(0L)).as("n_concordant"),
-        sum(when(col("a.qy") > col("b.qy"),
-          col("a.c") * col("b.c")).otherwise(0L)).as("n_discordant"))
-    def tieSum(k: String, out: String): DataFrame =
-      cells.groupBy("g", k).agg(sum("c").as("t"))
-        .groupBy("g")
-        .agg(sum(expr("(t * (t - 1)) DIV 2")).as(out))
-    cells.groupBy("g").agg(sum("c").as("n"))
-      .join(cd, "g")
-      .join(tieSum("qx", "ties_x"), "g")
-      .join(tieSum("qy", "ties_y"), "g")
-      .withColumn("n0", expr("(n * (n - 1)) DIV 2"))
-      .withColumn("tau_b", when(
-        col("n0") > col("ties_x") && col("n0") > col("ties_y"),
-        TestData.r4((col("n_concordant") - col("n_discordant"))
-          .cast("double")
-          / sqrt((col("n0") - col("ties_x")).cast("double")
-            * (col("n0") - col("ties_y")).cast("double")))))
-      .select(col("g").as(groupCol), col("n"), col("n_concordant"),
-        col("n_discordant"), col("ties_x"), col("ties_y"), col("tau_b"))
-      .orderBy(groupCol)
-  }
+                 yCol: String): DataFrame =
+    graft.operators.Stats.kendallTauCore(
+        df.select(col(groupCol).as("flag"), col(xCol).as("qx"),
+          col(yCol).as("qy")))
+      .withColumnRenamed("flag", groupCol)
 
   /** One-way ANOVA F (see `agg_anova_f`) of an integer `valueCol`
     * across `groupCol` groups, from per-group sufficient statistics.
@@ -2184,31 +2003,9 @@ class GraftEngine(val spark: SparkSession) {
     * whole-unit quantized (mean²·n_g < 9.2e18).
     */
   def anovaF(df: DataFrame, groupCol: String,
-             valueCol: String): DataFrame = {
-    val g = df.groupBy(groupCol)
-      .agg(count(lit(1)).as("n_g"), sum(valueCol).as("sx"),
-        sum(col(valueCol) * col(valueCol)).as("sxx"))
-      .withColumn("t_u", floor(col("sx").cast("double")
-        * col("sx").cast("double") / col("n_g").cast("double") + 0.5)
-        .cast("long"))
-    g.agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
-        sum("sx").as("sum_all"), sum("sxx").as("sxx_all"),
-        sum("t_u").as("t_sum_u"))
-      .withColumn("ssb", col("t_sum_u").cast("double")
-        - col("sum_all").cast("double") * col("sum_all").cast("double")
-          / col("n_total").cast("double"))
-      .withColumn("ssw",
-        col("sxx_all").cast("double") - col("t_sum_u").cast("double"))
-      .withColumn("f_stat", when(
-        col("ssw") > 0 && col("n_total") > col("k_groups")
-          && col("k_groups") > 1,
-        TestData.r4((col("ssb") / (col("k_groups") - 1).cast("double"))
-          / (col("ssw")
-            / (col("n_total") - col("k_groups")).cast("double")))))
-      .select(col("k_groups"), col("n_total"), col("t_sum_u"),
-        TestData.r4(col("ssb")).as("ssb"),
-        TestData.r4(col("ssw")).as("ssw"), col("f_stat"))
-  }
+             valueCol: String): DataFrame =
+    graft.operators.Stats.anovaFCore(
+      df.select(col(groupCol).as("lang"), col(valueCol).as("n_chars")))
 
   /** Welch's unequal-variance t (see `agg_welch_t`) between the two
     * labelled groups of an integer `valueCol`, via the value-distinct
@@ -2218,44 +2015,8 @@ class GraftEngine(val spark: SparkSession) {
   def welchT(df: DataFrame, valueCol: String, groupCol: String,
              aLabel: String = "control",
              bLabel: String = "treatment"): DataFrame =
-    twoGroupCells(df, valueCol, groupCol, aLabel, bLabel)
-      .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
-        sum(col("cc") * col("x")).as("sx_c"),
-        sum(col("ct") * col("x")).as("sx_t"),
-        sum(col("cc") * col("x") * col("x")).as("sxx_c"),
-        sum(col("ct") * col("x") * col("x")).as("sxx_t"))
-      // n = 0 / n = 1 guards at DEFINITION, not just at the readout:
-      // Spark 4 ANSI throws on double x/0, so the bare division may
-      // not even be constructed for a degenerate group (DuckDB reads
-      // NULL in the same place — NULL-propagation keeps t/df NULL).
-      .withColumn("m_c", when(col("n_c") > 0,
-        col("sx_c").cast("double") / col("n_c").cast("double")))
-      .withColumn("m_t", when(col("n_t") > 0,
-        col("sx_t").cast("double") / col("n_t").cast("double")))
-      .withColumn("v_c", when(col("n_c") > 1,
-        (col("sxx_c").cast("double")
-          - col("sx_c").cast("double") * col("sx_c").cast("double")
-            / col("n_c").cast("double"))
-          / (col("n_c") - 1).cast("double")))
-      .withColumn("v_t", when(col("n_t") > 1,
-        (col("sxx_t").cast("double")
-          - col("sx_t").cast("double") * col("sx_t").cast("double")
-            / col("n_t").cast("double"))
-          / (col("n_t") - 1).cast("double")))
-      .withColumn("se2", col("v_c") / col("n_c").cast("double")
-        + col("v_t") / col("n_t").cast("double"))
-      .withColumn("t_stat", when(col("v_c") > 0 && col("v_t") > 0,
-        TestData.r4((col("m_t") - col("m_c")) / sqrt(col("se2")))))
-      .withColumn("df_welch", when(col("v_c") > 0 && col("v_t") > 0,
-        TestData.r4(col("se2") * col("se2")
-          / (col("v_c") / col("n_c") * (col("v_c") / col("n_c"))
-              / (col("n_c") - 1).cast("double")
-            + col("v_t") / col("n_t") * (col("v_t") / col("n_t"))
-              / (col("n_t") - 1).cast("double")))))
-      .select(col("n_c").as("n_control"), col("n_t").as("n_treatment"),
-        when(col("n_c") > 0, TestData.r4(col("m_c"))).as("mean_control"),
-        when(col("n_t") > 0, TestData.r4(col("m_t"))).as("mean_treatment"),
-        col("t_stat"), col("df_welch"))
+    graft.operators.Stats.welchTCore(
+      twoGroupCells(df, valueCol, groupCol, aLabel, bLabel))
 
   /** PACF at lags 1..3 (see `ts_pacf`) of an integer-valued series
     * ordered by `orderCol` — Durbin–Levinson unrolled over exact
@@ -2263,48 +2024,9 @@ class GraftEngine(val spark: SparkSession) {
     * guards (constant series / |r1|=1 ⇒ NULLs).
     */
   def pacfLags3(series: DataFrame, orderCol: String,
-                valueCol: String): DataFrame = {
-    val W = Window.orderBy(orderCol)
-    val tot = series.agg(sum(valueCol).as("t_total"),
-                         count(lit(1)).as("n_rows"))
-    val dv = series.crossJoin(broadcast(tot))
-      .withColumn("dev", col(valueCol) * col("n_rows") - col("t_total"))
-    val led = (1 to 3).foldLeft(dv) { (df2, k) =>
-      df2.withColumn(s"l$k", lead("dev", k).over(W))
-    }
-    val M = 1000000L
-    def ru(k: Int) = when(col("den") > 0,
-      floor(col(s"num$k").cast("double") / col("den").cast("double")
-        * M + 0.5).cast("long"))
-    led.agg(sum(col("dev") * col("dev")).as("den"),
-        sum(col("dev") * col("l1")).as("num1"),
-        sum(col("dev") * col("l2")).as("num2"),
-        sum(col("dev") * col("l3")).as("num3"))
-      .withColumn("r1u", ru(1))
-      .withColumn("r2u", ru(2))
-      .withColumn("r3u", ru(3))
-      .withColumn("den22", lit(M * M) - col("r1u") * col("r1u"))
-      .withColumn("p22u", when(col("den22") =!= 0, floor(
-        (col("r2u") * M - col("r1u") * col("r1u")).cast("double")
-          / col("den22").cast("double") * M + 0.5).cast("long")))
-      .withColumn("p21u", floor(col("r1u").cast("double")
-        * (lit(M) - col("p22u")).cast("double") / (M.toDouble) + 0.5)
-        .cast("long"))
-      .withColumn("num33", col("r3u") * M
-        - col("p21u") * col("r2u") - col("p22u") * col("r1u"))
-      .withColumn("den33", lit(M * M)
-        - col("p21u") * col("r1u") - col("p22u") * col("r2u"))
-      .withColumn("pacf1",
-        TestData.r4(col("r1u").cast("double") / M.toDouble))
-      .withColumn("pacf2",
-        TestData.r4(col("p22u").cast("double") / M.toDouble))
-      .withColumn("pacf3", when(col("den33") =!= 0,
-        TestData.r4(col("num33").cast("double")
-          / col("den33").cast("double"))))
-      .select(expr("stack(3, 1, r1u, pacf1, 2, r2u, pacf2, " +
-        "3, r3u, pacf3) AS (lag, acf_micro, pacf)"))
-      .orderBy("lag")
-  }
+                valueCol: String): DataFrame =
+    graft.operators.TimeSeries.pacfLags3Core(
+      series.select(col(orderCol).as("hour"), col(valueCol).as("n")))
 
   /** Cohen's d / Hedges' g (see `agg_cohens_d`) between the two
     * labelled groups of an integer `valueCol`, from the value-
@@ -2314,40 +2036,8 @@ class GraftEngine(val spark: SparkSession) {
   def cohensD(df: DataFrame, valueCol: String, groupCol: String,
               aLabel: String = "control",
               bLabel: String = "treatment"): DataFrame =
-    twoGroupCells(df, valueCol, groupCol, aLabel, bLabel)
-      .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
-        sum(col("cc") * col("x")).as("sx_c"),
-        sum(col("ct") * col("x")).as("sx_t"),
-        sum(col("cc") * col("x") * col("x")).as("sxx_c"),
-        sum(col("ct") * col("x") * col("x")).as("sxx_t"))
-      // Definition-site ANSI guards: double x/0 throws in Spark 4
-      // (NULL in DuckDB) — degenerate groups must NULL-propagate.
-      .withColumn("m_c", when(col("n_c") > 0,
-        col("sx_c").cast("double") / col("n_c").cast("double")))
-      .withColumn("m_t", when(col("n_t") > 0,
-        col("sx_t").cast("double") / col("n_t").cast("double")))
-      .withColumn("ss_c", when(col("n_c") > 0,
-        col("sxx_c").cast("double")
-          - col("sx_c").cast("double") * col("sx_c").cast("double")
-            / col("n_c").cast("double")))
-      .withColumn("ss_t", when(col("n_t") > 0,
-        col("sxx_t").cast("double")
-          - col("sx_t").cast("double") * col("sx_t").cast("double")
-            / col("n_t").cast("double")))
-      .withColumn("sp2", when(col("n_c") + col("n_t") > 2,
-        (col("ss_c") + col("ss_t"))
-          / (col("n_c") + col("n_t") - 2).cast("double")))
-      .withColumn("ok", col("n_c") > 0 && col("n_t") > 0
-        && col("n_c") + col("n_t") > 2)
-      .withColumn("cohens_d", when(col("ok") && col("sp2") > 0,
-        TestData.r4((col("m_t") - col("m_c")) / sqrt(col("sp2")))))
-      .withColumn("hedges_g", when(col("ok") && col("sp2") > 0,
-        TestData.r4((col("m_t") - col("m_c")) / sqrt(col("sp2"))
-          * (lit(1.0) - lit(3.0)
-            / ((col("n_c") + col("n_t")) * 4 - 9).cast("double")))))
-      .select(col("n_c").as("n_control"), col("n_t").as("n_treatment"),
-        when(col("ok"), TestData.r4(col("sp2"))).as("pooled_var"),
-        col("cohens_d"), col("hedges_g"))
+    graft.operators.Stats.cohensDCore(
+      twoGroupCells(df, valueCol, groupCol, aLabel, bLabel))
 
   /** Wald–Wolfowitz runs test (see `ts_runs_test`) of an integer
     * series around its exact median: doubled-median order-stat
@@ -2356,41 +2046,9 @@ class GraftEngine(val spark: SparkSession) {
     * split (n1·n2 = 0) ⇒ NULL z.
     */
   def runsTest(series: DataFrame, orderCol: String,
-               valueCol: String): DataFrame = {
-    val base = series.select(col(orderCol).as("hr"),
-      col(valueCol).as("n")).ckpt()
-    val tot = base.agg(count(lit(1)).as("h_cnt"))
-    val med2 = base.crossJoin(broadcast(tot))
-      .withColumn("rn", row_number().over(Window.orderBy("n", "hr")))
-      .agg(sum(when(col("rn") === expr("(h_cnt + 1) DIV 2"), col("n"))
-          .otherwise(0L)
-        + when(col("rn") === expr("(h_cnt + 2) DIV 2"), col("n"))
-          .otherwise(0L)).as("med2"))
-    base.crossJoin(broadcast(med2))
-      .withColumn("sgn", when(col("n") * 2 > col("med2"), 1)
-        .when(col("n") * 2 < col("med2"), -1).otherwise(0))
-      .filter(col("sgn") =!= 0)
-      .withColumn("chg", when(
-        lag("sgn", 1).over(Window.orderBy("hr")).isNull
-          || lag("sgn", 1).over(Window.orderBy("hr")) =!= col("sgn"),
-        1L).otherwise(0L))
-      .agg(sum(when(col("sgn") === 1, 1L).otherwise(0L)).as("n_pos"),
-        sum(when(col("sgn") === -1, 1L).otherwise(0L)).as("n_neg"),
-        sum("chg").as("n_runs"))
-      .withColumn("nn", col("n_pos") + col("n_neg"))
-      .withColumn("p2", col("n_pos") * col("n_neg") * 2)
-      .withColumn("mu", lit(1.0)
-        + col("p2").cast("double") / col("nn").cast("double"))
-      .withColumn("var_r", col("p2").cast("double")
-        * (col("p2") - col("nn")).cast("double")
-        / (col("nn").cast("double") * col("nn").cast("double")
-          * (col("nn") - 1).cast("double")))
-      .withColumn("z_runs", when(
-        col("n_pos") > 0 && col("n_neg") > 0 && col("var_r") > 0,
-        TestData.r4((col("n_runs").cast("double") - col("mu"))
-          / sqrt(col("var_r")))))
-      .select("n_pos", "n_neg", "n_runs", "z_runs")
-  }
+               valueCol: String): DataFrame =
+    graft.operators.TimeSeries.runsTestCore(
+      series.select(col(orderCol).as("hr"), col(valueCol).as("n")).ckpt())
 
   /** Single-frequency periodogram amplitudes (see
     * `ts_spectral_peak`) of an integer series at caller-chosen
@@ -2401,30 +2059,9 @@ class GraftEngine(val spark: SparkSession) {
     */
   def spectralPeak(series: DataFrame, indexCol: String,
                    valueCol: String,
-                   periods: Seq[Int] = Seq(12, 24, 168)): DataFrame = {
-    val tot = series.agg(sum(valueCol).as("t_total"),
-                         count(lit(1)).as("n_rows"))
-    val dv = series.crossJoin(broadcast(tot))
-      .withColumn("dev",
-        col(valueCol) * col("n_rows") - col("t_total"))
-    def basis(t: Int, f: Double => Double): Column =
-      element_at(array(graft.operators.TimeSeries.trigU(t, f)
-        .map(lit(_)): _*), (col(indexCol) % t).cast("int") + 1)
-    val aggs = periods.flatMap(t => Seq(
-      sum(col("dev") * basis(t, math.cos)).as(s"sc$t"),
-      sum(col("dev") * basis(t, math.sin)).as(s"ss$t")))
-    val stackArgs = periods.map(t => s"$t, sc$t, ss$t").mkString(", ")
-    dv.agg(aggs.head, (aggs.tail :+ max("n_rows").as("h_cnt")): _*)
-      .select(expr(s"stack(${periods.size}, $stackArgs)" +
-        " AS (period, s_cos, s_sin)"), col("h_cnt"))
-      .withColumn("amplitude", TestData.r4(
-        sqrt(col("s_cos").cast("double") * col("s_cos").cast("double")
-          + col("s_sin").cast("double") * col("s_sin").cast("double"))
-        * 2.0 / (col("h_cnt").cast("double")
-          * col("h_cnt").cast("double") * 1000000.0)))
-      .select("period", "s_cos", "s_sin", "amplitude")
-      .orderBy("period")
-  }
+                   periods: Seq[Int] = Seq(12, 24, 168)): DataFrame =
+    graft.operators.TimeSeries.spectralPeakCore(
+      series.select(col(indexCol).as("hr"), col(valueCol).as("n")), periods)
 
   /** Directed-graph reciprocity (see `graph_reciprocity`): the
     * fraction of (src, dst) edges whose reversal also exists — one
@@ -2479,38 +2116,9 @@ class GraftEngine(val spark: SparkSession) {
     * Bound: cnt·ln(n)·1e6 < 2^63 ⇒ n ≲ 2e11 rows.
     */
   def mutualInformation(df: DataFrame, rowCol: String,
-                        colCol: String): DataFrame = {
-    val cells = df.select(col(rowCol).as("rk"), col(colCol).as("ck"))
-      .groupBy("rk", "ck").agg(count(lit(1)).as("cnt"))
-      .withColumn("r_i", sum("cnt").over(Window.partitionBy("rk")))
-      .withColumn("c_j", sum("cnt").over(Window.partitionBy("ck")))
-      .withColumn("n", sum("cnt").over(Window.partitionBy()))
-    val mi = cells
-      .withColumn("t_u", floor(col("cnt").cast("double")
-        * log(col("n").cast("double") * col("cnt").cast("double")
-          / (col("r_i").cast("double") * col("c_j").cast("double")))
-        * 1000000 + 0.5).cast("long"))
-      .agg(max("n").as("n"), sum("t_u").as("mi_sum_u"))
-    def margEnt(k: String, out: String): DataFrame =
-      cells.groupBy(col(k)).agg(max("n").as("n"), sum("cnt").as("m"))
-        .withColumn("h_u", floor(-(col("m").cast("double")
-            / col("n").cast("double"))
-          * log(col("m").cast("double") / col("n").cast("double"))
-          * 1000000 + 0.5).cast("long"))
-        .agg(sum("h_u").as(out))
-    mi.crossJoin(margEnt("rk", "hr_u"))
-      .crossJoin(margEnt("ck", "hc_u"))
-      .withColumn("mi_nats", TestData.r4(col("mi_sum_u").cast("double")
-        / (lit(1000000.0) * col("n").cast("double"))))
-      .withColumn("h_row", TestData.r4(col("hr_u") / 1000000.0))
-      .withColumn("h_col", TestData.r4(col("hc_u") / 1000000.0))
-      .withColumn("nmi", when(least(col("hr_u"), col("hc_u")) > 0,
-        TestData.r4((col("mi_sum_u").cast("double")
-            / (lit(1000000.0) * col("n").cast("double")))
-          / (least(col("hr_u"), col("hc_u")).cast("double")
-            / 1000000.0))))
-      .select("n", "mi_nats", "h_row", "h_col", "nmi")
-  }
+                        colCol: String): DataFrame =
+    graft.operators.Stats.mutualInformationCore(
+      df.select(col(rowCol).as("nationkey"), col(colCol).as("c_mktsegment")))
 
   /** Stationary distribution of a first-order Markov chain (see
     * `events_markov_stationary`) from raw transition rows (fromCol,
@@ -2579,94 +2187,32 @@ class GraftEngine(val spark: SparkSession) {
     * column accordingly.
     */
   def neymanAllocation(df: DataFrame, stratumCol: String,
-                       valueCol: String, budget: Long): DataFrame = {
-    val W = Window.orderBy(col("rem").desc, col(stratumCol))
-    val st = df
-      .groupBy(stratumCol)
-      .agg(count(lit(1)).as("n_h"), sum(valueCol).as("sx"),
-        sum(col(valueCol) * col(valueCol)).as("sxx"))
-      .withColumn("s_units", sqrt(
-        (col("n_h").cast("double") * col("sxx").cast("double")
-          - col("sx").cast("double") * col("sx").cast("double"))
-        / (col("n_h").cast("double") * (col("n_h") - 1).cast("double"))))
-      .withColumn("w_u",
-        floor(col("n_h").cast("double") * col("s_units") + 0.5)
-          .cast("long"))
-    val tot = st.agg(sum("w_u").as("w_total"))
-    val appo = st.crossJoin(broadcast(tot))
-      .withColumn("base", expr(s"($budget * w_u) DIV w_total"))
-      .withColumn("rem", expr(s"($budget * w_u) % w_total"))
-    val baseSum = appo.agg(sum("base").as("base_sum"))
-    appo.crossJoin(broadcast(baseSum))
-      .withColumn("rk", row_number().over(W))
-      .withColumn("extra",
-        when(col("rk") <= lit(budget) - col("base_sum"), 1L)
-          .otherwise(0L))
-      .select(col(stratumCol), col("n_h"),
-        TestData.r4(col("s_units")).as("s_units"), col("w_u"),
-        (col("base") + col("extra")).as("n_alloc"))
-      .orderBy(stratumCol)
-  }
+                       valueCol: String, budget: Long): DataFrame =
+    graft.operators.Curation.neymanAllocationCore(
+        df.select(col(stratumCol).as("l_returnflag"), col(valueCol).as("x")),
+        budget)
+      .withColumnRenamed("l_returnflag", stratumCol)
 
   /** Nearest-standard-aspect-ratio bucketing (see
     * `multimodal_aspect_bucket`): all-integer 720ths ratio, 5-row
     * anchor rank per item, per-bucket count + average dims.
     */
   def aspectBucket(df: DataFrame, idCol: String, widthCol: String,
-                   heightCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    val anchors = Seq((405L, "9:16"), (540L, "3:4"), (720L, "1:1"),
-      (960L, "4:3"), (1280L, "16:9")).toDF("anchor", "bucket")
-    val W = Window.partitionBy("gid")
-      .orderBy(abs(col("ar_u") - col("anchor")), col("anchor"))
-    df.select(col(idCol).as("gid"),
+                   heightCol: String): DataFrame =
+    graft.operators.MultimodalOps.aspectBucketCore(
+      df.select(col(idCol).as("doc_id"),
         col(widthCol).cast("long").as("w"),
-        col(heightCol).cast("long").as("h"))
-      .withColumn("ar_u", expr("(w * 720) DIV h"))
-      .crossJoin(broadcast(anchors))
-      .withColumn("rn", row_number().over(W))
-      .filter(col("rn") === 1)
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_images"),
-        sum("w").as("sw"), sum("h").as("sh"))
-      .withColumn("avg_width",
-        TestData.r4(col("sw").cast("double") / col("n_images")))
-      .withColumn("avg_height",
-        TestData.r4(col("sh").cast("double") / col("n_images")))
-      .select("bucket", "n_images", "avg_width", "avg_height")
-      .orderBy("bucket")
-  }
+        col(heightCol).cast("long").as("h")))
 
   /** Conditional bigram entropy H(w₂|w₁) per group (see
     * `text_conditional_entropy`) over a space-tokenized text column
     * — micro-nat per-term quantization, vocabulary-shaped joins.
     */
   def conditionalEntropy(df: DataFrame, groupCol: String,
-                         textCol: String): DataFrame = {
-    val bi = df
-      .withColumn("toks", split(col(textCol), " "))
-      .filter(size(col("toks")) >= 2)
-      .select(col(groupCol).as("g"), explode(expr(
-        "transform(sequence(0, size(toks)-2)," +
-          " i -> concat(toks[i], ' ', toks[i+1]))")).as("bg"))
-      .groupBy("g", "bg").agg(count(lit(1)).as("c_b"))
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-    val marg = bi.groupBy("g", "w1").agg(sum("c_b").as("c_1"))
-    bi.join(marg, Seq("g", "w1"))
-      .withColumn("t_u", floor(col("c_b").cast("double")
-        * log(col("c_1").cast("double") / col("c_b").cast("double"))
-        * 1000000 + 0.5).cast("long"))
-      .groupBy("g")
-      .agg(sum("c_b").as("n_bigrams"),
-        count(lit(1)).as("n_distinct_bigrams"),
-        sum("t_u").as("h_sum_u"))
-      .withColumn("cond_entropy_nats", TestData.r4(
-        col("h_sum_u").cast("double")
-          / (lit(1000000.0) * col("n_bigrams").cast("double"))))
-      .select(col("g").as(groupCol), col("n_bigrams"),
-        col("n_distinct_bigrams"), col("cond_entropy_nats"))
-      .orderBy(groupCol)
-  }
+                         textCol: String): DataFrame =
+    graft.operators.TextOps.conditionalEntropyCore(
+        df.select(col(groupCol).as("lang"), col(textCol).as("text")))
+      .withColumnRenamed("lang", groupCol)
 
   /** Mann-Kendall trend test (see `ts_mann_kendall`) over an
     * integer series (`xCol` grid index, `yCol` value): S from the
@@ -2701,34 +2247,11 @@ class GraftEngine(val spark: SparkSession) {
     * distinct-duration grid, micro-nat ln terms, exact-zero tail.
     */
   def kaplanMeier(durations: DataFrame, durCol: String,
-                  eventCol: String): DataFrame = {
-    val risk = durations
-      .select(col(durCol).as("dur"), col(eventCol).cast("long").as("ev"))
-      .groupBy("dur")
-      .agg(sum("ev").as("d_t"), sum(lit(1L) - col("ev")).as("c_t"))
-      .withColumn("n_total",
-        sum(col("d_t") + col("c_t")).over(Window.partitionBy()))
-      .withColumn("n_risk", col("n_total")
-        - coalesce(sum(col("d_t") + col("c_t")).over(
-            Window.orderBy("dur")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    risk.filter(col("d_t") > 0)
-      .withColumn("term_u", when(col("n_risk") > col("d_t"),
-        floor(log((col("n_risk") - col("d_t")).cast("double")
-          / col("n_risk").cast("double")) * 1000000 + 0.5).cast("long")))
-      .withColumn("zero_flag",
-        max(when(col("n_risk") === col("d_t"), 1).otherwise(0)).over(
-          Window.orderBy("dur")
-            .rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("cum_u", sum("term_u").over(
-        Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("survival", when(col("zero_flag") === 1, lit(0.0))
-        .otherwise(TestData.r4(exp(col("cum_u") / 1000000.0))))
-      .select(col("dur").as("t"), col("n_risk"),
-        col("d_t").as("n_events"), col("c_t").as("n_censored"),
-        col("survival"))
-      .orderBy("t")
-  }
+                  eventCol: String): DataFrame =
+    graft.operators.TimeSeries.kaplanMeierCore(
+        durations.select(col(durCol).as("dur_hr"),
+          col(eventCol).cast("long").as("event")))
+      .withColumnRenamed("t_hr", "t")
 
   /** Goh-Barabási burstiness per group (see `events_burstiness`)
     * over a pre-computed integer gap table: B = (σ−μ)/(σ+μ) + CV
@@ -2790,26 +2313,11 @@ class GraftEngine(val spark: SparkSession) {
     * (src, dst) edge list (each edge once, src < dst).
     */
   def clusteringCoefficient(nodes: DataFrame,
-                            pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("src").as("a"), col("dst").as("b"))
-    val adj = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-    val deg = adj.groupBy("src").agg(count(lit(1)).as("deg"))
-    val a2 = adj.select(col("src").as("src2"), col("dst").as("dst2"))
-    val tri = adj
-      .join(a2, col("src") === col("src2") && col("dst") < col("dst2"))
-      .join(edges, col("dst") === col("a") && col("dst2") === col("b"))
-      .groupBy(col("src").as("v")).agg(count(lit(1)).as("n_tri"))
-    nodes.select(col("id"))
-      .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .join(tri.withColumnRenamed("v", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"),
-        coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-      .withColumn("lcc", when(col("deg") >= 2,
-        TestData.r4((lit(2L) * col("n_tri")).cast("double")
-          / (col("deg") * (col("deg") - 1)).cast("double"))))
-      .orderBy("id")
-  }
+                            pairs: DataFrame): DataFrame =
+    graft.operators.GraphOps.clusteringCoefficientCore(
+        pairs.select(col("src").as("a"), col("dst").as("b")),
+        nodes.select(col("id").as("vec_id")))
+      .withColumnRenamed("vec_id", "id")
 
   /** HITS hubs/authorities (see `graph_hits`): `rounds` fixed
     * synchronous rounds over a DIRECTED (src, dst) edge list,
@@ -2852,29 +2360,10 @@ class GraftEngine(val spark: SparkSession) {
     * micro-quantized distances, (b−a)/max(a,b).
     */
   def centroidSilhouette(vectors: DataFrame,
-                         cents: DataFrame): DataFrame = {
-    val dists = vectors.select(col("id"), col("embedding"))
-      .crossJoin(broadcast(cents))
-      .withColumn("d_u",
-        floor(sqrt(V.sqDist(col("embedding"), col("cv"))) * 1000000
-          + 0.5).cast("long"))
-      .select("id", "cid", "d_u")
-      .ckpt()
-    val own = dists.groupBy("id")
-      .agg(min(struct(col("d_u"), col("cid"))).as("m"))
-      .select(col("id"), col("m.cid").as("cluster"),
-        col("m.d_u").as("a_u"))
-    dists.join(own, "id")
-      .filter(col("cid") =!= col("cluster"))
-      .groupBy("id", "cluster", "a_u")
-      .agg(min("d_u").as("b_u"))
-      .withColumn("sil", when(greatest(col("a_u"), col("b_u")) > 0,
-        TestData.r4((col("b_u") - col("a_u")).cast("double")
-          / greatest(col("a_u"), col("b_u")).cast("double")))
-        .otherwise(lit(0.0)))
-      .select("id", "cluster", "a_u", "b_u", "sil")
-      .orderBy("id")
-  }
+                         cents: DataFrame): DataFrame =
+    graft.operators.Vectors.centroidSilhouetteCore(
+        vectors.select(col("id").as("vec_id"), col("embedding")), cents)
+      .withColumnRenamed("vec_id", "id")
 
   /** k-anonymity suppression cost curve (see
     * `privacy_suppression_curve`) over caller QI columns at the
@@ -2883,19 +2372,8 @@ class GraftEngine(val spark: SparkSession) {
   def suppressionCurve(df: DataFrame, qiCols: Seq[String],
                        ks: Seq[Int] = Seq(2, 5, 10, 20)): DataFrame = {
     require(qiCols.nonEmpty && ks.nonEmpty, "need QI columns and ks")
-    df.groupBy(qiCols.map(col): _*)
-      .agg(count(lit(1)).as("gs"))
-      .select(col("gs"), explode(lit(ks.toArray)).as("k"))
-      .groupBy("k")
-      .agg(count(lit(1)).as("n_groups"),
-        sum(when(col("gs") < col("k"), 1L).otherwise(0L))
-          .as("n_small_groups"),
-        sum(when(col("gs") < col("k"), col("gs")).otherwise(0L))
-          .as("n_suppressed"),
-        sum("gs").as("n_rows"))
-      .withColumn("suppressed_frac",
-        TestData.r4(col("n_suppressed").cast("double") / col("n_rows")))
-      .orderBy("k")
+    graft.operators.Curation.suppressionCurveCore(
+      df.groupBy(qiCols.map(col): _*).agg(count(lit(1)).as("gs")), ks)
   }
 
   /** Deterministic Poisson-bootstrap CI (see `sample_bootstrap_ci`)
@@ -2905,66 +2383,21 @@ class GraftEngine(val spark: SparkSession) {
   def bootstrapCi(df: DataFrame, keyCol: String, valueCol: String,
                   b: Int = 32): DataFrame = {
     require(b >= 2 && b <= 1000, "need 2..1000 replicates")
-    val o = df.select(col(keyCol).as("k"), col(valueCol).as("v"))
-    val u = (((col("h28") * (lit(2654435761L) + col("b") * lit(96542L)))
-      % 268435456L).cast("double") + lit(0.5)) / lit(268435456.0)
-    val pois = when(u < 0.3678794412, 0L).when(u < 0.7357588823, 1L)
-      .when(u < 0.9196986029, 2L).when(u < 0.9810118431, 3L)
-      .when(u < 0.9963401532, 4L).when(u < 0.9994058152, 5L)
-      .when(u < 0.9999167589, 6L).when(u < 0.9999897508, 7L)
-      .otherwise(8L)
-    val reps = o
-      .withColumn("h28",
-        conv(substring(md5(col("k").cast("string")), 1, 7), 16, 10)
-          .cast("long"))
-      .select(col("k"), col("v"), col("h28"),
-        explode(lit((0 until b).toArray)).as("b"))
-      .withColumn("w", pois)
-      .groupBy("b")
-      .agg(sum("w").as("n_eff"), sum(col("w") * col("v")).as("wsum"))
-      .filter(col("n_eff") > 0)
-      .withColumn("mean_q", floor(col("wsum").cast("double")
-        / col("n_eff").cast("double") * 10000 + 0.5).cast("long"))
-    val boot = reps
-      .withColumn("rn", row_number().over(Window.orderBy("mean_q", "b")))
-      .withColumn("nb", count(lit(1)).over(Window.partitionBy()))
-      .agg(max("nb").as("b_replicates"),
-        max(when(col("rn") === expr("(nb + 1) DIV 20"), col("mean_q")))
-          .as("lo_q"),
-        max(when(col("rn") === expr("(19 * (nb + 1)) DIV 20"),
-          col("mean_q"))).as("hi_q"))
-    val point = o.agg(count(lit(1)).as("n_rows"),
-      TestData.r4(sum("v").cast("double") / count(lit(1))).as("mean"))
-    point.crossJoin(boot)
-      .withColumn("boot_lo", TestData.r4(col("lo_q") / 10000.0))
-      .withColumn("boot_hi", TestData.r4(col("hi_q") / 10000.0))
-      .select("n_rows", "mean", "b_replicates", "boot_lo", "boot_hi")
+    graft.operators.Stats.bootstrapCiCore(
+        df.select(col(keyCol).as("o_orderkey"), col(valueCol).as("cents")), b)
+      .select(col("n_orders").as("n_rows"), col("mean_cents").as("mean"),
+        col("b_replicates"), col("boot_lo_cents").as("boot_lo"),
+        col("boot_hi_cents").as("boot_hi"))
   }
 
   /** Flesch readability (see `text_readability`) of (`id`, `text`)
     * rows: re-token words, [.!?]+ sentence runs (floor 1),
     * vowel-group syllables (floor 1 per word), r4'd score.
     */
-  def readability(docs: DataFrame): DataFrame = {
-    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-    docs
-      .withColumn("n_words", size(words).cast("long"))
-      .withColumn("n_sentences", greatest(lit(1L),
-        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-          .cast("long")))
-      .withColumn("n_syllables", aggregate(
-        transform(words, w => greatest(lit(1),
-          size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0))))),
-        lit(0L), (acc, x) => acc + x))
-      .filter(col("n_words") > 0)
-      .withColumn("flesch", TestData.r4(lit(206.835)
-        - lit(1.015) * (col("n_words").cast("double")
-          / col("n_sentences").cast("double"))
-        - lit(84.6) * (col("n_syllables").cast("double")
-          / col("n_words").cast("double"))))
-      .select("id", "n_words", "n_sentences", "n_syllables", "flesch")
-      .orderBy("id")
-  }
+  def readability(docs: DataFrame): DataFrame =
+    graft.operators.TextAnalysis.readabilityCore(
+        docs.select(col("id").as("doc_id"), col("text")))
+      .withColumnRenamed("doc_id", "id")
 
   /** Yule's K per group (see `text_yule_k`) of (`groupCol`, `text`)
     * rows: K = 10⁴·(Σf²−N)/N² over the token frequency spectrum.
@@ -3087,35 +2520,11 @@ class GraftEngine(val spark: SparkSession) {
                       period: Int = 24, trendHalf: Int = 12,
                       zTenThousandths: Long = 44478L): DataFrame = {
     require(period >= 2 && trendHalf >= 1, "period >= 2, trendHalf >= 1")
-    val wT = Window.orderBy(col(xCol)).rangeBetween(-trendHalf, trendHalf)
-    val det = series
-      .withColumn("trend",
-        sum(col(yCol)).over(wT) / count(lit(1)).over(wT))
-      .withColumn("r_u",
-        floor((col(yCol) - col("trend")) * 1000000 + 0.5).cast("long"))
-    val wS = Window.partitionBy(col(xCol) % period)
-    val resid = det
-      .withColumn("seas", sum(col("r_u")).over(wS) / count(lit(1)).over(wS))
-      .withColumn("r2_u", floor(col("r_u") - col("seas") + 0.5).cast("long"))
-      .select(col(xCol), col(yCol), col("r2_u"))
-      .ckpt()
-    def rankStat(df: DataFrame, valCol: String): DataFrame =
-      df.withColumn("rn", row_number().over(
-          Window.orderBy(col(valCol), col(xCol))))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy()))
-        .agg(max(when(col("rn") === expr("(n + 1) DIV 2"), col(valCol)))
-          .as("stat"))
-    val med = rankStat(resid, "r2_u")
-    val withMed = resid.crossJoin(broadcast(med))
-      .withColumn("adev", abs(col("r2_u") - col("stat")))
-    val mad = rankStat(withMed.select(col(xCol), col("adev")), "adev")
-      .withColumnRenamed("stat", "mad_u")
-    withMed.crossJoin(broadcast(mad))
-      .filter(col("mad_u") > 0 &&
-        col("adev") * 10000 > lit(zTenThousandths) * col("mad_u"))
-      .select(col(xCol), col(yCol), col("r2_u"),
-        col("stat").as("med_u"), col("mad_u"))
-      .orderBy(xCol)
+    graft.operators.TimeSeries.seasonalAnomalyCore(
+        series.select(col(xCol).as("hr"), col(yCol).as("cnt")),
+        period, trendHalf, zTenThousandths)
+      .select(col("hr").as(xCol), col("cnt").as(yCol), col("r2_u"),
+        col("med_u"), col("mad_u"))
   }
 
   /** Markov transition entropy (see `events_transition_entropy`)
@@ -3203,73 +2612,22 @@ class GraftEngine(val spark: SparkSession) {
     * is right-censored out.
     */
   def userLifecycle(pairs: DataFrame, idCol: String,
-                    periodCol: String): DataFrame = {
-    val uw = pairs.select(col(idCol).as("u"), col(periodCol).as("wk"))
-      .distinct().ckpt()
-    val first = uw.groupBy("u").agg(min("wk").as("first_wk"))
-    val prev = uw.select(col("u"), (col("wk") + 1).as("wk"),
-      lit(1).as("was_prev"))
-    val counts = uw.join(first, "u")
-      .join(prev, Seq("u", "wk"), "left")
-      .withColumn("status",
-        when(col("wk") === col("first_wk"), "new")
-          .when(col("was_prev").isNotNull, "retained")
-          .otherwise("resurrected"))
-      .groupBy("wk")
-      .agg(sum(when(col("status") === "new", 1L).otherwise(0L))
-        .as("n_new"),
-        sum(when(col("status") === "retained", 1L).otherwise(0L))
-          .as("n_retained"),
-        sum(when(col("status") === "resurrected", 1L).otherwise(0L))
-          .as("n_resurrected"))
-    val churn = uw.select(col("u"), (col("wk") + 1).as("wk"))
-      .join(uw, Seq("u", "wk"), "left_anti")
-      .groupBy("wk").agg(count(lit(1)).as("n_churned"))
-    counts.join(churn, Seq("wk"), "left")
-      .withColumn("n_churned", coalesce(col("n_churned"), lit(0L)))
-      .withColumn("quick_ratio", when(col("n_churned") > 0,
-        TestData.r4((col("n_new") + col("n_resurrected")).cast("double")
-          / col("n_churned"))))
-      .select(col("wk").as(periodCol), col("n_new"), col("n_retained"),
-        col("n_resurrected"), col("n_churned"), col("quick_ratio"))
-      .orderBy(periodCol)
-  }
+                    periodCol: String): DataFrame =
+    graft.operators.TimeSeries.userLifecycleCore(
+        pairs.select(col(idCol).as("user_id"), col(periodCol).as("wk"))
+          .distinct().ckpt())
+      .withColumnRenamed("wk", periodCol)
 
   /** Jensen-Shannon divergence (see `text_js_divergence`) of each
     * group's token distribution vs the corpus mix, over (`groupCol`,
     * `text`) rows; vocabulary-shaped (absent-token mass collapses to
     * the (1 − Σq)·ln2 closure term).
     */
-  def jsDivergence(docs: DataFrame, groupCol: String): DataFrame = {
-    val c = docs
-      .select(col(groupCol).as("g"),
-        explode(split(col("text"), " ")).as("tok"))
-      .groupBy("g", "tok").agg(count(lit(1)).as("c"))
-      .ckpt()
-    val nl = c.groupBy("g").agg(sum("c").as("n_g"))
-    val ct = c.groupBy("tok").agg(sum("c").as("c_tok"))
-    val nAll = nl.agg(sum("n_g").as("n_corpus"))
-    c.join(broadcast(nl), "g")
-      .join(ct, "tok")
-      .crossJoin(broadcast(nAll))
-      .withColumn("p", col("c").cast("double") / col("n_g").cast("double"))
-      .withColumn("q", col("c_tok").cast("double")
-        / col("n_corpus").cast("double"))
-      .withColumn("term_u", floor(
-        (col("p") * log(lit(2.0) * col("p") / (col("p") + col("q")))
-          + col("q") * log(lit(2.0) * col("q") / (col("p") + col("q"))))
-          * 1000000 + 0.5).cast("long"))
-      .groupBy("g")
-      .agg(max("n_g").as("n_g"), max("n_corpus").as("n_corpus"),
-        sum("term_u").as("sum_term_u"), sum("c_tok").as("sum_q_num"))
-      .withColumn("jsd", TestData.r4(
-        (col("sum_term_u") / 1000000.0
-          + (lit(1.0) - col("sum_q_num").cast("double")
-            / col("n_corpus")) * log(lit(2.0))) / 2.0))
-      .select(col("g").as(groupCol), col("n_g"), col("sum_term_u"),
-        col("jsd"))
-      .orderBy(groupCol)
-  }
+  def jsDivergence(docs: DataFrame, groupCol: String): DataFrame =
+    graft.operators.TextAnalysis.jsDivergenceCore(
+        docs.select(col(groupCol).as("lang"), col("text")))
+      .select(col("lang").as(groupCol), col("n_lang").as("n_g"),
+        col("sum_term_u"), col("jsd"))
 
   /** Top-`k` diagonal-Mahalanobis outliers (see
     * `vec_mahalanobis_outlier`) of (id, embedding) rows:
@@ -3278,33 +2636,9 @@ class GraftEngine(val spark: SparkSession) {
     */
   def mahalanobisOutliers(vectors: DataFrame, k: Int = 20): DataFrame = {
     require(k >= 1, "k must be positive")
-    val dims = vectors
-      .select(col("id"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .withColumn("x_m",
-        floor(col("x").cast("double") * 1000 + 0.5).cast("long"))
-    val stats = dims.groupBy("dim")
-      .agg(count(lit(1)).as("n"), sum("x_m").as("sx"),
-        sum(col("x_m") * col("x_m")).as("sxx"))
-      .withColumn("mean_m", col("sx").cast("double") / col("n"))
-      .withColumn("var_m",
-        (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-          / (col("n") * (col("n") - 1)).cast("double"))
-      .filter(col("var_m") > 0)
-      .select("dim", "mean_m", "var_m")
-    dims.join(broadcast(stats), "dim")
-      .withColumn("term_u", floor(
-        (col("x_m").cast("double") - col("mean_m"))
-          * (col("x_m").cast("double") - col("mean_m")) / col("var_m")
-          * 1000000 + 0.5).cast("long"))
-      .groupBy("id")
-      .agg(sum("term_u").as("score_u"))
-      .orderBy(col("score_u").desc, col("id"))
-      .limit(k)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("score_u").desc, col("id"))))
-      .withColumn("score", TestData.r4(col("score_u") / 1000000.0))
-      .select("rk", "id", "score_u", "score")
-      .orderBy("rk")
+    graft.operators.Vectors.mahalanobisOutliersCore(
+        vectors.select(col("id").as("vec_id"), col("embedding")), k)
+      .withColumnRenamed("vec_id", "id")
   }
 
   /** Interpolated as-of join (see `join_asof_interpolated`): probes
@@ -3373,22 +2707,8 @@ class GraftEngine(val spark: SparkSession) {
     */
   def termBurstiness(docs: DataFrame, k: Int = 20): DataFrame = {
     require(k >= 1, "k must be positive")
-    val toks = docs.select(col("id"),
-      explode(regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0)))
-        .as("tok"))
-    val byTok = toks.groupBy("tok")
-      .agg(count(lit(1)).as("cf"), countDistinct("id").as("df"))
-    val nDocs = docs.agg(countDistinct("id").as("n_docs"))
-    byTok.crossJoin(broadcast(nDocs))
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("cf").desc, col("tok"))))
-      .filter(col("rk") <= k)
-      .withColumn("burstiness",
-        TestData.r4(col("cf").cast("double") / col("df").cast("double")))
-      .withColumn("idf", TestData.r4(log((col("n_docs") + 1).cast("double")
-        / (col("df") + 1).cast("double"))))
-      .select("rk", "tok", "cf", "df", "burstiness", "idf")
-      .orderBy("rk")
+    graft.operators.TextAnalysis.termBurstinessCore(
+      docs.select(col("id").as("doc_id"), col("text")), k)
   }
 
   /** Bollinger bands (see `ts_bollinger_bands`) over an integer
@@ -3433,28 +2753,9 @@ class GraftEngine(val spark: SparkSession) {
   def rollingCorr(series: DataFrame, xCol: String, aCol: String,
                   bCol: String, window: Int = 24): DataFrame = {
     require(window >= 2, "window >= 2")
-    val W = Window.orderBy("hr").rangeBetween(-(window - 1), 0)
-    val n = window.toLong
-    series.select(col(xCol).as("hr"), col(aCol).as("x"),
-        col(bCol).as("y"))
-      .withColumn("n_win", count(lit(1)).over(W))
-      .withColumn("sx", sum("x").over(W))
-      .withColumn("sy", sum("y").over(W))
-      .withColumn("sxx", sum(col("x") * col("x")).over(W))
-      .withColumn("syy", sum(col("y") * col("y")).over(W))
-      .withColumn("sxy", sum(col("x") * col("y")).over(W))
-      .withColumn("num",
-        col("n_win") * col("sxy") - col("sx") * col("sy"))
-      .withColumn("dx",
-        col("n_win") * col("sxx") - col("sx") * col("sx"))
-      .withColumn("dy",
-        col("n_win") * col("syy") - col("sy") * col("sy"))
-      .withColumn("r_corr", when(
-        col("n_win") === n && col("dx") > 0 && col("dy") > 0,
-        TestData.r4(col("num").cast("double")
-          / sqrt(col("dx").cast("double") * col("dy").cast("double")))))
-      .select("hr", "x", "y", "n_win", "r_corr")
-      .orderBy("hr")
+    graft.operators.TimeSeries.rollingCorrCore(
+      series.select(col(xCol).as("hr"), col(aCol).as("x"), col(bCol).as("y")),
+      window)
   }
 
   /** McNemar's paired test (see `agg_mcnemar`) over per-subject 0/1
@@ -3489,25 +2790,7 @@ class GraftEngine(val spark: SparkSession) {
     * variance ⇒ NULL t.
     */
   def pairedT(df: DataFrame, dCol: String): DataFrame =
-    df.select(col(dCol).as("d_w"))
-      .agg(count(lit(1)).as("n_users"), sum("d_w").as("sum_d"),
-        sum(col("d_w") * col("d_w")).as("sum_dd"))
-      .withColumn("mean_d", when(col("n_users") > 0,
-        TestData.r4(col("sum_d").cast("double")
-          / col("n_users").cast("double"))))
-      .withColumn("var_d", when(col("n_users") > 1,
-        (col("sum_dd").cast("double")
-          - col("sum_d").cast("double") * col("sum_d").cast("double")
-            / col("n_users").cast("double"))
-          / (col("n_users") - 1).cast("double")))
-      .withColumn("t_paired", when(col("var_d") > 0,
-        TestData.r4((col("sum_d").cast("double")
-            / col("n_users").cast("double"))
-          / sqrt(col("var_d") / col("n_users").cast("double")))))
-      .withColumn("significant_95", when(col("var_d") > 0,
-        abs(col("t_paired")) > 1.959964))
-      .select("n_users", "sum_d", "mean_d", "t_paired",
-        "significant_95")
+    graft.operators.Stats.pairedTCore(df.select(col(dCol).as("d_w")))
 
   /** DCT perceptual hash (see `multimodal_dct_phash`) of a media
     * frame's binary `content` column: 8×8 byte tile → integer 2-D
@@ -3582,31 +2865,9 @@ class GraftEngine(val spark: SparkSession) {
     */
   def riskRatio(df: DataFrame, treatCol: String,
                 successCol: String): DataFrame =
-    df.select(col(treatCol).cast("int").as("t"),
-        col(successCol).cast("long").as("purch"))
-      .agg(
-        sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
-        sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
-        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
-        sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
-      .withColumn("rr_", (col("x_t").cast("double") + 0.5)
-        / (col("n_t").cast("double") + 0.5)
-        / ((col("x_c").cast("double") + 0.5)
-          / (col("n_c").cast("double") + 0.5)))
-      .withColumn("se", sqrt(
-        lit(1.0) / (col("x_t").cast("double") + 0.5)
-          - lit(1.0) / (col("n_t").cast("double") + 0.5)
-          + lit(1.0) / (col("x_c").cast("double") + 0.5)
-          - lit(1.0) / (col("n_c").cast("double") + 0.5)))
-      .withColumn("ci_lo", TestData.r4(exp(log(col("rr_"))
-        - lit(1.959964) * col("se"))))
-      .withColumn("ci_hi", TestData.r4(exp(log(col("rr_"))
-        + lit(1.959964) * col("se"))))
-      .withColumn("risk_ratio", TestData.r4(col("rr_")))
-      .withColumn("significant_95",
-        col("ci_lo") > 1.0 || col("ci_hi") < 1.0)
-      .select("n_c", "n_t", "x_c", "x_t", "risk_ratio", "ci_lo",
-        "ci_hi", "significant_95")
+    graft.operators.TimeSeries.riskRatioCore(
+      df.select(col(treatCol).cast("int").as("t"),
+        col(successCol).cast("long").as("purch")))
 
   /** Cohen's h arcsine effect size (see `events_ab_cohens_h`) over
     * (treat 0/1, success 0/1) rows — the sample-size-free magnitude
@@ -3614,51 +2875,15 @@ class GraftEngine(val spark: SparkSession) {
     */
   def cohensH(df: DataFrame, treatCol: String,
               successCol: String): DataFrame =
-    df.select(col(treatCol).cast("int").as("t"),
-        col(successCol).cast("long").as("purch"))
-      .agg(
-        sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
-        sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
-        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
-        sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
-      .withColumn("h", when(col("n_c") > 0 && col("n_t") > 0,
-        TestData.r4(lit(2.0) * asin(sqrt(col("x_t").cast("double")
-            / col("n_t").cast("double")))
-          - lit(2.0) * asin(sqrt(col("x_c").cast("double")
-            / col("n_c").cast("double"))))))
-      .withColumn("magnitude",
-        when(col("h").isNull, lit(null).cast("string"))
-          .when(abs(col("h")) < 0.2, "negligible")
-          .when(abs(col("h")) < 0.5, "small")
-          .when(abs(col("h")) < 0.8, "medium")
-          .otherwise("large"))
-      .select("n_c", "n_t", "x_c", "x_t", "h", "magnitude")
+    graft.operators.TimeSeries.cohensHCore(
+      df.select(col(treatCol).cast("int").as("t"),
+        col(successCol).cast("long").as("purch")))
 
   def oddsRatio(df: DataFrame, treatCol: String,
                 successCol: String): DataFrame =
-    df.select(col(treatCol).cast("int").as("t"),
-        col(successCol).cast("long").as("purch"))
-      .agg(
-        sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
-        sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
-        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
-        sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
-      .withColumn("a", col("x_t").cast("double") + 0.5)
-      .withColumn("b", (col("n_t") - col("x_t")).cast("double") + 0.5)
-      .withColumn("c2", col("x_c").cast("double") + 0.5)
-      .withColumn("d2", (col("n_c") - col("x_c")).cast("double") + 0.5)
-      .withColumn("or_", col("a") * col("d2") / (col("b") * col("c2")))
-      .withColumn("se", sqrt(lit(1.0) / col("a") + lit(1.0) / col("b")
-        + lit(1.0) / col("c2") + lit(1.0) / col("d2")))
-      .withColumn("ci_lo", TestData.r4(exp(log(col("or_"))
-        - lit(1.959964) * col("se"))))
-      .withColumn("ci_hi", TestData.r4(exp(log(col("or_"))
-        + lit(1.959964) * col("se"))))
-      .withColumn("odds_ratio", TestData.r4(col("or_")))
-      .withColumn("significant_95",
-        col("ci_lo") > 1.0 || col("ci_hi") < 1.0)
-      .select("n_c", "n_t", "x_c", "x_t", "odds_ratio", "ci_lo",
-        "ci_hi", "significant_95")
+    graft.operators.TimeSeries.oddsRatioCore(
+      df.select(col(treatCol).cast("int").as("t"),
+        col(successCol).cast("long").as("purch")))
 
   /** Capture-recapture dedup audit (see `dedup_capture_recapture`):
     * Chapman's estimator of the total target-pair population from
@@ -3667,25 +2892,8 @@ class GraftEngine(val spark: SparkSession) {
     * as a lower bound on the residual population.
     */
   def captureRecapture(pairsA: DataFrame,
-                       pairsB: DataFrame): DataFrame = {
-    val a = pairsA.select(col("id_a"), col("id_b"), lit(1L).as("in_a"))
-    val b = pairsB.select(col("id_a"), col("id_b"), lit(1L).as("in_b"))
-    a.join(b, Seq("id_a", "id_b"), "full_outer")
-      .agg(sum(coalesce(col("in_a"), lit(0L))).as("n_a"),
-        sum(coalesce(col("in_b"), lit(0L))).as("n_b"),
-        sum(when(col("in_a").isNotNull && col("in_b").isNotNull, 1L)
-          .otherwise(0L)).as("n_both"))
-      .withColumn("n_hat",
-        expr("(n_a + 1) * (n_b + 1) DIV (n_both + 1) - 1"))
-      .withColumn("coverage_a", when(col("n_b") > 0,
-        TestData.r4(col("n_both").cast("double")
-          / col("n_b").cast("double"))))
-      .withColumn("coverage_b", when(col("n_a") > 0,
-        TestData.r4(col("n_both").cast("double")
-          / col("n_a").cast("double"))))
-      .select("n_a", "n_b", "n_both", "n_hat", "coverage_a",
-        "coverage_b")
-  }
+                       pairsB: DataFrame): DataFrame =
+    graft.operators.TextOps.captureRecaptureCore(pairsA, pairsB)
 
   /** Exact ROC-AUC + step-form PR-AUC (average precision) per
     * detector (see `eval_detector_auc`). Input columns: (detector:
@@ -3742,38 +2950,8 @@ class GraftEngine(val spark: SparkSession) {
   def rakeKeywords(docs: DataFrame, textCol: String,
                    stopWords: Seq[String], k: Int = 20): DataFrame = {
     require(k >= 1 && stopWords.nonEmpty, "k >= 1, stopwords nonempty")
-    val toks = docs
-      .select(col("doc_id"), posexplode(
-        regexp_extract_all(col(textCol), lit("[a-z0-9]+"), lit(0))))
-      .select(col("doc_id"), col("pos"), col("col").as("tok"))
-      .withColumn("is_stop", col("tok").isin(stopWords: _*).cast("int"))
-    val wPos = Window.partitionBy("doc_id").orderBy("pos")
-    val cand = toks
-      .withColumn("pid", sum("is_stop").over(
-        wPos.rowsBetween(Window.unboundedPreceding, 0)))
-      .filter(col("is_stop") === 0)
-      .ckpt()
-    val plen = cand.groupBy("doc_id", "pid")
-      .agg(count(lit(1)).as("plen"))
-    val occ = cand.join(plen, Seq("doc_id", "pid"))
-    val ratios = occ.groupBy("tok")
-      .agg(count(lit(1)).as("freq"), sum("plen").as("deg"))
-      .withColumn("ratio_u", expr("deg * 1000000 DIV freq"))
-      .select("tok", "ratio_u")
-    occ.join(ratios, "tok")
-      .groupBy("doc_id", "pid")
-      .agg(sort_array(collect_list(struct(col("pos"), col("tok"))))
-          .as("pt"),
-        sum("ratio_u").as("score_u"),
-        count(lit(1)).as("n_words"))
-      .withColumn("phrase",
-        concat_ws(" ", expr("transform(pt, x -> x.tok)")))
-      .select("phrase", "n_words", "score_u").distinct()
-      .orderBy(col("score_u").desc, col("phrase")).limit(k)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("score_u").desc, col("phrase"))))
-      .select("rk", "phrase", "n_words", "score_u")
-      .orderBy("rk")
+    graft.operators.TextAnalysis.rakeKeywordsCore(
+      docs.select(col("doc_id"), col(textCol).as("text")), stopWords, k)
   }
 
   /** Newman modularity per community (see `graph_modularity`) from
@@ -3783,34 +2961,11 @@ class GraftEngine(val spark: SparkSession) {
     */
   def modularity(labels: DataFrame, idCol: String, labelCol: String,
                  edges: DataFrame): DataFrame = {
-    val l = labels.select(col(idCol).as("id"), col(labelCol).as("label"))
     val adj = edges.select(col("a").as("src"), col("b").as("dst"))
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
-    val me = edges.agg(count(lit(1)).as("m"))
-    val deg = adj.groupBy(col("src").as("id2"))
-      .agg(count(lit(1)).as("deg"))
-    val comm = l.join(deg, col("id") === col("id2"), "left")
-      .groupBy(col("label").as("community"))
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(coalesce(col("deg"), lit(0L))).as("degree_sum"))
-    val la = l.select(col("id").as("a"), col("label").as("ca"))
-    val lb = l.select(col("id").as("b"), col("label").as("cb"))
-    val ein = edges.join(la, "a").join(lb, "b")
-      .filter(col("ca") === col("cb"))
-      .groupBy(col("ca").as("community")).agg(count(lit(1)).as("e_in"))
-    comm.join(ein, Seq("community"), "left")
-      .crossJoin(broadcast(me))
-      .withColumn("e_internal", coalesce(col("e_in"), lit(0L)))
-      .withColumn("q_term_u", when(col("m") > 0,
-        floor((col("e_internal").cast("double") / col("m").cast("double")
-          - (col("degree_sum").cast("double")
-              / (col("m") * 2).cast("double"))
-            * (col("degree_sum").cast("double")
-              / (col("m") * 2).cast("double")))
-          * 1000000 + 0.5).cast("long")))
-      .select("community", "n_nodes", "e_internal", "degree_sum",
-        "q_term_u")
-      .orderBy("community")
+    graft.operators.GraphOps.modularityCore(edges,
+      labels.select(col(idCol).as("id"), col(labelCol).as("label")),
+      adj.groupBy(col("src").as("id2")).agg(count(lit(1)).as("deg")))
   }
 
   /** Per-community conductance (see `graph_conductance`): the
@@ -3911,21 +3066,11 @@ class GraftEngine(val spark: SparkSession) {
                    alphaMicro: Long = 50000L): DataFrame = {
     require(alphaMicro > 0 && alphaMicro <= 1000000L,
       "alphaMicro in (0, 1e6]")
-    val W = Window.partitionBy()
-    val wRank = Window.orderBy(col("p_u").asc_nulls_last, col("id"))
-    tests.select(col(idCol).as("id"), col(pMicroCol).as("p_u"))
-      .withColumn("m_tests",
-        sum(when(col("p_u").isNotNull, 1L).otherwise(0L)).over(W))
-      .withColumn("rk", row_number().over(wRank))
-      .withColumn("flag", col("p_u").isNotNull
-        && col("p_u") * (col("m_tests") - col("rk") + 1) <= alphaMicro)
-      .withColumn("k_stop",
-        min(when(!col("flag") && col("rk") <= col("m_tests"),
-          col("rk"))).over(W))
-      .withColumn("significant", when(col("p_u").isNotNull,
-        col("k_stop").isNull || col("rk") < col("k_stop"))
-        .otherwise(lit(false)))
-      .select("id", "p_u", "rk", "significant")
+    graft.operators.Stats.holmStepDownCore(
+        tests.select(col(idCol).as("nationkey"), col(pMicroCol).as("p_u")),
+        alphaMicro)
+      .select(col("nationkey").as("id"), col("p_u"), col("rk"),
+        col("significant"))
       .orderBy("id")
   }
 
@@ -3935,37 +3080,10 @@ class GraftEngine(val spark: SparkSession) {
     * grid, micro-nat quantized ln terms, exact-0 tail.
     */
   def kaplanMeierBy(durations: DataFrame, durCol: String,
-                    eventCol: String, groupCol: String): DataFrame = {
-    val W = Window
-    val risk = durations
-      .select(col(groupCol).as("variant"), col(durCol).as("dur"),
-        col(eventCol).cast("long").as("ev"))
-      .groupBy("variant", "dur")
-      .agg(sum("ev").as("d_t"), sum(lit(1L) - col("ev")).as("c_t"))
-      .withColumn("n_total",
-        sum(col("d_t") + col("c_t")).over(W.partitionBy("variant")))
-      .withColumn("n_risk", col("n_total")
-        - coalesce(sum(col("d_t") + col("c_t")).over(
-            W.partitionBy("variant").orderBy("dur")
-              .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-    risk.filter(col("d_t") > 0)
-      .withColumn("term_u", when(col("n_risk") > col("d_t"),
-        floor(log((col("n_risk") - col("d_t")).cast("double")
-          / col("n_risk").cast("double")) * 1000000 + 0.5).cast("long")))
-      .withColumn("zero_flag",
-        max(when(col("n_risk") === col("d_t"), 1).otherwise(0)).over(
-          W.partitionBy("variant").orderBy("dur")
-            .rowsBetween(W.unboundedPreceding, 0)))
-      .withColumn("cum_u", sum("term_u").over(
-        W.partitionBy("variant").orderBy("dur")
-          .rowsBetween(W.unboundedPreceding, 0)))
-      .withColumn("survival", when(col("zero_flag") === 1, lit(0.0))
-        .otherwise(TestData.r4(exp(col("cum_u") / 1000000.0))))
-      .select(col("variant"), col("dur").as("t_hr"), col("n_risk"),
-        col("d_t").as("n_events"), col("c_t").as("n_censored"),
-        col("survival"))
-      .orderBy("variant", "t_hr")
-  }
+                    eventCol: String, groupCol: String): DataFrame =
+    graft.operators.TimeSeries.kaplanMeierByCore(
+      durations.select(col(groupCol).as("variant"), col(durCol).as("dur_hr"),
+        col(eventCol).cast("long").as("event")))
 
   /** Data-quality assertion report (see `profile_assert_constraints`):
     * declarative constraint checks over ONE aggregate scan of `df`,
@@ -4043,58 +3161,9 @@ class GraftEngine(val spark: SparkSession) {
     */
   def olsTwo(df: DataFrame, groupCol: String, x1Col: String,
              x2Col: String, yCol: String): DataFrame =
-    df.select(col(groupCol).as("flag"), col(x1Col).as("x1"),
-        col(x2Col).as("x2"), col(yCol).as("y"))
-      .groupBy("flag")
-      .agg(count(lit(1)).as("n"),
-        sum("x1").as("s1"), sum("x2").as("s2"), sum("y").as("sy"),
-        sum(col("x1") * col("x1")).as("s11"),
-        sum(col("x2") * col("x2")).as("s22"),
-        sum(col("x1") * col("x2")).as("s12"),
-        sum(col("x1") * col("y")).as("s1y"),
-        sum(col("x2") * col("y")).as("s2y"),
-        sum(col("y") * col("y")).as("syy"))
-      .withColumn("cxx1", col("s11").cast("double")
-        - col("s1").cast("double") * col("s1").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cxx2", col("s22").cast("double")
-        - col("s2").cast("double") * col("s2").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cx12", col("s12").cast("double")
-        - col("s1").cast("double") * col("s2").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cx1y", col("s1y").cast("double")
-        - col("s1").cast("double") * col("sy").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cx2y", col("s2y").cast("double")
-        - col("s2").cast("double") * col("sy").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cyy", col("syy").cast("double")
-        - col("sy").cast("double") * col("sy").cast("double")
-          / col("n").cast("double"))
-      .withColumn("det",
-        col("cxx1") * col("cxx2") - col("cx12") * col("cx12"))
-      .withColumn("b1", when(col("det") =!= 0.0,
-        (col("cx1y") * col("cxx2") - col("cx2y") * col("cx12"))
-          / col("det")))
-      .withColumn("b2", when(col("det") =!= 0.0,
-        (col("cx2y") * col("cxx1") - col("cx1y") * col("cx12"))
-          / col("det")))
-      .withColumn("icept", when(col("det") =!= 0.0,
-        col("sy").cast("double") / col("n").cast("double")
-          - col("b1") * (col("s1").cast("double")
-            / col("n").cast("double"))
-          - col("b2") * (col("s2").cast("double")
-            / col("n").cast("double"))))
-      .withColumn("r2", when(col("det") =!= 0.0 && col("cyy") > 0,
-        (col("b1") * col("cx1y") + col("b2") * col("cx2y"))
-          / col("cyy")))
-      .select(col("flag"), col("n"),
-        TestData.r4(col("b1")).as("beta_qty"),
-        TestData.r4(col("b2")).as("beta_disc"),
-        TestData.r4(col("icept")).as("intercept"),
-        TestData.r4(col("r2")).as("r_squared"))
-      .orderBy("flag")
+    graft.operators.Stats.olsTwoCore(
+      df.select(col(groupCol).as("flag"), col(x1Col).as("x1"),
+        col(x2Col).as("x2"), col(yCol).as("y")))
 
   /** Log-rank test (see `events_logrank`) between the survival
     * curves of the two groups of a per-subject (`durCol`,
@@ -4103,49 +3172,11 @@ class GraftEngine(val spark: SparkSession) {
     * n_t = 1 ⇒ variance term 0; V = 0 ⇒ NULL z and chi2.
     */
   def logRank(durations: DataFrame, durCol: String, eventCol: String,
-              groupCol: String, aLabel: String = "control"): DataFrame = {
-    val risk = durations
-      .select(col(durCol).as("dur_hr"),
+              groupCol: String, aLabel: String = "control"): DataFrame =
+    graft.operators.TimeSeries.logRankCore(
+      durations.select(col(durCol).as("dur_hr"),
         col(eventCol).cast("long").as("event"),
-        when(col(groupCol) === aLabel, 1L).otherwise(0L).as("g1"))
-      .groupBy("dur_hr")
-      .agg(sum(col("event") * col("g1")).as("d1_t"),
-        sum("event").as("d_t"), sum("g1").as("a1_t"),
-        count(lit(1)).as("a_t"))
-      .withColumn("n_risk", sum("a_t").over(Window.partitionBy())
-        - coalesce(sum("a_t").over(Window.orderBy("dur_hr")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n1_risk", sum("a1_t").over(Window.partitionBy())
-        - coalesce(sum("a1_t").over(Window.orderBy("dur_hr")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    risk.filter(col("d_t") > 0)
-      .withColumn("e_u", floor(col("d_t").cast("double")
-        * col("n1_risk").cast("double") / col("n_risk").cast("double")
-        * 1000000 + 0.5).cast("long"))
-      .withColumn("v_u", when(col("n_risk") > 1,
-        floor(col("d_t").cast("double")
-          * (col("n1_risk").cast("double") / col("n_risk").cast("double"))
-          * (lit(1.0) - col("n1_risk").cast("double")
-              / col("n_risk").cast("double"))
-          * (col("n_risk") - col("d_t")).cast("double")
-          / (col("n_risk") - 1).cast("double")
-          * 1000000 + 0.5).cast("long")).otherwise(0L))
-      .agg(count(lit(1)).as("n_times"), sum("d1_t").as("o1"),
-        sum("e_u").as("e1_u"), sum("v_u").as("v_u"))
-      .withColumn("e1",
-        TestData.r4(col("e1_u").cast("double") / 1000000.0))
-      .withColumn("z_logrank", when(col("v_u") > 0,
-        TestData.r4((col("o1").cast("double")
-            - col("e1_u").cast("double") / 1000000.0)
-          / sqrt(col("v_u").cast("double") / 1000000.0))))
-      .withColumn("chi2", when(col("v_u") > 0,
-        TestData.r4((col("o1").cast("double")
-            - col("e1_u").cast("double") / 1000000.0)
-          * (col("o1").cast("double")
-            - col("e1_u").cast("double") / 1000000.0)
-          / (col("v_u").cast("double") / 1000000.0))))
-      .select("n_times", "o1", "e1_u", "e1", "v_u", "z_logrank", "chi2")
-  }
+        when(col(groupCol) === aLabel, 1L).otherwise(0L).as("g1")))
 
   /** SES one-step backtest (see `ts_ses_backtest`) of an integer
     * series on an integer grid: α = 1/2 unrolled to exact ×128
@@ -4153,37 +3184,9 @@ class GraftEngine(val spark: SparkSession) {
     * scores only when all 8 taps exist), sMAPE/MAE readout.
     */
   def sesBacktest(series: DataFrame, xCol: String,
-                  yCol: String): DataFrame = {
-    import series.sparkSession.implicits._
-    val hourly = series.select(col(xCol).as("hr"), col(yCol).as("cnt"))
-      .ckpt()
-    val weights = Seq((1, 64L), (2, 32L), (3, 16L), (4, 8L),
-      (5, 4L), (6, 2L), (7, 1L), (8, 1L)).toDF("tap", "w128")
-    val fc = hourly.crossJoin(broadcast(weights))
-      .select((col("hr") + col("tap")).as("hr"),
-        (col("cnt") * col("w128")).as("c128"))
-      .groupBy("hr")
-      .agg(sum("c128").as("fc128"), count(lit(1)).as("n_taps"))
-      .filter(col("n_taps") === 8)
-    hourly.join(fc, "hr")
-      .withColumn("y128", col("cnt") * 128)
-      .withColumn("term_u", when(
-        abs(col("y128")) + abs(col("fc128")) > 0,
-        floor(lit(2.0)
-          * abs(col("y128") - col("fc128")).cast("double")
-          / (abs(col("y128")) + abs(col("fc128"))).cast("double")
-          * 1000000 + 0.5).cast("long")).otherwise(0L))
-      .agg(count(lit(1)).as("n_scored"),
-        sum(abs(col("y128") - col("fc128"))).as("abs_err128_sum"),
-        sum("term_u").as("smape_sum_u"))
-      .withColumn("mae", when(col("n_scored") > 0,
-        TestData.r4(col("abs_err128_sum").cast("double") / 128.0
-          / col("n_scored").cast("double"))))
-      .withColumn("smape", when(col("n_scored") > 0,
-        TestData.r4(col("smape_sum_u").cast("double")
-          / col("n_scored").cast("double") / 1000000.0)))
-      .select("n_scored", "abs_err128_sum", "mae", "smape")
-  }
+                  yCol: String): DataFrame =
+    graft.operators.TimeSeries.sesBacktestCore(
+      series.select(col(xCol).as("hr"), col(yCol).as("cnt")).ckpt())
 
   /** Exact-k weighted sampling without replacement (see
     * `sample_weighted_topk`, Efraimidis–Spirakis): md5-uniform
@@ -4260,44 +3263,14 @@ class GraftEngine(val spark: SparkSession) {
   def permutationTest(df: DataFrame, idCol: String, armCol: String,
                       valCol: String, b: Int = 32): DataFrame = {
     require(b >= 1 && b <= 1024, "replicates in [1, 1024]")
-    val pu = df.select(col(idCol).as("id"),
-        col(armCol).cast("long").as("t"),
-        col(valCol).cast("long").as("x"))
-      .withColumn("h28",
-        conv(substring(md5(concat(lit("pm|"), col("id").cast("string"))),
-          1, 7), 16, 10).cast("long"))
-      .ckpt()
-    val obs = pu.agg(
-      sum(when(col("t") === 0, 1L).otherwise(0L)).as("n0"),
-      sum(when(col("t") =!= 0, 1L).otherwise(0L)).as("n1"),
-      sum(when(col("t") === 0, col("x")).otherwise(0L)).as("s0"),
-      sum(when(col("t") =!= 0, col("x")).otherwise(0L)).as("s1"))
-    val reps = pu.select(col("x"), col("h28"),
-        explode(lit((0 until b).toArray)).as("b"))
-      .withColumn("arm",
-        ((col("h28") * (lit(2654435761L) + col("b") * lit(96542L)))
-          % 268435456L) % 2)
-      .groupBy("b")
-      .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("nb0"),
-        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("nb1"),
-        sum(when(col("arm") === 0, col("x")).otherwise(0L)).as("sb0"),
-        sum(when(col("arm") === 1, col("x")).otherwise(0L)).as("sb1"))
-      .filter(col("nb0") > 0 && col("nb1") > 0)
-    reps.crossJoin(broadcast(obs))
-      .withColumn("ge",
-        (abs(col("sb1") * col("nb0") - col("sb0") * col("nb1"))
-          * (col("n1") * col("n0")))
-          >= (abs(col("s1") * col("n0") - col("s0") * col("n1"))
-            * (col("nb1") * col("nb0"))))
-      .agg(count(lit(1)).as("b_used"),
-        sum(when(col("ge"), 1L).otherwise(0L)).as("n_ge"),
-        max("n0").as("n0"), max("n1").as("n1"),
-        max("s0").as("s0"), max("s1").as("s1"))
-      .withColumn("diff_obs", when(col("n0") > 0 && col("n1") > 0,
-        TestData.r4(col("s1").cast("double") / col("n1").cast("double")
-          - col("s0").cast("double") / col("n0").cast("double"))))
-      .withColumn("p_u", expr("(1 + n_ge) * 1000000 DIV (b_used + 1)"))
-      .select("b_used", "n0", "n1", "diff_obs", "n_ge", "p_u")
+    graft.operators.Stats.permutationTestCore(
+      df.select(col(idCol).as("id"),
+          col(armCol).cast("long").as("t"),
+          col(valCol).cast("long").as("x"))
+        .withColumn("h28",
+          conv(substring(md5(concat(lit("pm|"), col("id").cast("string"))),
+            1, 7), 16, 10).cast("long"))
+        .ckpt(), b)
   }
 
   /** Wilson 95 % score interval per group (see `agg_wilson_ci`) over
@@ -4306,29 +3279,12 @@ class GraftEngine(val spark: SparkSession) {
     * (ClosedFormProps pins).
     */
   def wilsonCi(df: DataFrame, groupCol: String,
-               succCol: String): DataFrame = {
-    val z = 1.959964
-    val z2 = z * z
-    df.select(col(groupCol).as("variant"),
-        col(succCol).cast("long").as("purch"))
-      .groupBy("variant")
-      .agg(count(lit(1)).as("n"), sum("purch").as("x"))
-      .withColumn("ph", col("x").cast("double") / col("n").cast("double"))
-      .withColumn("center",
-        (col("ph") + lit(z2) / (lit(2.0) * col("n").cast("double")))
-          / (lit(1.0) + lit(z2) / col("n").cast("double")))
-      .withColumn("half",
-        lit(z) * sqrt(col("ph") * (lit(1.0) - col("ph"))
-            / col("n").cast("double")
-          + lit(z2) / (lit(4.0) * col("n").cast("double")
-            * col("n").cast("double")))
-          / (lit(1.0) + lit(z2) / col("n").cast("double")))
-      .select(col("variant"), col("n"), col("x"),
-        TestData.r4(col("ph")).as("p_hat"),
-        TestData.r4(col("center") - col("half")).as("ci_lo"),
-        TestData.r4(col("center") + col("half")).as("ci_hi"))
-      .orderBy("variant")
-  }
+               succCol: String): DataFrame =
+    graft.operators.Stats.wilsonCiCore(
+      df.select(col(groupCol).as("variant"),
+          col(succCol).cast("long").as("purch"))
+        .groupBy("variant")
+        .agg(count(lit(1)).as("n"), sum("purch").as("x")))
 
   /** Empirical-Bayes beta-binomial shrinkage (see `agg_eb_shrinkage`)
     * over a pre-aggregated (group, n, x) frame: method-of-moments
@@ -4339,38 +3295,20 @@ class GraftEngine(val spark: SparkSession) {
     */
   def ebShrink(df: DataFrame, groupCol: String, nCol: String,
                xCol: String): DataFrame = {
-    // n = 0 groups carry no rate: p_u NULL (the DIV sits inside the
-    // guard branch, so ANSI never sees x DIV 0), excluded from the
-    // prior moments, shrunk NULL (definition-site guard rule).
+    // n = 0 groups carry no rate: they skip the core (ANSI never sees
+    // x DIV 0, the prior moments never see them) and read NULL p_u and
+    // shrunk (definition-site guard rule).
     val g = df.select(col(groupCol).as("nationkey"),
         col(nCol).cast("long").as("n"), col(xCol).cast("long").as("x"))
-      .withColumn("p_u", when(col("n") > 0, expr("x * 1000000 DIV n")))
+      .withColumn("rated", coalesce(col("n") > 0, lit(false)))
       .ckpt()
-    val mom = g.filter(col("n") > 0).agg(count(lit(1)).as("k"),
-      sum("p_u").as("sp"), sum(col("p_u") * col("p_u")).as("spp"))
-    g.crossJoin(broadcast(mom))
-      .withColumn("m", col("sp").cast("double")
-        / (col("k").cast("double") * 1000000.0))
-      .withColumn("v",
-        (col("k").cast("double") * col("spp").cast("double")
-          - col("sp").cast("double") * col("sp").cast("double"))
-          / (col("k").cast("double") * col("k").cast("double")
-            * 1000000000000.0))
-      .withColumn("ok", col("v") > 0 && col("m") > 0
-        && col("m") < 1 && col("m") * (lit(1.0) - col("m")) > col("v"))
-      .withColumn("common", when(col("ok"),
-        col("m") * (lit(1.0) - col("m")) / col("v") - lit(1.0)))
-      .withColumn("alpha", when(col("ok"), col("m") * col("common")))
-      .withColumn("beta",
-        when(col("ok"), (lit(1.0) - col("m")) * col("common")))
-      .select(col("nationkey"), col("n"), col("x"), col("p_u"),
-        when(col("n") > 0,
-          when(col("ok"), TestData.r4(
-              (col("x").cast("double") + col("alpha"))
-              / (col("n").cast("double") + col("alpha") + col("beta"))))
-            .otherwise(TestData.r4(
-              col("x").cast("double") / col("n").cast("double"))))
-          .as("shrunk"))
+    graft.operators.Stats.ebShrinkCore(
+        g.filter(col("rated")).drop("rated")
+          .withColumn("p_u", expr("x * 1000000 DIV n")))
+      .unionByName(g.filter(!col("rated"))
+        .select(col("nationkey"), col("n"), col("x"),
+          lit(null).cast("long").as("p_u"),
+          lit(null).cast("double").as("shrunk")))
       .orderBy("nationkey")
   }
 
@@ -4423,47 +3361,10 @@ class GraftEngine(val spark: SparkSession) {
   def msprtSequential(df: DataFrame, lookCol: String, tCol: String,
                       succCol: String, tau2: Double = 0.0001): DataFrame = {
     require(tau2 > 0, "mixture prior variance tau2 must be positive")
-    val wCum = Window.orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.select(col(lookCol).as("day"), col(tCol).as("t"),
-        col(succCol).as("purch"))
-      .groupBy("day")
-      .agg(
-        sum(when(col("t") === 0, 1L).otherwise(0L)).as("d_nc"),
-        sum(when(col("t") =!= 0, 1L).otherwise(0L)).as("d_nt"),
-        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("d_sc"),
-        sum(when(col("t") =!= 0, col("purch")).otherwise(0L)).as("d_st"))
-      .select(col("day"),
-        sum("d_nc").over(wCum).cast("long").as("n_c"),
-        sum("d_nt").over(wCum).cast("long").as("n_t"),
-        sum("d_sc").over(wCum).cast("long").as("s_c"),
-        sum("d_st").over(wCum).cast("long").as("s_t"))
-      .withColumn("pbar", when(col("n_c") + col("n_t") > 0,
-        (col("s_c") + col("s_t")).cast("double")
-          / (col("n_c") + col("n_t")).cast("double")))
-      .withColumn("theta", when(col("n_c") > 0 && col("n_t") > 0,
-        col("s_t").cast("double") / col("n_t").cast("double")
-          - col("s_c").cast("double") / col("n_c").cast("double")))
-      .withColumn("v", when(col("n_c") > 0 && col("n_t") > 0
-          && col("s_c") + col("s_t") > 0
-          && col("s_c") + col("s_t") < col("n_c") + col("n_t"),
-        col("pbar") * (lit(1.0) - col("pbar"))
-          * (lit(1.0) / col("n_c").cast("double")
-            + lit(1.0) / col("n_t").cast("double"))))
-      .withColumn("llr_u", when(col("v") > 0,
-        floor((lit(0.5) * log(col("v") / (col("v") + lit(tau2)))
-          + col("theta") * col("theta") * lit(tau2)
-            / (lit(2.0) * col("v") * (col("v") + lit(tau2))))
-          * 1000000 + 0.5).cast("long")))
-      .withColumn("mx_u",
-        greatest(coalesce(max("llr_u").over(wCum), lit(0L)), lit(0L)))
-      .withColumn("p_seq_u",
-        floor(exp(-col("mx_u").cast("double") / 1000000.0)
-          * 1000000 + 0.5).cast("long"))
-      .withColumn("significant", col("p_seq_u") < 50000L)
-      .select("day", "n_c", "n_t", "s_c", "s_t", "llr_u",
-        "p_seq_u", "significant")
-      .orderBy("day")
+    graft.operators.TimeSeries.msprtSequentialCore(
+      df.select(col(lookCol).as("day"), col(tCol).as("t"),
+          col(succCol).as("purch"))
+        .groupBy("day"), tau2)
   }
 
   /** Holt level+trend one-step backtest (see `ts_holt_backtest`):
@@ -4473,39 +3374,9 @@ class GraftEngine(val spark: SparkSession) {
     * Gap-safe fan-out: a target scores only when all 12 taps exist.
     */
   def holtBacktest(series: DataFrame, xCol: String,
-                   yCol: String): DataFrame = {
-    import series.sparkSession.implicits._
-    val hourly = series.select(col(xCol).as("hr"), col(yCol).as("cnt"))
-      .ckpt()
-    val weights = Seq((1, 3145728L), (2, 1835008L), (3, 720896L),
-      (4, -16384L), (5, -380928L), (6, -467968L), (7, -394496L),
-      (8, -259136L), (9, -126672L), (10, -28772L), (11, 27371L),
-      (12, 139657L)).toDF("tap", "w4m")
-    val fc = hourly.crossJoin(broadcast(weights))
-      .select((col("hr") + col("tap")).as("hr"),
-        (col("cnt") * col("w4m")).as("c4m"))
-      .groupBy("hr")
-      .agg(sum("c4m").as("fc4m"), count(lit(1)).as("n_taps"))
-      .filter(col("n_taps") === 12)
-    hourly.join(fc, "hr")
-      .withColumn("y4m", col("cnt") * 4194304L)
-      .withColumn("term_u", when(
-        abs(col("y4m")) + abs(col("fc4m")) > 0,
-        floor(lit(2.0)
-          * abs(col("y4m") - col("fc4m")).cast("double")
-          / (abs(col("y4m")) + abs(col("fc4m"))).cast("double")
-          * 1000000 + 0.5).cast("long")).otherwise(0L))
-      .agg(count(lit(1)).as("n_scored"),
-        sum(abs(col("y4m") - col("fc4m"))).as("abs_err4m_sum"),
-        sum("term_u").as("smape_sum_u"))
-      .withColumn("mae", when(col("n_scored") > 0,
-        TestData.r4(col("abs_err4m_sum").cast("double") / 4194304.0
-          / col("n_scored").cast("double"))))
-      .withColumn("smape", when(col("n_scored") > 0,
-        TestData.r4(col("smape_sum_u").cast("double")
-          / col("n_scored").cast("double") / 1000000.0)))
-      .select("n_scored", "abs_err4m_sum", "mae", "smape")
-  }
+                   yCol: String): DataFrame =
+    graft.operators.TimeSeries.holtBacktestCore(
+      series.select(col(xCol).as("hr"), col(yCol).as("cnt")).ckpt())
 
   /** Holt-Winters level+trend+seasonal one-step backtest (see
     * `ts_holtwinters_backtest`): additive triple smoothing
@@ -4877,74 +3748,28 @@ class GraftEngine(val spark: SparkSession) {
     * rows — the character-based readability grade (no syllable
     * heuristic). Zero-word docs are dropped.
     */
-  def colemanLiau(docs: DataFrame): DataFrame = {
-    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-    docs
-      .withColumn("n_words", size(words).cast("long"))
-      .withColumn("n_sentences", greatest(lit(1L),
-        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-          .cast("long")))
-      .withColumn("n_letters", aggregate(
-        transform(words, w => length(w).cast("long")),
-        lit(0L), (acc, x) => acc + x))
-      .filter(col("n_words") > 0)
-      .withColumn("cli", TestData.r4(lit(0.0588)
-        * (lit(100.0) * col("n_letters").cast("double")
-          / col("n_words").cast("double"))
-        - lit(0.296) * (lit(100.0) * col("n_sentences").cast("double")
-          / col("n_words").cast("double"))
-        - lit(15.8)))
-      .select("id", "n_words", "n_sentences", "n_letters", "cli")
-      .orderBy("id")
-  }
+  def colemanLiau(docs: DataFrame): DataFrame =
+    graft.operators.TextAnalysis.colemanLiauCore(
+        docs.select(col("id").as("doc_id"), col("text")))
+      .withColumnRenamed("doc_id", "id")
 
   /** SMOG grade (see `text_smog`) of (`id`, `text`) rows — the
     * polysyllable-density √-law readability; with Flesch/fog/CLI/ARI
     * completes the panel. Zero-word docs are dropped.
     */
-  def smogGrade(docs: DataFrame): DataFrame = {
-    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-    docs
-      .withColumn("n_words", size(words).cast("long"))
-      .withColumn("n_sentences", greatest(lit(1L),
-        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-          .cast("long")))
-      .withColumn("n_poly", size(filter(words, w =>
-        size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0))) >= 3))
-        .cast("long"))
-      .filter(col("n_words") > 0)
-      .withColumn("smog", TestData.r4(lit(1.043)
-        * sqrt(col("n_poly").cast("double") * 30.0
-          / col("n_sentences").cast("double"))
-        + lit(3.1291)))
-      .select("id", "n_words", "n_sentences", "n_poly", "smog")
-      .orderBy("id")
-  }
+  def smogGrade(docs: DataFrame): DataFrame =
+    graft.operators.TextAnalysis.smogGradeCore(
+        docs.select(col("id").as("doc_id"), col("text")))
+      .withColumnRenamed("doc_id", "id")
 
   /** Automated Readability Index (see `text_ari`) of (`id`, `text`)
     * rows — the second character-based grade, weighting
     * words-per-sentence where CLI weights letters-per-word.
     */
-  def ariIndex(docs: DataFrame): DataFrame = {
-    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-    docs
-      .withColumn("n_words", size(words).cast("long"))
-      .withColumn("n_sentences", greatest(lit(1L),
-        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-          .cast("long")))
-      .withColumn("n_letters", aggregate(
-        transform(words, w => length(w).cast("long")),
-        lit(0L), (acc, x) => acc + x))
-      .filter(col("n_words") > 0)
-      .withColumn("ari", TestData.r4(lit(4.71)
-        * (col("n_letters").cast("double")
-          / col("n_words").cast("double"))
-        + lit(0.5) * (col("n_words").cast("double")
-          / col("n_sentences").cast("double"))
-        - lit(21.43)))
-      .select("id", "n_words", "n_sentences", "n_letters", "ari")
-      .orderBy("id")
-  }
+  def ariIndex(docs: DataFrame): DataFrame =
+    graft.operators.TextAnalysis.ariIndexCore(
+        docs.select(col("id").as("doc_id"), col("text")))
+      .withColumnRenamed("doc_id", "id")
 
   /** Schuirmann TOST equivalence (see `events_ab_tost`) over
     * (variant 0/1, success 0/1) rows at margin δ = 0.01 absolute

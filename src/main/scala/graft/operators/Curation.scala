@@ -285,6 +285,61 @@ object Curation {
       .orderBy("row_key", "col_key")
   }
 
+  /** Neyman allocation of a `budget` of samples across `l_returnflag`
+    * strata of integer values `x` (largest-remainder apportionment).
+    * Shared with `GraftEngine.neymanAllocation`.
+    */
+  private[graft] def neymanAllocationCore(units: DataFrame,
+                                          budget: Long): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+      .orderBy(col("rem").desc, col("l_returnflag"))
+    val st = units
+      .groupBy("l_returnflag")
+      .agg(count(lit(1)).as("n_h"), sum("x").as("sx"),
+        sum(col("x") * col("x")).as("sxx"))
+      .withColumn("s_units", sqrt(
+        (col("n_h").cast("double") * col("sxx").cast("double")
+          - col("sx").cast("double") * col("sx").cast("double"))
+        / (col("n_h").cast("double") * (col("n_h") - 1).cast("double"))))
+      .withColumn("w_u",
+        floor(col("n_h").cast("double") * col("s_units") + 0.5)
+          .cast("long"))
+    val tot = st.agg(sum("w_u").as("w_total"))
+    val appo = st.crossJoin(broadcast(tot))
+      .withColumn("base", expr(s"($budget * w_u) DIV w_total"))
+      .withColumn("rem", expr(s"($budget * w_u) % w_total"))
+    val baseSum = appo.agg(sum("base").as("base_sum"))
+    appo.crossJoin(broadcast(baseSum))
+      .withColumn("rk", row_number().over(W))
+      .withColumn("extra",
+        when(col("rk") <= lit(budget) - col("base_sum"), 1L).otherwise(0L))
+      .select(col("l_returnflag"), col("n_h"),
+        r4(col("s_units")).as("s_units"), col("w_u"),
+        (col("base") + col("extra")).as("n_alloc"))
+      .orderBy("l_returnflag")
+  }
+
+  /** k-anonymity suppression curve over quasi-identifier group sizes `gs`:
+    * for each k in `ks`, the groups and rows below k. Shared with
+    * `GraftEngine.suppressionCurve`.
+    */
+  private[graft] def suppressionCurveCore(groups: DataFrame,
+                                          ks: Seq[Int]): DataFrame =
+    groups
+      .select(col("gs"), explode(lit(ks.toArray)).as("k"))
+      .groupBy("k")
+      .agg(count(lit(1)).as("n_groups"),
+        sum(when(col("gs") < col("k"), 1L).otherwise(0L))
+          .as("n_small_groups"),
+        sum(when(col("gs") < col("k"), col("gs")).otherwise(0L))
+          .as("n_suppressed"),
+        sum("gs").as("n_rows"))
+      .withColumn("suppressed_frac",
+        r4(col("n_suppressed").cast("double") / col("n_rows")))
+      .select("k", "n_groups", "n_small_groups", "n_suppressed",
+        "n_rows", "suppressed_frac")
+      .orderBy("k")
+
   val defs: Map[String, Q] = Map(
     // Benchmark DECONTAMINATION: flag corpus documents sharing any
     // 5-token shingle with the held-out evaluation set (here: a
@@ -451,37 +506,10 @@ object Curation {
     // remainder rank, the pipeline_mix_epoch_schedule precedent;
     // Σ alloc = B exactly). B·w_u < 2^63 for w_u ≲ 9.2e14. Stratum
     // rank window is strata-sized.
-    "sample_neyman_allocation" -> ((s, d) => {
-      val B = 10000L
-      val W = org.apache.spark.sql.expressions.Window
-        .orderBy(col("rem").desc, col("l_returnflag"))
-      val st = TestData.lineitem(s, d)
+    "sample_neyman_allocation" -> ((s, d) => neymanAllocationCore(
+      TestData.lineitem(s, d)
         .withColumn("x",
-          floor(col("l_extendedprice") + 0.5).cast("long"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_h"), sum("x").as("sx"),
-          sum(col("x") * col("x")).as("sxx"))
-        .withColumn("s_units", sqrt(
-          (col("n_h").cast("double") * col("sxx").cast("double")
-            - col("sx").cast("double") * col("sx").cast("double"))
-          / (col("n_h").cast("double") * (col("n_h") - 1).cast("double"))))
-        .withColumn("w_u",
-          floor(col("n_h").cast("double") * col("s_units") + 0.5)
-            .cast("long"))
-      val tot = st.agg(sum("w_u").as("w_total"))
-      val appo = st.crossJoin(broadcast(tot))
-        .withColumn("base", expr(s"($B * w_u) DIV w_total"))
-        .withColumn("rem", expr(s"($B * w_u) % w_total"))
-      val baseSum = appo.agg(sum("base").as("base_sum"))
-      appo.crossJoin(broadcast(baseSum))
-        .withColumn("rk", row_number().over(W))
-        .withColumn("extra",
-          when(col("rk") <= lit(B) - col("base_sum"), 1L).otherwise(0L))
-        .select(col("l_returnflag"), col("n_h"),
-          r4(col("s_units")).as("s_units"), col("w_u"),
-          (col("base") + col("extra")).as("n_alloc"))
-        .orderBy("l_returnflag")
-    }),
+          floor(col("l_extendedprice") + 0.5).cast("long")), 10000L)),
 
     // BALANCED DOWNSAMPLING (round 8): cap every class at the
     // minority class's size by keeping each lang's `cap` smallest
@@ -922,20 +950,7 @@ object Curation {
         .groupBy(col("lang"), col("source"),
           expr("n_chars DIV 100").as("len_bucket"))
         .agg(count(lit(1)).as("gs"))
-      groups
-        .select(col("gs"), explode(lit(Array(2, 5, 10, 20))).as("k"))
-        .groupBy("k")
-        .agg(count(lit(1)).as("n_groups"),
-          sum(when(col("gs") < col("k"), 1L).otherwise(0L))
-            .as("n_small_groups"),
-          sum(when(col("gs") < col("k"), col("gs")).otherwise(0L))
-            .as("n_suppressed"),
-          sum("gs").as("n_rows"))
-        .withColumn("suppressed_frac",
-          r4(col("n_suppressed").cast("double") / col("n_rows")))
-        .select("k", "n_groups", "n_small_groups", "n_suppressed",
-          "n_rows", "suppressed_frac")
-        .orderBy("k")
+      suppressionCurveCore(groups, Seq(2, 5, 10, 20))
     })
   )
 

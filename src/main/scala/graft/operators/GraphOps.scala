@@ -1040,6 +1040,89 @@ object GraphOps {
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("inter"))
   }
 
+  /** Per-community modularity terms of a node labelling: undirected (a, b)
+    * `edges`, (id, label) `labels` and (id2, deg) node degrees. Shared with
+    * `GraftEngine.modularity`.
+    */
+  private[graft] def modularityCore(edges: DataFrame, labels: DataFrame,
+                                    deg: DataFrame): DataFrame = {
+    val me = edges.agg(count(lit(1)).as("m"))
+    val comm = labels.join(deg, col("id") === col("id2"), "left")
+      .groupBy(col("label").as("community"))
+      .agg(count(lit(1)).as("n_nodes"),
+        sum(coalesce(col("deg"), lit(0L))).as("degree_sum"))
+    val la = labels.select(col("id").as("a"), col("label").as("ca"))
+    val lb = labels.select(col("id").as("b"), col("label").as("cb"))
+    val ein = edges.join(la, "a").join(lb, "b")
+      .filter(col("ca") === col("cb"))
+      .groupBy(col("ca").as("community")).agg(count(lit(1)).as("e_in"))
+    comm.join(ein, Seq("community"), "left")
+      .crossJoin(broadcast(me))
+      .withColumn("e_internal", coalesce(col("e_in"), lit(0L)))
+      .withColumn("q_term_u", when(col("m") > 0,
+        floor((col("e_internal").cast("double")
+            / col("m").cast("double")
+          - (col("degree_sum").cast("double")
+              / (col("m") * 2).cast("double"))
+            * (col("degree_sum").cast("double")
+              / (col("m") * 2).cast("double")))
+          * 1000000 + 0.5).cast("long")))
+      .select("community", "n_nodes", "e_internal", "degree_sum",
+        "q_term_u")
+      .orderBy("community")
+  }
+
+  /** Degree assortativity (Pearson r of endpoint degrees) over the directed
+    * (src, dst) adjacency and its (src, deg) degrees. Shared with
+    * `GraftEngine.degreeAssortativity`.
+    */
+  private[graft] def degreeAssortativityCore(adj: DataFrame,
+                                             deg: DataFrame): DataFrame = {
+    adj
+      .join(deg.select(col("src").as("sx"), col("deg").as("dx")),
+        col("src") === col("sx"))
+      .join(deg.select(col("src").as("sy"), col("deg").as("dy")),
+        col("dst") === col("sy"))
+      .agg(count(lit(1)).as("n_edges_directed"),
+        sum("dx").as("sx_"), sum("dy").as("sy_"),
+        sum(col("dx") * col("dy")).as("sxy"),
+        sum(col("dx") * col("dx")).as("sxx"),
+        sum(col("dy") * col("dy")).as("syy"))
+      .withColumn("assortativity", graft.TestData.r4(
+        (col("n_edges_directed") * col("sxy") - col("sx_") * col("sy_"))
+          .cast("double")
+          / sqrt((col("n_edges_directed") * col("sxx")
+              - col("sx_") * col("sx_")).cast("double")
+            * (col("n_edges_directed") * col("syy")
+              - col("sy_") * col("sy_")).cast("double"))))
+      .select("n_edges_directed", "assortativity")
+  }
+
+  /** Local clustering coefficient of every `vec_id` node over undirected
+    * (a, b) edges. Shared with `GraftEngine.clusteringCoefficient`.
+    */
+  private[graft] def clusteringCoefficientCore(edges: DataFrame,
+                                               nodes: DataFrame): DataFrame = {
+    val adj = edges.select(col("a").as("src"), col("b").as("dst"))
+      .union(edges.select(col("b").as("src"), col("a").as("dst")))
+    val deg = adj.groupBy("src").agg(count(lit(1)).as("deg"))
+    val a2 = adj.select(col("src").as("src2"), col("dst").as("dst2"))
+    val tri = adj
+      .join(a2, col("src") === col("src2") && col("dst") < col("dst2"))
+      .join(edges, col("dst") === col("a") && col("dst2") === col("b"))
+      .groupBy(col("src").as("v")).agg(count(lit(1)).as("n_tri"))
+    nodes.select(col("vec_id"))
+      .join(deg.withColumnRenamed("src", "vec_id"), Seq("vec_id"), "left")
+      .join(tri.withColumnRenamed("v", "vec_id"), Seq("vec_id"), "left")
+      .select(col("vec_id"),
+        coalesce(col("deg"), lit(0L)).as("deg"),
+        coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+      .withColumn("lcc", when(col("deg") >= 2,
+        TestData.r4((lit(2L) * col("n_tri")).cast("double")
+          / (col("deg") * (col("deg") - 1)).cast("double"))))
+      .orderBy("vec_id")
+  }
+
   val defs: Map[String, Q] = Map(
     "dedup_components" -> ((s, d) =>
       fixtureComponents(s, d)
@@ -1208,35 +1291,9 @@ object GraphOps {
     // sized grid; each community's term is one mirrored IEEE
     // expression micro-quantized before any downstream sum
     // (entropy/PSI protocol — a consumer reads Q = Σ q_term_u/1e6).
-    "graph_modularity" -> ((s, d) => {
-      val edges = fixtureKnnEdges(s, d)
-      val labels = lpaLabels(s, d)
-      val me = edges.agg(count(lit(1)).as("m"))
-      val deg = fixtureDeg(s, d).withColumnRenamed("src", "id2")
-      val comm = labels.join(deg, col("id") === col("id2"), "left")
-        .groupBy(col("label").as("community"))
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(coalesce(col("deg"), lit(0L))).as("degree_sum"))
-      val la = labels.select(col("id").as("a"), col("label").as("ca"))
-      val lb = labels.select(col("id").as("b"), col("label").as("cb"))
-      val ein = edges.join(la, "a").join(lb, "b")
-        .filter(col("ca") === col("cb"))
-        .groupBy(col("ca").as("community")).agg(count(lit(1)).as("e_in"))
-      comm.join(ein, Seq("community"), "left")
-        .crossJoin(broadcast(me))
-        .withColumn("e_internal", coalesce(col("e_in"), lit(0L)))
-        .withColumn("q_term_u", when(col("m") > 0,
-          floor((col("e_internal").cast("double")
-              / col("m").cast("double")
-            - (col("degree_sum").cast("double")
-                / (col("m") * 2).cast("double"))
-              * (col("degree_sum").cast("double")
-                / (col("m") * 2).cast("double")))
-            * 1000000 + 0.5).cast("long")))
-        .select("community", "n_nodes", "e_internal", "degree_sum",
-          "q_term_u")
-        .orderBy("community")
-    }),
+    "graph_modularity" -> ((s, d) =>
+      modularityCore(fixtureKnnEdges(s, d), lpaLabels(s, d),
+        fixtureDeg(s, d).withColumnRenamed("src", "id2"))),
 
     // COMMUNITY CONDUCTANCE (round 14): the cut-quality readout
     // NEXT TO modularity — Q rewards internal density vs a random
@@ -1457,28 +1514,8 @@ object GraphOps {
         .select("n_nodes", "sum_degree", "rank_sum", "degree_gini")
     }),
 
-    "graph_degree_assortativity" -> ((s, d) => {
-      val adj = fixtureAdj(s, d)
-      val deg = fixtureDeg(s, d)
-      adj
-        .join(deg.select(col("src").as("sx"), col("deg").as("dx")),
-          col("src") === col("sx"))
-        .join(deg.select(col("src").as("sy"), col("deg").as("dy")),
-          col("dst") === col("sy"))
-        .agg(count(lit(1)).as("n_edges_directed"),
-          sum("dx").as("sx_"), sum("dy").as("sy_"),
-          sum(col("dx") * col("dy")).as("sxy"),
-          sum(col("dx") * col("dx")).as("sxx"),
-          sum(col("dy") * col("dy")).as("syy"))
-        .withColumn("assortativity", graft.TestData.r4(
-          (col("n_edges_directed") * col("sxy") - col("sx_") * col("sy_"))
-            .cast("double")
-            / sqrt((col("n_edges_directed") * col("sxx")
-                - col("sx_") * col("sx_")).cast("double")
-              * (col("n_edges_directed") * col("syy")
-                - col("sy_") * col("sy_")).cast("double"))))
-        .select("n_edges_directed", "assortativity")
-    }),
+    "graph_degree_assortativity" -> ((s, d) =>
+      degreeAssortativityCore(fixtureAdj(s, d), fixtureDeg(s, d))),
 
     // DEDUP CLUSTER-SIZE HISTOGRAM (round 9): the report a dedup run
     // publishes — how many duplicate clusters of each size, how many
@@ -1846,27 +1883,9 @@ object GraphOps {
     // kNN degree cap (general graphs: cap the wedge fanout or go
     // approximate). Exact integers until the one r4'd division;
     // isolated/degree-1 nodes report NULL lcc (stated).
-    "graph_clustering_coeff" -> ((s, d) => {
-      val edges = fixtureKnnEdges(s, d)
-      val adj = edges.select(col("a").as("src"), col("b").as("dst"))
-        .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      val deg = adj.groupBy("src").agg(count(lit(1)).as("deg"))
-      val a2 = adj.select(col("src").as("src2"), col("dst").as("dst2"))
-      val tri = adj
-        .join(a2, col("src") === col("src2") && col("dst") < col("dst2"))
-        .join(edges, col("dst") === col("a") && col("dst2") === col("b"))
-        .groupBy(col("src").as("v")).agg(count(lit(1)).as("n_tri"))
-      TestData.embeddings(s, d).select(col("vec_id"))
-        .join(deg.withColumnRenamed("src", "vec_id"), Seq("vec_id"), "left")
-        .join(tri.withColumnRenamed("v", "vec_id"), Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("deg"), lit(0L)).as("deg"),
-          coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-        .withColumn("lcc", when(col("deg") >= 2,
-          TestData.r4((lit(2L) * col("n_tri")).cast("double")
-            / (col("deg") * (col("deg") - 1)).cast("double"))))
-        .orderBy("vec_id")
-    }),
+    "graph_clustering_coeff" -> ((s, d) =>
+      clusteringCoefficientCore(fixtureKnnEdges(s, d),
+        TestData.embeddings(s, d))),
 
     // HITS HUBS/AUTHORITIES (round 10): 3 fixed synchronous rounds
     // over the DIRECTED kNN edges (qid → nn; the undirected view

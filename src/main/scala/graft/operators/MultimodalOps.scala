@@ -99,6 +99,32 @@ object MultimodalOps {
         fixtureBlockhashPairs(s, d)
           .select(col("id_a").as("src"), col("id_b").as("dst"))))
 
+  /** Nearest-aspect-ratio bucket counts and mean sizes over (doc_id, w, h)
+    * images. Shared with `GraftEngine.aspectBucket`.
+    */
+  private[graft] def aspectBucketCore(images: DataFrame): DataFrame = {
+    import images.sparkSession.implicits._
+    val anchors = Seq((405L, "9:16"), (540L, "3:4"), (720L, "1:1"),
+      (960L, "4:3"), (1280L, "16:9")).toDF("anchor", "bucket")
+    val W = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id")
+      .orderBy(abs(col("ar_u") - col("anchor")), col("anchor"))
+    images
+      .withColumn("ar_u", expr("(w * 720) DIV h"))
+      .crossJoin(broadcast(anchors))
+      .withColumn("rn", row_number().over(W))
+      .filter(col("rn") === 1)
+      .groupBy("bucket")
+      .agg(count(lit(1)).as("n_images"),
+        sum("w").as("sw"), sum("h").as("sh"))
+      .withColumn("avg_width",
+        TestData.r4(col("sw").cast("double") / col("n_images")))
+      .withColumn("avg_height",
+        TestData.r4(col("sh").cast("double") / col("n_images")))
+      .select("bucket", "n_images", "avg_width", "avg_height")
+      .orderBy("bucket")
+  }
+
   val defs: Map[String, Q] = Map(
     "multimodal_meta" -> ((s, d) =>
       Multimodal.fromDocuments(TestData.documents(s, d))
@@ -125,31 +151,11 @@ object MultimodalOps {
     // smaller anchor. No logs, no floats until the per-bucket avg
     // readout (r4). The truncating DIV is part of the spec — both
     // engines mirror it exactly.
-    "multimodal_aspect_bucket" -> ((s, d) => {
-      import s.implicits._
-      val anchors = Seq((405L, "9:16"), (540L, "3:4"), (720L, "1:1"),
-        (960L, "4:3"), (1280L, "16:9")).toDF("anchor", "bucket")
-      val W = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id")
-        .orderBy(abs(col("ar_u") - col("anchor")), col("anchor"))
+    "multimodal_aspect_bucket" -> ((s, d) => aspectBucketCore(
       Multimodal.fromDocuments(TestData.documents(s, d))
         .filter(col("mime") === "image/png")
         .select(col("doc_id"), col("width").cast("long").as("w"),
-          col("height").cast("long").as("h"))
-        .withColumn("ar_u", expr("(w * 720) DIV h"))
-        .crossJoin(broadcast(anchors))
-        .withColumn("rn", row_number().over(W))
-        .filter(col("rn") === 1)
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_images"),
-          sum("w").as("sw"), sum("h").as("sh"))
-        .withColumn("avg_width",
-          TestData.r4(col("sw").cast("double") / col("n_images")))
-        .withColumn("avg_height",
-          TestData.r4(col("sh").cast("double") / col("n_images")))
-        .select("bucket", "n_images", "avg_width", "avg_height")
-        .orderBy("bucket")
-    }),
+          col("height").cast("long").as("h")))),
 
     // Bounded-fit resize to 320×240: the metadata arithmetic (scale
     // factor, ceil'd output dims) is the verifiable part — the pixel

@@ -1454,6 +1454,561 @@ object Stats {
         col("normal_rejected_95"))
       .orderBy("flag")
 
+  /** Welch two-sample t over the two-group value cells (x, cc, ct).
+    * Shared with `GraftEngine.welchT`.
+    */
+  private[graft] def welchTCore(cells: DataFrame): DataFrame =
+    cells
+      .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
+        sum(col("cc") * col("x")).as("sx_c"),
+        sum(col("ct") * col("x")).as("sx_t"),
+        sum(col("cc") * col("x") * col("x")).as("sxx_c"),
+        sum(col("ct") * col("x") * col("x")).as("sxx_t"))
+      // n=0 / n=1 guards at DEFINITION: Spark 4 ANSI throws on
+      // double x/0 where DuckDB reads NULL — the guard makes both
+      // engines NULL-propagate identically (DegenerateSpec pins).
+      .withColumn("m_c", when(col("n_c") > 0,
+        col("sx_c").cast("double") / col("n_c").cast("double")))
+      .withColumn("m_t", when(col("n_t") > 0,
+        col("sx_t").cast("double") / col("n_t").cast("double")))
+      .withColumn("v_c", when(col("n_c") > 1,
+        (col("sxx_c").cast("double")
+          - col("sx_c").cast("double") * col("sx_c").cast("double")
+            / col("n_c").cast("double"))
+          / (col("n_c") - 1).cast("double")))
+      .withColumn("v_t", when(col("n_t") > 1,
+        (col("sxx_t").cast("double")
+          - col("sx_t").cast("double") * col("sx_t").cast("double")
+            / col("n_t").cast("double"))
+          / (col("n_t") - 1).cast("double")))
+      .withColumn("se2", col("v_c") / col("n_c").cast("double")
+        + col("v_t") / col("n_t").cast("double"))
+      .withColumn("t_stat", when(col("v_c") > 0 && col("v_t") > 0,
+        r4((col("m_t") - col("m_c")) / sqrt(col("se2")))))
+      .withColumn("df_welch", when(col("v_c") > 0 && col("v_t") > 0,
+        r4(col("se2") * col("se2")
+          / (col("v_c") / col("n_c") * (col("v_c") / col("n_c"))
+              / (col("n_c") - 1).cast("double")
+            + col("v_t") / col("n_t") * (col("v_t") / col("n_t"))
+              / (col("n_t") - 1).cast("double")))))
+      // Empty-variant guard: n=0 means 0/0 — NaN in Spark, NULL in
+      // DuckDB. NULL the mean explicitly (t/df are already NULL via
+      // the v>0 guards, which are NaN-false / NULL-propagating).
+      .select(col("n_c").as("n_control"), col("n_t").as("n_treatment"),
+        when(col("n_c") > 0, r4(col("m_c"))).as("mean_control"),
+        when(col("n_t") > 0, r4(col("m_t"))).as("mean_treatment"),
+        col("t_stat"), col("df_welch"))
+
+  /** Cohen's d and Hedges' g over the two-group value cells (x, cc, ct).
+    * Shared with `GraftEngine.cohensD`.
+    */
+  private[graft] def cohensDCore(cells: DataFrame): DataFrame =
+    cells
+      .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
+        sum(col("cc") * col("x")).as("sx_c"),
+        sum(col("ct") * col("x")).as("sx_t"),
+        sum(col("cc") * col("x") * col("x")).as("sxx_c"),
+        sum(col("ct") * col("x") * col("x")).as("sxx_t"))
+      // Definition-site ANSI guards: double x/0 throws in Spark 4
+      // (NULL in DuckDB) — degenerate groups must NULL-propagate.
+      .withColumn("m_c", when(col("n_c") > 0,
+        col("sx_c").cast("double") / col("n_c").cast("double")))
+      .withColumn("m_t", when(col("n_t") > 0,
+        col("sx_t").cast("double") / col("n_t").cast("double")))
+      .withColumn("ss_c", when(col("n_c") > 0,
+        col("sxx_c").cast("double")
+          - col("sx_c").cast("double") * col("sx_c").cast("double")
+            / col("n_c").cast("double")))
+      .withColumn("ss_t", when(col("n_t") > 0,
+        col("sxx_t").cast("double")
+          - col("sx_t").cast("double") * col("sx_t").cast("double")
+            / col("n_t").cast("double")))
+      .withColumn("sp2", when(col("n_c") + col("n_t") > 2,
+        (col("ss_c") + col("ss_t"))
+          / (col("n_c") + col("n_t") - 2).cast("double")))
+      // Degenerate-split guard: one empty variant (m NaN vs NULL)
+      // or N ≤ 2 (sp2 x/0 → ±Inf in Spark, NULL in DuckDB) must
+      // NULL every readout — `ok` makes the failure mode explicit.
+      .withColumn("ok", col("n_c") > 0 && col("n_t") > 0
+        && col("n_c") + col("n_t") > 2)
+      .withColumn("cohens_d", when(col("ok") && col("sp2") > 0,
+        r4((col("m_t") - col("m_c")) / sqrt(col("sp2")))))
+      .withColumn("hedges_g", when(col("ok") && col("sp2") > 0,
+        r4((col("m_t") - col("m_c")) / sqrt(col("sp2"))
+          * (lit(1.0) - lit(3.0)
+            / ((col("n_c") + col("n_t")) * 4 - 9).cast("double")))))
+      .select(col("n_c").as("n_control"), col("n_t").as("n_treatment"),
+        when(col("ok"), r4(col("sp2"))).as("pooled_var"), col("cohens_d"),
+        col("hedges_g"))
+
+  /** Per-flag two-regressor OLS over (flag, x1, x2, y) integer units.
+    * Shared with `GraftEngine.olsTwo`.
+    */
+  private[graft] def olsTwoCore(units: DataFrame): DataFrame =
+    units
+      .groupBy("flag")
+      .agg(count(lit(1)).as("n"),
+        sum("x1").as("s1"), sum("x2").as("s2"), sum("y").as("sy"),
+        sum(col("x1") * col("x1")).as("s11"),
+        sum(col("x2") * col("x2")).as("s22"),
+        sum(col("x1") * col("x2")).as("s12"),
+        sum(col("x1") * col("y")).as("s1y"),
+        sum(col("x2") * col("y")).as("s2y"),
+        sum(col("y") * col("y")).as("syy"))
+      .withColumn("cxx1", col("s11").cast("double")
+        - col("s1").cast("double") * col("s1").cast("double")
+          / col("n").cast("double"))
+      .withColumn("cxx2", col("s22").cast("double")
+        - col("s2").cast("double") * col("s2").cast("double")
+          / col("n").cast("double"))
+      .withColumn("cx12", col("s12").cast("double")
+        - col("s1").cast("double") * col("s2").cast("double")
+          / col("n").cast("double"))
+      .withColumn("cx1y", col("s1y").cast("double")
+        - col("s1").cast("double") * col("sy").cast("double")
+          / col("n").cast("double"))
+      .withColumn("cx2y", col("s2y").cast("double")
+        - col("s2").cast("double") * col("sy").cast("double")
+          / col("n").cast("double"))
+      .withColumn("cyy", col("syy").cast("double")
+        - col("sy").cast("double") * col("sy").cast("double")
+          / col("n").cast("double"))
+      .withColumn("det",
+        col("cxx1") * col("cxx2") - col("cx12") * col("cx12"))
+      .withColumn("b1", when(col("det") =!= 0.0,
+        (col("cx1y") * col("cxx2") - col("cx2y") * col("cx12"))
+          / col("det")))
+      .withColumn("b2", when(col("det") =!= 0.0,
+        (col("cx2y") * col("cxx1") - col("cx1y") * col("cx12"))
+          / col("det")))
+      .withColumn("icept", when(col("det") =!= 0.0,
+        col("sy").cast("double") / col("n").cast("double")
+          - col("b1") * (col("s1").cast("double")
+            / col("n").cast("double"))
+          - col("b2") * (col("s2").cast("double")
+            / col("n").cast("double"))))
+      .withColumn("r2", when(col("det") =!= 0.0 && col("cyy") > 0,
+        (col("b1") * col("cx1y") + col("b2") * col("cx2y"))
+          / col("cyy")))
+      .select(col("flag"), col("n"),
+        r4(col("b1")).as("beta_qty"),
+        r4(col("b2")).as("beta_disc"),
+        r4(col("icept")).as("intercept"),
+        r4(col("r2")).as("r_squared"))
+      .orderBy("flag")
+
+  /** Two-sample Kolmogorov-Smirnov D over the two-group value cells
+    * (x, cc, ct). Shared with `GraftEngine.ksTest`.
+    */
+  private[graft] def ksTestCore(cells: DataFrame): DataFrame = {
+    val W = Window.orderBy("x")
+    cells
+      .withColumn("cum_cc", sum("cc").over(
+        W.rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("cum_ct", sum("ct").over(
+        W.rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("n_c", sum("cc").over(Window.partitionBy()))
+      .withColumn("n_t", sum("ct").over(Window.partitionBy()))
+      .agg(max("n_c").as("n_control"), max("n_t").as("n_treatment"),
+        max(abs(col("cum_cc") * col("n_t") - col("cum_ct") * col("n_c")))
+          .as("d_num"))
+      // Empty-variant guard: n_c·n_t = 0 would be NaN in Spark but
+      // NULL in DuckDB (double x/0 diverges cross-engine) — a
+      // degenerate md5 split on a tiny slice must NULL, not NaN.
+      .withColumn("d_stat",
+        when(col("n_control") > 0 && col("n_treatment") > 0,
+          r4(col("d_num").cast("double")
+            / (col("n_control") * col("n_treatment")).cast("double"))))
+      .withColumn("p_approx",
+        when(col("n_control") > 0 && col("n_treatment") > 0,
+          r4(least(lit(1.0),
+            lit(2.0) * exp(lit(-2.0)
+              * pow(col("d_num").cast("double")
+                  / (col("n_control") * col("n_treatment"))
+                    .cast("double"), 2)
+              * (col("n_control") * col("n_treatment")).cast("double")
+              / (col("n_control") + col("n_treatment"))
+                .cast("double"))))))
+      .select("n_control", "n_treatment", "d_num", "d_stat", "p_approx")
+  }
+
+  /** Mann-Whitney U over the two-group value cells (x, cc, ct).
+    * Shared with `GraftEngine.mannWhitney`.
+    */
+  private[graft] def mannWhitneyCore(cells: DataFrame): DataFrame = {
+    val W = Window.orderBy("x")
+    val tieLim = lit(2097152L) // 2^21: t³−t < 2^63 per cell
+    val t = col("cc") + col("ct")
+    cells
+      .withColumn("cum_cc_lt",
+        coalesce(sum("cc").over(
+          W.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .agg(sum("cc").as("n_control"), sum("ct").as("n_treatment"),
+        sum(col("ct") * (lit(2L) * col("cum_cc_lt") + col("cc")))
+          .as("u2_treatment"),
+        sum(when(t < tieLim, t * t * t - t)).as("tie_raw"),
+        max(t).as("t_max"))
+      .withColumn("tie_sum", when(col("t_max") < tieLim, col("tie_raw")))
+      // N ≤ 1 ⇒ tie correction divides by N(N−1) = 0 — an ANSI
+      // throw in Spark 4, NULL in DuckDB; guard to NULL (⇒ z NULL).
+      .withColumn("var_u",
+        when(col("n_control") + col("n_treatment") > 1,
+          (col("n_control") * col("n_treatment")).cast("double")
+            * ((col("n_control") + col("n_treatment") + 1).cast("double")
+              - col("tie_sum").cast("double")
+                / ((col("n_control") + col("n_treatment"))
+                  * (col("n_control") + col("n_treatment") - 1))
+                  .cast("double"))
+            / 12.0))
+      .withColumn("z", when(col("var_u") > 0, r4(
+        ((col("u2_treatment") - col("n_control") * col("n_treatment"))
+          .cast("double") / 2.0) / sqrt(col("var_u")))))
+      .select("n_control", "n_treatment", "u2_treatment", "tie_sum", "z")
+  }
+
+  /** Label-permutation test over per-unit (x, t, h28) rows (t = 1 is the
+    * treatment arm, h28 the unit's 28-bit hash) and `b` hash-seeded
+    * replicates. Shared with `GraftEngine.permutationTest`.
+    */
+  private[graft] def permutationTestCore(pu: DataFrame, b: Int): DataFrame = {
+    val obs = pu.agg(
+      sum(when(col("t") === 0, 1L).otherwise(0L)).as("n0"),
+      sum(when(col("t") === 1, 1L).otherwise(0L)).as("n1"),
+      sum(when(col("t") === 0, col("x")).otherwise(0L)).as("s0"),
+      sum(when(col("t") === 1, col("x")).otherwise(0L)).as("s1"))
+    val reps = pu.select(col("x"), col("h28"),
+        explode(lit((0 until b).toArray)).as("b"))
+      .withColumn("arm",
+        ((col("h28") * (lit(2654435761L) + col("b") * lit(96542L)))
+          % 268435456L) % 2)
+      .groupBy("b")
+      .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("nb0"),
+        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("nb1"),
+        sum(when(col("arm") === 0, col("x")).otherwise(0L)).as("sb0"),
+        sum(when(col("arm") === 1, col("x")).otherwise(0L)).as("sb1"))
+      .filter(col("nb0") > 0 && col("nb1") > 0)
+    reps.crossJoin(broadcast(obs))
+      .withColumn("ge",
+        (abs(col("sb1") * col("nb0") - col("sb0") * col("nb1"))
+          * (col("n1") * col("n0")))
+          >= (abs(col("s1") * col("n0") - col("s0") * col("n1"))
+            * (col("nb1") * col("nb0"))))
+      .agg(count(lit(1)).as("b_used"),
+        sum(when(col("ge"), 1L).otherwise(0L)).as("n_ge"),
+        max("n0").as("n0"), max("n1").as("n1"),
+        max("s0").as("s0"), max("s1").as("s1"))
+      .withColumn("diff_obs", when(col("n0") > 0 && col("n1") > 0,
+        r4(col("s1").cast("double") / col("n1").cast("double")
+          - col("s0").cast("double") / col("n0").cast("double"))))
+      .withColumn("p_u", expr("(1 + n_ge) * 1000000 DIV (b_used + 1)"))
+      .select("b_used", "n0", "n1", "diff_obs", "n_ge", "p_u")
+  }
+
+  /** Poisson-bootstrap 90 % CI of the mean over (o_orderkey, cents) rows
+    * and `b` hash-seeded replicates. Shared with `GraftEngine.bootstrapCi`.
+    */
+  private[graft] def bootstrapCiCore(o: DataFrame, b: Int): DataFrame = {
+    val u = (((col("h28") * (lit(2654435761L) + col("b") * lit(96542L)))
+      % 268435456L).cast("double") + lit(0.5)) / lit(268435456.0)
+    val pois = when(u < 0.3678794412, 0L).when(u < 0.7357588823, 1L)
+      .when(u < 0.9196986029, 2L).when(u < 0.9810118431, 3L)
+      .when(u < 0.9963401532, 4L).when(u < 0.9994058152, 5L)
+      .when(u < 0.9999167589, 6L).when(u < 0.9999897508, 7L)
+      .otherwise(8L)
+    val reps = o
+      .withColumn("h28",
+        conv(substring(md5(col("o_orderkey").cast("string")), 1, 7),
+          16, 10).cast("long"))
+      .select(col("o_orderkey"), col("cents"), col("h28"),
+        explode(lit((0 until b).toArray)).as("b"))
+      .withColumn("w", pois)
+      .groupBy("b")
+      .agg(sum("w").as("n_eff"), sum(col("w") * col("cents")).as("wsum"))
+      .filter(col("n_eff") > 0)
+      .withColumn("mean_q", floor(col("wsum").cast("double")
+        / col("n_eff").cast("double") * 10000 + 0.5).cast("long"))
+    val wR = Window.orderBy("mean_q", "b")
+    val boot = reps
+      .withColumn("rn", row_number().over(wR))
+      .withColumn("nb", count(lit(1)).over(Window.partitionBy()))
+      .agg(max("nb").as("b_replicates"),
+        max(when(col("rn") === expr("(nb + 1) DIV 20"), col("mean_q")))
+          .as("lo_q"),
+        max(when(col("rn") === expr("(19 * (nb + 1)) DIV 20"),
+          col("mean_q"))).as("hi_q"))
+    val point = o.agg(count(lit(1)).as("n_orders"),
+      r4(sum("cents").cast("double") / count(lit(1))).as("mean_cents"))
+    point.crossJoin(boot)
+      .withColumn("boot_lo_cents", r4(col("lo_q") / 10000.0))
+      .withColumn("boot_hi_cents", r4(col("hi_q") / 10000.0))
+      .select("n_orders", "mean_cents", "b_replicates",
+        "boot_lo_cents", "boot_hi_cents")
+  }
+
+  /** Mutual information and normalized MI of the (nationkey, c_mktsegment)
+    * contingency grid. Shared with `GraftEngine.mutualInformation`.
+    */
+  private[graft] def mutualInformationCore(f: DataFrame): DataFrame = {
+    val cells = f.groupBy("nationkey", "c_mktsegment")
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
+      .withColumn("c_j", sum("cnt").over(
+        Window.partitionBy("c_mktsegment")))
+      .withColumn("n", sum("cnt").over(Window.partitionBy()))
+    val mi = cells
+      .withColumn("t_u", floor(col("cnt").cast("double")
+        * log(col("n").cast("double") * col("cnt").cast("double")
+          / (col("r_i").cast("double") * col("c_j").cast("double")))
+        * 1000000 + 0.5).cast("long"))
+      .agg(max("n").as("n"), sum("t_u").as("mi_sum_u"))
+    def margEnt(k: String, out: String): DataFrame =
+      cells.groupBy(col(k)).agg(max("n").as("n"),
+          sum("cnt").as("m"))
+        .withColumn("h_u", floor(-(col("m").cast("double")
+            / col("n").cast("double"))
+          * log(col("m").cast("double") / col("n").cast("double"))
+          * 1000000 + 0.5).cast("long"))
+        .agg(sum("h_u").as(out))
+    mi.crossJoin(margEnt("nationkey", "hr_u"))
+      .crossJoin(margEnt("c_mktsegment", "hc_u"))
+      .withColumn("mi_nats", r4(col("mi_sum_u").cast("double")
+        / (lit(1000000.0) * col("n").cast("double"))))
+      .withColumn("h_row", r4(col("hr_u") / 1000000.0))
+      .withColumn("h_col", r4(col("hc_u") / 1000000.0))
+      .withColumn("nmi", when(least(col("hr_u"), col("hc_u")) > 0,
+        r4((col("mi_sum_u").cast("double")
+            / (lit(1000000.0) * col("n").cast("double")))
+          / (least(col("hr_u"), col("hc_u")).cast("double")
+            / 1000000.0))))
+      .select("n", "mi_nats", "h_row", "h_col", "nmi")
+  }
+
+  /** One-way ANOVA F of `n_chars` across `lang` groups.
+    * Shared with `GraftEngine.anovaF`.
+    */
+  private[graft] def anovaFCore(docs: DataFrame): DataFrame = {
+    val g = docs
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_g"), sum("n_chars").as("sx"),
+        sum(col("n_chars") * col("n_chars")).as("sxx"))
+      .withColumn("t_u", floor(col("sx").cast("double")
+        * col("sx").cast("double") / col("n_g").cast("double") + 0.5)
+        .cast("long"))
+    g.agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
+        sum("sx").as("sum_all"), sum("sxx").as("sxx_all"),
+        sum("t_u").as("t_sum_u"))
+      .withColumn("ssb", col("t_sum_u").cast("double")
+        - col("sum_all").cast("double") * col("sum_all").cast("double")
+          / col("n_total").cast("double"))
+      .withColumn("ssw",
+        col("sxx_all").cast("double") - col("t_sum_u").cast("double"))
+      // k = 1 ⇒ df_between = 0: F undefined (ANSI x/0 throw vs
+      // DuckDB NULL) — the k_groups > 1 clause guards it.
+      .withColumn("f_stat", when(
+        col("ssw") > 0 && col("n_total") > col("k_groups")
+          && col("k_groups") > 1,
+        r4((col("ssb") / (col("k_groups") - 1).cast("double"))
+          / (col("ssw")
+            / (col("n_total") - col("k_groups")).cast("double")))))
+      .select(col("k_groups"), col("n_total"), col("t_sum_u"),
+        r4(col("ssb")).as("ssb"), r4(col("ssw")).as("ssw"),
+        col("f_stat"))
+  }
+
+  /** Beta-binomial empirical-Bayes shrinkage of per-group rates over
+    * (nationkey, n, x, p_u) rows with n > 0 (p_u = x·10⁶ DIV n), method of
+    * moments across groups. Shared with `GraftEngine.ebShrink`.
+    */
+  private[graft] def ebShrinkCore(g: DataFrame): DataFrame = {
+    val mom = g.agg(count(lit(1)).as("k"),
+      sum("p_u").as("sp"), sum(col("p_u") * col("p_u")).as("spp"))
+    g.crossJoin(broadcast(mom))
+      .withColumn("m", col("sp").cast("double")
+        / (col("k").cast("double") * 1000000.0))
+      .withColumn("v",
+        (col("k").cast("double") * col("spp").cast("double")
+          - col("sp").cast("double") * col("sp").cast("double"))
+          / (col("k").cast("double") * col("k").cast("double")
+            * 1000000000000.0))
+      .withColumn("ok", col("v") > 0 && col("m") > 0
+        && col("m") < 1 && col("m") * (lit(1.0) - col("m")) > col("v"))
+      .withColumn("common", when(col("ok"),
+        col("m") * (lit(1.0) - col("m")) / col("v") - lit(1.0)))
+      .withColumn("alpha", when(col("ok"), col("m") * col("common")))
+      .withColumn("beta",
+        when(col("ok"), (lit(1.0) - col("m")) * col("common")))
+      .select(col("nationkey"), col("n"), col("x"), col("p_u"),
+        when(col("ok"), r4((col("x").cast("double") + col("alpha"))
+            / (col("n").cast("double") + col("alpha") + col("beta"))))
+          .otherwise(r4(col("x").cast("double") / col("n").cast("double")))
+          .as("shrunk"))
+      .orderBy("nationkey")
+  }
+
+  /** Wilson 95 % score interval per variant over (variant, n, x) success
+    * counts. Shared with `GraftEngine.wilsonCi`.
+    */
+  private[graft] def wilsonCiCore(counts: DataFrame): DataFrame = {
+    val z = 1.959964
+    val z2 = z * z
+    counts
+      .withColumn("ph", col("x").cast("double") / col("n").cast("double"))
+      .withColumn("center",
+        (col("ph") + lit(z2) / (lit(2.0) * col("n").cast("double")))
+          / (lit(1.0) + lit(z2) / col("n").cast("double")))
+      .withColumn("half",
+        lit(z) * sqrt(col("ph") * (lit(1.0) - col("ph"))
+            / col("n").cast("double")
+          + lit(z2) / (lit(4.0) * col("n").cast("double")
+            * col("n").cast("double")))
+          / (lit(1.0) + lit(z2) / col("n").cast("double")))
+      .select(col("variant"), col("n"), col("x"),
+        r4(col("ph")).as("p_hat"),
+        r4(col("center") - col("half")).as("ci_lo"),
+        r4(col("center") + col("half")).as("ci_hi"))
+      .orderBy("variant")
+  }
+
+  /** Paired t over per-unit integer deltas `d_w`.
+    * Shared with `GraftEngine.pairedT`.
+    */
+  private[graft] def pairedTCore(deltas: DataFrame): DataFrame =
+    deltas
+      .agg(count(lit(1)).as("n_users"), sum("d_w").as("sum_d"),
+        sum(col("d_w") * col("d_w")).as("sum_dd"))
+      .withColumn("mean_d", when(col("n_users") > 0,
+        r4(col("sum_d").cast("double") / col("n_users").cast("double"))))
+      .withColumn("var_d", when(col("n_users") > 1,
+        (col("sum_dd").cast("double")
+          - col("sum_d").cast("double") * col("sum_d").cast("double")
+            / col("n_users").cast("double"))
+          / (col("n_users") - 1).cast("double")))
+      .withColumn("t_paired", when(col("var_d") > 0,
+        r4((col("sum_d").cast("double") / col("n_users").cast("double"))
+          / sqrt(col("var_d") / col("n_users").cast("double")))))
+      .withColumn("significant_95", when(col("var_d") > 0,
+        abs(col("t_paired")) > 1.959964))
+      .select("n_users", "sum_d", "mean_d", "t_paired",
+        "significant_95")
+
+  /** Cramér's V of the (nationkey, c_mktsegment) contingency grid, zero
+    * cells included. Shared with `GraftEngine.cramersV`.
+    */
+  private[graft] def cramersVCore(f: DataFrame): DataFrame = {
+    val cells = f.groupBy("nationkey", "c_mktsegment")
+      .agg(count(lit(1)).as("cnt"))
+    val grid = f.select("nationkey").distinct()
+      .crossJoin(f.select("c_mktsegment").distinct())
+      .join(cells, Seq("nationkey", "c_mktsegment"), "left")
+      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
+    grid
+      .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
+      .withColumn("c_j", sum("cnt").over(
+        Window.partitionBy("c_mktsegment")))
+      .withColumn("n", sum("cnt").over(Window.partitionBy()))
+      .withColumn("e", (col("r_i") * col("c_j")).cast("double")
+        / col("n").cast("double"))
+      .withColumn("term_u", floor(
+        (col("cnt").cast("double") - col("e"))
+          * (col("cnt").cast("double") - col("e")) / col("e")
+          * 1000000 + 0.5).cast("long"))
+      .agg(max("n").as("n_rows"),
+        countDistinct("nationkey").as("n_r"),
+        countDistinct("c_mktsegment").as("n_c"),
+        sum("term_u").as("chi2_micro"))
+      // A single-category dimension has min(r,c)−1 = 0 — V is
+      // undefined (Spark ANSI would throw on the double x/0 where
+      // DuckDB reads NULL): guard to NULL in both engines.
+      .withColumn("cramers_v",
+        when(col("n_rows") > 0
+          && least(col("n_r") - 1, col("n_c") - 1) > 0,
+          r4(sqrt(
+            (col("chi2_micro").cast("double") / 1000000.0)
+              / (col("n_rows")
+                * least(col("n_r") - 1, col("n_c") - 1))
+                .cast("double")))))
+      .select("n_rows", "n_r", "n_c", "chi2_micro", "cramers_v")
+  }
+
+  /** Fisher-z 95 % CI of per-flag Spearman ρ over (flag, n, rho) rows.
+    * Shared with `GraftEngine.spearmanCi`.
+    */
+  private[graft] def spearmanCiCore(stats: DataFrame): DataFrame = {
+    def tanhE(x: Column): Column =
+      (exp(lit(2.0) * x) - 1.0) / (exp(lit(2.0) * x) + 1.0)
+    stats
+      .withColumn("zr", when(col("rho").isNotNull
+          && abs(col("rho")) < 1.0,
+        lit(0.5) * log((lit(1.0) + col("rho"))
+          / (lit(1.0) - col("rho")))))
+      .withColumn("se", when(col("n") > 3,
+        lit(1.0) / sqrt((col("n") - 3).cast("double"))))
+      .select(col("flag"), col("n"), col("rho"),
+        when(col("zr").isNotNull && col("se").isNotNull,
+          r4(tanhE(col("zr") - lit(1.959964) * col("se"))))
+          .as("ci_lo"),
+        when(col("zr").isNotNull && col("se").isNotNull,
+          r4(tanhE(col("zr") + lit(1.959964) * col("se"))))
+          .as("ci_hi"))
+      .orderBy("flag")
+  }
+
+  /** Per-flag Kendall τ-b over (flag, qx, qy) integer pairs from the
+    * value-distinct cell grid. Shared with `GraftEngine.kendallTau`.
+    */
+  private[graft] def kendallTauCore(li: DataFrame): DataFrame = {
+    val cells = li.groupBy("flag", "qx", "qy")
+      .agg(count(lit(1)).as("c"))
+      .ckpt()
+    val cd = cells.as("a").join(cells.as("b"),
+        col("a.flag") === col("b.flag")
+          && col("a.qx") < col("b.qx") && col("a.qy") =!= col("b.qy"))
+      .groupBy(col("a.flag").as("flag"))
+      .agg(sum(when(col("a.qy") < col("b.qy"),
+          col("a.c") * col("b.c")).otherwise(0L)).as("n_concordant"),
+        sum(when(col("a.qy") > col("b.qy"),
+          col("a.c") * col("b.c")).otherwise(0L)).as("n_discordant"))
+    def tieSum(k: String, out: String): DataFrame =
+      cells.groupBy("flag", k).agg(sum("c").as("t"))
+        .groupBy("flag")
+        .agg(sum(expr("(t * (t - 1)) DIV 2")).as(out))
+    cells.groupBy("flag").agg(sum("c").as("n"))
+      .join(cd, "flag")
+      .join(tieSum("qx", "ties_x"), "flag")
+      .join(tieSum("qy", "ties_y"), "flag")
+      .withColumn("n0", expr("(n * (n - 1)) DIV 2"))
+      .withColumn("tau_b", when(
+        col("n0") > col("ties_x") && col("n0") > col("ties_y"),
+        r4((col("n_concordant") - col("n_discordant")).cast("double")
+          / sqrt((col("n0") - col("ties_x")).cast("double")
+            * (col("n0") - col("ties_y")).cast("double")))))
+      .select("flag", "n", "n_concordant", "n_discordant",
+        "ties_x", "ties_y", "tau_b")
+      .orderBy("flag")
+  }
+
+  /** Holm step-down over (nationkey, p_u) micro-unit p values at level
+    * `alphaMicro`: adds m_tests, rk and significant (NULL p never rejects).
+    * Shared with `GraftEngine.holmStepDown`.
+    */
+  private[graft] def holmStepDownCore(tests: DataFrame, alphaMicro: Long): DataFrame = {
+    val W = Window.partitionBy()
+    val wRank = Window.orderBy(col("p_u").asc_nulls_last, col("nationkey"))
+    tests
+      .withColumn("m_tests",
+        sum(when(col("p_u").isNotNull, 1L).otherwise(0L)).over(W))
+      .withColumn("rk", row_number().over(wRank))
+      .withColumn("flag", col("p_u").isNotNull
+        && col("p_u") * (col("m_tests") - col("rk") + 1)
+          <= lit(alphaMicro))
+      .withColumn("k_stop",
+        min(when(!col("flag") && col("rk") <= col("m_tests"),
+          col("rk"))).over(W))
+      .withColumn("significant", when(col("p_u").isNotNull,
+        col("k_stop").isNull || col("rk") < col("k_stop"))
+        .otherwise(lit(false)))
+  }
+
   val defs: Map[String, Q] = Map(
     // CLIFF'S DELTA (round 15): the ordinal effect size published
     // next to agg_mann_whitney's p — "what FRACTION of cross-variant
@@ -1841,36 +2396,7 @@ object Stats {
     // in both engines, never an ANSI throw / silent wrap.
     // Shape: user-shard aggregate → domain-sized grid → one window
     // over the grid → 1-row readout. No corpus-grain window.
-    "agg_mann_whitney" -> ((s, d) => {
-      val W = Window.orderBy("x")
-      val tieLim = lit(2097152L) // 2^21: t³−t < 2^63 per cell
-      val t = col("cc") + col("ct")
-      variantUnitCells(s, d)
-        .withColumn("cum_cc_lt",
-          coalesce(sum("cc").over(
-            W.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .agg(sum("cc").as("n_control"), sum("ct").as("n_treatment"),
-          sum(col("ct") * (lit(2L) * col("cum_cc_lt") + col("cc")))
-            .as("u2_treatment"),
-          sum(when(t < tieLim, t * t * t - t)).as("tie_raw"),
-          max(t).as("t_max"))
-        .withColumn("tie_sum", when(col("t_max") < tieLim, col("tie_raw")))
-        // N ≤ 1 ⇒ tie correction divides by N(N−1) = 0 — an ANSI
-        // throw in Spark 4, NULL in DuckDB; guard to NULL (⇒ z NULL).
-        .withColumn("var_u",
-          when(col("n_control") + col("n_treatment") > 1,
-            (col("n_control") * col("n_treatment")).cast("double")
-              * ((col("n_control") + col("n_treatment") + 1).cast("double")
-                - col("tie_sum").cast("double")
-                  / ((col("n_control") + col("n_treatment"))
-                    * (col("n_control") + col("n_treatment") - 1))
-                    .cast("double"))
-              / 12.0))
-        .withColumn("z", when(col("var_u") > 0, r4(
-          ((col("u2_treatment") - col("n_control") * col("n_treatment"))
-            .cast("double") / 2.0) / sqrt(col("var_u")))))
-        .select("n_control", "n_treatment", "u2_treatment", "tie_sum", "z")
-    }),
+    "agg_mann_whitney" -> ((s, d) => mannWhitneyCore(variantUnitCells(s, d))),
 
     // KOLMOGOROV-SMIRNOV TWO-SAMPLE (round 10): distribution-shape
     // drift between the variants — D = max |F_c − F_t| over the
@@ -1881,37 +2407,7 @@ object Stats {
     // up to ~3e9 users); the only floats are the final D division
     // and the asymptotic p ≈ 2·exp(−2·D²·n_c·n_t/(n_c+n_t)), both in
     // mirrored op order, r4'd. Same domain-sized grid as the U test.
-    "agg_ks_test" -> ((s, d) => {
-      val W = Window.orderBy("x")
-      variantUnitCells(s, d)
-        .withColumn("cum_cc", sum("cc").over(
-          W.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("cum_ct", sum("ct").over(
-          W.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("n_c", sum("cc").over(Window.partitionBy()))
-        .withColumn("n_t", sum("ct").over(Window.partitionBy()))
-        .agg(max("n_c").as("n_control"), max("n_t").as("n_treatment"),
-          max(abs(col("cum_cc") * col("n_t") - col("cum_ct") * col("n_c")))
-            .as("d_num"))
-        // Empty-variant guard: n_c·n_t = 0 would be NaN in Spark but
-        // NULL in DuckDB (double x/0 diverges cross-engine) — a
-        // degenerate md5 split on a tiny slice must NULL, not NaN.
-        .withColumn("d_stat",
-          when(col("n_control") > 0 && col("n_treatment") > 0,
-            r4(col("d_num").cast("double")
-              / (col("n_control") * col("n_treatment")).cast("double"))))
-        .withColumn("p_approx",
-          when(col("n_control") > 0 && col("n_treatment") > 0,
-            r4(least(lit(1.0),
-              lit(2.0) * exp(lit(-2.0)
-                * pow(col("d_num").cast("double")
-                    / (col("n_control") * col("n_treatment"))
-                      .cast("double"), 2)
-                * (col("n_control") * col("n_treatment")).cast("double")
-                / (col("n_control") + col("n_treatment"))
-                  .cast("double"))))))
-        .select("n_control", "n_treatment", "d_num", "d_stat", "p_approx")
-    }),
+    "agg_ks_test" -> ((s, d) => ksTestCore(variantUnitCells(s, d))),
 
     // CRAMÉR'S V (round 10): effect size of the nation × market-
     // segment association — the "is this categorical dependence real
@@ -1927,39 +2423,7 @@ object Stats {
       val f = TestData.customer(s, d)
         .select(col("c_nationkey").cast("long").as("nationkey"),
           col("c_mktsegment"))
-      val cells = f.groupBy("nationkey", "c_mktsegment")
-        .agg(count(lit(1)).as("cnt"))
-      val grid = f.select("nationkey").distinct()
-        .crossJoin(f.select("c_mktsegment").distinct())
-        .join(cells, Seq("nationkey", "c_mktsegment"), "left")
-        .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-      grid
-        .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
-        .withColumn("c_j", sum("cnt").over(
-          Window.partitionBy("c_mktsegment")))
-        .withColumn("n", sum("cnt").over(Window.partitionBy()))
-        .withColumn("e", (col("r_i") * col("c_j")).cast("double")
-          / col("n").cast("double"))
-        .withColumn("term_u", floor(
-          (col("cnt").cast("double") - col("e"))
-            * (col("cnt").cast("double") - col("e")) / col("e")
-            * 1000000 + 0.5).cast("long"))
-        .agg(max("n").as("n_rows"),
-          countDistinct("nationkey").as("n_r"),
-          countDistinct("c_mktsegment").as("n_c"),
-          sum("term_u").as("chi2_micro"))
-        // A single-category dimension has min(r,c)−1 = 0 — V is
-        // undefined (Spark ANSI would throw on the double x/0 where
-        // DuckDB reads NULL): guard to NULL in both engines.
-        .withColumn("cramers_v",
-          when(col("n_rows") > 0
-            && least(col("n_r") - 1, col("n_c") - 1) > 0,
-            r4(sqrt(
-              (col("chi2_micro").cast("double") / 1000000.0)
-                / (col("n_rows")
-                  * least(col("n_r") - 1, col("n_c") - 1))
-                  .cast("double")))))
-        .select("n_rows", "n_r", "n_c", "chi2_micro", "cramers_v")
+      cramersVCore(f)
     }),
 
     // G-TEST OF INDEPENDENCE (round 13): the likelihood-ratio
@@ -2010,9 +2474,7 @@ object Stats {
     // Inputs are the exact event-grain purchase cells; the interval
     // is one mirrored IEEE expression per arm (z = 1.959964, z² a
     // plain literal product), r4. One aggregate + 2-row readout.
-    "agg_wilson_ci" -> ((s, d) => {
-      val z = 1.959964
-      val z2 = z * z
+    "agg_wilson_ci" -> ((s, d) => wilsonCiCore(
       TestData.events(s, d)
         .withColumn("t",
           (conv(substring(md5(col("user_id").cast("string")), 1, 2),
@@ -2021,23 +2483,7 @@ object Stats {
           when(col("event_type") === "purchase", 1L).otherwise(0L))
         .groupBy(when(col("t") === 0, "control").otherwise("treatment")
           .as("variant"))
-        .agg(count(lit(1)).as("n"), sum("purch").as("x"))
-        .withColumn("ph", col("x").cast("double") / col("n").cast("double"))
-        .withColumn("center",
-          (col("ph") + lit(z2) / (lit(2.0) * col("n").cast("double")))
-            / (lit(1.0) + lit(z2) / col("n").cast("double")))
-        .withColumn("half",
-          lit(z) * sqrt(col("ph") * (lit(1.0) - col("ph"))
-              / col("n").cast("double")
-            + lit(z2) / (lit(4.0) * col("n").cast("double")
-              * col("n").cast("double")))
-            / (lit(1.0) + lit(z2) / col("n").cast("double")))
-        .select(col("variant"), col("n"), col("x"),
-          r4(col("ph")).as("p_hat"),
-          r4(col("center") - col("half")).as("ci_lo"),
-          r4(col("center") + col("half")).as("ci_hi"))
-        .orderBy("variant")
-    }),
+        .agg(count(lit(1)).as("n"), sum("purch").as("x")))),
 
     // EMPIRICAL-BAYES SHRINKAGE (round 12): beta-binomial shrinkage
     // of per-nation urgent-order rates — the small-n leaderboard fix
@@ -2063,29 +2509,7 @@ object Stats {
             .otherwise(0L)).as("x"))
         .withColumn("p_u", expr("x * 1000000 DIV n"))
         .ckpt() // two consumers: moments + readout
-      val mom = g.agg(count(lit(1)).as("k"),
-        sum("p_u").as("sp"), sum(col("p_u") * col("p_u")).as("spp"))
-      g.crossJoin(broadcast(mom))
-        .withColumn("m", col("sp").cast("double")
-          / (col("k").cast("double") * 1000000.0))
-        .withColumn("v",
-          (col("k").cast("double") * col("spp").cast("double")
-            - col("sp").cast("double") * col("sp").cast("double"))
-            / (col("k").cast("double") * col("k").cast("double")
-              * 1000000000000.0))
-        .withColumn("ok", col("v") > 0 && col("m") > 0
-          && col("m") < 1 && col("m") * (lit(1.0) - col("m")) > col("v"))
-        .withColumn("common", when(col("ok"),
-          col("m") * (lit(1.0) - col("m")) / col("v") - lit(1.0)))
-        .withColumn("alpha", when(col("ok"), col("m") * col("common")))
-        .withColumn("beta",
-          when(col("ok"), (lit(1.0) - col("m")) * col("common")))
-        .select(col("nationkey"), col("n"), col("x"), col("p_u"),
-          when(col("ok"), r4((col("x").cast("double") + col("alpha"))
-              / (col("n").cast("double") + col("alpha") + col("beta"))))
-            .otherwise(r4(col("x").cast("double") / col("n").cast("double")))
-            .as("shrunk"))
-        .orderBy("nationkey")
+      ebShrinkCore(g)
     }),
 
     // SPEARMAN ρ (round 10): rank correlation of quantity vs
@@ -2112,25 +2536,7 @@ object Stats {
     // the ALREADY-r4'd ρ so both engines transform the identical
     // value. |ρ| = 1 or n ≤ 3 reads NULL bounds (atanh diverges /
     // SE undefined). Same cell-grid stage as the ρ key.
-    "agg_spearman_ci" -> ((s, d) => {
-      def tanhE(x: Column): Column =
-        (exp(lit(2.0) * x) - 1.0) / (exp(lit(2.0) * x) + 1.0)
-      spearmanStats(s, d)
-        .withColumn("zr", when(col("rho").isNotNull
-            && abs(col("rho")) < 1.0,
-          lit(0.5) * log((lit(1.0) + col("rho"))
-            / (lit(1.0) - col("rho")))))
-        .withColumn("se", when(col("n") > 3,
-          lit(1.0) / sqrt((col("n") - 3).cast("double"))))
-        .select(col("flag"), col("n"), col("rho"),
-          when(col("zr").isNotNull && col("se").isNotNull,
-            r4(tanhE(col("zr") - lit(1.959964) * col("se"))))
-            .as("ci_lo"),
-          when(col("zr").isNotNull && col("se").isNotNull,
-            r4(tanhE(col("zr") + lit(1.959964) * col("se"))))
-            .as("ci_hi"))
-        .orderBy("flag")
-    }),
+    "agg_spearman_ci" -> ((s, d) => spearmanCiCore(spearmanStats(s, d))),
 
     // TUKEY FENCES (round 10): the boxplot outlier screen per return
     // flag — exact q1/q3 order statistics (percentile_disc rank
@@ -2325,34 +2731,7 @@ object Stats {
         .select(col("l_returnflag").as("flag"),
           floor(col("l_quantity") + 0.5).cast("long").as("qx"),
           floor(col("l_discount") * 100 + 0.5).cast("long").as("qy"))
-      val cells = li.groupBy("flag", "qx", "qy")
-        .agg(count(lit(1)).as("c"))
-        .ckpt()
-      val cd = cells.as("a").join(cells.as("b"),
-          col("a.flag") === col("b.flag")
-            && col("a.qx") < col("b.qx") && col("a.qy") =!= col("b.qy"))
-        .groupBy(col("a.flag").as("flag"))
-        .agg(sum(when(col("a.qy") < col("b.qy"),
-            col("a.c") * col("b.c")).otherwise(0L)).as("n_concordant"),
-          sum(when(col("a.qy") > col("b.qy"),
-            col("a.c") * col("b.c")).otherwise(0L)).as("n_discordant"))
-      def tieSum(k: String, out: String): DataFrame =
-        cells.groupBy("flag", k).agg(sum("c").as("t"))
-          .groupBy("flag")
-          .agg(sum(expr("(t * (t - 1)) DIV 2")).as(out))
-      cells.groupBy("flag").agg(sum("c").as("n"))
-        .join(cd, "flag")
-        .join(tieSum("qx", "ties_x"), "flag")
-        .join(tieSum("qy", "ties_y"), "flag")
-        .withColumn("n0", expr("(n * (n - 1)) DIV 2"))
-        .withColumn("tau_b", when(
-          col("n0") > col("ties_x") && col("n0") > col("ties_y"),
-          r4((col("n_concordant") - col("n_discordant")).cast("double")
-            / sqrt((col("n0") - col("ties_x")).cast("double")
-              * (col("n0") - col("ties_y")).cast("double")))))
-        .select("flag", "n", "n_concordant", "n_discordant",
-          "ties_x", "ties_y", "tau_b")
-        .orderBy("flag")
+      kendallTauCore(li)
     }),
 
     // ONE-WAY ANOVA F (round 10): does document length differ by
@@ -2410,34 +2789,7 @@ object Stats {
         .select(col("c_nationkey").as("cluster"),
           floor(col("c_acctbal") * 100 + 0.5).cast("long").as("y")))),
 
-    "agg_anova_f" -> ((s, d) => {
-      val g = TestData.documents(s, d)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_g"), sum("n_chars").as("sx"),
-          sum(col("n_chars") * col("n_chars")).as("sxx"))
-        .withColumn("t_u", floor(col("sx").cast("double")
-          * col("sx").cast("double") / col("n_g").cast("double") + 0.5)
-          .cast("long"))
-      g.agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
-          sum("sx").as("sum_all"), sum("sxx").as("sxx_all"),
-          sum("t_u").as("t_sum_u"))
-        .withColumn("ssb", col("t_sum_u").cast("double")
-          - col("sum_all").cast("double") * col("sum_all").cast("double")
-            / col("n_total").cast("double"))
-        .withColumn("ssw",
-          col("sxx_all").cast("double") - col("t_sum_u").cast("double"))
-        // k = 1 ⇒ df_between = 0: F undefined (ANSI x/0 throw vs
-        // DuckDB NULL) — the k_groups > 1 clause guards it.
-        .withColumn("f_stat", when(
-          col("ssw") > 0 && col("n_total") > col("k_groups")
-            && col("k_groups") > 1,
-          r4((col("ssb") / (col("k_groups") - 1).cast("double"))
-            / (col("ssw")
-              / (col("n_total") - col("k_groups")).cast("double")))))
-        .select(col("k_groups"), col("n_total"), col("t_sum_u"),
-          r4(col("ssb")).as("ssb"), r4(col("ssw")).as("ssw"),
-          col("f_stat"))
-    }),
+    "agg_anova_f" -> ((s, d) => anovaFCore(TestData.documents(s, d))),
 
     // ANOVA EFFECT SIZES (round 16): the F statistic says WHETHER
     // language means differ; η² = SSB/SST says HOW MUCH of the
@@ -2796,48 +3148,7 @@ object Stats {
             .as("significant_95"))
     }),
 
-    "agg_welch_t" -> ((s, d) => {
-      variantUnitCells(s, d)
-        .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
-          sum(col("cc") * col("x")).as("sx_c"),
-          sum(col("ct") * col("x")).as("sx_t"),
-          sum(col("cc") * col("x") * col("x")).as("sxx_c"),
-          sum(col("ct") * col("x") * col("x")).as("sxx_t"))
-        // n=0 / n=1 guards at DEFINITION: Spark 4 ANSI throws on
-        // double x/0 where DuckDB reads NULL — the guard makes both
-        // engines NULL-propagate identically (DegenerateSpec pins).
-        .withColumn("m_c", when(col("n_c") > 0,
-          col("sx_c").cast("double") / col("n_c").cast("double")))
-        .withColumn("m_t", when(col("n_t") > 0,
-          col("sx_t").cast("double") / col("n_t").cast("double")))
-        .withColumn("v_c", when(col("n_c") > 1,
-          (col("sxx_c").cast("double")
-            - col("sx_c").cast("double") * col("sx_c").cast("double")
-              / col("n_c").cast("double"))
-            / (col("n_c") - 1).cast("double")))
-        .withColumn("v_t", when(col("n_t") > 1,
-          (col("sxx_t").cast("double")
-            - col("sx_t").cast("double") * col("sx_t").cast("double")
-              / col("n_t").cast("double"))
-            / (col("n_t") - 1).cast("double")))
-        .withColumn("se2", col("v_c") / col("n_c").cast("double")
-          + col("v_t") / col("n_t").cast("double"))
-        .withColumn("t_stat", when(col("v_c") > 0 && col("v_t") > 0,
-          r4((col("m_t") - col("m_c")) / sqrt(col("se2")))))
-        .withColumn("df_welch", when(col("v_c") > 0 && col("v_t") > 0,
-          r4(col("se2") * col("se2")
-            / (col("v_c") / col("n_c") * (col("v_c") / col("n_c"))
-                / (col("n_c") - 1).cast("double")
-              + col("v_t") / col("n_t") * (col("v_t") / col("n_t"))
-                / (col("n_t") - 1).cast("double")))))
-        // Empty-variant guard: n=0 means 0/0 — NaN in Spark, NULL in
-        // DuckDB. NULL the mean explicitly (t/df are already NULL via
-        // the v>0 guards, which are NaN-false / NULL-propagating).
-        .select(col("n_c").as("n_control"), col("n_t").as("n_treatment"),
-          when(col("n_c") > 0, r4(col("m_c"))).as("mean_control"),
-          when(col("n_t") > 0, r4(col("m_t"))).as("mean_treatment"),
-          col("t_stat"), col("df_welch"))
-    }),
+    "agg_welch_t" -> ((s, d) => welchTCore(variantUnitCells(s, d))),
 
     // COHEN'S d / HEDGES' g (round 10): the standardized effect size
     // published NEXT to a significance test — agg_welch_t answers
@@ -2851,45 +3162,7 @@ object Stats {
     // the standard J ≈ 1 − 3/(4N−9) approximation. All divisions on
     // the 1-row readout, mirrored op order, r4. Zero pooled variance
     // ⇒ NULL d and g (a constant metric has no effect scale).
-    "agg_cohens_d" -> ((s, d) => {
-      variantUnitCells(s, d)
-        .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
-          sum(col("cc") * col("x")).as("sx_c"),
-          sum(col("ct") * col("x")).as("sx_t"),
-          sum(col("cc") * col("x") * col("x")).as("sxx_c"),
-          sum(col("ct") * col("x") * col("x")).as("sxx_t"))
-        // Definition-site ANSI guards: double x/0 throws in Spark 4
-        // (NULL in DuckDB) — degenerate groups must NULL-propagate.
-        .withColumn("m_c", when(col("n_c") > 0,
-          col("sx_c").cast("double") / col("n_c").cast("double")))
-        .withColumn("m_t", when(col("n_t") > 0,
-          col("sx_t").cast("double") / col("n_t").cast("double")))
-        .withColumn("ss_c", when(col("n_c") > 0,
-          col("sxx_c").cast("double")
-            - col("sx_c").cast("double") * col("sx_c").cast("double")
-              / col("n_c").cast("double")))
-        .withColumn("ss_t", when(col("n_t") > 0,
-          col("sxx_t").cast("double")
-            - col("sx_t").cast("double") * col("sx_t").cast("double")
-              / col("n_t").cast("double")))
-        .withColumn("sp2", when(col("n_c") + col("n_t") > 2,
-          (col("ss_c") + col("ss_t"))
-            / (col("n_c") + col("n_t") - 2).cast("double")))
-        // Degenerate-split guard: one empty variant (m NaN vs NULL)
-        // or N ≤ 2 (sp2 x/0 → ±Inf in Spark, NULL in DuckDB) must
-        // NULL every readout — `ok` makes the failure mode explicit.
-        .withColumn("ok", col("n_c") > 0 && col("n_t") > 0
-          && col("n_c") + col("n_t") > 2)
-        .withColumn("cohens_d", when(col("ok") && col("sp2") > 0,
-          r4((col("m_t") - col("m_c")) / sqrt(col("sp2")))))
-        .withColumn("hedges_g", when(col("ok") && col("sp2") > 0,
-          r4((col("m_t") - col("m_c")) / sqrt(col("sp2"))
-            * (lit(1.0) - lit(3.0)
-              / ((col("n_c") + col("n_t")) * 4 - 9).cast("double")))))
-        .select(col("n_c").as("n_control"), col("n_t").as("n_treatment"),
-          when(col("ok"), r4(col("sp2"))).as("pooled_var"), col("cohens_d"),
-          col("hedges_g"))
-    }),
+    "agg_cohens_d" -> ((s, d) => cohensDCore(variantUnitCells(s, d))),
 
     // TWO-REGRESSOR OLS (round 11): l_extendedprice ~ quantity +
     // discount per return flag — the most-asked analytics question
@@ -2905,63 +3178,12 @@ object Stats {
     // ≤3-row readout in mirrored IEEE op order, r4. Guards:
     // det = 0 (collinear regressors) ⇒ NULL betas/intercept/R²;
     // Syy = 0 (constant response) ⇒ NULL R².
-    "agg_ols_multi" -> ((s, d) => {
+    "agg_ols_multi" -> ((s, d) => olsTwoCore(
       TestData.lineitem(s, d)
         .select(col("l_returnflag").as("flag"),
           floor(col("l_quantity") + 0.5).cast("long").as("x1"),
           floor(col("l_discount") * 100 + 0.5).cast("long").as("x2"),
-          floor(col("l_extendedprice") + 0.5).cast("long").as("y"))
-        .groupBy("flag")
-        .agg(count(lit(1)).as("n"),
-          sum("x1").as("s1"), sum("x2").as("s2"), sum("y").as("sy"),
-          sum(col("x1") * col("x1")).as("s11"),
-          sum(col("x2") * col("x2")).as("s22"),
-          sum(col("x1") * col("x2")).as("s12"),
-          sum(col("x1") * col("y")).as("s1y"),
-          sum(col("x2") * col("y")).as("s2y"),
-          sum(col("y") * col("y")).as("syy"))
-        .withColumn("cxx1", col("s11").cast("double")
-          - col("s1").cast("double") * col("s1").cast("double")
-            / col("n").cast("double"))
-        .withColumn("cxx2", col("s22").cast("double")
-          - col("s2").cast("double") * col("s2").cast("double")
-            / col("n").cast("double"))
-        .withColumn("cx12", col("s12").cast("double")
-          - col("s1").cast("double") * col("s2").cast("double")
-            / col("n").cast("double"))
-        .withColumn("cx1y", col("s1y").cast("double")
-          - col("s1").cast("double") * col("sy").cast("double")
-            / col("n").cast("double"))
-        .withColumn("cx2y", col("s2y").cast("double")
-          - col("s2").cast("double") * col("sy").cast("double")
-            / col("n").cast("double"))
-        .withColumn("cyy", col("syy").cast("double")
-          - col("sy").cast("double") * col("sy").cast("double")
-            / col("n").cast("double"))
-        .withColumn("det",
-          col("cxx1") * col("cxx2") - col("cx12") * col("cx12"))
-        .withColumn("b1", when(col("det") =!= 0.0,
-          (col("cx1y") * col("cxx2") - col("cx2y") * col("cx12"))
-            / col("det")))
-        .withColumn("b2", when(col("det") =!= 0.0,
-          (col("cx2y") * col("cxx1") - col("cx1y") * col("cx12"))
-            / col("det")))
-        .withColumn("icept", when(col("det") =!= 0.0,
-          col("sy").cast("double") / col("n").cast("double")
-            - col("b1") * (col("s1").cast("double")
-              / col("n").cast("double"))
-            - col("b2") * (col("s2").cast("double")
-              / col("n").cast("double"))))
-        .withColumn("r2", when(col("det") =!= 0.0 && col("cyy") > 0,
-          (col("b1") * col("cx1y") + col("b2") * col("cx2y"))
-            / col("cyy")))
-        .select(col("flag"), col("n"),
-          r4(col("b1")).as("beta_qty"),
-          r4(col("b2")).as("beta_disc"),
-          r4(col("icept")).as("intercept"),
-          r4(col("r2")).as("r_squared"))
-        .orderBy("flag")
-    }),
+          floor(col("l_extendedprice") + 0.5).cast("long").as("y")))),
 
     // COCHRAN'S Q (round 13): the k-treatment extension of McNemar —
     // do the three funnel actions (click, purchase, error) have the
@@ -3203,30 +3425,15 @@ object Stats {
         .withColumn("v_u", floor(col("value") * 1000000 + 0.5)
           .cast("long"))
       val mid = ev.agg(expr("(min(ts_us) + max(ts_us)) DIV 2").as("mid"))
-      ev.crossJoin(broadcast(mid))
-        .groupBy("user_id")
-        .agg(sum(when(col("ts_us") < col("mid"), col("v_u"))
-            .otherwise(0L)).as("s1"),
-          sum(when(col("ts_us") >= col("mid"), col("v_u"))
-            .otherwise(0L)).as("s2"))
-        .withColumn("d_w", floor((col("s1") - col("s2")).cast("double")
-          / 1000000.0).cast("long"))
-        .agg(count(lit(1)).as("n_users"), sum("d_w").as("sum_d"),
-          sum(col("d_w") * col("d_w")).as("sum_dd"))
-        .withColumn("mean_d", when(col("n_users") > 0,
-          r4(col("sum_d").cast("double") / col("n_users").cast("double"))))
-        .withColumn("var_d", when(col("n_users") > 1,
-          (col("sum_dd").cast("double")
-            - col("sum_d").cast("double") * col("sum_d").cast("double")
-              / col("n_users").cast("double"))
-            / (col("n_users") - 1).cast("double")))
-        .withColumn("t_paired", when(col("var_d") > 0,
-          r4((col("sum_d").cast("double") / col("n_users").cast("double"))
-            / sqrt(col("var_d") / col("n_users").cast("double")))))
-        .withColumn("significant_95", when(col("var_d") > 0,
-          abs(col("t_paired")) > 1.959964))
-        .select("n_users", "sum_d", "mean_d", "t_paired",
-          "significant_95")
+      pairedTCore(
+        ev.crossJoin(broadcast(mid))
+          .groupBy("user_id")
+          .agg(sum(when(col("ts_us") < col("mid"), col("v_u"))
+              .otherwise(0L)).as("s1"),
+            sum(when(col("ts_us") >= col("mid"), col("v_u"))
+              .otherwise(0L)).as("s2"))
+          .withColumn("d_w", floor((col("s1") - col("s2")).cast("double")
+            / 1000000.0).cast("long")))
     }),
 
     // BENJAMINI-HOCHBERG FDR (round 11): the multiple-testing layer
@@ -3394,21 +3601,7 @@ object Stats {
     // powerful than BH at matching levels — monotone containment of
     // the rejection sets is the natural cross-key property.
     "agg_holm_bonferroni" -> ((s, d) => {
-      val W = Window.partitionBy()
-      val wRank = Window.orderBy(col("p_u").asc_nulls_last, col("nationkey"))
-      nationPValues(s, d)
-        .withColumn("m_tests",
-          sum(when(col("p_u").isNotNull, 1L).otherwise(0L)).over(W))
-        .withColumn("rk", row_number().over(wRank))
-        .withColumn("flag", col("p_u").isNotNull
-          && col("p_u") * (col("m_tests") - col("rk") + 1)
-            <= lit(50000L))
-        .withColumn("k_stop",
-          min(when(!col("flag") && col("rk") <= col("m_tests"),
-            col("rk"))).over(W))
-        .withColumn("significant", when(col("p_u").isNotNull,
-          col("k_stop").isNull || col("rk") < col("k_stop"))
-          .otherwise(lit(false)))
+      holmStepDownCore(nationPValues(s, d), 50000L)
         .select(col("nationkey"), (col("n_c") + col("n_t")).as("n_users"),
           col("z"), col("p_u"), col("rk"), col("significant"))
         .orderBy("nationkey")
@@ -3468,38 +3661,7 @@ object Stats {
       val f = TestData.customer(s, d)
         .select(col("c_nationkey").cast("long").as("nationkey"),
           col("c_mktsegment"))
-      val cells = f.groupBy("nationkey", "c_mktsegment")
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
-        .withColumn("c_j", sum("cnt").over(
-          Window.partitionBy("c_mktsegment")))
-        .withColumn("n", sum("cnt").over(Window.partitionBy()))
-      val mi = cells
-        .withColumn("t_u", floor(col("cnt").cast("double")
-          * log(col("n").cast("double") * col("cnt").cast("double")
-            / (col("r_i").cast("double") * col("c_j").cast("double")))
-          * 1000000 + 0.5).cast("long"))
-        .agg(max("n").as("n"), sum("t_u").as("mi_sum_u"))
-      def margEnt(k: String, out: String): DataFrame =
-        cells.groupBy(col(k)).agg(max("n").as("n"),
-            sum("cnt").as("m"))
-          .withColumn("h_u", floor(-(col("m").cast("double")
-              / col("n").cast("double"))
-            * log(col("m").cast("double") / col("n").cast("double"))
-            * 1000000 + 0.5).cast("long"))
-          .agg(sum("h_u").as(out))
-      mi.crossJoin(margEnt("nationkey", "hr_u"))
-        .crossJoin(margEnt("c_mktsegment", "hc_u"))
-        .withColumn("mi_nats", r4(col("mi_sum_u").cast("double")
-          / (lit(1000000.0) * col("n").cast("double"))))
-        .withColumn("h_row", r4(col("hr_u") / 1000000.0))
-        .withColumn("h_col", r4(col("hc_u") / 1000000.0))
-        .withColumn("nmi", when(least(col("hr_u"), col("hc_u")) > 0,
-          r4((col("mi_sum_u").cast("double")
-              / (lit(1000000.0) * col("n").cast("double")))
-            / (least(col("hr_u"), col("hc_u")).cast("double")
-              / 1000000.0))))
-        .select("n", "mi_nats", "h_row", "h_col", "nmi")
+      mutualInformationCore(f)
     }),
 
     // PERMUTATION TEST (round 12): the distribution-free companion
@@ -3536,37 +3698,7 @@ object Stats {
           conv(substring(md5(concat(lit("pm|"),
             col("user_id").cast("string"))), 1, 7), 16, 10).cast("long"))
         .ckpt() // two consumers: observed + replicates
-      val obs = pu.agg(
-        sum(when(col("t") === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col("t") === 1, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("t") === 0, col("x")).otherwise(0L)).as("s0"),
-        sum(when(col("t") === 1, col("x")).otherwise(0L)).as("s1"))
-      val reps = pu.select(col("x"), col("h28"),
-          explode(lit((0 until B).toArray)).as("b"))
-        .withColumn("arm",
-          ((col("h28") * (lit(2654435761L) + col("b") * lit(96542L)))
-            % 268435456L) % 2)
-        .groupBy("b")
-        .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("nb0"),
-          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("nb1"),
-          sum(when(col("arm") === 0, col("x")).otherwise(0L)).as("sb0"),
-          sum(when(col("arm") === 1, col("x")).otherwise(0L)).as("sb1"))
-        .filter(col("nb0") > 0 && col("nb1") > 0)
-      reps.crossJoin(broadcast(obs))
-        .withColumn("ge",
-          (abs(col("sb1") * col("nb0") - col("sb0") * col("nb1"))
-            * (col("n1") * col("n0")))
-            >= (abs(col("s1") * col("n0") - col("s0") * col("n1"))
-              * (col("nb1") * col("nb0"))))
-        .agg(count(lit(1)).as("b_used"),
-          sum(when(col("ge"), 1L).otherwise(0L)).as("n_ge"),
-          max("n0").as("n0"), max("n1").as("n1"),
-          max("s0").as("s0"), max("s1").as("s1"))
-        .withColumn("diff_obs", when(col("n0") > 0 && col("n1") > 0,
-          r4(col("s1").cast("double") / col("n1").cast("double")
-            - col("s0").cast("double") / col("n0").cast("double"))))
-        .withColumn("p_u", expr("(1 + n_ge) * 1000000 DIV (b_used + 1)"))
-        .select("b_used", "n0", "n1", "diff_obs", "n_ge", "p_u")
+      permutationTestCore(pu, B)
     }),
 
     // POISSON-BOOTSTRAP CI (round 10): the resampling confidence
@@ -3591,41 +3723,7 @@ object Stats {
       val o = TestData.orders(s, d)
         .select(col("o_orderkey"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      val u = (((col("h28") * (lit(2654435761L) + col("b") * lit(96542L)))
-        % 268435456L).cast("double") + lit(0.5)) / lit(268435456.0)
-      val pois = when(u < 0.3678794412, 0L).when(u < 0.7357588823, 1L)
-        .when(u < 0.9196986029, 2L).when(u < 0.9810118431, 3L)
-        .when(u < 0.9963401532, 4L).when(u < 0.9994058152, 5L)
-        .when(u < 0.9999167589, 6L).when(u < 0.9999897508, 7L)
-        .otherwise(8L)
-      val reps = o
-        .withColumn("h28",
-          conv(substring(md5(col("o_orderkey").cast("string")), 1, 7),
-            16, 10).cast("long"))
-        .select(col("o_orderkey"), col("cents"), col("h28"),
-          explode(lit((0 until B).toArray)).as("b"))
-        .withColumn("w", pois)
-        .groupBy("b")
-        .agg(sum("w").as("n_eff"), sum(col("w") * col("cents")).as("wsum"))
-        .filter(col("n_eff") > 0)
-        .withColumn("mean_q", floor(col("wsum").cast("double")
-          / col("n_eff").cast("double") * 10000 + 0.5).cast("long"))
-      val wR = Window.orderBy("mean_q", "b")
-      val boot = reps
-        .withColumn("rn", row_number().over(wR))
-        .withColumn("nb", count(lit(1)).over(Window.partitionBy()))
-        .agg(max("nb").as("b_replicates"),
-          max(when(col("rn") === expr("(nb + 1) DIV 20"), col("mean_q")))
-            .as("lo_q"),
-          max(when(col("rn") === expr("(19 * (nb + 1)) DIV 20"),
-            col("mean_q"))).as("hi_q"))
-      val point = o.agg(count(lit(1)).as("n_orders"),
-        r4(sum("cents").cast("double") / count(lit(1))).as("mean_cents"))
-      point.crossJoin(boot)
-        .withColumn("boot_lo_cents", r4(col("lo_q") / 10000.0))
-        .withColumn("boot_hi_cents", r4(col("hi_q") / 10000.0))
-        .select("n_orders", "mean_cents", "b_replicates",
-          "boot_lo_cents", "boot_hi_cents")
+      bootstrapCiCore(o, B)
     })
   )
 

@@ -331,6 +331,194 @@ object TextAnalysis {
       .select("n_points", "sx", "sy", "beta", "k_coef")
   }
 
+  /** RAKE keyword phrases over (doc_id, text) documents: stop-word
+    * delimited candidates scored by summed word degree/frequency, top `k`.
+    * Shared with `GraftEngine.rakeKeywords`.
+    */
+  private[graft] def rakeKeywordsCore(docs: DataFrame, stopWords: Seq[String],
+                                      k: Int): DataFrame = {
+    val toks = docs
+      .select(col("doc_id"), posexplode(
+        regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))))
+      .select(col("doc_id"), col("pos"), col("col").as("tok"))
+      .withColumn("is_stop",
+        col("tok").isin(stopWords: _*).cast("int"))
+    val wPos = Window.partitionBy("doc_id").orderBy("pos")
+    val cand = toks
+      .withColumn("pid", sum("is_stop").over(
+        wPos.rowsBetween(Window.unboundedPreceding, 0)))
+      .filter(col("is_stop") === 0)
+      .ckpt() // consumed by word stats AND phrase build
+    val plen = cand.groupBy("doc_id", "pid")
+      .agg(count(lit(1)).as("plen"))
+    val occ = cand.join(plen, Seq("doc_id", "pid"))
+    val ratios = occ.groupBy("tok")
+      .agg(count(lit(1)).as("freq"), sum("plen").as("deg"))
+      .withColumn("ratio_u", expr("deg * 1000000 DIV freq"))
+      .select("tok", "ratio_u")
+    occ.join(ratios, "tok")
+      .groupBy("doc_id", "pid")
+      .agg(sort_array(collect_list(struct(col("pos"), col("tok"))))
+          .as("pt"),
+        sum("ratio_u").as("score_u"),
+        count(lit(1)).as("n_words"))
+      .withColumn("phrase",
+        concat_ws(" ", expr("transform(pt, x -> x.tok)")))
+      .select("phrase", "n_words", "score_u").distinct()
+      .orderBy(col("score_u").desc, col("phrase")).limit(k)
+      .withColumn("rk", row_number().over(
+        Window.orderBy(col("score_u").desc, col("phrase"))))
+      .select("rk", "phrase", "n_words", "score_u")
+      .orderBy("rk")
+  }
+
+  /** Flesch reading ease per document over (doc_id, text) documents. */
+  private[graft] def readabilityCore(docs: DataFrame): DataFrame = {
+    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
+    docs
+      .withColumn("n_words", size(words).cast("long"))
+      .withColumn("n_sentences", greatest(lit(1L),
+        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
+          .cast("long")))
+      .withColumn("n_syllables", aggregate(
+        transform(words, w => greatest(lit(1),
+          size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0))))),
+        lit(0L), (acc, x) => acc + x))
+      .filter(col("n_words") > 0)
+      .withColumn("flesch", r4(lit(206.835)
+        - lit(1.015) * (col("n_words").cast("double")
+          / col("n_sentences").cast("double"))
+        - lit(84.6) * (col("n_syllables").cast("double")
+          / col("n_words").cast("double"))))
+      .select("doc_id", "n_words", "n_sentences", "n_syllables", "flesch")
+      .orderBy("doc_id")
+  }
+
+  /** Coleman-Liau index per document over (doc_id, text) documents. */
+  private[graft] def colemanLiauCore(docs: DataFrame): DataFrame = {
+    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
+    docs
+      .withColumn("n_words", size(words).cast("long"))
+      .withColumn("n_sentences", greatest(lit(1L),
+        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
+          .cast("long")))
+      .withColumn("n_letters", aggregate(
+        transform(words, w => length(w).cast("long")),
+        lit(0L), (acc, x) => acc + x))
+      .filter(col("n_words") > 0)
+      .withColumn("cli", r4(lit(0.0588)
+        * (lit(100.0) * col("n_letters").cast("double")
+          / col("n_words").cast("double"))
+        - lit(0.296) * (lit(100.0) * col("n_sentences").cast("double")
+          / col("n_words").cast("double"))
+        - lit(15.8)))
+      .select("doc_id", "n_words", "n_sentences", "n_letters", "cli")
+      .orderBy("doc_id")
+  }
+
+  /** Automated Readability Index per document over (doc_id, text) */
+  private[graft] def ariIndexCore(docs: DataFrame): DataFrame = {
+    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
+    docs
+      .withColumn("n_words", size(words).cast("long"))
+      .withColumn("n_sentences", greatest(lit(1L),
+        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
+          .cast("long")))
+      .withColumn("n_letters", aggregate(
+        transform(words, w => length(w).cast("long")),
+        lit(0L), (acc, x) => acc + x))
+      .filter(col("n_words") > 0)
+      .withColumn("ari", r4(lit(4.71)
+        * (col("n_letters").cast("double") / col("n_words").cast("double"))
+        + lit(0.5) * (col("n_words").cast("double")
+          / col("n_sentences").cast("double"))
+        - lit(21.43)))
+      .select("doc_id", "n_words", "n_sentences", "n_letters", "ari")
+      .orderBy("doc_id")
+  }
+
+  /** SMOG grade per document over (doc_id, text) documents. */
+  private[graft] def smogGradeCore(docs: DataFrame): DataFrame = {
+    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
+    docs
+      .withColumn("n_words", size(words).cast("long"))
+      .withColumn("n_sentences", greatest(lit(1L),
+        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
+          .cast("long")))
+      .withColumn("n_poly", size(filter(words, w =>
+        size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0))) >= 3))
+        .cast("long"))
+      .filter(col("n_words") > 0)
+      .withColumn("smog", TestData.r4(lit(1.043)
+        * sqrt(col("n_poly").cast("double") * 30.0
+          / col("n_sentences").cast("double"))
+        + lit(3.1291)))
+      .select("doc_id", "n_words", "n_sentences", "n_poly", "smog")
+      .orderBy("doc_id")
+  }
+
+  /** Jensen-Shannon divergence of each `lang` group's token distribution
+    * from the corpus's over (lang, text) documents. Shared with
+    * `GraftEngine.jsDivergence`.
+    */
+  private[graft] def jsDivergenceCore(docs: DataFrame): DataFrame = {
+    val c = docs
+      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
+      .groupBy("lang", "tok").agg(count(lit(1)).as("c"))
+      .ckpt()
+    val nl = c.groupBy("lang").agg(sum("c").as("n_lang"))
+    val ct = c.groupBy("tok").agg(sum("c").as("c_tok"))
+    val nAll = nl.agg(sum("n_lang").as("n_corpus"))
+    c.join(broadcast(nl), "lang")
+      .join(ct, "tok")
+      .crossJoin(broadcast(nAll))
+      .withColumn("p", col("c").cast("double")
+        / col("n_lang").cast("double"))
+      .withColumn("q", col("c_tok").cast("double")
+        / col("n_corpus").cast("double"))
+      .withColumn("term_u", floor(
+        (col("p") * log(lit(2.0) * col("p") / (col("p") + col("q")))
+          + col("q") * log(lit(2.0) * col("q") / (col("p") + col("q"))))
+          * 1000000 + 0.5).cast("long"))
+      .groupBy("lang")
+      .agg(max("n_lang").as("n_lang"),
+        max("n_corpus").as("n_corpus"),
+        sum("term_u").as("sum_term_u"),
+        sum("c_tok").as("sum_q_num"))
+      .withColumn("jsd", r4(
+        (col("sum_term_u") / 1000000.0
+          + (lit(1.0) - col("sum_q_num").cast("double")
+            / col("n_corpus")) * log(lit(2.0))) / 2.0))
+      .select("lang", "n_lang", "sum_term_u", "jsd")
+      .orderBy("lang")
+  }
+
+  /** Top-`k` tokens by collection frequency with their burstiness (cf/df)
+    * and smoothed idf over (doc_id, text) documents. Shared with
+    * `GraftEngine.termBurstiness`.
+    */
+  private[graft] def termBurstinessCore(docs: DataFrame, k: Int): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val toks = docs
+      .select(col("doc_id"),
+        explode(regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0)))
+          .as("tok"))
+    val byTok = toks.groupBy("tok")
+      .agg(count(lit(1)).as("cf"), countDistinct("doc_id").as("df"))
+    val nDocs = docs
+      .agg(countDistinct("doc_id").as("n_docs"))
+    byTok.crossJoin(broadcast(nDocs))
+      .withColumn("rk", row_number().over(
+        W.orderBy(col("cf").desc, col("tok"))))
+      .filter(col("rk") <= k)
+      .withColumn("burstiness",
+        r4(col("cf").cast("double") / col("df").cast("double")))
+      .withColumn("idf", r4(log((col("n_docs") + 1).cast("double")
+        / (col("df") + 1).cast("double"))))
+      .select("rk", "tok", "cf", "df", "burstiness", "idf")
+      .orderBy("rk")
+  }
+
   val defs: Map[String, Q] = Map(
     // Naive-Bayes-style language ID: per-language token log-frequency
     // profiles (a 155-row broadcast) scored against each doc; output
@@ -571,41 +759,8 @@ object TextAnalysis {
     // sort_array(struct) (collect_list alone is order-unstable),
     // ties broken on the phrase string. Identical phrases dedupe
     // (corpus-level scores ⇒ identical rows) per RAKE convention.
-    "text_rake_keywords" -> ((s, d) => {
-      val toks = TestData.documents(s, d)
-        .select(col("doc_id"), posexplode(
-          regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))))
-        .select(col("doc_id"), col("pos"), col("col").as("tok"))
-        .withColumn("is_stop",
-          col("tok").isin(stopwords: _*).cast("int"))
-      val wPos = Window.partitionBy("doc_id").orderBy("pos")
-      val cand = toks
-        .withColumn("pid", sum("is_stop").over(
-          wPos.rowsBetween(Window.unboundedPreceding, 0)))
-        .filter(col("is_stop") === 0)
-        .ckpt() // consumed by word stats AND phrase build
-      val plen = cand.groupBy("doc_id", "pid")
-        .agg(count(lit(1)).as("plen"))
-      val occ = cand.join(plen, Seq("doc_id", "pid"))
-      val ratios = occ.groupBy("tok")
-        .agg(count(lit(1)).as("freq"), sum("plen").as("deg"))
-        .withColumn("ratio_u", expr("deg * 1000000 DIV freq"))
-        .select("tok", "ratio_u")
-      occ.join(ratios, "tok")
-        .groupBy("doc_id", "pid")
-        .agg(sort_array(collect_list(struct(col("pos"), col("tok"))))
-            .as("pt"),
-          sum("ratio_u").as("score_u"),
-          count(lit(1)).as("n_words"))
-        .withColumn("phrase",
-          concat_ws(" ", expr("transform(pt, x -> x.tok)")))
-        .select("phrase", "n_words", "score_u").distinct()
-        .orderBy(col("score_u").desc, col("phrase")).limit(20)
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("score_u").desc, col("phrase"))))
-        .select("rk", "phrase", "n_words", "score_u")
-        .orderBy("rk")
-    }),
+    "text_rake_keywords" -> ((s, d) =>
+      rakeKeywordsCore(TestData.documents(s, d), stopwords, 20)),
 
     // HEAPS' LAW FIT (round 12): vocabulary growth V = K·N^β over the
     // corpus in doc_id order — the scaling readout that answers "how
@@ -772,26 +927,7 @@ object TextAnalysis {
     // is one array HOF over the doc's own token list (doc-local,
     // map-side; no shuffle at all before the final sort). The score
     // is one mirrored IEEE expression over the three counts, r4'd.
-    "text_readability" -> ((s, d) => {
-      val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-      TestData.documents(s, d)
-        .withColumn("n_words", size(words).cast("long"))
-        .withColumn("n_sentences", greatest(lit(1L),
-          size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-            .cast("long")))
-        .withColumn("n_syllables", aggregate(
-          transform(words, w => greatest(lit(1),
-            size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0))))),
-          lit(0L), (acc, x) => acc + x))
-        .filter(col("n_words") > 0)
-        .withColumn("flesch", r4(lit(206.835)
-          - lit(1.015) * (col("n_words").cast("double")
-            / col("n_sentences").cast("double"))
-          - lit(84.6) * (col("n_syllables").cast("double")
-            / col("n_words").cast("double"))))
-        .select("doc_id", "n_words", "n_sentences", "n_syllables", "flesch")
-        .orderBy("doc_id")
-    }),
+    "text_readability" -> ((s, d) => readabilityCore(TestData.documents(s, d))),
 
     // GUNNING FOG (round 13): the second standard readability index,
     // published next to Flesch because the two disagree exactly where
@@ -831,24 +967,7 @@ object TextAnalysis {
     // [.!?]+ extraction; SMOG = 1.043·√(poly·30/sentences) + 3.1291
     // — the √ is IEEE correctly-rounded on an identical quotient in
     // both engines (Neyman precedent); one mirrored expression, r4.
-    "text_smog" -> ((s, d) => {
-      val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-      TestData.documents(s, d)
-        .withColumn("n_words", size(words).cast("long"))
-        .withColumn("n_sentences", greatest(lit(1L),
-          size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-            .cast("long")))
-        .withColumn("n_poly", size(filter(words, w =>
-          size(regexp_extract_all(w, lit("[aeiouy]+"), lit(0))) >= 3))
-          .cast("long"))
-        .filter(col("n_words") > 0)
-        .withColumn("smog", TestData.r4(lit(1.043)
-          * sqrt(col("n_poly").cast("double") * 30.0
-            / col("n_sentences").cast("double"))
-          + lit(3.1291)))
-        .select("doc_id", "n_words", "n_sentences", "n_poly", "smog")
-        .orderBy("doc_id")
-    }),
+    "text_smog" -> ((s, d) => smogGradeCore(TestData.documents(s, d))),
 
     // COLEMAN-LIAU INDEX (round 15): the CHARACTER-based readability
     // grade — unlike Flesch/fog it needs no syllable heuristic (the
@@ -860,26 +979,7 @@ object TextAnalysis {
     // extraction as Flesch (one doc-local HOF fold) — all-integer
     // per-doc counts, ONE mirrored double expression r4'd,
     // embarrassingly parallel at any scale.
-    "text_coleman_liau" -> ((s, d) => {
-      val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-      TestData.documents(s, d)
-        .withColumn("n_words", size(words).cast("long"))
-        .withColumn("n_sentences", greatest(lit(1L),
-          size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-            .cast("long")))
-        .withColumn("n_letters", aggregate(
-          transform(words, w => length(w).cast("long")),
-          lit(0L), (acc, x) => acc + x))
-        .filter(col("n_words") > 0)
-        .withColumn("cli", r4(lit(0.0588)
-          * (lit(100.0) * col("n_letters").cast("double")
-            / col("n_words").cast("double"))
-          - lit(0.296) * (lit(100.0) * col("n_sentences").cast("double")
-            / col("n_words").cast("double"))
-          - lit(15.8)))
-        .select("doc_id", "n_words", "n_sentences", "n_letters", "cli")
-        .orderBy("doc_id")
-    }),
+    "text_coleman_liau" -> ((s, d) => colemanLiauCore(TestData.documents(s, d))),
 
     // AUTOMATED READABILITY INDEX (round 15): the second character-
     // based grade, published next to CLI because they weight
@@ -888,25 +988,7 @@ object TextAnalysis {
     // readability spread a corpus-quality dashboard reports. ARI =
     // 4.71·(letters/words) + 0.5·(words/sentences) − 21.43; same
     // integer per-doc counts, one mirrored expression, r4.
-    "text_ari" -> ((s, d) => {
-      val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-      TestData.documents(s, d)
-        .withColumn("n_words", size(words).cast("long"))
-        .withColumn("n_sentences", greatest(lit(1L),
-          size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-            .cast("long")))
-        .withColumn("n_letters", aggregate(
-          transform(words, w => length(w).cast("long")),
-          lit(0L), (acc, x) => acc + x))
-        .filter(col("n_words") > 0)
-        .withColumn("ari", r4(lit(4.71)
-          * (col("n_letters").cast("double") / col("n_words").cast("double"))
-          + lit(0.5) * (col("n_words").cast("double")
-            / col("n_sentences").cast("double"))
-          - lit(21.43)))
-        .select("doc_id", "n_words", "n_sentences", "n_letters", "ari")
-        .orderBy("doc_id")
-    }),
+    "text_ari" -> ((s, d) => ariIndexCore(TestData.documents(s, d))),
 
     // LOG-ODDS WORDS (round 13): Monroe et al.'s "Fightin' Words" —
     // which tokens distinguish English text from the rest of the
@@ -1106,37 +1188,7 @@ object TextAnalysis {
     // no lang × vocabulary completion join exists anywhere. Present-
     // token terms micro-nat-quantized before the sum (protocol);
     // the closure term and final ÷2 are one mirrored expression.
-    "text_js_divergence" -> ((s, d) => {
-      val c = TestData.documents(s, d)
-        .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy("lang", "tok").agg(count(lit(1)).as("c"))
-        .ckpt()
-      val nl = c.groupBy("lang").agg(sum("c").as("n_lang"))
-      val ct = c.groupBy("tok").agg(sum("c").as("c_tok"))
-      val nAll = nl.agg(sum("n_lang").as("n_corpus"))
-      c.join(broadcast(nl), "lang")
-        .join(ct, "tok")
-        .crossJoin(broadcast(nAll))
-        .withColumn("p", col("c").cast("double")
-          / col("n_lang").cast("double"))
-        .withColumn("q", col("c_tok").cast("double")
-          / col("n_corpus").cast("double"))
-        .withColumn("term_u", floor(
-          (col("p") * log(lit(2.0) * col("p") / (col("p") + col("q")))
-            + col("q") * log(lit(2.0) * col("q") / (col("p") + col("q"))))
-            * 1000000 + 0.5).cast("long"))
-        .groupBy("lang")
-        .agg(max("n_lang").as("n_lang"),
-          max("n_corpus").as("n_corpus"),
-          sum("term_u").as("sum_term_u"),
-          sum("c_tok").as("sum_q_num"))
-        .withColumn("jsd", r4(
-          (col("sum_term_u") / 1000000.0
-            + (lit(1.0) - col("sum_q_num").cast("double")
-              / col("n_corpus")) * log(lit(2.0))) / 2.0))
-        .select("lang", "n_lang", "sum_term_u", "jsd")
-        .orderBy("lang")
-    }),
+    "text_js_divergence" -> ((s, d) => jsDivergenceCore(TestData.documents(s, d))),
 
     // DISTINCT-N DIVERSITY (round 14): distinct n-grams / total
     // n-grams for n ∈ {1, 2, 3} per language — the standard
@@ -1318,27 +1370,7 @@ object TextAnalysis {
     // type table (the text_wordcount_topk precedent), never the
     // corpus. IDF's ln is the only transcendental — mirrored op
     // order, r4'd.
-    "text_term_burstiness" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
-      val toks = TestData.documents(s, d)
-        .select(col("doc_id"),
-          explode(regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0)))
-            .as("tok"))
-      val byTok = toks.groupBy("tok")
-        .agg(count(lit(1)).as("cf"), countDistinct("doc_id").as("df"))
-      val nDocs = TestData.documents(s, d)
-        .agg(countDistinct("doc_id").as("n_docs"))
-      byTok.crossJoin(broadcast(nDocs))
-        .withColumn("rk", row_number().over(
-          W.orderBy(col("cf").desc, col("tok"))))
-        .filter(col("rk") <= 20)
-        .withColumn("burstiness",
-          r4(col("cf").cast("double") / col("df").cast("double")))
-        .withColumn("idf", r4(log((col("n_docs") + 1).cast("double")
-          / (col("df") + 1).cast("double"))))
-        .select("rk", "tok", "cf", "df", "burstiness", "idf")
-        .orderBy("rk")
-    })
+    "text_term_burstiness" -> ((s, d) => termBurstinessCore(TestData.documents(s, d), 20))
   )
 
   private val stopSql = stopwords.map(w => s"'$w'").mkString("(", ", ", ")")

@@ -1051,6 +1051,65 @@ object TextOps {
   }
 
 
+  /** Per-`lang` conditional bigram entropy H(w2 | w1) over (lang, text)
+    * documents. Shared with `GraftEngine.conditionalEntropy`.
+    */
+  private[graft] def conditionalEntropyCore(docs: DataFrame): DataFrame = {
+    val bi = docs
+      .withColumn("toks", split(col("text"), " "))
+      .filter(size(col("toks")) >= 2)
+      .select(col("lang"), explode(expr(
+        "transform(sequence(0, size(toks)-2)," +
+          " i -> concat(toks[i], ' ', toks[i+1]))")).as("bg"))
+      .groupBy("lang", "bg").agg(count(lit(1)).as("c_b"))
+      .withColumn("w1", substring_index(col("bg"), " ", 1))
+      // COUNT-grain fence measured AND REJECTED here (r19.2): bi
+      // feeds marg + the probe join, but the fence read
+      // 0.69/0.69 -> 0.72/0.78 s interleaved (sum-job DID halve,
+      // 664-679 -> 331-403 ms — the persist round-trip eats the
+      // saved explode at this grain's row count).
+    val marg = bi.groupBy("lang", "w1").agg(sum("c_b").as("c_1"))
+    bi.join(marg, Seq("lang", "w1"))
+      .withColumn("t_u", floor(col("c_b").cast("double")
+        * log(col("c_1").cast("double") / col("c_b").cast("double"))
+        * 1000000 + 0.5).cast("long"))
+      .groupBy("lang")
+      .agg(sum("c_b").as("n_bigrams"),
+        count(lit(1)).as("n_distinct_bigrams"),
+        sum("t_u").as("h_sum_u"))
+      .withColumn("cond_entropy_nats", r4(
+        col("h_sum_u").cast("double")
+          / (lit(1000000.0) * col("n_bigrams").cast("double"))))
+      .select("lang", "n_bigrams", "n_distinct_bigrams",
+        "cond_entropy_nats")
+      .orderBy("lang")
+  }
+
+  /** Lincoln-Petersen (Chapman) estimate of the true duplicate-pair count
+    * from two detectors' (id_a, id_b) pair sets. Shared with
+    * `GraftEngine.captureRecapture`.
+    */
+  private[graft] def captureRecaptureCore(pairsA: DataFrame,
+                                          pairsB: DataFrame): DataFrame = {
+    val a = pairsA
+      .select(col("id_a"), col("id_b"), lit(1L).as("in_a"))
+    val b = pairsB
+      .select(col("id_a"), col("id_b"), lit(1L).as("in_b"))
+    a.join(b, Seq("id_a", "id_b"), "full_outer")
+      .agg(sum(coalesce(col("in_a"), lit(0L))).as("n_a"),
+        sum(coalesce(col("in_b"), lit(0L))).as("n_b"),
+        sum(when(col("in_a").isNotNull && col("in_b").isNotNull, 1L)
+          .otherwise(0L)).as("n_both"))
+      .withColumn("n_hat",
+        expr("(n_a + 1) * (n_b + 1) DIV (n_both + 1) - 1"))
+      .withColumn("coverage_a", when(col("n_b") > 0,
+        r4(col("n_both").cast("double") / col("n_b").cast("double"))))
+      .withColumn("coverage_b", when(col("n_a") > 0,
+        r4(col("n_both").cast("double") / col("n_a").cast("double"))))
+      .select("n_a", "n_b", "n_both", "n_hat", "coverage_a",
+        "coverage_b")
+  }
+
   val defs: Map[String, Q] = Map(
     "text_tokenize_stats" -> ((s, d) =>
       TestData.documents(s, d)
@@ -1092,36 +1151,8 @@ object TextOps {
     // bigrams/lang — documented). Vocabulary-shaped: one bigram
     // fold, one (lang, w₁)-marginal fold, one equi-join of the two
     // DISTINCT tables — corpus grain is touched exactly once.
-    "text_conditional_entropy" -> ((s, d) => {
-      val bi = TestData.documents(s, d)
-        .withColumn("toks", split(col("text"), " "))
-        .filter(size(col("toks")) >= 2)
-        .select(col("lang"), explode(expr(
-          "transform(sequence(0, size(toks)-2)," +
-            " i -> concat(toks[i], ' ', toks[i+1]))")).as("bg"))
-        .groupBy("lang", "bg").agg(count(lit(1)).as("c_b"))
-        .withColumn("w1", substring_index(col("bg"), " ", 1))
-        // COUNT-grain fence measured AND REJECTED here (r19.2): bi
-        // feeds marg + the probe join, but the fence read
-        // 0.69/0.69 -> 0.72/0.78 s interleaved (sum-job DID halve,
-        // 664-679 -> 331-403 ms — the persist round-trip eats the
-        // saved explode at this grain's row count).
-      val marg = bi.groupBy("lang", "w1").agg(sum("c_b").as("c_1"))
-      bi.join(marg, Seq("lang", "w1"))
-        .withColumn("t_u", floor(col("c_b").cast("double")
-          * log(col("c_1").cast("double") / col("c_b").cast("double"))
-          * 1000000 + 0.5).cast("long"))
-        .groupBy("lang")
-        .agg(sum("c_b").as("n_bigrams"),
-          count(lit(1)).as("n_distinct_bigrams"),
-          sum("t_u").as("h_sum_u"))
-        .withColumn("cond_entropy_nats", r4(
-          col("h_sum_u").cast("double")
-            / (lit(1000000.0) * col("n_bigrams").cast("double"))))
-        .select("lang", "n_bigrams", "n_distinct_bigrams",
-          "cond_entropy_nats")
-        .orderBy("lang")
-    }),
+    "text_conditional_entropy" -> ((s, d) =>
+      conditionalEntropyCore(TestData.documents(s, d))),
 
     "dedup_exact_hash" -> ((s, d) =>
       TestData.documents(s, d)
@@ -1178,25 +1209,9 @@ object TextOps {
     // the readout is three counts + one integer Chapman division
     // (all positive ⇒ DIV ≡ //). Chapman ≥ observed-union and
     // identical-detectors ⇒ N̂ = union pinned in ClosedFormProps.
-    "dedup_capture_recapture" -> ((s, d) => {
-      val a = TextAnalysis.fixtureSimhashPairs(s, d)
-        .select(col("id_a"), col("id_b"), lit(1L).as("in_a"))
-      val b = fixtureJaccardPairs(s, d)
-        .select(col("id_a"), col("id_b"), lit(1L).as("in_b"))
-      a.join(b, Seq("id_a", "id_b"), "full_outer")
-        .agg(sum(coalesce(col("in_a"), lit(0L))).as("n_a"),
-          sum(coalesce(col("in_b"), lit(0L))).as("n_b"),
-          sum(when(col("in_a").isNotNull && col("in_b").isNotNull, 1L)
-            .otherwise(0L)).as("n_both"))
-        .withColumn("n_hat",
-          expr("(n_a + 1) * (n_b + 1) DIV (n_both + 1) - 1"))
-        .withColumn("coverage_a", when(col("n_b") > 0,
-          r4(col("n_both").cast("double") / col("n_b").cast("double"))))
-        .withColumn("coverage_b", when(col("n_a") > 0,
-          r4(col("n_both").cast("double") / col("n_a").cast("double"))))
-        .select("n_a", "n_b", "n_both", "n_hat", "coverage_a",
-          "coverage_b")
-    }),
+    "dedup_capture_recapture" -> ((s, d) =>
+      captureRecaptureCore(TextAnalysis.fixtureSimhashPairs(s, d),
+        fixtureJaccardPairs(s, d))),
 
     // DETECTOR KAPPA (round 13): Cohen's κ between the simhash and
     // jaccard near-dup detectors at DOC grain — capture-recapture

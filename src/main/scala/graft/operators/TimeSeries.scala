@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.CkptOps
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
@@ -1695,6 +1695,588 @@ object TimeSeries {
         (p, states)
       })
 
+  /** Mixture SPRT (normal mixing prior of variance `tau2`) over per-day
+    * arm counts: `days` groups unit rows (t: 0 control / 1 treatment,
+    * purch: 0/1) by `day`. Shared with `GraftEngine.msprtSequential`.
+    */
+  private[graft] def msprtSequentialCore(days: RelationalGroupedDataset,
+                                         tau2: Double): DataFrame = {
+    val Wc = org.apache.spark.sql.expressions.Window
+    val wCum = Wc.orderBy("day")
+      .rowsBetween(Wc.unboundedPreceding, Wc.currentRow)
+    days
+      .agg(
+        sum(when(col("t") === 0, 1L).otherwise(0L)).as("d_nc"),
+        sum(when(col("t") === 1, 1L).otherwise(0L)).as("d_nt"),
+        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("d_sc"),
+        sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("d_st"))
+      .select(col("day"),
+        sum("d_nc").over(wCum).cast("long").as("n_c"),
+        sum("d_nt").over(wCum).cast("long").as("n_t"),
+        sum("d_sc").over(wCum).cast("long").as("s_c"),
+        sum("d_st").over(wCum).cast("long").as("s_t"))
+      .withColumn("pbar", when(col("n_c") + col("n_t") > 0,
+        (col("s_c") + col("s_t")).cast("double")
+          / (col("n_c") + col("n_t")).cast("double")))
+      .withColumn("theta", when(col("n_c") > 0 && col("n_t") > 0,
+        col("s_t").cast("double") / col("n_t").cast("double")
+          - col("s_c").cast("double") / col("n_c").cast("double")))
+      .withColumn("v", when(col("n_c") > 0 && col("n_t") > 0
+          && col("s_c") + col("s_t") > 0
+          && col("s_c") + col("s_t") < col("n_c") + col("n_t"),
+        col("pbar") * (lit(1.0) - col("pbar"))
+          * (lit(1.0) / col("n_c").cast("double")
+            + lit(1.0) / col("n_t").cast("double"))))
+      .withColumn("llr_u", when(col("v") > 0,
+        floor((lit(0.5) * log(col("v") / (col("v") + lit(tau2)))
+          + col("theta") * col("theta") * lit(tau2)
+            / (lit(2.0) * col("v") * (col("v") + lit(tau2))))
+          * 1000000 + 0.5).cast("long")))
+      .withColumn("mx_u",
+        greatest(coalesce(max("llr_u").over(wCum), lit(0L)), lit(0L)))
+      .withColumn("p_seq_u",
+        floor(exp(-col("mx_u").cast("double") / 1000000.0)
+          * 1000000 + 0.5).cast("long"))
+      .withColumn("significant", col("p_seq_u") < 50000L)
+      .select("day", "n_c", "n_t", "s_c", "s_t", "llr_u",
+        "p_seq_u", "significant")
+      .orderBy("day")
+  }
+
+  /** Holt linear-trend one-step backtest over an (hr, cnt) series: the
+    * 12-tap integer-weight forecast, MAE and sMAPE. Shared with
+    * `GraftEngine.holtBacktest`.
+    */
+  private[graft] def holtBacktestCore(hourly: DataFrame): DataFrame = {
+    import hourly.sparkSession.implicits._
+    val weights = Seq((1, 3145728L), (2, 1835008L), (3, 720896L),
+      (4, -16384L), (5, -380928L), (6, -467968L), (7, -394496L),
+      (8, -259136L), (9, -126672L), (10, -28772L), (11, 27371L),
+      (12, 139657L)).toDF("tap", "w4m")
+    val fc = hourly.crossJoin(broadcast(weights))
+      .select((col("hr") + col("tap")).as("hr"),
+        (col("cnt") * col("w4m")).as("c4m"))
+      .groupBy("hr")
+      .agg(sum("c4m").as("fc4m"), count(lit(1)).as("n_taps"))
+      .filter(col("n_taps") === 12)
+    hourly.join(fc, "hr")
+      .withColumn("y4m", col("cnt") * 4194304L)
+      .withColumn("term_u", when(
+        abs(col("y4m")) + abs(col("fc4m")) > 0,
+        floor(lit(2.0)
+          * abs(col("y4m") - col("fc4m")).cast("double")
+          / (abs(col("y4m")) + abs(col("fc4m"))).cast("double")
+          * 1000000 + 0.5).cast("long")).otherwise(0L))
+      .agg(count(lit(1)).as("n_scored"),
+        sum(abs(col("y4m") - col("fc4m"))).as("abs_err4m_sum"),
+        sum("term_u").as("smape_sum_u"))
+      .withColumn("mae", when(col("n_scored") > 0,
+        r4(col("abs_err4m_sum").cast("double") / 4194304.0
+          / col("n_scored").cast("double"))))
+      .withColumn("smape", when(col("n_scored") > 0,
+        r4(col("smape_sum_u").cast("double")
+          / col("n_scored").cast("double") / 1000000.0)))
+      .select("n_scored", "abs_err4m_sum", "mae", "smape")
+  }
+
+  /** Simple-exponential-smoothing one-step backtest over an (hr, cnt)
+    * series: the 8-tap integer-weight forecast, MAE and sMAPE. Shared with
+    * `GraftEngine.sesBacktest`.
+    */
+  private[graft] def sesBacktestCore(hourly: DataFrame): DataFrame = {
+    import hourly.sparkSession.implicits._
+    val weights = Seq((1, 64L), (2, 32L), (3, 16L), (4, 8L),
+      (5, 4L), (6, 2L), (7, 1L), (8, 1L)).toDF("tap", "w128")
+    val fc = hourly.crossJoin(broadcast(weights))
+      .select((col("hr") + col("tap")).as("hr"),
+        (col("cnt") * col("w128")).as("c128"))
+      .groupBy("hr")
+      .agg(sum("c128").as("fc128"), count(lit(1)).as("n_taps"))
+      .filter(col("n_taps") === 8)
+    hourly.join(fc, "hr")
+      .withColumn("y128", col("cnt") * 128)
+      .withColumn("term_u", when(
+        abs(col("y128")) + abs(col("fc128")) > 0,
+        floor(lit(2.0)
+          * abs(col("y128") - col("fc128")).cast("double")
+          / (abs(col("y128")) + abs(col("fc128"))).cast("double")
+          * 1000000 + 0.5).cast("long")).otherwise(0L))
+      .agg(count(lit(1)).as("n_scored"),
+        sum(abs(col("y128") - col("fc128"))).as("abs_err128_sum"),
+        sum("term_u").as("smape_sum_u"))
+      .withColumn("mae", when(col("n_scored") > 0,
+        r4(col("abs_err128_sum").cast("double") / 128.0
+          / col("n_scored").cast("double"))))
+      .withColumn("smape", when(col("n_scored") > 0,
+        r4(col("smape_sum_u").cast("double")
+          / col("n_scored").cast("double") / 1000000.0)))
+      .select("n_scored", "abs_err128_sum", "mae", "smape")
+  }
+
+  /** PACF at lags 1..3 of an (hour, n) integer series ordered by `hour`:
+    * Durbin-Levinson unrolled over exact BIGINT ACF terms. Shared with
+    * `GraftEngine.pacfLags3`.
+    */
+  private[graft] def pacfLags3Core(hourly: DataFrame): DataFrame = {
+    val lags = 1 to 3
+    val W = org.apache.spark.sql.expressions.Window.orderBy("hour")
+    val tot = hourly.agg(sum("n").as("t_total"),
+                         count(lit(1)).as("n_hours"))
+    val dv = hourly.crossJoin(broadcast(tot))
+      .withColumn("dev", col("n") * col("n_hours") - col("t_total"))
+    val led = lags.foldLeft(dv) { (df, k) =>
+      df.withColumn(s"l$k", lead("dev", k).over(W))
+    }
+    val M = 1000000L
+    def ru(k: Int) = when(col("den") > 0,
+      floor(col(s"num$k").cast("double") / col("den").cast("double")
+        * M + 0.5).cast("long"))
+    led.agg(sum(col("dev") * col("dev")).as("den"),
+        sum(col("dev") * col("l1")).as("num1"),
+        sum(col("dev") * col("l2")).as("num2"),
+        sum(col("dev") * col("l3")).as("num3"))
+      .withColumn("r1u", ru(1))
+      .withColumn("r2u", ru(2))
+      .withColumn("r3u", ru(3))
+      .withColumn("den22", lit(M * M) - col("r1u") * col("r1u"))
+      .withColumn("p22u", when(col("den22") =!= 0, floor(
+        (col("r2u") * M - col("r1u") * col("r1u")).cast("double")
+          / col("den22").cast("double") * M + 0.5).cast("long")))
+      .withColumn("p21u", floor(col("r1u").cast("double")
+        * (lit(M) - col("p22u")).cast("double") / (M.toDouble) + 0.5)
+        .cast("long"))
+      .withColumn("num33", col("r3u") * M
+        - col("p21u") * col("r2u") - col("p22u") * col("r1u"))
+      .withColumn("den33", lit(M * M)
+        - col("p21u") * col("r1u") - col("p22u") * col("r2u"))
+      .withColumn("pacf1", r4(col("r1u").cast("double") / M.toDouble))
+      .withColumn("pacf2", r4(col("p22u").cast("double") / M.toDouble))
+      .withColumn("pacf3", when(col("den33") =!= 0,
+        r4(col("num33").cast("double") / col("den33").cast("double"))))
+      .select(expr("stack(3, 1, r1u, pacf1, 2, r2u, pacf2, " +
+        "3, r3u, pacf3) AS (lag, acf_micro, pacf)"))
+      .orderBy("lag")
+  }
+
+  /** Wald-Wolfowitz runs test about the median over an (hr, n) series
+    * (checkpointed: three consumers). Shared with `GraftEngine.runsTest`.
+    */
+  private[graft] def runsTestCore(hourly: DataFrame): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val tot = hourly.agg(count(lit(1)).as("h_cnt"))
+    val med2 = hourly.crossJoin(broadcast(tot))
+      .withColumn("rn",
+        row_number().over(W.orderBy("n", "hr")))
+      .agg(sum(when(col("rn") === expr("(h_cnt + 1) DIV 2"), col("n"))
+          .otherwise(0L)
+        + when(col("rn") === expr("(h_cnt + 2) DIV 2"), col("n"))
+          .otherwise(0L)).as("med2"))
+    val signed = hourly.crossJoin(broadcast(med2))
+      .withColumn("sgn", when(col("n") * 2 > col("med2"), 1)
+        .when(col("n") * 2 < col("med2"), -1).otherwise(0))
+      .filter(col("sgn") =!= 0)
+    signed
+      .withColumn("chg", when(
+        lag("sgn", 1).over(W.orderBy("hr")).isNull
+          || lag("sgn", 1).over(W.orderBy("hr")) =!= col("sgn"), 1L)
+        .otherwise(0L))
+      .agg(sum(when(col("sgn") === 1, 1L).otherwise(0L)).as("n_pos"),
+        sum(when(col("sgn") === -1, 1L).otherwise(0L)).as("n_neg"),
+        sum("chg").as("n_runs"))
+      .withColumn("nn", col("n_pos") + col("n_neg"))
+      .withColumn("p2", col("n_pos") * col("n_neg") * 2)
+      .withColumn("mu", lit(1.0)
+        + col("p2").cast("double") / col("nn").cast("double"))
+      .withColumn("var_r", col("p2").cast("double")
+        * (col("p2") - col("nn")).cast("double")
+        / (col("nn").cast("double") * col("nn").cast("double")
+          * (col("nn") - 1).cast("double")))
+      .withColumn("z_runs", when(
+        col("n_pos") > 0 && col("n_neg") > 0 && col("var_r") > 0,
+        r4((col("n_runs").cast("double") - col("mu"))
+          / sqrt(col("var_r")))))
+      .select("n_pos", "n_neg", "n_runs", "z_runs")
+  }
+
+  /** Risk ratio with its log-normal 95 % CI over (t, purch) rows
+    * (t: 0 control / 1 treatment). Shared with `GraftEngine.riskRatio`.
+    */
+  private[graft] def riskRatioCore(units: DataFrame): DataFrame =
+    units
+      .agg(
+        sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
+        sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
+        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
+        sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
+      .withColumn("rr_", (col("x_t").cast("double") + 0.5)
+        / (col("n_t").cast("double") + 0.5)
+        / ((col("x_c").cast("double") + 0.5)
+          / (col("n_c").cast("double") + 0.5)))
+      .withColumn("se", sqrt(
+        lit(1.0) / (col("x_t").cast("double") + 0.5)
+          - lit(1.0) / (col("n_t").cast("double") + 0.5)
+          + lit(1.0) / (col("x_c").cast("double") + 0.5)
+          - lit(1.0) / (col("n_c").cast("double") + 0.5)))
+      .withColumn("ci_lo", r4(exp(log(col("rr_"))
+        - lit(1.959964) * col("se"))))
+      .withColumn("ci_hi", r4(exp(log(col("rr_"))
+        + lit(1.959964) * col("se"))))
+      .withColumn("risk_ratio", r4(col("rr_")))
+      .withColumn("significant_95",
+        col("ci_lo") > 1.0 || col("ci_hi") < 1.0)
+      .select("n_c", "n_t", "x_c", "x_t", "risk_ratio", "ci_lo",
+        "ci_hi", "significant_95")
+
+  /** Haldane-corrected odds ratio with its Woolf 95 % CI over (t, purch)
+    * rows (t: 0 control / 1 treatment). Shared with `GraftEngine.oddsRatio`.
+    */
+  private[graft] def oddsRatioCore(units: DataFrame): DataFrame =
+    units
+      .agg(
+        sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
+        sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
+        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
+        sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
+      .withColumn("a", col("x_t").cast("double") + 0.5)
+      .withColumn("b", (col("n_t") - col("x_t")).cast("double") + 0.5)
+      .withColumn("c2", col("x_c").cast("double") + 0.5)
+      .withColumn("d2", (col("n_c") - col("x_c")).cast("double") + 0.5)
+      .withColumn("or_", col("a") * col("d2") / (col("b") * col("c2")))
+      .withColumn("se", sqrt(lit(1.0) / col("a") + lit(1.0) / col("b")
+        + lit(1.0) / col("c2") + lit(1.0) / col("d2")))
+      .withColumn("ci_lo", r4(exp(log(col("or_"))
+        - lit(1.959964) * col("se"))))
+      .withColumn("ci_hi", r4(exp(log(col("or_"))
+        + lit(1.959964) * col("se"))))
+      .withColumn("odds_ratio", r4(col("or_")))
+      .withColumn("significant_95",
+        col("ci_lo") > 1.0 || col("ci_hi") < 1.0)
+      .select("n_c", "n_t", "x_c", "x_t", "odds_ratio", "ci_lo",
+        "ci_hi", "significant_95")
+
+  /** Cohen's h effect size of two proportions over (t, purch) rows
+    * (t: 0 control / 1 treatment). Shared with `GraftEngine.cohensH`.
+    */
+  private[graft] def cohensHCore(units: DataFrame): DataFrame =
+    units
+      .agg(
+        sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
+        sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
+        sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
+        sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
+      .withColumn("h", when(col("n_c") > 0 && col("n_t") > 0,
+        r4(lit(2.0) * asin(sqrt(col("x_t").cast("double")
+            / col("n_t").cast("double")))
+          - lit(2.0) * asin(sqrt(col("x_c").cast("double")
+            / col("n_c").cast("double"))))))
+      .withColumn("magnitude",
+        when(col("h").isNull, lit(null).cast("string"))
+          .when(abs(col("h")) < 0.2, "negligible")
+          .when(abs(col("h")) < 0.5, "small")
+          .when(abs(col("h")) < 0.8, "medium")
+          .otherwise("large"))
+      .select("n_c", "n_t", "x_c", "x_t", "h", "magnitude")
+
+  /** Weekly growth accounting over distinct (user_id, wk) activity rows:
+    * new / retained / resurrected / churned and the quick ratio. Shared
+    * with `GraftEngine.userLifecycle`.
+    */
+  private[graft] def userLifecycleCore(uw: DataFrame): DataFrame = {
+    val first = uw.groupBy("user_id").agg(min("wk").as("first_wk"))
+    val prev = uw.select(col("user_id"), (col("wk") + 1).as("wk"),
+      lit(1).as("was_prev"))
+    val counts = uw.join(first, "user_id")
+      .join(prev, Seq("user_id", "wk"), "left")
+      .withColumn("status",
+        when(col("wk") === col("first_wk"), "new")
+          .when(col("was_prev").isNotNull, "retained")
+          .otherwise("resurrected"))
+      .groupBy("wk")
+      .agg(sum(when(col("status") === "new", 1L).otherwise(0L))
+        .as("n_new"),
+        sum(when(col("status") === "retained", 1L).otherwise(0L))
+          .as("n_retained"),
+        sum(when(col("status") === "resurrected", 1L).otherwise(0L))
+          .as("n_resurrected"))
+    val churn = uw.select(col("user_id"), (col("wk") + 1).as("wk"))
+      .join(uw, Seq("user_id", "wk"), "left_anti")
+      .groupBy("wk").agg(count(lit(1)).as("n_churned"))
+    counts.join(churn, Seq("wk"), "left")
+      .withColumn("n_churned", coalesce(col("n_churned"), lit(0L)))
+      .withColumn("quick_ratio", when(col("n_churned") > 0,
+        r4((col("n_new") + col("n_resurrected")).cast("double")
+          / col("n_churned"))))
+      .select("wk", "n_new", "n_retained", "n_resurrected",
+        "n_churned", "quick_ratio")
+      .orderBy("wk")
+  }
+
+  /** Per-variant Kaplan-Meier survival over (variant, dur_hr, event)
+    * units, log-sum micro-quantized. Shared with `GraftEngine.kaplanMeierBy`.
+    */
+  private[graft] def kaplanMeierByCore(pu: DataFrame): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val risk = pu.groupBy("variant", "dur_hr")
+      .agg(sum("event").as("d_t"),
+        sum(lit(1L) - col("event")).as("c_t"))
+      .withColumn("n_total",
+        sum(col("d_t") + col("c_t")).over(W.partitionBy("variant")))
+      .withColumn("n_risk", col("n_total")
+        - coalesce(sum(col("d_t") + col("c_t")).over(
+            W.partitionBy("variant").orderBy("dur_hr")
+              .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
+    risk.filter(col("d_t") > 0)
+      .withColumn("term_u", when(col("n_risk") > col("d_t"),
+        floor(log((col("n_risk") - col("d_t")).cast("double")
+          / col("n_risk").cast("double")) * 1000000 + 0.5).cast("long")))
+      .withColumn("zero_flag",
+        max(when(col("n_risk") === col("d_t"), 1).otherwise(0)).over(
+          W.partitionBy("variant").orderBy("dur_hr")
+            .rowsBetween(W.unboundedPreceding, 0)))
+      .withColumn("cum_u", sum("term_u").over(
+        W.partitionBy("variant").orderBy("dur_hr")
+          .rowsBetween(W.unboundedPreceding, 0)))
+      .withColumn("survival", when(col("zero_flag") === 1, lit(0.0))
+        .otherwise(r4(exp(col("cum_u") / 1000000.0))))
+      .select(col("variant"), col("dur_hr").as("t_hr"), col("n_risk"),
+        col("d_t").as("n_events"), col("c_t").as("n_censored"),
+        col("survival"))
+      .orderBy("variant", "t_hr")
+  }
+
+  /** Trailing `window`-hour Pearson correlation of (x, y) over an (hr, x, y)
+    * series; incomplete windows read NULL. Shared with `GraftEngine.rollingCorr`.
+    */
+  private[graft] def rollingCorrCore(hourly: DataFrame,
+                                     window: Int): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+      .orderBy("hr").rangeBetween(-(window - 1), 0)
+    hourly
+      .withColumn("n_win", count(lit(1)).over(W))
+      .withColumn("sx", sum("x").over(W))
+      .withColumn("sy", sum("y").over(W))
+      .withColumn("sxx", sum(col("x") * col("x")).over(W))
+      .withColumn("syy", sum(col("y") * col("y")).over(W))
+      .withColumn("sxy", sum(col("x") * col("y")).over(W))
+      .withColumn("num",
+        col("n_win") * col("sxy") - col("sx") * col("sy"))
+      .withColumn("dx",
+        col("n_win") * col("sxx") - col("sx") * col("sx"))
+      .withColumn("dy",
+        col("n_win") * col("syy") - col("sy") * col("sy"))
+      .withColumn("r_corr", when(
+        col("n_win") === window && col("dx") > 0 && col("dy") > 0,
+        r4(col("num").cast("double")
+          / sqrt(col("dx").cast("double") * col("dy").cast("double")))))
+      .select("hr", "x", "y", "n_win", "r_corr")
+      .orderBy("hr")
+  }
+
+  /** Log-rank test of group g1 = 1 against the rest over (dur_hr, event, g1) */
+  private[graft] def logRankCore(pu: DataFrame): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val risk = pu.groupBy("dur_hr")
+      .agg(sum(col("event") * col("g1")).as("d1_t"),
+        sum("event").as("d_t"),
+        sum("g1").as("a1_t"),
+        count(lit(1)).as("a_t"))
+      .withColumn("n_risk", sum("a_t").over(W.partitionBy())
+        - coalesce(sum("a_t").over(W.orderBy("dur_hr")
+            .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("n1_risk", sum("a1_t").over(W.partitionBy())
+        - coalesce(sum("a1_t").over(W.orderBy("dur_hr")
+            .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
+    risk.filter(col("d_t") > 0)
+      .withColumn("e_u", floor(col("d_t").cast("double")
+        * col("n1_risk").cast("double") / col("n_risk").cast("double")
+        * 1000000 + 0.5).cast("long"))
+      .withColumn("v_u", when(col("n_risk") > 1,
+        floor(col("d_t").cast("double")
+          * (col("n1_risk").cast("double") / col("n_risk").cast("double"))
+          * (lit(1.0) - col("n1_risk").cast("double")
+              / col("n_risk").cast("double"))
+          * (col("n_risk") - col("d_t")).cast("double")
+          / (col("n_risk") - 1).cast("double")
+          * 1000000 + 0.5).cast("long")).otherwise(0L))
+      .agg(count(lit(1)).as("n_times"), sum("d1_t").as("o1"),
+        sum("e_u").as("e1_u"), sum("v_u").as("v_u"))
+      .withColumn("e1", r4(col("e1_u").cast("double") / 1000000.0))
+      .withColumn("z_logrank", when(col("v_u") > 0,
+        r4((col("o1").cast("double")
+            - col("e1_u").cast("double") / 1000000.0)
+          / sqrt(col("v_u").cast("double") / 1000000.0))))
+      .withColumn("chi2", when(col("v_u") > 0,
+        r4((col("o1").cast("double")
+            - col("e1_u").cast("double") / 1000000.0)
+          * (col("o1").cast("double")
+            - col("e1_u").cast("double") / 1000000.0)
+          / (col("v_u").cast("double") / 1000000.0))))
+      .select("n_times", "o1", "e1_u", "e1", "v_u", "z_logrank",
+        "chi2")
+  }
+
+  /** Kaplan-Meier survival over (dur_hr, event) units, log-sum */
+  private[graft] def kaplanMeierCore(pu: DataFrame): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val risk = pu.groupBy("dur_hr")
+      .agg(sum("event").as("d_t"),
+        sum(lit(1L) - col("event")).as("c_t"))
+      .withColumn("n_total",
+        sum(col("d_t") + col("c_t")).over(W.partitionBy()))
+      .withColumn("n_risk", col("n_total")
+        - coalesce(sum(col("d_t") + col("c_t")).over(
+            W.orderBy("dur_hr")
+              .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
+    risk.filter(col("d_t") > 0)
+      .withColumn("term_u", when(col("n_risk") > col("d_t"),
+        floor(log((col("n_risk") - col("d_t")).cast("double")
+          / col("n_risk").cast("double")) * 1000000 + 0.5).cast("long")))
+      .withColumn("zero_flag",
+        max(when(col("n_risk") === col("d_t"), 1).otherwise(0)).over(
+          W.orderBy("dur_hr").rowsBetween(W.unboundedPreceding, 0)))
+      .withColumn("cum_u", sum("term_u").over(
+        W.orderBy("dur_hr").rowsBetween(W.unboundedPreceding, 0)))
+      .withColumn("survival", when(col("zero_flag") === 1, lit(0.0))
+        .otherwise(r4(exp(col("cum_u") / 1000000.0))))
+      .select(col("dur_hr").as("t_hr"), col("n_risk"),
+        col("d_t").as("n_events"), col("c_t").as("n_censored"),
+        col("survival"))
+      .orderBy("t_hr")
+  }
+
+  /** Robust seasonal anomalies of an (hr, cnt) series: centered moving-
+    * average trend (±`trendHalf`), per-phase mean of `period`, and the
+    * residuals whose |dev from median| exceeds `zTenThousandths`/10⁴ MADs.
+    * Shared with `GraftEngine.seasonalAnomaly`.
+    */
+  private[graft] def seasonalAnomalyCore(hourly: DataFrame, period: Int, trendHalf: Int,
+                                         zTenThousandths: Long): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val wT = W.orderBy(col("hr")).rangeBetween(-trendHalf, trendHalf)
+    val det = hourly
+      .withColumn("trend",
+        sum(col("cnt")).over(wT) / count(lit(1)).over(wT))
+      .withColumn("r_u",
+        floor((col("cnt") - col("trend")) * 1000000 + 0.5).cast("long"))
+    val wS = W.partitionBy(col("hr") % period)
+    val resid = det
+      .withColumn("seas",
+        sum(col("r_u")).over(wS) / count(lit(1)).over(wS))
+      .withColumn("r2_u", floor(col("r_u") - col("seas") + 0.5)
+        .cast("long"))
+      .select("hr", "cnt", "r2_u")
+      .ckpt()
+    def rankStat(df: DataFrame, valCol: String): DataFrame =
+      df.withColumn("rn", row_number().over(
+          W.orderBy(col(valCol), col("hr"))))
+        .withColumn("n", count(lit(1)).over(W.partitionBy()))
+        .agg(max(when(col("rn") === expr("(n + 1) DIV 2"), col(valCol)))
+          .as("stat"))
+    val med = rankStat(resid, "r2_u")
+    val withMed = resid.crossJoin(broadcast(med))
+      .withColumn("adev", abs(col("r2_u") - col("stat")))
+    val mad = rankStat(withMed.select(col("hr"), col("adev")), "adev")
+      .withColumnRenamed("stat", "mad_u")
+    // MAD = 0 (over half the grid identical) ⇒ flag nothing rather
+    // than everything-nonzero (stated; mirrored in the oracle).
+    withMed.crossJoin(broadcast(mad))
+      .filter(col("mad_u") > 0 &&
+        col("adev") * 10000 > lit(zTenThousandths) * col("mad_u"))
+      .select(col("hr"), col("cnt"), col("r2_u"),
+        col("stat").as("med_u"), col("mad_u"))
+      .orderBy("hr")
+  }
+
+  /** Daily new vs returning users over (user_id, ts) events.
+    * Shared with `GraftEngine.newReturning`.
+    */
+  private[graft] def newReturningCore(events: DataFrame): DataFrame = {
+    val ud = events
+      .select(col("user_id"), to_date(col("ts")).as("pday")).distinct()
+    val first = ud.groupBy("user_id").agg(min("pday").as("fday"))
+    ud.join(first, "user_id")
+      .groupBy(col("pday"))
+      .agg(count(lit(1)).as("dau"),
+        sum(when(col("pday") === col("fday"), 1L).otherwise(0L))
+          .as("new_users"))
+      .withColumn("returning_users", col("dau") - col("new_users"))
+      .withColumn("new_ratio",
+        r4(col("new_users").cast("double") / col("dau")))
+      .select(col("pday").cast("timestamp").as("day"),
+        col("dau"), col("new_users"), col("returning_users"),
+        col("new_ratio"))
+      .orderBy("day")
+  }
+
+  /** Periodogram amplitude at each of `periods` over an (hr, n) series from
+    * exact micro-unit trig sums. Shared with `GraftEngine.spectralPeak`.
+    */
+  private[graft] def spectralPeakCore(hourly: DataFrame,
+                                      periods: Seq[Int]): DataFrame = {
+    val tot = hourly.agg(sum("n").as("t_total"),
+                         count(lit(1)).as("n_hours"))
+    val dv = hourly.crossJoin(broadcast(tot))
+      .withColumn("dev", col("n") * col("n_hours") - col("t_total"))
+    def basis(t: Int, f: Double => Double): Column =
+      element_at(array(trigU(t, f).map(lit(_)): _*),
+        (col("hr") % t).cast("int") + 1)
+    val aggs = periods.flatMap(t => Seq(
+      sum(col("dev") * basis(t, math.cos)).as(s"sc$t"),
+      sum(col("dev") * basis(t, math.sin)).as(s"ss$t")))
+    val stackArgs =
+      periods.map(t => s"$t, sc$t, ss$t").mkString(", ")
+    dv.agg(aggs.head, (aggs.tail :+ max("n_hours").as("h_cnt")): _*)
+      .select(expr(s"stack(${periods.size}, $stackArgs)" +
+        " AS (period, s_cos, s_sin)"), col("h_cnt"))
+      .withColumn("amplitude", r4(
+        sqrt(col("s_cos").cast("double") * col("s_cos").cast("double")
+          + col("s_sin").cast("double") * col("s_sin").cast("double"))
+        * 2.0 / (col("h_cnt").cast("double")
+          * col("h_cnt").cast("double") * 1000000.0)))
+      .select("period", "s_cos", "s_sin", "amplitude")
+      .orderBy("period")
+  }
+
+  /** Weekly churn over (user_id, ts) events: active users of a week not
+    * active the next. Shared with `GraftEngine.churnWeekly`.
+    */
+  private[graft] def churnWeeklyCore(events: DataFrame): DataFrame = {
+    val uw = events
+      .select(col("user_id"),
+        date_trunc("week", col("ts")).as("wk")).distinct()
+    val nxt = uw.select(col("user_id").as("uid2"),
+      (col("wk") - expr("INTERVAL 7 DAYS")).as("wk2"))
+    uw.join(nxt, col("user_id") === col("uid2") && col("wk") === col("wk2"),
+        "left")
+      .groupBy("wk")
+      .agg(count(lit(1)).as("n_active"),
+        sum(when(col("uid2").isNotNull, 1L).otherwise(0L)).as("n_retained"))
+      .withColumn("n_churned", col("n_active") - col("n_retained"))
+      .withColumn("churn_rate",
+        r4(col("n_churned").cast("double") / col("n_active")))
+      .select(col("wk").as("week"), col("n_active"), col("n_retained"),
+        col("n_churned"), col("churn_rate"))
+      .orderBy("week")
+  }
+
+  /** ISO day-of-week × hour mean events per active day over ts events.
+    * Shared with `GraftEngine.seasonalityHeatmap`.
+    */
+  private[graft] def seasonalityHeatmapCore(events: DataFrame): DataFrame = {
+    val cellDay = events
+      .groupBy(
+        expr("(((dayofweek(ts) + 5) % 7) + 1)").as("iso_dow"),
+        hour(col("ts")).as("hr"),
+        to_date(col("ts")).as("pday"))
+      .agg(count(lit(1)).as("n"))
+    cellDay.groupBy("iso_dow", "hr")
+      .agg(sum("n").as("n_events"), count(lit(1)).as("n_days"))
+      .withColumn("avg_per_day",
+        r4(col("n_events").cast("double") / col("n_days")))
+      .select("iso_dow", "hr", "n_events", "n_days", "avg_per_day")
+      .orderBy("iso_dow", "hr")
+  }
+
   val defs: Map[String, Q] = Map(
     "ts_gap_fill" -> ((s, d) => {
       val daily = TestData.orders(s, d)
@@ -1815,20 +2397,8 @@ object TimeSeries {
     // (cell, date) pre-aggregate so the distinct never sees event
     // grain twice. ISO day-of-week (Mon=1) matches both engines'
     // isodow/dayofweek conventions via explicit expressions.
-    "events_seasonality_heatmap" -> ((s, d) => {
-      val cellDay = TestData.events(s, d)
-        .groupBy(
-          expr("(((dayofweek(ts) + 5) % 7) + 1)").as("iso_dow"),
-          hour(col("ts")).as("hr"),
-          to_date(col("ts")).as("pday"))
-        .agg(count(lit(1)).as("n"))
-      cellDay.groupBy("iso_dow", "hr")
-        .agg(sum("n").as("n_events"), count(lit(1)).as("n_days"))
-        .withColumn("avg_per_day",
-          r4(col("n_events").cast("double") / col("n_days")))
-        .select("iso_dow", "hr", "n_events", "n_days", "avg_per_day")
-        .orderBy("iso_dow", "hr")
-    }),
+    "events_seasonality_heatmap" -> ((s, d) =>
+      seasonalityHeatmapCore(TestData.events(s, d))),
 
     // SEASONAL STRENGTH (round 9): the one-number readout of
     // ts_decompose_seasonal — F_s = max(0, 1 − Var(remainder)/
@@ -2074,49 +2644,10 @@ object TimeSeries {
     // the DOUBLE intermediates are exact), one guarded division per
     // φ. Degenerate guards: den=0 (constant series) and |r1|=1
     // (perfect lag-1 correlation) yield NULLs, not NaNs.
-    "ts_pacf" -> ((s, d) => {
-      val lags = 1 to 3
-      val W = org.apache.spark.sql.expressions.Window.orderBy("hour")
-      val hourly = TestData.events(s, d)
+    "ts_pacf" -> ((s, d) => pacfLags3Core(
+      TestData.events(s, d)
         .groupBy(date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"))
-      val tot = hourly.agg(sum("n").as("t_total"),
-                           count(lit(1)).as("n_hours"))
-      val dv = hourly.crossJoin(broadcast(tot))
-        .withColumn("dev", col("n") * col("n_hours") - col("t_total"))
-      val led = lags.foldLeft(dv) { (df, k) =>
-        df.withColumn(s"l$k", lead("dev", k).over(W))
-      }
-      val M = 1000000L
-      def ru(k: Int) = when(col("den") > 0,
-        floor(col(s"num$k").cast("double") / col("den").cast("double")
-          * M + 0.5).cast("long"))
-      led.agg(sum(col("dev") * col("dev")).as("den"),
-          sum(col("dev") * col("l1")).as("num1"),
-          sum(col("dev") * col("l2")).as("num2"),
-          sum(col("dev") * col("l3")).as("num3"))
-        .withColumn("r1u", ru(1))
-        .withColumn("r2u", ru(2))
-        .withColumn("r3u", ru(3))
-        .withColumn("den22", lit(M * M) - col("r1u") * col("r1u"))
-        .withColumn("p22u", when(col("den22") =!= 0, floor(
-          (col("r2u") * M - col("r1u") * col("r1u")).cast("double")
-            / col("den22").cast("double") * M + 0.5).cast("long")))
-        .withColumn("p21u", floor(col("r1u").cast("double")
-          * (lit(M) - col("p22u")).cast("double") / (M.toDouble) + 0.5)
-          .cast("long"))
-        .withColumn("num33", col("r3u") * M
-          - col("p21u") * col("r2u") - col("p22u") * col("r1u"))
-        .withColumn("den33", lit(M * M)
-          - col("p21u") * col("r1u") - col("p22u") * col("r2u"))
-        .withColumn("pacf1", r4(col("r1u").cast("double") / M.toDouble))
-        .withColumn("pacf2", r4(col("p22u").cast("double") / M.toDouble))
-        .withColumn("pacf3", when(col("den33") =!= 0,
-          r4(col("num33").cast("double") / col("den33").cast("double"))))
-        .select(expr("stack(3, 1, r1u, pacf1, 2, r2u, pacf2, " +
-          "3, r3u, pacf3) AS (lag, acf_micro, pacf)"))
-        .orderBy("lag")
-    }),
+        .agg(count(lit(1)).as("n")))),
 
     // WALD–WOLFOWITZ RUNS TEST (round 10): is the hourly volume
     // series RANDOM around its median, or does it clump (trend /
@@ -2232,46 +2763,11 @@ object TimeSeries {
         .groupBy(expr("unix_micros(ts) DIV 3600000000").as("hr"))
         .agg(count(lit(1)).as("a")))),
 
-    "ts_runs_test" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
-      val hourly = TestData.events(s, d)
+    "ts_runs_test" -> ((s, d) => runsTestCore(
+      TestData.events(s, d)
         .groupBy(expr("unix_micros(ts) DIV 3600000000").as("hr"))
         .agg(count(lit(1)).as("n"))
-        .ckpt()
-      val tot = hourly.agg(count(lit(1)).as("h_cnt"))
-      val med2 = hourly.crossJoin(broadcast(tot))
-        .withColumn("rn",
-          row_number().over(W.orderBy("n", "hr")))
-        .agg(sum(when(col("rn") === expr("(h_cnt + 1) DIV 2"), col("n"))
-            .otherwise(0L)
-          + when(col("rn") === expr("(h_cnt + 2) DIV 2"), col("n"))
-            .otherwise(0L)).as("med2"))
-      val signed = hourly.crossJoin(broadcast(med2))
-        .withColumn("sgn", when(col("n") * 2 > col("med2"), 1)
-          .when(col("n") * 2 < col("med2"), -1).otherwise(0))
-        .filter(col("sgn") =!= 0)
-      signed
-        .withColumn("chg", when(
-          lag("sgn", 1).over(W.orderBy("hr")).isNull
-            || lag("sgn", 1).over(W.orderBy("hr")) =!= col("sgn"), 1L)
-          .otherwise(0L))
-        .agg(sum(when(col("sgn") === 1, 1L).otherwise(0L)).as("n_pos"),
-          sum(when(col("sgn") === -1, 1L).otherwise(0L)).as("n_neg"),
-          sum("chg").as("n_runs"))
-        .withColumn("nn", col("n_pos") + col("n_neg"))
-        .withColumn("p2", col("n_pos") * col("n_neg") * 2)
-        .withColumn("mu", lit(1.0)
-          + col("p2").cast("double") / col("nn").cast("double"))
-        .withColumn("var_r", col("p2").cast("double")
-          * (col("p2") - col("nn")).cast("double")
-          / (col("nn").cast("double") * col("nn").cast("double")
-            * (col("nn") - 1).cast("double")))
-        .withColumn("z_runs", when(
-          col("n_pos") > 0 && col("n_neg") > 0 && col("var_r") > 0,
-          r4((col("n_runs").cast("double") - col("mu"))
-            / sqrt(col("var_r")))))
-        .select("n_pos", "n_neg", "n_runs", "z_runs")
-    }),
+        .ckpt())),
 
     // SPECTRAL PEAK SCAN (round 10): single-frequency periodogram
     // power at the CANDIDATE periods an hourly ops series plausibly
@@ -2291,34 +2787,10 @@ object TimeSeries {
     // Amplitude A = 2·√(sc²+ss²)/(1e6·H·H) is assembled once in
     // doubles (IEEE products of identical exact integers — engine-
     // identical), r4.
-    "ts_spectral_peak" -> ((s, d) => {
-      val periods = Seq(12, 24, 168)
-      val hourly = TestData.events(s, d)
+    "ts_spectral_peak" -> ((s, d) => spectralPeakCore(
+      TestData.events(s, d)
         .groupBy(expr("unix_micros(ts) DIV 3600000000").as("hr"))
-        .agg(count(lit(1)).as("n"))
-      val tot = hourly.agg(sum("n").as("t_total"),
-                           count(lit(1)).as("n_hours"))
-      val dv = hourly.crossJoin(broadcast(tot))
-        .withColumn("dev", col("n") * col("n_hours") - col("t_total"))
-      def basis(t: Int, f: Double => Double): Column =
-        element_at(array(trigU(t, f).map(lit(_)): _*),
-          (col("hr") % t).cast("int") + 1)
-      val aggs = periods.flatMap(t => Seq(
-        sum(col("dev") * basis(t, math.cos)).as(s"sc$t"),
-        sum(col("dev") * basis(t, math.sin)).as(s"ss$t")))
-      val stackArgs =
-        periods.map(t => s"$t, sc$t, ss$t").mkString(", ")
-      dv.agg(aggs.head, (aggs.tail :+ max("n_hours").as("h_cnt")): _*)
-        .select(expr(s"stack(${periods.size}, $stackArgs)" +
-          " AS (period, s_cos, s_sin)"), col("h_cnt"))
-        .withColumn("amplitude", r4(
-          sqrt(col("s_cos").cast("double") * col("s_cos").cast("double")
-            + col("s_sin").cast("double") * col("s_sin").cast("double"))
-          * 2.0 / (col("h_cnt").cast("double")
-            * col("h_cnt").cast("double") * 1000000.0)))
-        .select("period", "s_cos", "s_sin", "amplitude")
-        .orderBy("period")
-    }),
+        .agg(count(lit(1)).as("n")), Seq(12, 24, 168))),
 
     // SPECTRAL ENTROPY (round 16): how CONCENTRATED the series'
     // periodic energy is — one number distinguishing "one strong
@@ -3300,34 +3772,13 @@ object TimeSeries {
           when(col("event_type") === "purchase", 1L).otherwise(0L))
         .select("t", "purch"))),
 
-    "events_ab_odds_ratio" -> ((s, d) =>
+    "events_ab_odds_ratio" -> ((s, d) => oddsRatioCore(
       TestData.events(s, d)
         .withColumn("t",
           (conv(substring(md5(col("user_id").cast("string")), 1, 2),
             16, 10).cast("int") % 2 =!= 0).cast("int"))
         .withColumn("purch",
-          when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .agg(
-          sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
-          sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
-          sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
-          sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
-        .withColumn("a", col("x_t").cast("double") + 0.5)
-        .withColumn("b", (col("n_t") - col("x_t")).cast("double") + 0.5)
-        .withColumn("c2", col("x_c").cast("double") + 0.5)
-        .withColumn("d2", (col("n_c") - col("x_c")).cast("double") + 0.5)
-        .withColumn("or_", col("a") * col("d2") / (col("b") * col("c2")))
-        .withColumn("se", sqrt(lit(1.0) / col("a") + lit(1.0) / col("b")
-          + lit(1.0) / col("c2") + lit(1.0) / col("d2")))
-        .withColumn("ci_lo", r4(exp(log(col("or_"))
-          - lit(1.959964) * col("se"))))
-        .withColumn("ci_hi", r4(exp(log(col("or_"))
-          + lit(1.959964) * col("se"))))
-        .withColumn("odds_ratio", r4(col("or_")))
-        .withColumn("significant_95",
-          col("ci_lo") > 1.0 || col("ci_hi") < 1.0)
-        .select("n_c", "n_t", "x_c", "x_t", "odds_ratio", "ci_lo",
-          "ci_hi", "significant_95")),
+          when(col("event_type") === "purchase", 1L).otherwise(0L)))),
 
     // RELATIVE RISK (round 15): the RATE-ratio effect size next to
     // the odds ratio — "treatment converts at X× the control rate",
@@ -3337,36 +3788,13 @@ object TimeSeries {
     // keeps RR and its Katz log-normal CI defined on zero cells (the
     // Haldane OR precedent — no x/0 guard gymnastics); ONE aggregate
     // → 1-row readout, mirrored IEEE op order, r4.
-    "events_ab_risk_ratio" -> ((s, d) =>
+    "events_ab_risk_ratio" -> ((s, d) => riskRatioCore(
       TestData.events(s, d)
         .withColumn("t",
           (conv(substring(md5(col("user_id").cast("string")), 1, 2),
             16, 10).cast("int") % 2 =!= 0).cast("int"))
         .withColumn("purch",
-          when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .agg(
-          sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
-          sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
-          sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
-          sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
-        .withColumn("rr_", (col("x_t").cast("double") + 0.5)
-          / (col("n_t").cast("double") + 0.5)
-          / ((col("x_c").cast("double") + 0.5)
-            / (col("n_c").cast("double") + 0.5)))
-        .withColumn("se", sqrt(
-          lit(1.0) / (col("x_t").cast("double") + 0.5)
-            - lit(1.0) / (col("n_t").cast("double") + 0.5)
-            + lit(1.0) / (col("x_c").cast("double") + 0.5)
-            - lit(1.0) / (col("n_c").cast("double") + 0.5)))
-        .withColumn("ci_lo", r4(exp(log(col("rr_"))
-          - lit(1.959964) * col("se"))))
-        .withColumn("ci_hi", r4(exp(log(col("rr_"))
-          + lit(1.959964) * col("se"))))
-        .withColumn("risk_ratio", r4(col("rr_")))
-        .withColumn("significant_95",
-          col("ci_lo") > 1.0 || col("ci_hi") < 1.0)
-        .select("n_c", "n_t", "x_c", "x_t", "risk_ratio", "ci_lo",
-          "ci_hi", "significant_95")),
+          when(col("event_type") === "purchase", 1L).otherwise(0L)))),
 
     // COHEN'S H (round 15): the arcsine effect size for two
     // proportions — the sample-size-FREE magnitude the power
@@ -3376,30 +3804,13 @@ object TimeSeries {
     // evaluated on identical IEEE inputs in both engines (the
     // ndcg/log per-row precedent), one mirrored expression, r4;
     // Cohen's 0.2/0.5/0.8 bands on the r4'd |h|; empty arm ⇒ NULL.
-    "events_ab_cohens_h" -> ((s, d) =>
+    "events_ab_cohens_h" -> ((s, d) => cohensHCore(
       TestData.events(s, d)
         .withColumn("t",
           (conv(substring(md5(col("user_id").cast("string")), 1, 2),
             16, 10).cast("int") % 2 =!= 0).cast("int"))
         .withColumn("purch",
-          when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .agg(
-          sum(when(col("t") === 0, 1L).otherwise(0L)).as("n_c"),
-          sum(when(col("t") === 1, 1L).otherwise(0L)).as("n_t"),
-          sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("x_c"),
-          sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("x_t"))
-        .withColumn("h", when(col("n_c") > 0 && col("n_t") > 0,
-          r4(lit(2.0) * asin(sqrt(col("x_t").cast("double")
-              / col("n_t").cast("double")))
-            - lit(2.0) * asin(sqrt(col("x_c").cast("double")
-              / col("n_c").cast("double"))))))
-        .withColumn("magnitude",
-          when(col("h").isNull, lit(null).cast("string"))
-            .when(abs(col("h")) < 0.2, "negligible")
-            .when(abs(col("h")) < 0.5, "small")
-            .when(abs(col("h")) < 0.8, "medium")
-            .otherwise("large"))
-        .select("n_c", "n_t", "x_c", "x_t", "h", "magnitude")),
+          when(col("event_type") === "purchase", 1L).otherwise(0L)))),
 
     // mSPRT ALWAYS-VALID A/B (round 12): the experiment stack was
     // entirely fixed-horizon (z, Welch, MW-U, KS, CUPED, SRM, BH/
@@ -3420,55 +3831,14 @@ object TimeSeries {
     // NULL lnΛ and drop out of the max. Shape: map-side flags → one
     // day-grid aggregate → windows over the ~365-row grid (documented
     // tiny-table tail) → day-grain readout.
-    "events_ab_sequential" -> ((s, d) => {
-      val Wc = org.apache.spark.sql.expressions.Window
-      val wCum = Wc.orderBy("day")
-        .rowsBetween(Wc.unboundedPreceding, Wc.currentRow)
-      val tau2 = 0.0001
+    "events_ab_sequential" -> ((s, d) => msprtSequentialCore(
       TestData.events(s, d)
         .withColumn("t",
           (conv(substring(md5(col("user_id").cast("string")), 1, 2),
             16, 10).cast("int") % 2 =!= 0).cast("int"))
         .withColumn("purch",
           when(col("event_type") === "purchase", 1L).otherwise(0L))
-        .groupBy(expr("unix_micros(ts) DIV 86400000000").as("day"))
-        .agg(
-          sum(when(col("t") === 0, 1L).otherwise(0L)).as("d_nc"),
-          sum(when(col("t") === 1, 1L).otherwise(0L)).as("d_nt"),
-          sum(when(col("t") === 0, col("purch")).otherwise(0L)).as("d_sc"),
-          sum(when(col("t") === 1, col("purch")).otherwise(0L)).as("d_st"))
-        .select(col("day"),
-          sum("d_nc").over(wCum).cast("long").as("n_c"),
-          sum("d_nt").over(wCum).cast("long").as("n_t"),
-          sum("d_sc").over(wCum).cast("long").as("s_c"),
-          sum("d_st").over(wCum).cast("long").as("s_t"))
-        .withColumn("pbar", when(col("n_c") + col("n_t") > 0,
-          (col("s_c") + col("s_t")).cast("double")
-            / (col("n_c") + col("n_t")).cast("double")))
-        .withColumn("theta", when(col("n_c") > 0 && col("n_t") > 0,
-          col("s_t").cast("double") / col("n_t").cast("double")
-            - col("s_c").cast("double") / col("n_c").cast("double")))
-        .withColumn("v", when(col("n_c") > 0 && col("n_t") > 0
-            && col("s_c") + col("s_t") > 0
-            && col("s_c") + col("s_t") < col("n_c") + col("n_t"),
-          col("pbar") * (lit(1.0) - col("pbar"))
-            * (lit(1.0) / col("n_c").cast("double")
-              + lit(1.0) / col("n_t").cast("double"))))
-        .withColumn("llr_u", when(col("v") > 0,
-          floor((lit(0.5) * log(col("v") / (col("v") + lit(tau2)))
-            + col("theta") * col("theta") * lit(tau2)
-              / (lit(2.0) * col("v") * (col("v") + lit(tau2))))
-            * 1000000 + 0.5).cast("long")))
-        .withColumn("mx_u",
-          greatest(coalesce(max("llr_u").over(wCum), lit(0L)), lit(0L)))
-        .withColumn("p_seq_u",
-          floor(exp(-col("mx_u").cast("double") / 1000000.0)
-            * 1000000 + 0.5).cast("long"))
-        .withColumn("significant", col("p_seq_u") < 50000L)
-        .select("day", "n_c", "n_t", "s_c", "s_t", "llr_u",
-          "p_seq_u", "significant")
-        .orderBy("day")
-    }),
+        .groupBy(expr("unix_micros(ts) DIV 86400000000").as("day")), 0.0001)),
 
     // EVENT-TIME LATENESS PROFILE (round 8): how late do events
     // arrive relative to the stream's high-water mark? — the readout
@@ -3588,23 +3958,7 @@ object TimeSeries {
     // user-sharded shuffles, no calendar fanout at all); the per-day
     // rollup is days-sized. At 100 TB the first-seen table is the
     // standing user dimension an incremental pipeline maintains.
-    "events_new_returning" -> ((s, d) => {
-      val ud = TestData.events(s, d)
-        .select(col("user_id"), to_date(col("ts")).as("pday")).distinct()
-      val first = ud.groupBy("user_id").agg(min("pday").as("fday"))
-      ud.join(first, "user_id")
-        .groupBy(col("pday"))
-        .agg(count(lit(1)).as("dau"),
-          sum(when(col("pday") === col("fday"), 1L).otherwise(0L))
-            .as("new_users"))
-        .withColumn("returning_users", col("dau") - col("new_users"))
-        .withColumn("new_ratio",
-          r4(col("new_users").cast("double") / col("dau")))
-        .select(col("pday").cast("timestamp").as("day"),
-          col("dau"), col("new_users"), col("returning_users"),
-          col("new_ratio"))
-        .orderBy("day")
-    }),
+    "events_new_returning" -> ((s, d) => newReturningCore(TestData.events(s, d))),
 
     // WEEKLY CHURN (round 9): per calendar week, actives / retained
     // into the next week / churned, and the churn rate — the
@@ -3615,24 +3969,7 @@ object TimeSeries {
     // calendar fanout; the final rollup is weeks-sized. The last
     // week has no successor week in the data and reports full churn
     // — the standard right-censoring caveat, noted not hidden.
-    "events_churn_weekly" -> ((s, d) => {
-      val uw = TestData.events(s, d)
-        .select(col("user_id"),
-          date_trunc("week", col("ts")).as("wk")).distinct()
-      val nxt = uw.select(col("user_id").as("uid2"),
-        (col("wk") - expr("INTERVAL 7 DAYS")).as("wk2"))
-      uw.join(nxt, col("user_id") === col("uid2") && col("wk") === col("wk2"),
-          "left")
-        .groupBy("wk")
-        .agg(count(lit(1)).as("n_active"),
-          sum(when(col("uid2").isNotNull, 1L).otherwise(0L)).as("n_retained"))
-        .withColumn("n_churned", col("n_active") - col("n_retained"))
-        .withColumn("churn_rate",
-          r4(col("n_churned").cast("double") / col("n_active")))
-        .select(col("wk").as("week"), col("n_active"), col("n_retained"),
-          col("n_churned"), col("churn_rate"))
-        .orderBy("week")
-    }),
+    "events_churn_weekly" -> ((s, d) => churnWeeklyCore(TestData.events(s, d))),
 
     // POWER / MDE READOUT (round 9): the pre-experiment sizing
     // number next to events_ab_significance's post-hoc z — with the
@@ -4257,7 +4594,6 @@ object TimeSeries {
     // the censor branch is exercised by the planted-censoring
     // property in PropertySpec instead.
     "events_survival_km" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val pu = TestData.events(s, d)
         .withColumn("ts_us", unix_micros(col("ts")))
         .groupBy("user_id")
@@ -4270,30 +4606,7 @@ object TimeSeries {
         .withColumn("dur_hr",
           when(col("event") === 1, expr("(tconv - t0) DIV 3600000000"))
             .otherwise(expr("(tlast - t0) DIV 3600000000")))
-      val risk = pu.groupBy("dur_hr")
-        .agg(sum("event").as("d_t"),
-          sum(lit(1L) - col("event")).as("c_t"))
-        .withColumn("n_total",
-          sum(col("d_t") + col("c_t")).over(W.partitionBy()))
-        .withColumn("n_risk", col("n_total")
-          - coalesce(sum(col("d_t") + col("c_t")).over(
-              W.orderBy("dur_hr")
-                .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      risk.filter(col("d_t") > 0)
-        .withColumn("term_u", when(col("n_risk") > col("d_t"),
-          floor(log((col("n_risk") - col("d_t")).cast("double")
-            / col("n_risk").cast("double")) * 1000000 + 0.5).cast("long")))
-        .withColumn("zero_flag",
-          max(when(col("n_risk") === col("d_t"), 1).otherwise(0)).over(
-            W.orderBy("dur_hr").rowsBetween(W.unboundedPreceding, 0)))
-        .withColumn("cum_u", sum("term_u").over(
-          W.orderBy("dur_hr").rowsBetween(W.unboundedPreceding, 0)))
-        .withColumn("survival", when(col("zero_flag") === 1, lit(0.0))
-          .otherwise(r4(exp(col("cum_u") / 1000000.0))))
-        .select(col("dur_hr").as("t_hr"), col("n_risk"),
-          col("d_t").as("n_events"), col("c_t").as("n_censored"),
-          col("survival"))
-        .orderBy("t_hr")
+      kaplanMeierCore(pu)
     }),
 
     // KM GREENWOOD CI (round 15 continuation): the error band the
@@ -4556,7 +4869,6 @@ object TimeSeries {
     // duration grid, micro-nat ln(1−d/n) terms, exact-0 tail flag.
     // Windows stay observation-window-bounded per variant.
     "events_km_variants" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val pu = TestData.events(s, d)
         .withColumn("ts_us", unix_micros(col("ts")))
         .groupBy("user_id")
@@ -4572,32 +4884,7 @@ object TimeSeries {
         .withColumn("variant",
           when(conv(substring(md5(col("user_id").cast("string")), 1, 2),
             16, 10).cast("int") % 2 === 0, "control").otherwise("treatment"))
-      val risk = pu.groupBy("variant", "dur_hr")
-        .agg(sum("event").as("d_t"),
-          sum(lit(1L) - col("event")).as("c_t"))
-        .withColumn("n_total",
-          sum(col("d_t") + col("c_t")).over(W.partitionBy("variant")))
-        .withColumn("n_risk", col("n_total")
-          - coalesce(sum(col("d_t") + col("c_t")).over(
-              W.partitionBy("variant").orderBy("dur_hr")
-                .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      risk.filter(col("d_t") > 0)
-        .withColumn("term_u", when(col("n_risk") > col("d_t"),
-          floor(log((col("n_risk") - col("d_t")).cast("double")
-            / col("n_risk").cast("double")) * 1000000 + 0.5).cast("long")))
-        .withColumn("zero_flag",
-          max(when(col("n_risk") === col("d_t"), 1).otherwise(0)).over(
-            W.partitionBy("variant").orderBy("dur_hr")
-              .rowsBetween(W.unboundedPreceding, 0)))
-        .withColumn("cum_u", sum("term_u").over(
-          W.partitionBy("variant").orderBy("dur_hr")
-            .rowsBetween(W.unboundedPreceding, 0)))
-        .withColumn("survival", when(col("zero_flag") === 1, lit(0.0))
-          .otherwise(r4(exp(col("cum_u") / 1000000.0))))
-        .select(col("variant"), col("dur_hr").as("t_hr"), col("n_risk"),
-          col("d_t").as("n_events"), col("c_t").as("n_censored"),
-          col("survival"))
-        .orderBy("variant", "t_hr")
+      kaplanMeierByCore(pu)
     }),
 
     // LOG-RANK TEST (round 11): "do the two variants' survival
@@ -4617,7 +4904,6 @@ object TimeSeries {
     // all-tied) ⇒ NULL z/chi2 — pinned in ClosedFormProps (single-
     // variant ⇒ O1 = E1 exactly) and DegenerateSpec.
     "events_logrank" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val pu = TestData.events(s, d)
         .withColumn("ts_us", unix_micros(col("ts")))
         .groupBy("user_id")
@@ -4633,44 +4919,7 @@ object TimeSeries {
         .withColumn("g1",
           when(conv(substring(md5(col("user_id").cast("string")), 1, 2),
             16, 10).cast("int") % 2 === 0, 1L).otherwise(0L))
-      val risk = pu.groupBy("dur_hr")
-        .agg(sum(col("event") * col("g1")).as("d1_t"),
-          sum("event").as("d_t"),
-          sum("g1").as("a1_t"),
-          count(lit(1)).as("a_t"))
-        .withColumn("n_risk", sum("a_t").over(W.partitionBy())
-          - coalesce(sum("a_t").over(W.orderBy("dur_hr")
-              .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n1_risk", sum("a1_t").over(W.partitionBy())
-          - coalesce(sum("a1_t").over(W.orderBy("dur_hr")
-              .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      risk.filter(col("d_t") > 0)
-        .withColumn("e_u", floor(col("d_t").cast("double")
-          * col("n1_risk").cast("double") / col("n_risk").cast("double")
-          * 1000000 + 0.5).cast("long"))
-        .withColumn("v_u", when(col("n_risk") > 1,
-          floor(col("d_t").cast("double")
-            * (col("n1_risk").cast("double") / col("n_risk").cast("double"))
-            * (lit(1.0) - col("n1_risk").cast("double")
-                / col("n_risk").cast("double"))
-            * (col("n_risk") - col("d_t")).cast("double")
-            / (col("n_risk") - 1).cast("double")
-            * 1000000 + 0.5).cast("long")).otherwise(0L))
-        .agg(count(lit(1)).as("n_times"), sum("d1_t").as("o1"),
-          sum("e_u").as("e1_u"), sum("v_u").as("v_u"))
-        .withColumn("e1", r4(col("e1_u").cast("double") / 1000000.0))
-        .withColumn("z_logrank", when(col("v_u") > 0,
-          r4((col("o1").cast("double")
-              - col("e1_u").cast("double") / 1000000.0)
-            / sqrt(col("v_u").cast("double") / 1000000.0))))
-        .withColumn("chi2", when(col("v_u") > 0,
-          r4((col("o1").cast("double")
-              - col("e1_u").cast("double") / 1000000.0)
-            * (col("o1").cast("double")
-              - col("e1_u").cast("double") / 1000000.0)
-            / (col("v_u").cast("double") / 1000000.0))))
-        .select("n_times", "o1", "e1_u", "e1", "v_u", "z_logrank",
-          "chi2")
+      logRankCore(pu)
     }),
 
     // COX PROPORTIONAL HAZARDS (round 15, VERDICT r14 missing #1):
@@ -4749,33 +4998,7 @@ object TimeSeries {
           expr("unix_micros(ts) DIV 86400000000 DIV 7").as("wk"))
         .distinct()
         .ckpt()
-      val first = uw.groupBy("user_id").agg(min("wk").as("first_wk"))
-      val prev = uw.select(col("user_id"), (col("wk") + 1).as("wk"),
-        lit(1).as("was_prev"))
-      val counts = uw.join(first, "user_id")
-        .join(prev, Seq("user_id", "wk"), "left")
-        .withColumn("status",
-          when(col("wk") === col("first_wk"), "new")
-            .when(col("was_prev").isNotNull, "retained")
-            .otherwise("resurrected"))
-        .groupBy("wk")
-        .agg(sum(when(col("status") === "new", 1L).otherwise(0L))
-          .as("n_new"),
-          sum(when(col("status") === "retained", 1L).otherwise(0L))
-            .as("n_retained"),
-          sum(when(col("status") === "resurrected", 1L).otherwise(0L))
-            .as("n_resurrected"))
-      val churn = uw.select(col("user_id"), (col("wk") + 1).as("wk"))
-        .join(uw, Seq("user_id", "wk"), "left_anti")
-        .groupBy("wk").agg(count(lit(1)).as("n_churned"))
-      counts.join(churn, Seq("wk"), "left")
-        .withColumn("n_churned", coalesce(col("n_churned"), lit(0L)))
-        .withColumn("quick_ratio", when(col("n_churned") > 0,
-          r4((col("n_new") + col("n_resurrected")).cast("double")
-            / col("n_churned"))))
-        .select("wk", "n_new", "n_retained", "n_resurrected",
-          "n_churned", "quick_ratio")
-        .orderBy("wk")
+      userLifecycleCore(uw)
     }),
 
     // RETENTION HALF-LIFE (round 10): fit ln(retention_k) ~ ln(k)
@@ -4943,34 +5166,13 @@ object TimeSeries {
     // mirrored IEEE order, r4. Full 24-hour windows with both
     // variances positive only — else NULL (constant series have no
     // correlation). Bounds: 24·Σxy ≤ 24²·cnt² < 2^63 for cnt < 4e9/h.
-    "ts_rolling_corr" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
-        .orderBy("hr").rangeBetween(-23, 0)
+    "ts_rolling_corr" -> ((s, d) => rollingCorrCore(
       TestData.events(s, d)
         .groupBy(expr("unix_micros(ts) DIV 3600000000").as("hr"))
         .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
             .as("x"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("y"))
-        .withColumn("n_win", count(lit(1)).over(W))
-        .withColumn("sx", sum("x").over(W))
-        .withColumn("sy", sum("y").over(W))
-        .withColumn("sxx", sum(col("x") * col("x")).over(W))
-        .withColumn("syy", sum(col("y") * col("y")).over(W))
-        .withColumn("sxy", sum(col("x") * col("y")).over(W))
-        .withColumn("num",
-          col("n_win") * col("sxy") - col("sx") * col("sy"))
-        .withColumn("dx",
-          col("n_win") * col("sxx") - col("sx") * col("sx"))
-        .withColumn("dy",
-          col("n_win") * col("syy") - col("sy") * col("sy"))
-        .withColumn("r_corr", when(
-          col("n_win") === 24 && col("dx") > 0 && col("dy") > 0,
-          r4(col("num").cast("double")
-            / sqrt(col("dx").cast("double") * col("dy").cast("double")))))
-        .select("hr", "x", "y", "n_win", "r_corr")
-        .orderBy("hr")
-    }),
+            .as("y")), 24)),
 
     // SES ONE-STEP BACKTEST (round 11): the smoothed companion to
     // ts_snaive_smape — simple exponential smoothing at α = 1/2,
@@ -5052,35 +5254,11 @@ object TimeSeries {
     }),
 
     "ts_ses_backtest" -> ((s, d) => {
-      import s.implicits._
       val hourly = TestData.events(s, d)
         .groupBy(expr("unix_micros(ts) DIV 3600000000").as("hr"))
         .agg(count(lit(1)).as("cnt"))
         .ckpt() // consumed twice: tap fan-out + actuals
-      val weights = Seq((1, 64L), (2, 32L), (3, 16L), (4, 8L),
-        (5, 4L), (6, 2L), (7, 1L), (8, 1L)).toDF("tap", "w128")
-      val fc = hourly.crossJoin(broadcast(weights))
-        .select((col("hr") + col("tap")).as("hr"),
-          (col("cnt") * col("w128")).as("c128"))
-        .groupBy("hr")
-        .agg(sum("c128").as("fc128"), count(lit(1)).as("n_taps"))
-        .filter(col("n_taps") === 8)
-      hourly.join(fc, "hr")
-        .withColumn("y128", col("cnt") * 128)
-        .withColumn("term_u", floor(lit(2.0)
-          * abs(col("y128") - col("fc128")).cast("double")
-          / (col("y128") + col("fc128")).cast("double")
-          * 1000000 + 0.5).cast("long"))
-        .agg(count(lit(1)).as("n_scored"),
-          sum(abs(col("y128") - col("fc128"))).as("abs_err128_sum"),
-          sum("term_u").as("smape_sum_u"))
-        .withColumn("mae", when(col("n_scored") > 0,
-          r4(col("abs_err128_sum").cast("double") / 128.0
-            / col("n_scored").cast("double"))))
-        .withColumn("smape", when(col("n_scored") > 0,
-          r4(col("smape_sum_u").cast("double")
-            / col("n_scored").cast("double") / 1000000.0)))
-        .select("n_scored", "abs_err128_sum", "mae", "smape")
+      sesBacktestCore(hourly)
     }),
 
     // HOLT (LEVEL+TREND) ONE-STEP BACKTEST (round 12): the r11
@@ -5101,39 +5279,11 @@ object TimeSeries {
     // at the definition site). Taps-equal-recursion, sum-to-1 and
     // beats-snaive-on-trend pinned in ClosedFormProps.
     "ts_holt_backtest" -> ((s, d) => {
-      import s.implicits._
       val hourly = TestData.events(s, d)
         .groupBy(expr("unix_micros(ts) DIV 3600000000").as("hr"))
         .agg(count(lit(1)).as("cnt"))
         .ckpt() // consumed twice: tap fan-out + actuals
-      val weights = Seq((1, 3145728L), (2, 1835008L), (3, 720896L),
-        (4, -16384L), (5, -380928L), (6, -467968L), (7, -394496L),
-        (8, -259136L), (9, -126672L), (10, -28772L), (11, 27371L),
-        (12, 139657L)).toDF("tap", "w4m")
-      val fc = hourly.crossJoin(broadcast(weights))
-        .select((col("hr") + col("tap")).as("hr"),
-          (col("cnt") * col("w4m")).as("c4m"))
-        .groupBy("hr")
-        .agg(sum("c4m").as("fc4m"), count(lit(1)).as("n_taps"))
-        .filter(col("n_taps") === 12)
-      hourly.join(fc, "hr")
-        .withColumn("y4m", col("cnt") * 4194304L)
-        .withColumn("term_u", when(
-          abs(col("y4m")) + abs(col("fc4m")) > 0,
-          floor(lit(2.0)
-            * abs(col("y4m") - col("fc4m")).cast("double")
-            / (abs(col("y4m")) + abs(col("fc4m"))).cast("double")
-            * 1000000 + 0.5).cast("long")).otherwise(0L))
-        .agg(count(lit(1)).as("n_scored"),
-          sum(abs(col("y4m") - col("fc4m"))).as("abs_err4m_sum"),
-          sum("term_u").as("smape_sum_u"))
-        .withColumn("mae", when(col("n_scored") > 0,
-          r4(col("abs_err4m_sum").cast("double") / 4194304.0
-            / col("n_scored").cast("double"))))
-        .withColumn("smape", when(col("n_scored") > 0,
-          r4(col("smape_sum_u").cast("double")
-            / col("n_scored").cast("double") / 1000000.0)))
-        .select("n_scored", "abs_err4m_sum", "mae", "smape")
+      holtBacktestCore(hourly)
     }),
 
     // HOLT-WINTERS (LEVEL+TREND+SEASONAL) ONE-STEP BACKTEST (round
@@ -5369,45 +5519,10 @@ object TimeSeries {
     // (|r−med|·10⁴ > 44478·MAD — no float boundary); median/MAD via
     // the rank convention with (value, hr) stable tie-break, over
     // the TIME-sized grid (the decompose single-task contract).
-    "ts_seasonal_anomaly" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
-      val hourly = TestData.events(s, d)
+    "ts_seasonal_anomaly" -> ((s, d) => seasonalAnomalyCore(
+      TestData.events(s, d)
         .groupBy(expr("unix_micros(ts) DIV 3600000000").as("hr"))
-        .agg(count(lit(1)).as("cnt"))
-      val wT = W.orderBy(col("hr")).rangeBetween(-12, 12)
-      val det = hourly
-        .withColumn("trend",
-          sum(col("cnt")).over(wT) / count(lit(1)).over(wT))
-        .withColumn("r_u",
-          floor((col("cnt") - col("trend")) * 1000000 + 0.5).cast("long"))
-      val wS = W.partitionBy(col("hr") % 24)
-      val resid = det
-        .withColumn("seas",
-          sum(col("r_u")).over(wS) / count(lit(1)).over(wS))
-        .withColumn("r2_u", floor(col("r_u") - col("seas") + 0.5)
-          .cast("long"))
-        .select("hr", "cnt", "r2_u")
-        .ckpt()
-      def rankStat(df: DataFrame, valCol: String): DataFrame =
-        df.withColumn("rn", row_number().over(
-            W.orderBy(col(valCol), col("hr"))))
-          .withColumn("n", count(lit(1)).over(W.partitionBy()))
-          .agg(max(when(col("rn") === expr("(n + 1) DIV 2"), col(valCol)))
-            .as("stat"))
-      val med = rankStat(resid, "r2_u")
-      val withMed = resid.crossJoin(broadcast(med))
-        .withColumn("adev", abs(col("r2_u") - col("stat")))
-      val mad = rankStat(withMed.select(col("hr"), col("adev")), "adev")
-        .withColumnRenamed("stat", "mad_u")
-      // MAD = 0 (over half the grid identical) ⇒ flag nothing rather
-      // than everything-nonzero (stated; mirrored in the oracle).
-      withMed.crossJoin(broadcast(mad))
-        .filter(col("mad_u") > 0 &&
-          col("adev") * 10000 > lit(44478L) * col("mad_u"))
-        .select(col("hr"), col("cnt"), col("r2_u"),
-          col("stat").as("med_u"), col("mad_u"))
-        .orderBy("hr")
-    }),
+        .agg(count(lit(1)).as("cnt")), 24, 12, 44478L)),
 
     // TRANSITION ENTROPY (round 10): per from-state, the Shannon
     // entropy of the next-event distribution — the sequence-

@@ -125,6 +125,73 @@ object Vectors {
         "energy")
   }
 
+  /** Top-`k` diagonal-Mahalanobis outliers over (vec_id, embedding) rows,
+    * milli-quantized per-dimension moments. Shared with
+    * `GraftEngine.mahalanobisOutliers`.
+    */
+  private[graft] def mahalanobisOutliersCore(vectors: DataFrame,
+                                             k: Int): DataFrame = {
+    val dims = vectors
+      .select(col("vec_id"),
+        posexplode(col("embedding")).as(Seq("dim", "x")))
+      .withColumn("x_m",
+        floor(col("x").cast("double") * 1000 + 0.5).cast("long"))
+    val stats = dims.groupBy("dim")
+      .agg(count(lit(1)).as("n"), sum("x_m").as("sx"),
+        sum(col("x_m") * col("x_m")).as("sxx"))
+      .withColumn("mean_m", col("sx").cast("double") / col("n"))
+      .withColumn("var_m",
+        (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
+          / (col("n") * (col("n") - 1)).cast("double"))
+      .filter(col("var_m") > 0)
+      .select("dim", "mean_m", "var_m")
+    val scored = dims.join(broadcast(stats), "dim")
+      .withColumn("term_u", floor(
+        (col("x_m").cast("double") - col("mean_m"))
+          * (col("x_m").cast("double") - col("mean_m")) / col("var_m")
+          * 1000000 + 0.5).cast("long"))
+      .groupBy("vec_id")
+      .agg(sum("term_u").as("score_u"))
+      .orderBy(col("score_u").desc, col("vec_id"))
+      .limit(k)
+    scored
+      .withColumn("rk", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .orderBy(col("score_u").desc, col("vec_id"))))
+      .withColumn("score", r4(col("score_u") / 1000000.0))
+      .select("rk", "vec_id", "score_u", "score")
+      .orderBy("rk")
+  }
+
+  /** Simplified silhouette of every (vec_id, embedding) row against its
+    * nearest (cid, cv) centroid and the runner-up. Shared with
+    * `GraftEngine.centroidSilhouette`.
+    */
+  private[graft] def centroidSilhouetteCore(vecs: DataFrame,
+                                            cents: DataFrame): DataFrame = {
+    val dists = vecs.select(col("vec_id"), col("embedding"))
+      .crossJoin(broadcast(cents))
+      .withColumn("d_u",
+        floor(sqrt(V.sqDist(col("embedding"), col("cv"))) * 1000000
+          + 0.5).cast("long"))
+      .select("vec_id", "cid", "d_u")
+      .ckpt()
+    val own = dists.groupBy("vec_id")
+      .agg(min(struct(col("d_u"), col("cid"))).as("m"))
+      .select(col("vec_id"), col("m.cid").as("cluster"),
+        col("m.d_u").as("a_u"))
+    dists.join(own, "vec_id")
+      .filter(col("cid") =!= col("cluster"))
+      .groupBy("vec_id", "cluster", "a_u")
+      .agg(min("d_u").as("b_u"))
+      .withColumn("sil", when(greatest(col("a_u"), col("b_u")) > 0,
+        r4((col("b_u") - col("a_u")).cast("double")
+          / greatest(col("a_u"), col("b_u")).cast("double")))
+        .otherwise(lit(0.0)))
+      .select("vec_id", "cluster", "a_u", "b_u", "sil")
+      .orderBy("vec_id")
+  }
+
   val defs: Map[String, Q] = Map(
     "vec_l2_norm" -> ((s, d) =>
       TestData.embeddings(s, d)
@@ -661,38 +728,8 @@ object Vectors {
     // micro-quantized before the per-vector sum. Top-20 via global
     // sort+limit (TakeOrderedAndProject — never a corpus-grain rank
     // window); the dims-stats table is a dims-sized broadcast.
-    "vec_mahalanobis_outlier" -> ((s, d) => {
-      val dims = TestData.embeddings(s, d)
-        .select(col("vec_id"),
-          posexplode(col("embedding")).as(Seq("dim", "x")))
-        .withColumn("x_m",
-          floor(col("x").cast("double") * 1000 + 0.5).cast("long"))
-      val stats = dims.groupBy("dim")
-        .agg(count(lit(1)).as("n"), sum("x_m").as("sx"),
-          sum(col("x_m") * col("x_m")).as("sxx"))
-        .withColumn("mean_m", col("sx").cast("double") / col("n"))
-        .withColumn("var_m",
-          (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-            / (col("n") * (col("n") - 1)).cast("double"))
-        .filter(col("var_m") > 0)
-        .select("dim", "mean_m", "var_m")
-      val scored = dims.join(broadcast(stats), "dim")
-        .withColumn("term_u", floor(
-          (col("x_m").cast("double") - col("mean_m"))
-            * (col("x_m").cast("double") - col("mean_m")) / col("var_m")
-            * 1000000 + 0.5).cast("long"))
-        .groupBy("vec_id")
-        .agg(sum("term_u").as("score_u"))
-        .orderBy(col("score_u").desc, col("vec_id"))
-        .limit(20)
-      scored
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("score_u").desc, col("vec_id"))))
-        .withColumn("score", r4(col("score_u") / 1000000.0))
-        .select("rk", "vec_id", "score_u", "score")
-        .orderBy("rk")
-    }),
+    "vec_mahalanobis_outlier" -> ((s, d) =>
+      mahalanobisOutliersCore(TestData.embeddings(s, d), 20)),
 
     // CENTROID SILHOUETTE (round 10): the simplified (centroid-
     // based) silhouette per vector — a = distance to own centroid,
@@ -708,27 +745,7 @@ object Vectors {
     // wider than the corpus-grain groupBy.
     "ann_centroid_silhouette" -> ((s, d) => {
       val e = TestData.embeddings(s, d)
-      val dists = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(fixedCentroids(e)))
-        .withColumn("d_u",
-          floor(sqrt(V.sqDist(col("embedding"), col("cv"))) * 1000000
-            + 0.5).cast("long"))
-        .select("vec_id", "cid", "d_u")
-        .ckpt()
-      val own = dists.groupBy("vec_id")
-        .agg(min(struct(col("d_u"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("m.cid").as("cluster"),
-          col("m.d_u").as("a_u"))
-      dists.join(own, "vec_id")
-        .filter(col("cid") =!= col("cluster"))
-        .groupBy("vec_id", "cluster", "a_u")
-        .agg(min("d_u").as("b_u"))
-        .withColumn("sil", when(greatest(col("a_u"), col("b_u")) > 0,
-          r4((col("b_u") - col("a_u")).cast("double")
-            / greatest(col("a_u"), col("b_u")).cast("double")))
-          .otherwise(lit(0.0)))
-        .select("vec_id", "cluster", "a_u", "b_u", "sil")
-        .orderBy("vec_id")
+      centroidSilhouetteCore(e, fixedCentroids(e))
     })
   )
 

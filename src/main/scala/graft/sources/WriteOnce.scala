@@ -63,11 +63,38 @@ object WriteOnce {
 
   /** The per-input sink `name` for `table` of `sfDir`, written by
     * `write(dir)` unless a committed write for the same input exists;
-    * returns its path.
+    * returns its path. A rewrite also deletes the sinks it supersedes:
+    * each sibling `name_<8 hex>` whose `_GRAFT_TAG` names the same
+    * fixture file with another size or mtime (a regenerated fixture).
+    * Siblings of other fixture files — other scale factors — stay.
     */
   def sink(name: String, sfDir: String, table: String)(write: String => Unit): String = {
     val dir = path(name, sfDir, table)
-    ensure(dir, inputTag(sfDir, table))(write(dir))
+    val tag = inputTag(sfDir, table)
+    ensure(dir, tag) {
+      write(dir)
+      val sibling = s"\\Q${name}_\\E[0-9a-f]{8}"
+      for {
+        d <- Option(new File(root).listFiles()).toSeq.flatten
+        if d.getName.matches(sibling) && d.getName != new File(dir).getName
+        marker = new File(d, "_GRAFT_TAG") if marker.isFile
+        old = new String(Files.readAllBytes(marker.toPath), UTF_8)
+        if old != tag && fixtureFile(old) == fixtureFile(tag)
+      } delete(d.toPath)
+    }
+  }
+
+  /** The fixture file an input tag names: the tag up to its last two
+    * `:` fields (size and mtime); the path itself may hold `:`.
+    */
+  private def fixtureFile(tag: String): String =
+    tag.substring(0, math.max(tag.lastIndexOf(':', tag.lastIndexOf(':') - 1), 0))
+
+  private def delete(dir: java.nio.file.Path): Unit = {
+    val paths = Files.walk(dir)
+    try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    finally paths.close()
   }
 
   /** Run `write` unless `path` holds a committed write (`_SUCCESS`)

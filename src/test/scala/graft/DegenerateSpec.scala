@@ -456,6 +456,14 @@ class DegenerateSpec extends SparkSpec {
     assertClean(engine.permutationTest(
       fr((1L to 6L).map(i => (i, i % 2, 5L))), "id", "arm", "v"),
       "perm/constant")
+    // An arm label outside 0/1 joins neither arm (the
+    // agg_permutation_pvalue rule t === 1): no treated units, NULL diff.
+    val offLabel = engine.permutationTest(
+      fr((1L to 6L).map(i => (i, 2L * (i % 2), i))), "id", "arm", "v")
+    assertClean(offLabel, "perm/off-label-arm")
+    val r = offLabel.collect().head
+    assert(r.getAs[Long]("n0") == 3L && r.getAs[Long]("n1") == 0L &&
+      r.isNullAt(r.fieldIndex("diff_obs")))
   }
 
   test("rrEstimate survives empty / single-user / all-true frames") {
@@ -512,6 +520,12 @@ class DegenerateSpec extends SparkSpec {
       assertClean(engine.msprtSequential(f, "day", "t", "s"),
         s"msprt/$n")
     }
+    // An arm label outside 0/1 joins neither arm (the events_ab_sequential
+    // rule t === 1), so a 0/2-labelled frame has no treatment looks.
+    val offLabel = engine.msprtSequential(
+      fr((1L to 6L).map(d => (d, 2L * (d % 2), 1L))), "day", "t", "s")
+    assertClean(offLabel, "msprt/off-label-arm")
+    assert(offLabel.collect().map(_.getAs[Long]("n_t")).toSeq == Seq.fill(6)(0L))
   }
 
   test("oddsRatio survives empty / one-armed / all-success frames") {

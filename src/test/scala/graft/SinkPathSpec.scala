@@ -3,7 +3,6 @@ package graft
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Every sink lives under `WriteOnce.root`, the checkout's own
@@ -13,7 +12,7 @@ import scala.jdk.CollectionConverters._
   * checkout's files. `Bench.scala` is exempt: the benchmark harness
   * keeps its report path as it is.
   */
-class SinkPathSpec extends AnyFunSuite {
+class SinkPathSpec extends SparkSpec {
 
   private val checkout = new File(".").getCanonicalPath
 
@@ -38,5 +37,36 @@ class SinkPathSpec extends AnyFunSuite {
     assert(WriteOnce.path("x") == s"$root/x")
     val perInput = WriteOnce.path("x", new File(checkout, "no_such_sf").getPath, "t")
     assert(perInput.matches(s"\\Q$root\\E/x_[0-9a-f]{8}"), perInput)
+  }
+
+  test("a rewritten sink deletes the sink it supersedes, not another sfDir's") {
+    import graft.sources.WriteOnce
+    withTempDir("writeonce") { tmp =>
+      val sfs = Seq("sfA", "sfB").map { n =>
+        val sf = new File(tmp, n)
+        assert(sf.mkdirs())
+        Files.write(new File(sf, "t.parquet").toPath, n.getBytes(UTF_8))
+        sf.getPath
+      }
+      val name = s"writeonce_spec_${System.nanoTime}"
+      def write(dir: String): Unit = {
+        assert(new File(dir).mkdirs() || new File(dir).isDirectory)
+        assert(new File(dir, "_SUCCESS").createNewFile() || new File(dir, "_SUCCESS").isFile)
+      }
+      try {
+        val other = WriteOnce.sink(name, sfs(1), "t")(write)
+        val before = WriteOnce.sink(name, sfs(0), "t")(write)
+        val fixture = new File(sfs(0), "t.parquet")
+        assert(fixture.setLastModified(fixture.lastModified() - 60000L))
+        val after = WriteOnce.sink(name, sfs(0), "t")(write)
+        assert(after != before, "a re-stamped fixture gets a new sink")
+        assert(!new File(before).exists(), s"superseded sink left behind: $before")
+        assert(new File(after, "_SUCCESS").isFile)
+        assert(new File(other, "_SUCCESS").isFile, s"another sfDir's sink was deleted: $other")
+      } finally {
+        new File(WriteOnce.root).listFiles().filter(_.getName.startsWith(name))
+          .foreach { d => d.listFiles().foreach(_.delete()); d.delete() }
+      }
+    }
   }
 }

@@ -1942,36 +1942,12 @@ class GraftEngine(val spark: SparkSession) {
     * Bound: 4n³ < 2^63 per group (n ≲ 1.3e6).
     */
   def spearmanRho(df: DataFrame, groupCol: String, xCol: String,
-                  yCol: String): DataFrame = {
-    val li = df.select(col(groupCol).as("g"), col(xCol).as("qx"),
-      col(yCol).as("qy"))
-    val cells = li.groupBy("g", "qx", "qy").agg(count(lit(1)).as("c"))
-      .ckpt()
-    def marginalRank(valCol: String): DataFrame = {
-      val w = Window.partitionBy("g").orderBy(valCol)
-      cells.groupBy("g", valCol).agg(sum("c").as("cm"))
-        .withColumn("cum_lt", coalesce(sum("cm").over(
-          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n", sum("cm").over(Window.partitionBy("g")))
-        .withColumn(s"d_$valCol",
-          lit(2L) * col("cum_lt") + col("cm") + 1 - (col("n") + 1))
-        .select(col("g"), col(valCol), col(s"d_$valCol"))
-    }
-    cells
-      .join(marginalRank("qx"), Seq("g", "qx"))
-      .join(marginalRank("qy"), Seq("g", "qy"))
-      .groupBy("g")
-      .agg(sum("c").as("n"),
-        sum(col("c") * col("d_qx") * col("d_qy")).as("sxy"),
-        sum(col("c") * col("d_qx") * col("d_qx")).as("sxx"),
-        sum(col("c") * col("d_qy") * col("d_qy")).as("syy"))
-      .withColumn("rho", when(col("sxx") > 0 && col("syy") > 0,
-        TestData.r4(col("sxy").cast("double")
-          / sqrt(col("sxx").cast("double") * col("syy").cast("double")))))
-      .select(col("g").as(groupCol), col("n"), col("sxy"), col("sxx"),
+                  yCol: String): DataFrame =
+    graft.operators.Stats.spearmanCore(df.select(col(groupCol).as("flag"),
+        col(xCol).as("qx"), col(yCol).as("qy")))
+      .select(col("flag").as(groupCol), col("n"), col("sxy"), col("sxx"),
         col("syy"), col("rho"))
       .orderBy(groupCol)
-  }
 
   /** Spearman ρ with its Fisher-z 95 % CI per group (see
     * `agg_spearman_ci`): z = atanh(ρ) ± 1.96/√(n−3), tanh expressed

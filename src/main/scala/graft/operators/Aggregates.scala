@@ -538,21 +538,9 @@ object Aggregates {
     // cut table broadcasts back onto the line stream; two passes
     // over the group, both map-side-combinable aggregates.
     "agg_winsorized_mean" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
-      val w = W.partitionBy("l_returnflag")
-        .orderBy("cents", "l_orderkey", "l_linenumber")
-      val li = TestData.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"))
-      val cuts = li
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(W.partitionBy("l_returnflag")))
-        .groupBy("l_returnflag")
-        .agg(max("n").as("n_rows"),
-          max(when(col("rn") === expr("(n + 1) DIV 20"), col("cents")))
-            .as("p05_cents"),
-          max(when(col("rn") === expr("(19 * (n + 1)) DIV 20"), col("cents")))
-            .as("p95_cents"))
+      val li = Stats.flagCents(s, d)
+      val cuts = Stats.flagCentsCuts(li, "(n + 1) DIV 20", "p05_cents",
+        "(19 * (n + 1)) DIV 20", "p95_cents")
       li.join(broadcast(cuts), "l_returnflag")
         .withColumn("clamped",
           greatest(col("p05_cents"), least(col("p95_cents"), col("cents"))))

@@ -30,6 +30,73 @@ import graft.sources.IndexStore
 object AnnSearch {
   type Q = (SparkSession, String) => DataFrame
 
+  /** The edges an HNSW index update writes: the 3-NN [[probedLink]]
+    * of the layer-0 vectors `q0` over the layer-0 corpus `c0` and of
+    * the layer-1 vectors `q1` over `c1`, ranked per (layer, src) by
+    * descending cosine: (layer, src, rnk, nn, cos).
+    */
+  private def hnswRelink(q0: DataFrame, c0: DataFrame, q1: DataFrame,
+                         c1: DataFrame, cents: DataFrame): DataFrame = {
+    val wE = Window.partitionBy("layer", "src")
+      .orderBy(col("score").desc, col("nn"))
+    probedLink(q0, c0, cents, 3).withColumn("layer", lit(0L))
+      .union(probedLink(q1, c1, cents, 3)
+        .withColumn("layer", lit(1L)))
+      .withColumn("rnk", row_number().over(wE))
+      .select(col("layer"), col("src"), col("rnk"), col("nn"),
+        col("score").as("cos"))
+      .orderBy("layer", "src", "rnk")
+  }
+
+  /** Exact top-5 cosine neighbours (qid, nn_id) of the five query
+    * vectors vec_id < 5 over the corpus `e`, self excluded, ties by
+    * vec_id: the truth side of the IVF quality keys.
+    */
+  private def exactCosineTop5(e: DataFrame): DataFrame = {
+    val queries = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
+    e.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("score", V.cosine(col("embedding"), col("qv")))
+      .withColumn("rnk", row_number().over(wTop))
+      .filter(col("rnk") <= 5)
+      .select(col("qid"), col("vec_id").as("nn_id"))
+  }
+
+  /** Brute-force truth of the ANN evaluation keys: the 10 corpus
+    * vectors (qid, cid) first under `order` (over the corpus vector
+    * `cv` and the query vector `qv`) for every query of `queries`
+    * (qid, qv), self excluded, ties by cid. Checkpointed: each key
+    * joins it per arm and counts it once.
+    */
+  private[graft] def exactTop10(e: DataFrame, queries: DataFrame,
+                                order: Column): DataFrame =
+    e.select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      .crossJoin(broadcast(queries))
+      .filter(col("cid") =!= col("qid"))
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("qid").orderBy(order, col("cid"))))
+      .filter(col("rnk") <= 10)
+      .select("qid", "cid")
+      .ckpt() // per-arm hit joins + the truth count
+
+  /** Per arm of `arms` (keyed by column `arm`): n_truth, the number
+    * of `approx` (arm, qid, cid) rows that are in the truth `exact`
+    * (n_hits, 0 when none), and their ratio named `recall`.
+    */
+  private[graft] def armRecall(arms: DataFrame, arm: String, approx: DataFrame,
+                               exact: DataFrame, recall: String): DataFrame = {
+    val truth = exact.agg(count(lit(1)).as("n_truth"))
+    val hits = approx.join(exact, Seq("qid", "cid"))
+      .groupBy(arm).agg(count(lit(1)).as("n_hits"))
+    arms.join(hits, Seq(arm), "left")
+      .crossJoin(broadcast(truth))
+      .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
+      .withColumn(recall, when(col("n_truth") > 0,
+        r4(col("n_hits").cast("double") / col("n_truth").cast("double"))))
+  }
+
   /** IVF-probed top-5 per query (qid, rnk, nn_id, score): corpus
     * assigned to the 4 fixed centroids, each of the 5 fixture queries
     * probes its 2 nearest centroid partitions. Shared by
@@ -177,7 +244,7 @@ object AnnSearch {
     * fixture, key family). Each packs only the frames its key reads, so
     * `ann_graph_topk` never builds HNSW layers. The broadcasts live as
     * long as the session; freeing them belongs to the explicit
-    * `release()` of ROADMAP item 3.
+    * `release()` of ROADMAP item 6.
     */
   private val descentMemo = new graft.SessionMemo[Broadcast[BeamDescent.Graph]]
 
@@ -312,25 +379,9 @@ object AnnSearch {
             .orderBy(r4(V.cosine(col("cv"), col("qv"))).desc, col("cid"))))
         .filter(col("rnk") <= 10)
         .select("dim", "qid", "cid")
-      val brute = e.select(col("vec_id").as("cid"),
-          col("embedding").as("cv"))
-        .crossJoin(broadcast(queries))
-        .filter(col("cid") =!= col("qid"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("qid")
-            .orderBy(r4(V.cosine(col("cv"), col("qv"))).desc, col("cid"))))
-        .filter(col("rnk") <= 10)
-        .select("qid", "cid")
-        .ckpt() // per-dim hit joins + the truth count
-      val truth = brute.agg(count(lit(1)).as("n_truth"))
-      val hits = top.join(brute, Seq("qid", "cid"))
-        .groupBy("dim").agg(count(lit(1)).as("n_hits"))
-      Seq(8, 16, 32).toDF("dim")
-        .join(hits, Seq("dim"), "left")
-        .crossJoin(broadcast(truth))
-        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-        .withColumn("recall", when(col("n_truth") > 0,
-          r4(col("n_hits").cast("double") / col("n_truth").cast("double"))))
+      val brute = exactTop10(e, queries,
+        r4(V.cosine(col("cv"), col("qv"))).desc)
+      armRecall(Seq(8, 16, 32).toDF("dim"), "dim", top, brute, "recall")
         .select("dim", "n_truth", "n_hits", "recall")
         .orderBy("dim")
     }),
@@ -388,30 +439,13 @@ object AnnSearch {
           Window.partitionBy("setting", "qid")
             .orderBy(r4(col("cos")).desc, col("cid"))))
         .filter(col("rnk") <= 10)
-      val brute = e.select(col("vec_id").as("cid"),
-          col("embedding").as("cv"))
-        .crossJoin(broadcast(queries.select(col("qid"), col("qv"))))
-        .filter(col("cid") =!= col("qid"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("qid")
-            .orderBy(r4(V.cosine(col("cv"), col("qv"))).desc, col("cid"))))
-        .filter(col("rnk") <= 10)
-        .select("qid", "cid")
-        .ckpt() // joined per setting + the truth count
-      val truth = brute.agg(count(lit(1)).as("n_truth"))
-      val settings = Seq("p1", "p7").toDF("setting")
+      val brute = exactTop10(e, queries.select(col("qid"), col("qv")),
+        r4(V.cosine(col("cv"), col("qv"))).desc)
       val cands = scored.groupBy("setting")
         .agg(count(lit(1)).as("n_candidates"))
-      val hits = top.join(brute, Seq("qid", "cid"))
-        .groupBy("setting").agg(count(lit(1)).as("n_hits"))
-      settings
-        .join(cands, Seq("setting"), "left")
-        .join(hits, Seq("setting"), "left")
-        .crossJoin(broadcast(truth))
+      armRecall(Seq("p1", "p7").toDF("setting")
+          .join(cands, Seq("setting"), "left"), "setting", top, brute, "recall")
         .withColumn("n_candidates", coalesce(col("n_candidates"), lit(0L)))
-        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-        .withColumn("recall", when(col("n_truth") > 0,
-          r4(col("n_hits").cast("double") / col("n_truth").cast("double"))))
         .select("setting", "n_truth", "n_candidates", "n_hits", "recall")
         .orderBy("setting")
     }),
@@ -504,15 +538,7 @@ object AnnSearch {
     // two scans + a 25-row join at any corpus size.
     "ann_recall_eval" -> ((s, d) => {
       val e = TestData.embeddings(s, d)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-      val brute = e.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("score", V.cosine(col("embedding"), col("qv")))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 5)
-        .select(col("qid"), col("vec_id").as("nn_id"))
+      val brute = exactCosineTop5(e)
       val ivf = ivfTop5(e).select(col("qid").as("iqid"), col("nn_id").as("inn"))
       brute.join(ivf,
           col("qid") === col("iqid") && col("nn_id") === col("inn"), "left")
@@ -611,15 +637,7 @@ object AnnSearch {
     // the output only (the repo's raw-cosine ranking convention).
     "ann_ndcg_eval" -> ((s, d) => {
       val e = TestData.embeddings(s, d)
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val wTop = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-      val brute = e.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("score", V.cosine(col("embedding"), col("qv")))
-        .withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 5)
-        .select(col("qid"), col("vec_id").as("nn_id"))
+      val brute = exactCosineTop5(e)
       val ivf = ivfTop5(e)
         .select(col("qid").as("iqid"), col("rnk"), col("nn_id").as("inn"))
       val ln2 = math.log(2.0)
@@ -866,15 +884,7 @@ object AnnSearch {
       val batch = e.filter(col("vec_id") % 10 === 7)
       val l1All = hnswLayer1(e)
       val l1Batch = l1All.filter(col("vec_id") % 10 === 7)
-      val wE = Window.partitionBy("layer", "src")
-        .orderBy(col("score").desc, col("nn"))
-      probedLink(batch, e, cents, 3).withColumn("layer", lit(0L))
-        .union(probedLink(l1Batch, l1All, cents, 3)
-          .withColumn("layer", lit(1L)))
-        .withColumn("rnk", row_number().over(wE))
-        .select(col("layer"), col("src"), col("rnk"), col("nn"),
-          col("score").as("cos"))
-        .orderBy("layer", "src", "rnk")
+      hnswRelink(batch, e, l1Batch, l1All, cents)
     }),
 
     // HNSW DELETE + COMPACT (round 16, VERDICT r15 #4): the other
@@ -914,15 +924,7 @@ object AnnSearch {
         .select("vec_id", "embedding")
       val q1 = l1All.join(broadcast(aff1), col("vec_id") === col("aid"))
         .select("vec_id", "embedding")
-      val wE = Window.partitionBy("layer", "src")
-        .orderBy(col("score").desc, col("nn"))
-      probedLink(q0, live, cents, 3).withColumn("layer", lit(0L))
-        .union(probedLink(q1, l1Live, cents, 3)
-          .withColumn("layer", lit(1L)))
-        .withColumn("rnk", row_number().over(wE))
-        .select(col("layer"), col("src"), col("rnk"), col("nn"),
-          col("score").as("cos"))
-        .orderBy("layer", "src", "rnk")
+      hnswRelink(q0, live, q1, l1Live, cents)
     }),
 
     // MULTI-VECTOR LATE INTERACTION (ColBERT-style MaxSim): documents

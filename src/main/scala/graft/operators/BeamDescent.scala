@@ -31,7 +31,7 @@ import graft.functions.CosineSimilarity
   * Vectors must share one length (the embeddings fixture's contract).
   * Every executor holds the whole packed graph, which grows with the
   * corpus (SCALE.md); a graph too large to broadcast needs a
-  * shard-local search instead (ROADMAP item 2's follow-on).
+  * shard-local search instead (ROADMAP item 8).
   */
 object BeamDescent {
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.TestData
@@ -18,6 +18,27 @@ import graft.TestData.r4
   */
 object Joins {
   type Q = (SparkSession, String) => DataFrame
+
+  /** Every purchase event with the last click of the same user at or
+    * before it in the `order` of the user's events (the as-of match):
+    * (event_id, user_id, ts, click_id, click_ts), purchases without
+    * one dropped.
+    */
+  private def purchaseClicks(s: SparkSession, d: String,
+                             order: Column*): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    TestData.events(s, d)
+      .select("user_id", "ts", "event_id", "event_type")
+      .withColumn("click_id",
+        last(when(col("event_type") === "click", col("event_id")), true).over(w))
+      .withColumn("click_ts",
+        last(when(col("event_type") === "click", col("ts")), true).over(w))
+      .filter(col("event_type") === "purchase" && col("click_id").isNotNull)
+      .select(col("event_id"), col("user_id"), col("ts"),
+              col("click_id"), col("click_ts"))
+      .orderBy("event_id")
+  }
 
   val defs: Map[String, Q] = Map(
     "join_broadcast_inner" -> ((s, d) =>
@@ -110,20 +131,8 @@ object Joins {
 
     // As-of join, single-pass form: one shuffle on user_id, running
     // "last click so far" carried by a window — no pairwise join.
-    "join_asof" -> ((s, d) => {
-      val ev = TestData.events(s, d)
-        .select("user_id", "ts", "event_id", "event_type")
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("click_id",
-          last(when(col("event_type") === "click", col("event_id")), true).over(w))
-        .withColumn("click_ts",
-          last(when(col("event_type") === "click", col("ts")), true).over(w))
-        .filter(col("event_type") === "purchase" && col("click_id").isNotNull)
-        .select(col("event_id"), col("user_id"), col("ts"),
-                col("click_id"), col("click_ts"))
-        .orderBy("event_id")
-    }),
+    "join_asof" -> ((s, d) =>
+      purchaseClicks(s, d, col("ts"), col("event_id"))),
 
     // Forward as-of: for each purchase, the NEXT click at-or-after it.
     // Same single-pass shape as join_asof but iterated in descending
@@ -132,21 +141,8 @@ object Joins {
     // last-seen is the minimum id of that instant). The oracle uses
     // the identical window formulation — engine-neutral by
     // construction (DuckDB's ASOF JOIN is backward-only).
-    "join_asof_forward" -> ((s, d) => {
-      val ev = TestData.events(s, d)
-        .select("user_id", "ts", "event_id", "event_type")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("click_id",
-          last(when(col("event_type") === "click", col("event_id")), true).over(w))
-        .withColumn("click_ts",
-          last(when(col("event_type") === "click", col("ts")), true).over(w))
-        .filter(col("event_type") === "purchase" && col("click_id").isNotNull)
-        .select(col("event_id"), col("user_id"), col("ts"),
-                col("click_id"), col("click_ts"))
-        .orderBy("event_id")
-    }),
+    "join_asof_forward" -> ((s, d) =>
+      purchaseClicks(s, d, col("ts").desc, col("event_id").desc)),
 
     // Nearest as-of (completes the family: backward, forward,
     // NEAREST): both directional candidates ride the same one-shuffle

@@ -69,6 +69,67 @@ object Maintenance {
     s.read.parquet(new java.io.File(base, s"snap_${live.max}").getAbsolutePath)
   }
 
+  /** The lineitem columns the profilers sweep. */
+  private val ProfiledCols = Seq("l_orderkey", "l_partkey", "l_quantity",
+    "l_extendedprice", "l_discount")
+
+  /** One-scan lineitem profile, one row per column of [[ProfiledCols]]:
+    * null count, the column's entry of `distinct` (same order) as
+    * n_distinct, and r4'd min / max.
+    */
+  private def lineitemProfile(s: SparkSession, d: String,
+                              distinct: Seq[Column]): DataFrame = {
+    val aggs = ProfiledCols.zip(distinct).flatMap { case (c, nd) => Seq(
+      (count(lit(1)) - count(col(c))).as(s"${c}_nulls"),
+      nd.as(s"${c}_dist"),
+      r4(min(col(c)).cast("double")).as(s"${c}_min"),
+      r4(max(col(c)).cast("double")).as(s"${c}_max"))
+    }
+    val stackArgs = ProfiledCols.map(c =>
+      s"'$c', ${c}_nulls, ${c}_dist, ${c}_min, ${c}_max").mkString(", ")
+    TestData.lineitem(s, d)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(expr(s"stack(${ProfiledCols.size}, $stackArgs) AS " +
+        "(col_name, n_nulls, n_distinct, min_v, max_v)"))
+      .orderBy("col_name")
+  }
+
+  /** Three generations of the documents fixture's (doc_id, lang,
+    * n_chars) table for the snapshot keys: each next generation
+    * deletes one id residue class mod 10, updates the next one's
+    * n_chars and inserts shifted copies of a third.
+    */
+  private[graft] def docGenerations(s: SparkSession,
+                                    d: String): (DataFrame, DataFrame, DataFrame) = {
+    def next(prev: DataFrame, del: Int, upd: Int, by: Int,
+             ins: Int, idOffset: Long, insBy: Int): DataFrame =
+      prev.filter(expr(s"doc_id % 10 != $del"))
+        .withColumn("n_chars",
+          when(expr(s"doc_id % 10 = $upd"), col("n_chars") + lit(by))
+            .otherwise(col("n_chars")))
+        .unionByName(prev.filter(expr(s"doc_id % 10 = $ins"))
+          .select((col("doc_id") + lit(idOffset)).as("doc_id"),
+            col("lang"), (col("n_chars") + lit(insBy)).as("n_chars")))
+    val gen1 = TestData.documents(s, d)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val gen2 = next(gen1, 3, 4, 1000, 5, 10000000L, 7)
+    (gen1, gen2, next(gen2, 6, 7, 500, 8, 20000000L, 11))
+  }
+
+  /** The change rows between two versions of a (doc_id, n_chars)
+    * table: doc_id, change (insert / update / delete) and the old
+    * and new n_chars; unchanged ids drop out.
+    */
+  private[graft] def snapshotChanges(v1: DataFrame, v2: DataFrame): DataFrame =
+    v1.select(col("doc_id"), col("n_chars").as("old_n_chars"))
+      .join(v2.select(col("doc_id"), col("n_chars").as("new_n_chars")),
+        Seq("doc_id"), "full_outer")
+      .withColumn("change",
+        when(col("new_n_chars").isNull, lit("delete"))
+          .when(col("old_n_chars").isNull, lit("insert"))
+          .when(col("old_n_chars") =!= col("new_n_chars"), lit("update")))
+      .filter(col("change").isNotNull)
+
   val defs: Map[String, Q] = Map(
     // MERGE (upsert) semantics without a table format: current
     // snapshot FULL OUTER JOIN update batch → matched rows take the
@@ -284,29 +345,12 @@ object Maintenance {
     // before the sort). At 100 TB the join prunes to files whose
     // key-range stats overlap between generations.
     "sink_snapshot_diff" -> ((s, d) => {
-      val docs = TestData.documents(s, d)
-      val gen1 = docs.select(col("doc_id"), col("lang"), col("n_chars"))
-      val gen2 = gen1.filter(expr("doc_id % 10 != 3"))
-        .withColumn("n_chars",
-          when(expr("doc_id % 10 = 4"), col("n_chars") + lit(1000))
-            .otherwise(col("n_chars")))
-        .unionByName(gen1.filter(expr("doc_id % 10 = 5"))
-          .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-            col("lang"), (col("n_chars") + lit(7)).as("n_chars")))
+      val (gen1, gen2, _) = docGenerations(s, d)
       val tag = WriteOnce.inputTag(d, "documents")
       val base = WriteOnce.path("snap_store_diff", d, "documents")
       publishSnapshot(base, 1, gen1, tag, "doc_id", retain = 2)
       publishSnapshot(base, 2, gen2, tag, "doc_id", retain = 2)
-      val v1 = readAsOf(s, base, 1)
-        .select(col("doc_id"), col("n_chars").as("old_n_chars"))
-      val v2 = readAsOf(s, base, 2)
-        .select(col("doc_id"), col("n_chars").as("new_n_chars"))
-      v1.join(v2, Seq("doc_id"), "full_outer")
-        .withColumn("change",
-          when(col("new_n_chars").isNull, lit("delete"))
-            .when(col("old_n_chars").isNull, lit("insert"))
-            .when(col("old_n_chars") =!= col("new_n_chars"), lit("update")))
-        .filter(col("change").isNotNull)
+      snapshotChanges(readAsOf(s, base, 1), readAsOf(s, base, 2))
         .select("doc_id", "change", "old_n_chars", "new_n_chars")
         // change as a secondary sort key: if the synthetic insert-id
         // offset (doc_id + 1e7) ever collided with a real doc_id on a
@@ -413,23 +457,8 @@ object Maintenance {
     // several columns in one agg expands to one Expand + aggregate —
     // still a single scan; swap in approx_count_distinct when exact
     // cardinalities aren't required.)
-    "profile_columns" -> ((s, d) => {
-      val cols = Seq("l_orderkey", "l_partkey", "l_quantity",
-                     "l_extendedprice", "l_discount")
-      val aggs = cols.flatMap { c => Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}_nulls"),
-        countDistinct(col(c)).as(s"${c}_dist"),
-        r4(min(col(c)).cast("double")).as(s"${c}_min"),
-        r4(max(col(c)).cast("double")).as(s"${c}_max"))
-      }
-      val stackArgs = cols.map(c =>
-        s"'$c', ${c}_nulls, ${c}_dist, ${c}_min, ${c}_max").mkString(", ")
-      TestData.lineitem(s, d)
-        .agg(aggs.head, aggs.tail: _*)
-        .select(expr(s"stack(${cols.size}, $stackArgs) AS " +
-          "(col_name, n_nulls, n_distinct, min_v, max_v)"))
-        .orderBy("col_name")
-    }),
+    "profile_columns" -> ((s, d) =>
+      lineitemProfile(s, d, ProfiledCols.map(c => countDistinct(col(c))))),
 
     // The 100 TB profiler: same one-scan stacked sweep but with
     // approx_count_distinct (HLL++), which aggregates WITHOUT the
@@ -439,32 +468,18 @@ object Maintenance {
     // so DuckDB's numbers differ by design); PropertySpec bounds every
     // estimate within ±5 % of the exact profiler's count and PlanSpec
     // pins the Expand-free single scan.
-    "profile_columns_approx" -> ((s, d) => {
-      val cols = Seq("l_orderkey", "l_partkey", "l_quantity",
-                     "l_extendedprice", "l_discount")
-      // rsd 0.02: the sketch grows to a few KB per column (still
-      // fixed-size, still map-side-merged) and the estimate lands
-      // within the ±5 % property bound with margin
-      val aggs = cols.flatMap { c => Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}_nulls"),
-        approx_count_distinct(col(c), 0.02).as(s"${c}_dist"),
-        r4(min(col(c)).cast("double")).as(s"${c}_min"),
-        r4(max(col(c)).cast("double")).as(s"${c}_max"))
-      }
-      val stackArgs = cols.map(c =>
-        s"'$c', ${c}_nulls, ${c}_dist, ${c}_min, ${c}_max").mkString(", ")
-      // r19 MEASURED AND REJECTED: spreading the projected scan
-      // (TextOps.spreadScan) before this aggregate read 1.26 -> 2.71 s
-      // (runs=6 interleaved) — the inserted exchange ships full rows
-      // BELOW the partial aggregate, forfeiting the scan-side
-      // map-combine that makes the one-pass profiler cheap. Scan-grain
-      // aggregates keep the agg directly on the scan.
-      TestData.lineitem(s, d)
-        .agg(aggs.head, aggs.tail: _*)
-        .select(expr(s"stack(${cols.size}, $stackArgs) AS " +
-          "(col_name, n_nulls, n_distinct, min_v, max_v)"))
-        .orderBy("col_name")
-    }),
+    // rsd 0.02: the sketch grows to a few KB per column (still
+    // fixed-size, still map-side-merged) and the estimate lands
+    // within the ±5 % property bound with margin.
+    // r19 MEASURED AND REJECTED: spreading the projected scan
+    // (TextOps.spreadScan) before this aggregate read 1.26 -> 2.71 s
+    // (runs=6 interleaved) — the inserted exchange ships full rows
+    // BELOW the partial aggregate, forfeiting the scan-side
+    // map-combine that makes the one-pass profiler cheap. Scan-grain
+    // aggregates keep the agg directly on the scan.
+    "profile_columns_approx" -> ((s, d) =>
+      lineitemProfile(s, d,
+        ProfiledCols.map(c => approx_count_distinct(col(c), 0.02)))),
 
     // DATA-QUALITY ASSERTIONS (round 11): the dbt-style constraint
     // gate the profiler family observes but never ENFORCES — one row

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.CkptOps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
@@ -23,6 +23,57 @@ import graft.functions.{VectorOps => V}
   */
 object ProductQuantize {
   type Q = (SparkSession, String) => DataFrame
+
+  /** Every vector of `e` split once per m of `ms` (m) into m
+    * contiguous sub-vectors: (vec_id, m, sub, sv). Checkpointed — the
+    * codebook, the assignment and the query tables all read it.
+    */
+  private def mSubSplit(e: DataFrame, ms: DataFrame): DataFrame =
+    e.crossJoin(broadcast(ms))
+      .select(col("vec_id"), col("m"), explode(expr(
+        "transform(sequence(0, m - 1), j -> struct(j AS sub, " +
+          "slice(embedding, j * (64 DIV m) + 1, 64 DIV m) AS sv))"))
+        .as("x"))
+      .select(col("vec_id"), col("m"), col("x.sub"), col("x.sv"))
+      .ckpt() // codebook + assignment + query tables
+
+  /** The per-(m, sub) codebooks of [[mSubSplit]]: the first K
+    * vectors' sub-vectors as codewords (cm, csub, code, cw).
+    */
+  private def mCodebook(sub: DataFrame): DataFrame =
+    sub.filter(col("vec_id") < K)
+      .select(col("m").as("cm"), col("sub").as("csub"),
+        col("vec_id").as("code"), col("sv").as("cw"))
+
+  /** Nearest codeword of every sub-vector: (m, vec_id, sub, code,
+    * dist = squared distance to it).
+    */
+  private def mAssign(sub: DataFrame): DataFrame =
+    V.nearestCentroids(sub, col("sv"),
+        mCodebook(sub).select(col("cm").as("m"), col("csub").as("sub"),
+          col("code").as("cid"), col("cw").as("cv")),
+        Seq("m", "vec_id", "sub"), by = Seq("m", "sub"))
+      .select(col("m"), col("vec_id"), col("sub"),
+        col("cluster").as("code"), col("d2").as("dist"))
+
+  /** ADC over the coded corpus `asg` (m, vec_id, sub, code): the
+    * table of squared distances dq from each sub-vector of the five
+    * queries vec_id < 5 to every codeword of its (m, sub), joined onto
+    * the codes of every other vector and grouped by (m, qid, vec_id)
+    * for the caller's distance readout.
+    */
+  private def mAdcGroups(sub: DataFrame, asg: DataFrame): RelationalGroupedDataset = {
+    val dtable = sub.filter(col("vec_id") < 5)
+      .select(col("m").as("qm"), col("sub").as("qsub"),
+        col("vec_id").as("qid"), col("sv").as("qsv"))
+      .join(broadcast(mCodebook(sub)),
+        col("qm") === col("cm") && col("qsub") === col("csub"))
+      .select(col("qm").as("m"), col("qid"), col("qsub").as("sub"),
+        col("code"), V.sqDist(col("qsv"), col("cw")).as("dq"))
+    asg.join(broadcast(dtable), Seq("m", "sub", "code"))
+      .filter(col("vec_id") =!= col("qid"))
+      .groupBy("m", "qid", "vec_id")
+  }
 
   private val M = 8  // subspaces
   private val K = 4  // codewords per subspace (= vectors 0..3)
@@ -112,60 +163,22 @@ object ProductQuantize {
         .select(col("vec_id"), col("embedding"))
         .ckpt() // tagged sub-split + brute-force truth
       val ms = Seq(4, 8, 16).toDF("m")
-      val sub = e.crossJoin(broadcast(ms))
-        .select(col("vec_id"), col("m"), explode(expr(
-          "transform(sequence(0, m - 1), j -> struct(j AS sub, " +
-            "slice(embedding, j * (64 DIV m) + 1, 64 DIV m) AS sv))"))
-          .as("x"))
-        .select(col("vec_id"), col("m"), col("x.sub"), col("x.sv"))
-        .ckpt() // consumers: codebook, assignment, queries
-      val cb = sub.filter(col("vec_id") < K)
-        .select(col("m").as("cm"), col("sub").as("csub"),
-          col("vec_id").as("code"), col("sv").as("cw"))
-      val asg = V.nearestCentroids(sub, col("sv"),
-          cb.select(col("cm").as("m"), col("csub").as("sub"),
-            col("code").as("cid"), col("cw").as("cv")),
-          Seq("m", "vec_id", "sub"), by = Seq("m", "sub"))
-        .select(col("m"), col("vec_id"), col("sub"),
-          col("cluster").as("code"), col("d2").as("dist"))
-        .ckpt() // consumers: distortion + ADC codes
+      val sub = mSubSplit(e, ms)
+      val asg = mAssign(sub).ckpt() // consumers: distortion + ADC codes
       val distortion = asg
         .withColumn("d_u", floor(col("dist") * 1000000 + 0.5).cast("long"))
         .groupBy("m").agg(sum("d_u").as("distortion_sum_u"))
-      val dtable = sub.filter(col("vec_id") < 5)
-        .select(col("m").as("qm"), col("sub").as("qsub"),
-          col("vec_id").as("qid"), col("sv").as("qsv"))
-        .join(broadcast(cb),
-          col("qm") === col("cm") && col("qsub") === col("csub"))
-        .select(col("qm").as("m"), col("qid"), col("qsub").as("sub"),
-          col("code"), V.sqDist(col("qsv"), col("cw")).as("dq"))
-      val approx = asg.select("m", "vec_id", "sub", "code")
-        .join(broadcast(dtable), Seq("m", "sub", "code"))
-        .filter(col("vec_id") =!= col("qid"))
-        .groupBy("m", "qid", "vec_id")
+      val approx = mAdcGroups(sub, asg.select("m", "vec_id", "sub", "code"))
         .agg(r4(sqrt(sum("dq"))).as("adist"))
         .withColumn("rnk", row_number().over(Window
           .partitionBy("m", "qid").orderBy(col("adist"), col("vec_id"))))
         .filter(col("rnk") <= 10)
         .select(col("m"), col("qid"), col("vec_id").as("cid"))
-      val brute = e.select(col("vec_id").as("cid"), col("embedding").as("cv"))
-        .crossJoin(broadcast(e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))))
-        .filter(col("cid") =!= col("qid"))
-        .withColumn("rnk", row_number().over(Window.partitionBy("qid")
-          .orderBy(r4(sqrt(V.sqDist(col("cv"), col("qv")))), col("cid"))))
-        .filter(col("rnk") <= 10)
-        .select("qid", "cid")
-        .ckpt() // per-m hit joins + the truth count
-      val truth = brute.agg(count(lit(1)).as("n_truth"))
-      val hits = approx.join(brute, Seq("qid", "cid"))
-        .groupBy("m").agg(count(lit(1)).as("n_hits"))
-      ms.join(distortion, Seq("m"))
-        .join(hits, Seq("m"), "left")
-        .crossJoin(broadcast(truth))
-        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-        .withColumn("recall", when(col("n_truth") > 0,
-          r4(col("n_hits").cast("double") / col("n_truth").cast("double"))))
+      val brute = AnnSearch.exactTop10(e, e.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("qid"), col("embedding").as("qv")),
+        r4(sqrt(V.sqDist(col("cv"), col("qv")))))
+      AnnSearch.armRecall(ms.join(distortion, Seq("m")), "m", approx, brute,
+          "recall")
         .select("m", "distortion_sum_u", "n_truth", "n_hits", "recall")
         .orderBy("m")
     }),
@@ -210,16 +223,8 @@ object ProductQuantize {
       val dimsDf = e.select(col("vec_id"),
           posexplode(col("embedding")).as(Seq("dim", "x")))
         .ckpt() // stats + deq + query dims
-      val stats = dimsDf.groupBy("dim")
-        .agg(min("x").as("mn"), max("x").as("mx"))
-      val deq = dimsDf.join(broadcast(stats), "dim")
-        .withColumn("code",
-          when(col("mx") === col("mn"), lit(0)).otherwise(
-            floor((col("x") - col("mn")) / (col("mx") - col("mn")) * 255.0
-              + 0.5).cast("int")))
-        .withColumn("dq",
-          col("mn") + col("code") / 255.0 * (col("mx") - col("mn")))
-        .select(col("vec_id").as("cid"), col("dim"), col("dq"))
+      val deq = Quantize.sq8Dequantized(dimsDf)
+        .withColumnRenamed("vec_id", "cid")
       val qd = dimsDf.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("dim").as("qdim"),
           col("x").as("qx"))
@@ -243,57 +248,19 @@ object ProductQuantize {
           expr("bit_count(w0 ^ q0) + bit_count(w1 ^ q1)").cast("long")
             .as("s_u"))
       val ms = Seq(4, 8).toDF("m")
-      val sub = e.crossJoin(broadcast(ms))
-        .select(col("vec_id"), col("m"), explode(expr(
-          "transform(sequence(0, m - 1), j -> struct(j AS sub, " +
-            "slice(embedding, j * (64 DIV m) + 1, 64 DIV m) AS sv))"))
-          .as("x"))
-        .select(col("vec_id"), col("m"), col("x.sub"), col("x.sv"))
-        .ckpt() // codebook + assignment + query tables
-      val cb = sub.filter(col("vec_id") < K)
-        .select(col("m").as("cm"), col("sub").as("csub"),
-          col("vec_id").as("code"), col("sv").as("cw"))
-      val asg = V.nearestCentroids(sub, col("sv"),
-          cb.select(col("cm").as("m"), col("csub").as("sub"),
-            col("code").as("cid"), col("cw").as("cv")),
-          Seq("m", "vec_id", "sub"), by = Seq("m", "sub"))
-        .select(col("m"), col("vec_id"), col("sub"),
-          col("cluster").as("code"))
-      val dtable = sub.filter(col("vec_id") < 5)
-        .select(col("m").as("qm"), col("sub").as("qsub"),
-          col("vec_id").as("pqid"), col("sv").as("qsv"))
-        .join(broadcast(cb),
-          col("qm") === col("cm") && col("qsub") === col("csub"))
-        .select(col("qm").as("m"), col("pqid").as("qid"),
-          col("qsub").as("sub"), col("code"),
-          V.sqDist(col("qsv"), col("cw")).as("dq"))
-      val pq = asg.join(broadcast(dtable), Seq("m", "sub", "code"))
-        .filter(col("vec_id") =!= col("qid"))
-        .groupBy("m", "qid", "vec_id")
+      val sub = mSubSplit(e, ms)
+      val pq = mAdcGroups(sub, mAssign(sub))
         .agg(floor(sqrt(sum("dq")) * 10000 + 0.5).cast("long").as("s_u"))
         .select(concat(lit("pq"), col("m").cast("string")).as("method"),
           col("qid"), col("vec_id").as("cid"), col("s_u"))
-      val brute = e.select(col("vec_id").as("cid"), col("embedding").as("cv"))
-        .crossJoin(broadcast(q))
-        .filter(col("cid") =!= col("qid"))
-        .withColumn("rnk", row_number().over(Window.partitionBy("qid")
-          .orderBy(r4(sqrt(V.sqDist(col("cv"), col("qv")))), col("cid"))))
-        .filter(col("rnk") <= 10)
-        .select("qid", "cid")
-        .ckpt() // per-method hit joins + the truth count
-      val truth = brute.agg(count(lit(1)).as("n_truth"))
+      val brute = AnnSearch.exactTop10(e, q,
+        r4(sqrt(V.sqDist(col("cv"), col("qv")))))
       val methods = Seq(("bin1", 64L), ("mat16", 512L),
         ("mat32", 1024L), ("pq4", 8L), ("pq8", 16L), ("sq8", 512L))
         .toDF("method", "bits_per_vec")
       val all = top10(mat).unionByName(top10(sq))
         .unionByName(top10(bin)).unionByName(top10(pq))
-      val hits = all.join(brute, Seq("qid", "cid"))
-        .groupBy("method").agg(count(lit(1)).as("n_hits"))
-      methods.join(hits, Seq("method"), "left")
-        .crossJoin(broadcast(truth))
-        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-        .withColumn("overlap", when(col("n_truth") > 0,
-          r4(col("n_hits").cast("double") / col("n_truth").cast("double"))))
+      AnnSearch.armRecall(methods, "method", all, brute, "overlap")
         .select("method", "bits_per_vec", "n_truth", "n_hits", "overlap")
         .orderBy("method")
     }),

@@ -19,6 +19,23 @@ import graft.TestData.r4
 object Quantize {
   type Q = (SparkSession, String) => DataFrame
 
+  /** Per-dimension min/max 8-bit scalar quantization of exploded
+    * (vec_id, dim, x) rows, read back: (vec_id, dim, dq) with dq the
+    * dequantized code (a constant dimension codes to 0).
+    */
+  private[graft] def sq8Dequantized(dims: DataFrame): DataFrame = {
+    val stats = dims.groupBy("dim")
+      .agg(min("x").as("mn"), max("x").as("mx"))
+    dims.join(broadcast(stats), "dim")
+      .withColumn("code",
+        when(col("mx") === col("mn"), lit(0)).otherwise(
+          floor((col("x") - col("mn")) / (col("mx") - col("mn")) * 255.0
+            + 0.5).cast("int")))
+      .withColumn("dq",
+        col("mn") + col("code") / 255.0 * (col("mx") - col("mn")))
+      .select(col("vec_id"), col("dim"), col("dq"))
+  }
+
   val defs: Map[String, Q] = Map(
     "vec_scalar_quantize" -> ((s, d) => {
       val dims = TestData.embeddings(s, d)
@@ -53,16 +70,7 @@ object Quantize {
       val e = TestData.embeddings(s, d)
       val dims = e.select(col("vec_id"),
         posexplode(col("embedding")).as(Seq("dim", "x")))
-      val stats = dims.groupBy("dim")
-        .agg(min("x").as("mn"), max("x").as("mx"))
-      val deq = dims.join(broadcast(stats), "dim")
-        .withColumn("code",
-          when(col("mx") === col("mn"), lit(0)).otherwise(
-            floor((col("x") - col("mn")) / (col("mx") - col("mn")) * 255.0
-              + 0.5).cast("int")))
-        .withColumn("dq",
-          col("mn") + col("code") / 255.0 * (col("mx") - col("mn")))
-        .select(col("vec_id"), col("dim"), col("dq"))
+      val deq = sq8Dequantized(dims)
       val qdims = dims.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("dim").as("qdim"),
                 col("x").as("qx"))

@@ -27,6 +27,17 @@ import graft.functions.{VectorOps => V}
 object Relevance {
   type Q = (SparkSession, String) => DataFrame
 
+  /** Every adjacent token pair (doc_id, w1, w2) of the (doc_id, toks)
+    * token arrays, checkpointed: the bigram LMs count it and score it.
+    */
+  private def docBigrams(toks: DataFrame): DataFrame =
+    toks.filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))"))
+        .as("b"))
+      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+      .ckpt()
+
   /** Interpolated Kneser-Ney bigram LM core (see
     * `text_kn_perplexity`): input (doc_id, text), output per-doc
     * (doc_id, n_bigrams, avg_logp_kn, ppl_kn). Trains on the input
@@ -46,12 +57,7 @@ object Relevance {
     // the checkpoints every broadcast build re-ran the scan + split +
     // explode pipeline (r19, the multi-branch-consumer trap; measured
     // — see OPTIMIZATION_r19.md).
-    val bg = toks.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))"))
-        .as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .ckpt()
+    val bg = docBigrams(toks)
     val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2")).ckpt()
     val c1 = c2.groupBy("w1")
       .agg(sum("c2").as("c1"), count(lit(1)).as("n1v"))
@@ -260,12 +266,7 @@ object Relevance {
       val toks = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       // bg: model counts + final probe; c2: broadcast + c1 — ckpt'd
       // so broadcast builds stop re-running the explode (r19).
-      val bg = toks.filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))"))
-          .as("b"))
-        .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-        .ckpt()
+      val bg = docBigrams(toks)
       val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2")).ckpt()
       val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
       val vocab = toks.select(explode(col("toks")).as("t"))

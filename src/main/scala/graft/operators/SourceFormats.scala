@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.TestData
@@ -38,6 +38,33 @@ object SourceFormats {
     StructField("c_nationkey", IntegerType),
     StructField("c_acctbal", DoubleType),
     StructField("c_mktsegment", StringType)))
+
+  /** (c_custkey, c_acctbal) plus the permissive readers' corrupt
+    * record column.
+    */
+  private val CorruptSchema = StructType(Seq(
+    StructField("c_custkey", LongType),
+    StructField("c_acctbal", DoubleType),
+    StructField("_corrupt_record", StringType)))
+
+  /** Writes one text line per customer to `path`: `bad` for every
+    * c_custkey ≡ 3 (mod 10), `good` for the rest.
+    */
+  private def writeCustomerLines(s: SparkSession, d: String, path: String,
+                                 bad: Column, good: Column): Unit =
+    TestData.customer(s, d)
+      .select(when(col("c_custkey") % 10 === 3, bad).otherwise(good)
+        .as("value"))
+      .write.mode("overwrite").text(path)
+
+  /** Row, corrupt-record and parsed-row (non-null `good`) counts and
+    * the balance sum of a PERMISSIVE read of [[CorruptSchema]].
+    */
+  private def permissiveCounts(read: DataFrame, good: String): DataFrame =
+    read.agg(count(lit(1)).as("n_rows"),
+      count(col("_corrupt_record")).as("n_corrupt"),
+      count(col(good)).as("n_good"),
+      r4(sum(col("c_acctbal"))).as("sum_bal"))
 
   val defs: Map[String, Q] = Map(
     "source_csv_roundtrip" -> ((s, d) => {
@@ -99,21 +126,11 @@ object SourceFormats {
     // so silent row drops or mis-routed lines hash-fail.
     "source_json_corrupt" -> ((s, d) => {
       val path = WriteOnce.path("source_json_corrupt")
-      TestData.customer(s, d)
-        .select(when(col("c_custkey") % 10 === 3,
-            concat(lit("NOT{JSON:"), col("c_custkey")))
-          .otherwise(to_json(struct(col("c_custkey"), col("c_acctbal"))))
-          .as("value"))
-        .write.mode("overwrite").text(path)
-      val schema = StructType(Seq(
-        StructField("c_custkey", LongType),
-        StructField("c_acctbal", DoubleType),
-        StructField("_corrupt_record", StringType)))
-      s.read.schema(schema).option("mode", "PERMISSIVE").json(path)
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("_corrupt_record")).as("n_corrupt"),
-          count(col("c_custkey")).as("n_good"),
-          r4(sum(col("c_acctbal"))).as("sum_bal"))
+      writeCustomerLines(s, d, path,
+        concat(lit("NOT{JSON:"), col("c_custkey")),
+        to_json(struct(col("c_custkey"), col("c_acctbal"))))
+      permissiveCounts(s.read.schema(CorruptSchema)
+        .option("mode", "PERMISSIVE").json(path), "c_custkey")
     }),
 
     // The CSV sibling of source_json_corrupt: every 10th line is
@@ -123,21 +140,11 @@ object SourceFormats {
     // drop OR a mis-parse of either side hash-fails.
     "source_csv_corrupt" -> ((s, d) => {
       val path = WriteOnce.path("source_csv_corrupt")
-      TestData.customer(s, d)
-        .select(when(col("c_custkey") % 10 === 3,
-            concat(lit("X"), col("c_custkey"), lit(",Y")))
-          .otherwise(concat_ws(",", col("c_custkey"), col("c_acctbal")))
-          .as("value"))
-        .write.mode("overwrite").text(path)
-      val schema = StructType(Seq(
-        StructField("c_custkey", LongType),
-        StructField("c_acctbal", DoubleType),
-        StructField("_corrupt_record", StringType)))
-      s.read.schema(schema).option("mode", "PERMISSIVE").csv(path)
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("_corrupt_record")).as("n_corrupt"),
-          count(col("c_acctbal")).as("n_good"),
-          r4(sum(col("c_acctbal"))).as("sum_bal"))
+      writeCustomerLines(s, d, path,
+        concat(lit("X"), col("c_custkey"), lit(",Y")),
+        concat_ws(",", col("c_custkey"), col("c_acctbal")))
+      permissiveCounts(s.read.schema(CorruptSchema)
+        .option("mode", "PERMISSIVE").csv(path), "c_acctbal")
     }),
 
     // ONE-OBJECT-PER-ASSET media ingestion (round 8): the synthetic

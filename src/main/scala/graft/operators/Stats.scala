@@ -88,29 +88,86 @@ object Stats {
           .otherwise(0L)).as("sxx_c"),
         sum(when(col("variant") === "treatment", col("x") * col("x"))
           .otherwise(0L)).as("sxx_t"))
-      .withColumn("m_c", when(col("n_c") > 0,
-        col("sx_c").cast("double") / col("n_c").cast("double")))
-      .withColumn("m_t", when(col("n_t") > 0,
-        col("sx_t").cast("double") / col("n_t").cast("double")))
-      .withColumn("v_c", when(col("n_c") > 1,
-        (col("sxx_c").cast("double")
-          - col("sx_c").cast("double") * col("sx_c").cast("double")
-            / col("n_c").cast("double"))
-          / (col("n_c") - 1).cast("double")))
-      .withColumn("v_t", when(col("n_t") > 1,
-        (col("sxx_t").cast("double")
-          - col("sx_t").cast("double") * col("sx_t").cast("double")
-            / col("n_t").cast("double"))
-          / (col("n_t") - 1).cast("double")))
-      .withColumn("z", when(col("v_c") > 0 && col("v_t") > 0,
-        r4((col("m_t") - col("m_c"))
-          / sqrt(col("v_c") / col("n_c").cast("double")
-            + col("v_t") / col("n_t").cast("double")))))
-      .withColumn("p_u", when(col("z").isNotNull,
-        floor(least(lit(1.0), lit(2.0)
-          * exp(lit(-0.717) * abs(col("z"))
-            - lit(0.416) * col("z") * col("z"))) * 1000000 + 0.5)
-          .cast("long")))
+      .transform(twoGroupVars).transform(welchZP)
+  }
+
+  /** [[nationPValues]] with the number of defined tests `m_tests`
+    * and each nation's rank `rk` by ascending p (NULL p last, ties
+    * by nationkey) — the input of the step-up procedures.
+    */
+  private def rankedNationPValues(s: SparkSession, d: String): DataFrame =
+    nationPValues(s, d)
+      .withColumn("m_tests", sum(when(col("p_u").isNotNull, 1L)
+        .otherwise(0L)).over(Window.partitionBy()))
+      .withColumn("rk", row_number().over(
+        Window.orderBy(col("p_u").asc_nulls_last, col("nationkey"))))
+
+  /** The step-up decision over ranked tests carrying a per-rank
+    * `flag`: every defined test ranked at or below the largest
+    * flagged rank is significant.
+    */
+  private def stepUp(flagged: DataFrame): DataFrame = flagged
+    .withColumn("k_max",
+      max(when(col("flag"), col("rk"))).over(Window.partitionBy()))
+    .withColumn("significant", when(col("p_u").isNotNull,
+      col("k_max").isNotNull && col("rk") <= col("k_max"))
+      .otherwise(lit(false)))
+
+  /** Per-user counts x1..x3 of the event types `t1`..`t3` (users
+    * with at least one of them) and their doubled within-user
+    * midranks r1..r3 — closed form over three values, ties averaged.
+    */
+  private def userActionRanks(s: SparkSession, d: String, t1: String,
+                              t2: String, t3: String): DataFrame = {
+    def r2(j: Column, a: Column, b2: Column): Column =
+      lit(2L) * (when(a < j, 1L).otherwise(0L)
+        + when(b2 < j, 1L).otherwise(0L)) +
+        (lit(1L) + when(a === j, 1L).otherwise(0L)
+          + when(b2 === j, 1L).otherwise(0L)) + 1L
+    TestData.events(s, d)
+      .filter(col("event_type").isin(t1, t2, t3))
+      .groupBy("user_id")
+      .agg(
+        sum(when(col("event_type") === t1, 1L).otherwise(0L)).as("x1"),
+        sum(when(col("event_type") === t2, 1L).otherwise(0L)).as("x2"),
+        sum(when(col("event_type") === t3, 1L).otherwise(0L)).as("x3"))
+      .withColumn("r1", r2(col("x1"), col("x2"), col("x3")))
+      .withColumn("r2", r2(col("x2"), col("x1"), col("x3")))
+      .withColumn("r3", r2(col("x3"), col("x1"), col("x2")))
+  }
+
+  /** Value-cell size cap of the rank tests' tie term: t³−t < 2^63
+    * per value cell below 2^21.
+    */
+  private val TieCubeCap = 2097152L
+
+  /** Pooled doubled midranks of document length across languages,
+    * over the value-DISTINCT grid (never per row): per `lang` the
+    * count n_g and doubled rank sum r2_g, and the 1-row tie term
+    * (tie_raw = Σ(c³−c) over value cells below [[TieCubeCap]], and
+    * the largest cell c_max).
+    */
+  private def langMidrankSums(s: SparkSession,
+                              d: String): (DataFrame, DataFrame) = {
+    val cells = TestData.documents(s, d)
+      .select(col("lang"), col("n_chars").cast("long").as("x"))
+      .groupBy("lang", "x").agg(count(lit(1)).as("cg"))
+      .ckpt() // consumed by the value grid AND the join
+    val vals = cells.groupBy("x").agg(sum("cg").as("c"))
+      .withColumn("cum_lt",
+        coalesce(sum("c").over(Window.orderBy("x")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("r2", lit(2L) * col("cum_lt") + col("c") + 1)
+      .ckpt() // consumed by ranks AND the tie rollup
+    val groups = cells
+      .join(broadcast(vals.select("x", "r2")), "x")
+      .groupBy("lang")
+      .agg(sum("cg").as("n_g"), sum(col("cg") * col("r2")).as("r2_g"))
+    val ties = vals.agg(
+      sum(when(col("c") < TieCubeCap,
+        col("c") * col("c") * col("c") - col("c"))).as("tie_raw"),
+      max("c").as("c_max"))
+    (groups, ties)
   }
 
   /** Shared per-flag Spearman sufficient-stat stage (see
@@ -119,11 +176,17 @@ object Stats {
     * syy) + the r4'd ρ. Three consumers of the tiny cell table —
     * checkpointed once.
     */
-  private def spearmanStats(s: SparkSession, d: String): DataFrame = {
-    val li = TestData.lineitem(s, d)
+  private def spearmanStats(s: SparkSession, d: String): DataFrame =
+    spearmanCore(TestData.lineitem(s, d)
       .select(col("l_returnflag").as("flag"),
         floor(col("l_quantity") + 0.5).cast("long").as("qx"),
-        floor(col("l_discount") * 100 + 0.5).cast("long").as("qy"))
+        floor(col("l_discount") * 100 + 0.5).cast("long").as("qy")))
+
+  /** Per-flag Spearman (n, sxy, sxx, syy, rho) of integer (flag, qx,
+    * qy) rows over the joint-domain cell grid (see [[spearmanStats]]).
+    * Shared with `GraftEngine.spearmanRho`.
+    */
+  private[graft] def spearmanCore(li: DataFrame): DataFrame = {
     val cells = li.groupBy("flag", "qx", "qy")
       .agg(count(lit(1)).as("c"))
       .ckpt()
@@ -488,6 +551,19 @@ object Stats {
       .orderBy("seg")
   }
 
+  /** Per-`lang` row count n_g, exact sums sx / sxx of `x` and the
+    * sample variance s2 (NULL below two rows) of (lang, x) units.
+    */
+  private[graft] def langVariances(units: DataFrame): DataFrame =
+    units.groupBy("lang")
+      .agg(count(lit(1)).as("n_g"), sum("x").as("sx"),
+        sum(col("x") * col("x")).as("sxx"))
+      .withColumn("s2", when(col("n_g") > 1,
+        (col("sxx").cast("double")
+          - col("sx").cast("double") * col("sx").cast("double")
+            / col("n_g").cast("double"))
+          / (col("n_g") - 1).cast("double")))
+
   /** Welch's ANOVA core (see `agg_welch_anova`): input (lang, x:
     * BIGINT) rows, output the 1-row (k, N, f_welch, df1, df2)
     * readout. Quantization: w in nano units (n/s²·1e9), w·m in nano,
@@ -497,16 +573,9 @@ object Stats {
     * `GraftEngine.welchAnova`.
     */
   private[graft] def welchAnovaCore(units: DataFrame): DataFrame = {
-    val g = units.groupBy("lang")
-      .agg(count(lit(1)).as("n_g"), sum("x").as("sx"),
-        sum(col("x") * col("x")).as("sxx"))
+    val g = langVariances(units)
       .withColumn("m", when(col("n_g") > 0,
         col("sx").cast("double") / col("n_g").cast("double")))
-      .withColumn("s2", when(col("n_g") > 1,
-        (col("sxx").cast("double")
-          - col("sx").cast("double") * col("sx").cast("double")
-            / col("n_g").cast("double"))
-          / (col("n_g") - 1).cast("double")))
       // Overflow guard (ADVICE r14): near-zero variance (s² ≈ 1/n_g
       // for integer data with one deviating row) drives w = n_g/s²
       // toward n_g² — w_u·1e9 and wm_u = w_u·m must stay < 2^63 or
@@ -699,6 +768,68 @@ object Stats {
       .select("n", "n_pos", "beta0", "beta1", "beta2", "brier")
   }
 
+  /** The intercept-only seed of the one-regressor log-link GLM cores:
+    * b0 = ln(ȳ) quantized to micro once (0 when Σy = 0), b1 = 0,
+    * okl = 1.
+    */
+  private def logMeanSeed(units: DataFrame): DataFrame = units
+    .agg(coalesce(sum("y"), lit(0L)).as("sy"), count(lit(1)).as("nn"))
+    .select(when(col("sy") > 0,
+      floor(log(col("sy").cast("double") / col("nn").cast("double"))
+        * 1000000 + 0.5).cast("long")).otherwise(0L).as("b0"),
+      lit(0L).as("b1"), lit(1L).as("okl"))
+
+  /** Cramer's rule on one round's 2×2 IRLS system: the information
+    * matrix ((w, wx), (wx, wxx)) from the integer sums named `w`,
+    * `wx`, `wxx`, the score (r0, r1); adds `det`, `d0` and `d1`.
+    */
+  private def solve2(s: DataFrame, w: String, wx: String, wxx: String): DataFrame = s
+    .withColumn("a11", col(w).cast("double"))
+    .withColumn("a12", col(wx).cast("double"))
+    .withColumn("a22", col(wxx).cast("double"))
+    .withColumn("q0", col("r0").cast("double"))
+    .withColumn("q1", col("r1").cast("double"))
+    .withColumn("det", col("a11") * col("a22") - col("a12") * col("a12"))
+    .withColumn("d0", col("q0") * col("a22") - col("a12") * col("q1"))
+    .withColumn("d1", col("a11") * col("q1") - col("a12") * col("q0"))
+
+  /** One round's new scalars: b0 and b1 move by the micro steps `u0`
+    * and `u1`, each floored and clamped to ±30e6 (the IRLS guard);
+    * det = 0 moves neither and zeroes okl.
+    */
+  private def newtonStep2(s: DataFrame): DataFrame = {
+    def step(u: String): Column =
+      when(col("det") =!= 0.0, least(greatest(
+        floor(col(u) + 0.5).cast("long"),
+        lit(-30000000L)), lit(30000000L))).otherwise(0L)
+    s.select(
+      (col("pb0") + step("u0")).as("b0"),
+      (col("pb1") + step("u1")).as("b1"),
+      when(col("det") =!= 0.0, col("ok_prev")).otherwise(0L).as("okl"))
+  }
+
+  /** The 1-row readout of a one-regressor log-link GLM over the rows
+    * scored at the final betas: n, Σy, the betas and the rate ratio
+    * e^β1 (NULL unless every round kept a nonsingular step), and the
+    * dispersion from the per-row micro Pearson terms `pearson`.
+    */
+  private def logLinkReadout(scored: DataFrame, pearson: Column): DataFrame =
+    scored
+      .agg(count(lit(1)).as("n"), sum("y").as("sum_y"),
+        max("b0").as("b0"), max("b1").as("b1"), max("okl").as("okl"),
+        sum(pearson).as("pchi_u"))
+    .withColumn("ok", col("okl") === 1 && col("n") > 0)
+    .withColumn("beta0",
+      when(col("ok"), r4(col("b0").cast("double") / 1000000.0)))
+    .withColumn("beta1",
+      when(col("ok"), r4(col("b1").cast("double") / 1000000.0)))
+    .withColumn("rate_ratio", when(col("ok"),
+      r4(exp(least(greatest(col("b1").cast("double") / 1000000.0,
+        lit(-13.0)), lit(13.0))))))
+    .withColumn("dispersion", when(col("ok") && col("n") > 2,
+      r4(col("pchi_u").cast("double") / 1.0e6
+        / (col("n") - 2).cast("double"))))
+
   /** One-regressor Poisson GLM core (see `agg_poisson_glm`): input
     * (y: count, x: BIGINT) rows, output the 1-row fitted readout
     * (log link, canonical). Three unrolled Newton/IRLS rounds on the
@@ -734,58 +865,24 @@ object Stats {
       .withColumn("mu_u", floor(exp(least(greatest(
         col("eta_u").cast("double") / 1000000.0, lit(-13.0)), lit(13.0)))
         * 1000000 + 0.5).cast("long"))
-    def step(d: Column, det: Column): Column =
-      when(det =!= 0.0, least(greatest(
-        floor(d / det * 1000000 + 0.5).cast("long"),
-        lit(-30000000L)), lit(30000000L))).otherwise(0L)
-    def newton(prev: DataFrame): DataFrame = {
-      val s = withMu(units.crossJoin(broadcast(prev)))
+    def newton(prev: DataFrame): DataFrame =
+      newtonStep2(solve2(withMu(units.crossJoin(broadcast(prev)))
         .agg(max("b0").as("pb0"), max("b1").as("pb1"),
           max("okl").as("ok_prev"),
           sum("mu_u").as("sw"), sum(col("mu_u") * col("x")).as("sw1"),
           sum(col("mu_u") * col("x") * col("x")).as("sw11"),
-          sum(we).as("r0"), sum(we * col("x")).as("r1"))
-        .withColumn("a11", col("sw").cast("double"))
-        .withColumn("a12", col("sw1").cast("double"))
-        .withColumn("a22", col("sw11").cast("double"))
-        .withColumn("q0", col("r0").cast("double"))
-        .withColumn("q1", col("r1").cast("double"))
-        .withColumn("det", col("a11") * col("a22") - col("a12") * col("a12"))
-        .withColumn("d0", col("q0") * col("a22") - col("a12") * col("q1"))
-        .withColumn("d1", col("a11") * col("q1") - col("a12") * col("q0"))
-      s.select(
-        (col("pb0") + step(col("d0"), col("det"))).as("b0"),
-        (col("pb1") + step(col("d1"), col("det"))).as("b1"),
-        when(col("det") =!= 0.0, col("ok_prev")).otherwise(0L).as("okl"))
-    }
-    val seed = units
-      .agg(coalesce(sum("y"), lit(0L)).as("sy"), count(lit(1)).as("nn"))
-      .select(when(col("sy") > 0,
-        floor(log(col("sy").cast("double") / col("nn").cast("double"))
-          * 1000000 + 0.5).cast("long")).otherwise(0L).as("b0"),
-        lit(0L).as("b1"), lit(1L).as("okl"))
-    val s3 = newton(newton(newton(seed)))
-    withMu(units.crossJoin(broadcast(s3)))
-      .agg(count(lit(1)).as("n"), sum("y").as("sum_y"),
-        max("b0").as("b0"), max("b1").as("b1"), max("okl").as("okl"),
-        // per-row Pearson term (y·1e6−μ_u)²/μ_u is ALREADY in micro
-        // units ((Δ·1e6)²/(μ·1e6) = 1e6·Δ²/μ); mu_u ≥ 2 (the −13
-        // rail) ⇒ no x/0 site. we² can pass 2^53 — the double
-        // product is the same IEEE value in both engines (mirrored
-        // op order), which is all the readout needs.
-        sum(floor(we.cast("double") * we.cast("double")
-          / col("mu_u").cast("double") + 0.5).cast("long")).as("pchi_u"))
-      .withColumn("ok", col("okl") === 1 && col("n") > 0)
-      .withColumn("beta0",
-        when(col("ok"), r4(col("b0").cast("double") / 1000000.0)))
-      .withColumn("beta1",
-        when(col("ok"), r4(col("b1").cast("double") / 1000000.0)))
-      .withColumn("rate_ratio", when(col("ok"),
-        r4(exp(least(greatest(col("b1").cast("double") / 1000000.0,
-          lit(-13.0)), lit(13.0))))))
-      .withColumn("dispersion", when(col("ok") && col("n") > 2,
-        r4(col("pchi_u").cast("double") / 1.0e6
-          / (col("n") - 2).cast("double"))))
+          sum(we).as("r0"), sum(we * col("x")).as("r1")), "sw", "sw1", "sw11")
+        .withColumn("u0", col("d0") / col("det") * 1000000)
+        .withColumn("u1", col("d1") / col("det") * 1000000))
+    val s3 = newton(newton(newton(logMeanSeed(units))))
+    // per-row Pearson term (y·1e6−μ_u)²/μ_u is ALREADY in micro
+    // units ((Δ·1e6)²/(μ·1e6) = 1e6·Δ²/μ); mu_u ≥ 2 (the −13
+    // rail) ⇒ no x/0 site. we² can pass 2^53 — the double
+    // product is the same IEEE value in both engines (mirrored
+    // op order), which is all the readout needs.
+    logLinkReadout(withMu(units.crossJoin(broadcast(s3))),
+        floor(we.cast("double") * we.cast("double")
+          / col("mu_u").cast("double") + 0.5).cast("long"))
       .select("n", "sum_y", "beta0", "beta1", "rate_ratio", "dispersion")
   }
 
@@ -829,54 +926,22 @@ object Stats {
         floor((col("y") * lit(1000000L) - col("mu_u")).cast("double")
           / col("mu_u").cast("double") * 1000000 + 0.5).cast("long"),
         lit(-1000000000L)), lit(1000000000L)))
-    def step(d: Column, det: Column): Column =
-      when(det =!= 0.0, least(greatest(
-        floor(d / det + 0.5).cast("long"),
-        lit(-30000000L)), lit(30000000L))).otherwise(0L)
-    def newton(prev: DataFrame): DataFrame = {
-      val s = withZ(units.crossJoin(broadcast(prev)))
+    // the score is already micro, so the step is d/det unscaled
+    def newton(prev: DataFrame): DataFrame =
+      newtonStep2(solve2(withZ(units.crossJoin(broadcast(prev)))
         .agg(max("b0").as("pb0"), max("b1").as("pb1"),
           max("okl").as("ok_prev"),
           count(lit(1)).as("nn"), sum("x").as("sx"),
           sum(col("x") * col("x")).as("sxx"),
-          sum("z_u").as("r0"), sum(col("z_u") * col("x")).as("r1"))
-        .withColumn("a11", col("nn").cast("double"))
-        .withColumn("a12", col("sx").cast("double"))
-        .withColumn("a22", col("sxx").cast("double"))
-        .withColumn("q0", col("r0").cast("double"))
-        .withColumn("q1", col("r1").cast("double"))
-        .withColumn("det", col("a11") * col("a22") - col("a12") * col("a12"))
-        .withColumn("d0", col("q0") * col("a22") - col("a12") * col("q1"))
-        .withColumn("d1", col("a11") * col("q1") - col("a12") * col("q0"))
-      s.select(
-        (col("pb0") + step(col("d0"), col("det"))).as("b0"),
-        (col("pb1") + step(col("d1"), col("det"))).as("b1"),
-        when(col("det") =!= 0.0, col("ok_prev")).otherwise(0L).as("okl"))
-    }
-    val seed = units
-      .agg(coalesce(sum("y"), lit(0L)).as("sy"), count(lit(1)).as("nn"))
-      .select(when(col("sy") > 0,
-        floor(log(col("sy").cast("double") / col("nn").cast("double"))
-          * 1000000 + 0.5).cast("long")).otherwise(0L).as("b0"),
-        lit(0L).as("b1"), lit(1L).as("okl"))
-    val s3 = newton(newton(newton(seed)))
-    withZ(units.crossJoin(broadcast(s3)))
-      .agg(count(lit(1)).as("n"), sum("y").as("sum_y"),
-        max("b0").as("b0"), max("b1").as("b1"), max("okl").as("okl"),
-        // Pearson term ((y−μ)/μ)² = (z_u/1e6)²; ×1e6 ⇒ micro units
-        sum(floor(col("z_u").cast("double") * col("z_u").cast("double")
-          / 1000000.0 + 0.5).cast("long")).as("pchi_u"))
-      .withColumn("ok", col("okl") === 1 && col("n") > 0)
-      .withColumn("beta0",
-        when(col("ok"), r4(col("b0").cast("double") / 1000000.0)))
-      .withColumn("beta1",
-        when(col("ok"), r4(col("b1").cast("double") / 1000000.0)))
-      .withColumn("rate_ratio", when(col("ok"),
-        r4(exp(least(greatest(col("b1").cast("double") / 1000000.0,
-          lit(-13.0)), lit(13.0))))))
-      .withColumn("dispersion", when(col("ok") && col("n") > 2,
-        r4(col("pchi_u").cast("double") / 1.0e6
-          / (col("n") - 2).cast("double"))))
+          sum("z_u").as("r0"), sum(col("z_u") * col("x")).as("r1")),
+        "nn", "sx", "sxx")
+        .withColumn("u0", col("d0") / col("det"))
+        .withColumn("u1", col("d1") / col("det")))
+    val s3 = newton(newton(newton(logMeanSeed(units))))
+    // Pearson term ((y−μ)/μ)² = (z_u/1e6)²; ×1e6 ⇒ micro units
+    logLinkReadout(withZ(units.crossJoin(broadcast(s3))),
+        floor(col("z_u").cast("double") * col("z_u").cast("double")
+          / 1000000.0 + 0.5).cast("long"))
       .withColumn("shape_hat", when(col("ok") && col("n") > 2
           && col("pchi_u") > 0,
         r4((col("n") - 2).cast("double") * 1.0e6
@@ -1135,15 +1200,7 @@ object Stats {
     * mirrored. Shared with `GraftEngine.bartlettTest`.
     */
   private[graft] def bartlettCore(units: DataFrame): DataFrame = {
-    val g = units
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_g"), sum("x").as("sx"),
-        sum(col("x") * col("x")).as("sxx"))
-      .withColumn("s2", when(col("n_g") > 1,
-        (col("sxx").cast("double")
-          - col("sx").cast("double") * col("sx").cast("double")
-            / col("n_g").cast("double"))
-          / (col("n_g") - 1).cast("double")))
+    val g = langVariances(units)
       .withColumn("ln_s2_u", when(col("s2") > 0,
         floor(log(col("s2")) * 1000000 + 0.5).cast("long")))
       .withColumn("w_u", when(col("s2") > 0,
@@ -1454,23 +1511,34 @@ object Stats {
         col("normal_rejected_95"))
       .orderBy("flag")
 
-  /** Welch two-sample t over the two-group value cells (x, cc, ct).
-    * Shared with `GraftEngine.welchT`.
+  /** Per-arm sufficient statistics of the two-group value cells
+    * (x, cc, ct): counts n_c / n_t and the exact sums sx_*, sxx_*.
     */
-  private[graft] def welchTCore(cells: DataFrame): DataFrame =
+  private[graft] def twoGroupSums(cells: DataFrame): DataFrame =
     cells
       .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
         sum(col("cc") * col("x")).as("sx_c"),
         sum(col("ct") * col("x")).as("sx_t"),
         sum(col("cc") * col("x") * col("x")).as("sxx_c"),
         sum(col("ct") * col("x") * col("x")).as("sxx_t"))
-      // n=0 / n=1 guards at DEFINITION: Spark 4 ANSI throws on
-      // double x/0 where DuckDB reads NULL — the guard makes both
-      // engines NULL-propagate identically (DegenerateSpec pins).
+
+  /** Per-arm means m_c / m_t over (n_*, sx_*) sums. The n = 0 guards
+    * sit at the definition: Spark 4 ANSI throws on double x/0 where
+    * DuckDB reads NULL, so the guard makes both engines NULL-propagate
+    * identically (DegenerateSpec pins).
+    */
+  private[graft] def twoGroupMeans(sums: DataFrame): DataFrame =
+    sums
       .withColumn("m_c", when(col("n_c") > 0,
         col("sx_c").cast("double") / col("n_c").cast("double")))
       .withColumn("m_t", when(col("n_t") > 0,
         col("sx_t").cast("double") / col("n_t").cast("double")))
+
+  /** [[twoGroupMeans]] plus the per-arm sample variances v_c / v_t
+    * (NULL below two units) over (n_*, sx_*, sxx_*) sums.
+    */
+  private[graft] def twoGroupVars(sums: DataFrame): DataFrame =
+    twoGroupMeans(sums)
       .withColumn("v_c", when(col("n_c") > 1,
         (col("sxx_c").cast("double")
           - col("sx_c").cast("double") * col("sx_c").cast("double")
@@ -1481,6 +1549,54 @@ object Stats {
           - col("sx_t").cast("double") * col("sx_t").cast("double")
             / col("n_t").cast("double"))
           / (col("n_t") - 1).cast("double")))
+
+  /** Welch z of m_t − m_c over [[twoGroupVars]] (NULL unless both
+    * variances are positive) and its two-sided p in integer micro
+    * units (the Lin approximation, shared with the oracle).
+    */
+  private[graft] def welchZP(vars: DataFrame): DataFrame =
+    vars
+      .withColumn("z", when(col("v_c") > 0 && col("v_t") > 0,
+        r4((col("m_t") - col("m_c"))
+          / sqrt(col("v_c") / col("n_c").cast("double")
+            + col("v_t") / col("n_t").cast("double")))))
+      .withColumn("p_u", when(col("z").isNotNull,
+        floor(least(lit(1.0), lit(2.0)
+          * exp(lit(-0.717) * abs(col("z"))
+            - lit(0.416) * col("z") * col("z"))) * 1000000 + 0.5)
+          .cast("long")))
+
+  /** Line-item prices in integer cents per return flag:
+    * (l_returnflag, l_orderkey, l_linenumber, cents).
+    */
+  private[graft] def flagCents(s: SparkSession, d: String): DataFrame =
+    TestData.lineitem(s, d)
+      .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
+        floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"))
+
+  /** Two order statistics of [[flagCents]] per return flag: n_rows and
+    * the cents at the 1-based ranks `loRank` and `hiRank` (SQL over
+    * the flag's row count n), named `lo` and `hi`. Ties break on
+    * (l_orderkey, l_linenumber).
+    */
+  private[graft] def flagCentsCuts(li: DataFrame, loRank: String, lo: String,
+                                   hiRank: String, hi: String): DataFrame = {
+    val W = Window.partitionBy("l_returnflag")
+      .orderBy("cents", "l_orderkey", "l_linenumber")
+    li.withColumn("rn", row_number().over(W))
+      .withColumn("n", count(lit(1)).over(
+        Window.partitionBy("l_returnflag")))
+      .groupBy("l_returnflag")
+      .agg(max("n").as("n_rows"),
+        max(when(col("rn") === expr(loRank), col("cents"))).as(lo),
+        max(when(col("rn") === expr(hiRank), col("cents"))).as(hi))
+  }
+
+  /** Welch two-sample t over the two-group value cells (x, cc, ct).
+    * Shared with `GraftEngine.welchT`.
+    */
+  private[graft] def welchTCore(cells: DataFrame): DataFrame =
+    twoGroupVars(twoGroupSums(cells))
       .withColumn("se2", col("v_c") / col("n_c").cast("double")
         + col("v_t") / col("n_t").cast("double"))
       .withColumn("t_stat", when(col("v_c") > 0 && col("v_t") > 0,
@@ -1503,18 +1619,7 @@ object Stats {
     * Shared with `GraftEngine.cohensD`.
     */
   private[graft] def cohensDCore(cells: DataFrame): DataFrame =
-    cells
-      .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
-        sum(col("cc") * col("x")).as("sx_c"),
-        sum(col("ct") * col("x")).as("sx_t"),
-        sum(col("cc") * col("x") * col("x")).as("sxx_c"),
-        sum(col("ct") * col("x") * col("x")).as("sxx_t"))
-      // Definition-site ANSI guards: double x/0 throws in Spark 4
-      // (NULL in DuckDB) — degenerate groups must NULL-propagate.
-      .withColumn("m_c", when(col("n_c") > 0,
-        col("sx_c").cast("double") / col("n_c").cast("double")))
-      .withColumn("m_t", when(col("n_t") > 0,
-        col("sx_t").cast("double") / col("n_t").cast("double")))
+    twoGroupMeans(twoGroupSums(cells))
       .withColumn("ss_c", when(col("n_c") > 0,
         col("sxx_c").cast("double")
           - col("sx_c").cast("double") * col("sx_c").cast("double")
@@ -1545,42 +1650,8 @@ object Stats {
     * Shared with `GraftEngine.olsTwo`.
     */
   private[graft] def olsTwoCore(units: DataFrame): DataFrame =
-    units
-      .groupBy("flag")
-      .agg(count(lit(1)).as("n"),
-        sum("x1").as("s1"), sum("x2").as("s2"), sum("y").as("sy"),
-        sum(col("x1") * col("x1")).as("s11"),
-        sum(col("x2") * col("x2")).as("s22"),
-        sum(col("x1") * col("x2")).as("s12"),
-        sum(col("x1") * col("y")).as("s1y"),
-        sum(col("x2") * col("y")).as("s2y"),
-        sum(col("y") * col("y")).as("syy"))
-      .withColumn("cxx1", col("s11").cast("double")
-        - col("s1").cast("double") * col("s1").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cxx2", col("s22").cast("double")
-        - col("s2").cast("double") * col("s2").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cx12", col("s12").cast("double")
-        - col("s1").cast("double") * col("s2").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cx1y", col("s1y").cast("double")
-        - col("s1").cast("double") * col("sy").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cx2y", col("s2y").cast("double")
-        - col("s2").cast("double") * col("sy").cast("double")
-          / col("n").cast("double"))
-      .withColumn("cyy", col("syy").cast("double")
-        - col("sy").cast("double") * col("sy").cast("double")
-          / col("n").cast("double"))
-      .withColumn("det",
-        col("cxx1") * col("cxx2") - col("cx12") * col("cx12"))
-      .withColumn("b1", when(col("det") =!= 0.0,
-        (col("cx1y") * col("cxx2") - col("cx2y") * col("cx12"))
-          / col("det")))
-      .withColumn("b2", when(col("det") =!= 0.0,
-        (col("cx2y") * col("cxx1") - col("cx1y") * col("cx12"))
-          / col("det")))
+    TimeSeries.olsTwoFit(TimeSeries.olsTwoSums(units.groupBy("flag"),
+        "x1", "x2", "y"), lit(true), "b1", "b2")
       .withColumn("icept", when(col("det") =!= 0.0,
         col("sy").cast("double") / col("n").cast("double")
           - col("b1") * (col("s1").cast("double")
@@ -1783,18 +1854,20 @@ object Stats {
       .select("n", "mi_nats", "h_row", "h_col", "nmi")
   }
 
-  /** One-way ANOVA F of `n_chars` across `lang` groups.
-    * Shared with `GraftEngine.anovaF`.
+  /** One-way ANOVA sums of squares of `x` across `lang` groups:
+    * k_groups, n_total, the exact sums, t_sum_u = Σ round(Sx_g²/n_g)
+    * in whole units, and ssb / ssw assembled once on the 1-row
+    * readout.
     */
-  private[graft] def anovaFCore(docs: DataFrame): DataFrame = {
-    val g = docs
+  private[graft] def anovaSums(units: DataFrame, x: String): DataFrame =
+    units
       .groupBy("lang")
-      .agg(count(lit(1)).as("n_g"), sum("n_chars").as("sx"),
-        sum(col("n_chars") * col("n_chars")).as("sxx"))
+      .agg(count(lit(1)).as("n_g"), sum(x).as("sx"),
+        sum(col(x) * col(x)).as("sxx"))
       .withColumn("t_u", floor(col("sx").cast("double")
         * col("sx").cast("double") / col("n_g").cast("double") + 0.5)
         .cast("long"))
-    g.agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
+      .agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
         sum("sx").as("sum_all"), sum("sxx").as("sxx_all"),
         sum("t_u").as("t_sum_u"))
       .withColumn("ssb", col("t_sum_u").cast("double")
@@ -1802,18 +1875,27 @@ object Stats {
           / col("n_total").cast("double"))
       .withColumn("ssw",
         col("sxx_all").cast("double") - col("t_sum_u").cast("double"))
-      // k = 1 ⇒ df_between = 0: F undefined (ANSI x/0 throw vs
-      // DuckDB NULL) — the k_groups > 1 clause guards it.
-      .withColumn("f_stat", when(
-        col("ssw") > 0 && col("n_total") > col("k_groups")
-          && col("k_groups") > 1,
-        r4((col("ssb") / (col("k_groups") - 1).cast("double"))
-          / (col("ssw")
-            / (col("n_total") - col("k_groups")).cast("double")))))
+
+  /** The F ratio over [[anovaSums]]. k = 1 ⇒ df_between = 0: F is
+    * undefined (ANSI x/0 throw vs DuckDB NULL) — the k_groups > 1
+    * clause guards it.
+    */
+  private[graft] def anovaFStat: Column = when(
+    col("ssw") > 0 && col("n_total") > col("k_groups")
+      && col("k_groups") > 1,
+    r4((col("ssb") / (col("k_groups") - 1).cast("double"))
+      / (col("ssw")
+        / (col("n_total") - col("k_groups")).cast("double"))))
+
+  /** One-way ANOVA F of `n_chars` across `lang` groups.
+    * Shared with `GraftEngine.anovaF`.
+    */
+  private[graft] def anovaFCore(docs: DataFrame): DataFrame =
+    anovaSums(docs, "n_chars")
+      .withColumn("f_stat", anovaFStat)
       .select(col("k_groups"), col("n_total"), col("t_sum_u"),
         r4(col("ssb")).as("ssb"), r4(col("ssw")).as("ssw"),
         col("f_stat"))
-  }
 
   /** Beta-binomial empirical-Bayes shrinkage of per-group rates over
     * (nationkey, n, x, p_u) rows with n > 0 (p_u = x·10⁶ DIV n), method of
@@ -1895,17 +1977,7 @@ object Stats {
     * cells included. Shared with `GraftEngine.cramersV`.
     */
   private[graft] def cramersVCore(f: DataFrame): DataFrame = {
-    val cells = f.groupBy("nationkey", "c_mktsegment")
-      .agg(count(lit(1)).as("cnt"))
-    val grid = f.select("nationkey").distinct()
-      .crossJoin(f.select("c_mktsegment").distinct())
-      .join(cells, Seq("nationkey", "c_mktsegment"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-    grid
-      .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
-      .withColumn("c_j", sum("cnt").over(
-        Window.partitionBy("c_mktsegment")))
-      .withColumn("n", sum("cnt").over(Window.partitionBy()))
+    contingencyMargins(contingencyGrid(f))
       .withColumn("e", (col("r_i") * col("c_j")).cast("double")
         / col("n").cast("double"))
       .withColumn("term_u", floor(
@@ -1929,6 +2001,35 @@ object Stats {
                 .cast("double")))))
       .select("n_rows", "n_r", "n_c", "chi2_micro", "cramers_v")
   }
+
+  /** The customer fixture's (nationkey, c_mktsegment) pairs: the
+    * contingency every nation × segment association key reads.
+    */
+  private[graft] def nationSegments(s: SparkSession, d: String): DataFrame =
+    TestData.customer(s, d)
+      .select(col("c_nationkey").cast("long").as("nationkey"),
+        col("c_mktsegment"))
+
+  /** Observed (nationkey, c_mktsegment, cnt) cells of the pairs `f`. */
+  private[graft] def nationSegmentCells(f: DataFrame): DataFrame =
+    f.groupBy("nationkey", "c_mktsegment").agg(count(lit(1)).as("cnt"))
+
+  /** [[nationSegmentCells]] completed to the full nation × segment
+    * grid: absent cells read cnt = 0.
+    */
+  private[graft] def contingencyGrid(f: DataFrame): DataFrame =
+    f.select("nationkey").distinct()
+      .crossJoin(f.select("c_mktsegment").distinct())
+      .join(nationSegmentCells(f), Seq("nationkey", "c_mktsegment"), "left")
+      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
+
+  /** Row total r_i, column total c_j and grand total n on every cell. */
+  private[graft] def contingencyMargins(cells: DataFrame): DataFrame =
+    cells
+      .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
+      .withColumn("c_j", sum("cnt").over(
+        Window.partitionBy("c_mktsegment")))
+      .withColumn("n", sum("cnt").over(Window.partitionBy()))
 
   /** Fisher-z 95 % CI of per-flag Spearman ρ over (flag, n, rho) rows.
     * Shared with `GraftEngine.spearmanCi`.
@@ -2419,12 +2520,7 @@ object Stats {
     // over the grid. Each cell's χ² term is one mirrored IEEE
     // expression quantized to integer MICRO-units before the sum
     // (entropy/PSI precedent), so no n⁴ integer products anywhere.
-    "agg_cramers_v" -> ((s, d) => {
-      val f = TestData.customer(s, d)
-        .select(col("c_nationkey").cast("long").as("nationkey"),
-          col("c_mktsegment"))
-      cramersVCore(f)
-    }),
+    "agg_cramers_v" -> ((s, d) => cramersVCore(nationSegments(s, d))),
 
     // G-TEST OF INDEPENDENCE (round 13): the likelihood-ratio
     // sibling of agg_cramers_v's Pearson χ² over the SAME
@@ -2441,16 +2537,7 @@ object Stats {
     // critical values are df-dependent — publishing G + df is the
     // decomposable artifact).
     "agg_g_test" -> ((s, d) => {
-      val f = TestData.customer(s, d)
-        .select(col("c_nationkey").cast("long").as("nationkey"),
-          col("c_mktsegment"))
-      val cells = f.groupBy("nationkey", "c_mktsegment")
-        .agg(count(lit(1)).as("cnt"))
-      cells
-        .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
-        .withColumn("c_j", sum("cnt").over(
-          Window.partitionBy("c_mktsegment")))
-        .withColumn("n", sum("cnt").over(Window.partitionBy()))
+      contingencyMargins(nationSegmentCells(nationSegments(s, d)))
         .withColumn("term_u", floor(
           col("cnt").cast("double")
             * log(col("cnt").cast("double") * col("n").cast("double")
@@ -2546,21 +2633,8 @@ object Stats {
     // float boundary anywhere. Shape: the 2-row cut table broadcasts
     // back onto the line stream; both aggregates map-side-combine.
     "agg_tukey_fences" -> ((s, d) => {
-      val W = Window.partitionBy("l_returnflag")
-        .orderBy("cents", "l_orderkey", "l_linenumber")
-      val li = TestData.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"))
-      val cuts = li
-        .withColumn("rn", row_number().over(W))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("l_returnflag")))
-        .groupBy("l_returnflag")
-        .agg(max("n").as("n_rows"),
-          max(when(col("rn") === expr("(n + 1) DIV 4"), col("cents")))
-            .as("q1_cents"),
-          max(when(col("rn") === expr("(3 * (n + 1)) DIV 4"), col("cents")))
-            .as("q3_cents"))
+      val li = flagCents(s, d)
+      val cuts = flagCentsCuts(li, "(n + 1) DIV 4", "q1_cents", "(3 * (n + 1)) DIV 4", "q3_cents")
         .withColumn("iqr_cents", col("q3_cents") - col("q1_cents"))
       li.join(broadcast(cuts), "l_returnflag")
         .groupBy("l_returnflag")
@@ -2681,21 +2755,8 @@ object Stats {
     // cut table, broadcast back; kept-row mean in exact integer cents
     // until the final r4 division.
     "agg_trimmed_mean" -> ((s, d) => {
-      val W = Window.partitionBy("l_returnflag")
-        .orderBy("cents", "l_orderkey", "l_linenumber")
-      val li = TestData.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("cents"))
-      val cuts = li
-        .withColumn("rn", row_number().over(W))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("l_returnflag")))
-        .groupBy("l_returnflag")
-        .agg(max("n").as("n_rows"),
-          max(when(col("rn") === expr("(n + 1) DIV 20"), col("cents")))
-            .as("p05_cents"),
-          max(when(col("rn") === expr("(19 * (n + 1)) DIV 20"), col("cents")))
-            .as("p95_cents"))
+      val li = flagCents(s, d)
+      val cuts = flagCentsCuts(li, "(n + 1) DIV 20", "p05_cents", "(19 * (n + 1)) DIV 20", "p95_cents")
       li.join(broadcast(cuts), "l_returnflag")
         .groupBy("l_returnflag")
         .agg(max("n_rows").as("n_rows"),
@@ -2801,21 +2862,7 @@ object Stats {
     // exact sufficient stats as agg_anova_f, three mirrored readout
     // divisions on the 1-row frame.
     "agg_eta_squared" -> ((s, d) => {
-      val g = TestData.documents(s, d)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_g"), sum("n_chars").as("sx"),
-          sum(col("n_chars") * col("n_chars")).as("sxx"))
-        .withColumn("t_u", floor(col("sx").cast("double")
-          * col("sx").cast("double") / col("n_g").cast("double") + 0.5)
-          .cast("long"))
-      g.agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
-          sum("sx").as("sum_all"), sum("sxx").as("sxx_all"),
-          sum("t_u").as("t_sum_u"))
-        .withColumn("ssb", col("t_sum_u").cast("double")
-          - col("sum_all").cast("double") * col("sum_all").cast("double")
-            / col("n_total").cast("double"))
-        .withColumn("ssw",
-          col("sxx_all").cast("double") - col("t_sum_u").cast("double"))
+      anovaSums(TestData.documents(s, d), "n_chars")
         .withColumn("sst", col("ssb") + col("ssw"))
         .withColumn("msw", when(col("n_total") > col("k_groups"),
           col("ssw") / (col("n_total") - col("k_groups")).cast("double")))
@@ -2863,28 +2910,9 @@ object Stats {
         .select(col("lang"), col("n_chars").as("v_hi"))
       val m2 = lo.join(hi, "lang")
         .select(col("lang"), (col("v_lo") + col("v_hi")).as("m2"))
-      val g = ranked.join(broadcast(m2), "lang")
-        .withColumn("z2", abs(col("n_chars") * 2 - col("m2")))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_g"), sum("z2").as("sx"),
-          sum(col("z2") * col("z2")).as("sxx"))
-        .withColumn("t_u", floor(col("sx").cast("double")
-          * col("sx").cast("double") / col("n_g").cast("double") + 0.5)
-          .cast("long"))
-      g.agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
-          sum("sx").as("sum_all"), sum("sxx").as("sxx_all"),
-          sum("t_u").as("t_sum_u"))
-        .withColumn("ssb", col("t_sum_u").cast("double")
-          - col("sum_all").cast("double") * col("sum_all").cast("double")
-            / col("n_total").cast("double"))
-        .withColumn("ssw",
-          col("sxx_all").cast("double") - col("t_sum_u").cast("double"))
-        .withColumn("bf_stat", when(
-          col("ssw") > 0 && col("n_total") > col("k_groups")
-            && col("k_groups") > 1,
-          r4((col("ssb") / (col("k_groups") - 1).cast("double"))
-            / (col("ssw")
-              / (col("n_total") - col("k_groups")).cast("double")))))
+      anovaSums(ranked.join(broadcast(m2), "lang")
+          .withColumn("z2", abs(col("n_chars") * 2 - col("m2"))), "z2")
+        .withColumn("bf_stat", anovaFStat)
         .select(col("k_groups"), col("n_total"), col("t_sum_u"),
           r4(col("ssb")).as("ssb"), r4(col("ssw")).as("ssw"),
           col("bf_stat"))
@@ -2907,29 +2935,12 @@ object Stats {
     // (documented); R2_g² runs in IEEE doubles, mirrored op order.
     // All-one-value corpus ⇒ tie denom 0 ⇒ H NULL in both engines.
     "agg_kruskal_wallis" -> ((s, d) => {
-      val W = Window.orderBy("x")
-      val tieLim = lit(2097152L) // 2^21: t³−t < 2^63 per value cell
-      val cells = TestData.documents(s, d)
-        .select(col("lang"), col("n_chars").cast("long").as("x"))
-        .groupBy("lang", "x").agg(count(lit(1)).as("cg"))
-        .ckpt() // consumed by the value grid AND the join
-      val vals = cells.groupBy("x").agg(sum("cg").as("c"))
-        .withColumn("cum_lt",
-          coalesce(sum("c").over(
-            W.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("r2", lit(2L) * col("cum_lt") + col("c") + 1)
-        .ckpt() // consumed by ranks AND the tie rollup
-      val groups = cells
-        .join(broadcast(vals.select("x", "r2")), "x")
-        .groupBy("lang")
-        .agg(sum("cg").as("n_g"), sum(col("cg") * col("r2")).as("r2_g"))
+      val tieLim = lit(TieCubeCap)
+      val (rankSums, ties) = langMidrankSums(s, d)
+      val groups = rankSums
         .withColumn("term_u", floor(col("r2_g").cast("double")
           * col("r2_g").cast("double") / col("n_g").cast("double") + 0.5)
           .cast("long"))
-      val ties = vals.agg(
-        sum(when(col("c") < tieLim,
-          col("c") * col("c") * col("c") - col("c"))).as("tie_raw"),
-        max("c").as("c_max"))
       groups
         .agg(count(lit(1)).as("k_groups"), sum("n_g").as("n_total"),
           sum("term_u").as("t_sum_u"))
@@ -2967,27 +2978,9 @@ object Stats {
     // 50000 (α = 0.05) — integer cross-multiplication, no float
     // boundary. Tie-cube overflow or N ≤ 1 ⇒ NULL z (never a throw).
     "agg_dunn_posthoc" -> ((s, d) => {
-      val W = Window.orderBy("x")
-      val tieLim = lit(2097152L)
-      val cells = TestData.documents(s, d)
-        .select(col("lang"), col("n_chars").cast("long").as("x"))
-        .groupBy("lang", "x").agg(count(lit(1)).as("cg"))
-        .ckpt()
-      val vals = cells.groupBy("x").agg(sum("cg").as("c"))
-        .withColumn("cum_lt",
-          coalesce(sum("c").over(
-            W.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("r2", lit(2L) * col("cum_lt") + col("c") + 1)
-        .ckpt()
-      val groups = cells
-        .join(broadcast(vals.select("x", "r2")), "x")
-        .groupBy("lang")
-        .agg(sum("cg").as("n_g"), sum(col("cg") * col("r2")).as("r2_g"))
-        .ckpt() // self-joined for pairs + the N rollup
-      val ties = vals.agg(
-        sum(when(col("c") < tieLim,
-          col("c") * col("c") * col("c") - col("c"))).as("tie_raw"),
-        max("c").as("c_max"))
+      val tieLim = lit(TieCubeCap)
+      val (rankSums, ties) = langMidrankSums(s, d)
+      val groups = rankSums.ckpt() // self-joined for pairs + the N rollup
       val tot = groups.agg(sum("n_g").as("n_total"),
         count(lit(1)).as("k_groups"))
       val nD = col("n_total").cast("double")
@@ -3113,26 +3106,7 @@ object Stats {
     // the Tukey convention). Same variantUnitCells sufficient stats
     // as agg_welch_t; significance ⇔ 0 outside the interval.
     "agg_mean_diff_ci" -> ((s, d) => {
-      variantUnitCells(s, d)
-        .agg(sum("cc").as("n_c"), sum("ct").as("n_t"),
-          sum(col("cc") * col("x")).as("sx_c"),
-          sum(col("ct") * col("x")).as("sx_t"),
-          sum(col("cc") * col("x") * col("x")).as("sxx_c"),
-          sum(col("ct") * col("x") * col("x")).as("sxx_t"))
-        .withColumn("m_c", when(col("n_c") > 0,
-          col("sx_c").cast("double") / col("n_c").cast("double")))
-        .withColumn("m_t", when(col("n_t") > 0,
-          col("sx_t").cast("double") / col("n_t").cast("double")))
-        .withColumn("v_c", when(col("n_c") > 1,
-          (col("sxx_c").cast("double")
-            - col("sx_c").cast("double") * col("sx_c").cast("double")
-              / col("n_c").cast("double"))
-            / (col("n_c") - 1).cast("double")))
-        .withColumn("v_t", when(col("n_t") > 1,
-          (col("sxx_t").cast("double")
-            - col("sx_t").cast("double") * col("sx_t").cast("double")
-              / col("n_t").cast("double"))
-            / (col("n_t") - 1).cast("double")))
+      twoGroupVars(twoGroupSums(variantUnitCells(s, d)))
         .withColumn("se", when(col("v_c") > 0 && col("v_t") > 0,
           sqrt(col("v_c") / col("n_c").cast("double")
             + col("v_t") / col("n_t").cast("double"))))
@@ -3239,26 +3213,8 @@ object Stats {
     // All-rows-fully-tied ⇒ denominator 0 ⇒ NULL. Bound: Σ(R2−4n)²
     // ≤ 12n² ⇒ exact to n ≲ 8e8 users, documented.
     "agg_friedman_test" -> ((s, d) => {
-      val b = TestData.events(s, d)
-        .filter(col("event_type").isin("click", "purchase", "error"))
-        .groupBy("user_id")
-        .agg(
-          sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("x1"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("x2"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L))
-            .as("x3"))
-      def r2(j: Column, a: Column, b2: Column): Column =
-        lit(2L) * (when(a < j, 1L).otherwise(0L)
-          + when(b2 < j, 1L).otherwise(0L)) +
-          (lit(1L) + when(a === j, 1L).otherwise(0L)
-            + when(b2 === j, 1L).otherwise(0L)) + 1L
-      val ranked = b
-        .withColumn("r1", r2(col("x1"), col("x2"), col("x3")))
-        .withColumn("r2", r2(col("x2"), col("x1"), col("x3")))
-        .withColumn("r3", r2(col("x3"), col("x1"), col("x2")))
-      ranked.agg(count(lit(1)).as("n_users"),
+      userActionRanks(s, d, "click", "purchase", "error")
+        .agg(count(lit(1)).as("n_users"),
           sum("r1").as("rs1"), sum("r2").as("rs2"), sum("r3").as("rs3"),
           sum(col("r1") * col("r1") + col("r2") * col("r2")
             + col("r3") * col("r3")).as("a2"))
@@ -3293,24 +3249,7 @@ object Stats {
     // until the final z; fully-tied rows cancel in BOTH moments ⇒
     // universe-invariant; all-tied corpus ⇒ Var 0 ⇒ NULL z.
     "agg_page_trend" -> ((s, d) => {
-      val b = TestData.events(s, d)
-        .filter(col("event_type").isin("view", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(
-          sum(when(col("event_type") === "view", 1L).otherwise(0L))
-            .as("x1"),
-          sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("x2"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("x3"))
-      def r2(j: Column, a: Column, b2: Column): Column =
-        lit(2L) * (when(a < j, 1L).otherwise(0L)
-          + when(b2 < j, 1L).otherwise(0L)) +
-          (lit(1L) + when(a === j, 1L).otherwise(0L)
-            + when(b2 === j, 1L).otherwise(0L)) + 1L
-      b.withColumn("r1", r2(col("x1"), col("x2"), col("x3")))
-        .withColumn("r2", r2(col("x2"), col("x1"), col("x3")))
-        .withColumn("r3", r2(col("x3"), col("x1"), col("x2")))
+      userActionRanks(s, d, "view", "click", "purchase")
         .agg(count(lit(1)).as("n_users"),
           sum(col("r1") + lit(2L) * col("r2") + lit(3L) * col("r3"))
             .as("l2"),
@@ -3419,22 +3358,7 @@ object Stats {
     // BIGINTs (n·max(d)² < 2^63 ⇒ n ≲ 9e14/max(d)² users —
     // documented); one mirrored readout, r4. n ≤ 1 or zero variance
     // ⇒ NULL t.
-    "agg_paired_t" -> ((s, d) => {
-      val ev = TestData.events(s, d)
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .withColumn("v_u", floor(col("value") * 1000000 + 0.5)
-          .cast("long"))
-      val mid = ev.agg(expr("(min(ts_us) + max(ts_us)) DIV 2").as("mid"))
-      pairedTCore(
-        ev.crossJoin(broadcast(mid))
-          .groupBy("user_id")
-          .agg(sum(when(col("ts_us") < col("mid"), col("v_u"))
-              .otherwise(0L)).as("s1"),
-            sum(when(col("ts_us") >= col("mid"), col("v_u"))
-              .otherwise(0L)).as("s2"))
-          .withColumn("d_w", floor((col("s1") - col("s2")).cast("double")
-            / 1000000.0).cast("long")))
-    }),
+    "agg_paired_t" -> ((s, d) => pairedTCore(pairedUserDeltas(s, d))),
 
     // BENJAMINI-HOCHBERG FDR (round 11): the multiple-testing layer
     // every segment-level experiment readout needs — 25 per-nation
@@ -3511,18 +3435,9 @@ object Stats {
     }),
 
     "agg_bh_fdr" -> ((s, d) => {
-      val W = Window.partitionBy()
-      val wRank = Window.orderBy(col("p_u").asc_nulls_last, col("nationkey"))
-      nationPValues(s, d)
-        .withColumn("m_tests",
-          sum(when(col("p_u").isNotNull, 1L).otherwise(0L)).over(W))
-        .withColumn("rk", row_number().over(wRank))
+      stepUp(rankedNationPValues(s, d)
         .withColumn("flag", col("p_u").isNotNull
-          && col("p_u") * col("m_tests") <= col("rk") * 100000L)
-        .withColumn("k_max", max(when(col("flag"), col("rk"))).over(W))
-        .withColumn("significant", when(col("p_u").isNotNull,
-          col("k_max").isNotNull && col("rk") <= col("k_max"))
-          .otherwise(lit(false)))
+          && col("p_u") * col("m_tests") <= col("rk") * 100000L))
         .select(col("nationkey"), (col("n_c") + col("n_t")).as("n_users"),
           col("z"), col("p_u"), col("rk"), col("significant"))
         .orderBy("nationkey")
@@ -3544,22 +3459,13 @@ object Stats {
     // the hundreds of millions of tests. BY ⊆ BH
     // rejection containment holds by c(m) ≥ 1.
     "agg_benjamini_yekutieli" -> ((s, d) => {
-      val W = Window.partitionBy()
-      val wRank = Window.orderBy(col("p_u").asc_nulls_last, col("nationkey"))
-      nationPValues(s, d)
-        .withColumn("m_tests",
-          sum(when(col("p_u").isNotNull, 1L).otherwise(0L)).over(W))
-        .withColumn("rk", row_number().over(wRank))
+      stepUp(rankedNationPValues(s, d)
         .withColumn("c_micro",
           sum(when(col("rk") <= col("m_tests"),
-            expr("1000000 DIV rk"))).over(W))
+            expr("1000000 DIV rk"))).over(Window.partitionBy()))
         .withColumn("flag", col("p_u").isNotNull
           && col("p_u") * col("m_tests") * col("c_micro")
-            <= col("rk") * lit(100000L) * lit(1000000L))
-        .withColumn("k_max", max(when(col("flag"), col("rk"))).over(W))
-        .withColumn("significant", when(col("p_u").isNotNull,
-          col("k_max").isNotNull && col("rk") <= col("k_max"))
-          .otherwise(lit(false)))
+            <= col("rk") * lit(100000L) * lit(1000000L)))
         .select(col("nationkey"), (col("n_c") + col("n_t")).as("n_users"),
           col("z"), col("p_u"), col("rk"), col("c_micro"),
           col("significant"))
@@ -3619,20 +3525,7 @@ object Stats {
     // n), mirrored op order, r4. Degenerate single-row/column
     // margins (r_i = n or c_j = n) ⇒ NULL residual.
     "agg_contingency_stdres" -> ((s, d) => {
-      val f = TestData.customer(s, d)
-        .select(col("c_nationkey").cast("long").as("nationkey"),
-          col("c_mktsegment"))
-      val cells = f.groupBy("nationkey", "c_mktsegment")
-        .agg(count(lit(1)).as("cnt"))
-      val grid = f.select("nationkey").distinct()
-        .crossJoin(f.select("c_mktsegment").distinct())
-        .join(cells, Seq("nationkey", "c_mktsegment"), "left")
-        .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-      grid
-        .withColumn("r_i", sum("cnt").over(Window.partitionBy("nationkey")))
-        .withColumn("c_j", sum("cnt").over(
-          Window.partitionBy("c_mktsegment")))
-        .withColumn("n", sum("cnt").over(Window.partitionBy()))
+      contingencyMargins(contingencyGrid(nationSegments(s, d)))
         .withColumn("e", (col("r_i") * col("c_j")).cast("double")
           / col("n").cast("double"))
         .withColumn("den2", col("e")
@@ -3657,12 +3550,8 @@ object Stats {
     // −(m/n)·ln(m/n) over the margins. Bound: cnt·ln(n)·1e6 < 2^63
     // ⇒ n ≲ 2e11 rows (documented; past that drop to milli-nats).
     // One r4 division each at the readout.
-    "agg_mutual_information" -> ((s, d) => {
-      val f = TestData.customer(s, d)
-        .select(col("c_nationkey").cast("long").as("nationkey"),
-          col("c_mktsegment"))
-      mutualInformationCore(f)
-    }),
+    "agg_mutual_information" -> ((s, d) =>
+      mutualInformationCore(nationSegments(s, d))),
 
     // PERMUTATION TEST (round 12): the distribution-free companion
     // to the Welch/MW-U parametric family — p = share of B = 32

@@ -3,6 +3,7 @@ package graft.operators
 import graft.CkptOps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import graft.TestData
 import graft.TestData.r4
@@ -164,19 +165,15 @@ object Streaming {
     // produced entirely by micro-batch execution — must hash-match
     // the batch DuckDB oracle.
     "stream_availablenow_agg" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
       val dir = eventsReplay(d, batch)
       val qn = s"graft_stream_an_${streamSeq.incrementAndGet()}"
-      withStateFanout(s) {
-        val q = s.readStream.schema(batch.schema).parquet(dir)
+      drainToMemory(s, qn, "complete") {
+        s.readStream.schema(batch.schema).parquet(dir)
           .groupBy(window(col("ts"), "30 minutes").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), r4(sum("value")).as("sum_value"))
           .select(col("w.start").as("window_start"), col("event_type"),
                   col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination(120000) finally q.stop()
       }
       s.table(qn).orderBy("window_start", "event_type")
     }),
@@ -187,19 +184,15 @@ object Streaming {
     // count(DISTINCT user_id). Shares the replay directory (and its
     // write) with stream_availablenow_agg.
     "stream_availablenow_dedup" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
       val dir = eventsReplay(d, batch)
       val qn = s"graft_stream_dedup_${streamSeq.incrementAndGet()}"
-      withStateFanout(s) {
-        val q = s.readStream.schema(batch.schema).parquet(dir)
+      drainToMemory(s, qn, "complete") {
+        s.readStream.schema(batch.schema).parquet(dir)
           .select("user_id", "event_type")
           .dropDuplicates("user_id", "event_type")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_distinct_users"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination(120000) finally q.stop()
       }
       s.table(qn).orderBy("event_type")
     }),
@@ -213,25 +206,13 @@ object Streaming {
     // must hash-match the batch DuckDB join. Shares the replay
     // directory with the other AvailableNow keys.
     "stream_availablenow_join" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val batch = TestData.events(s, d)
-      val dir = eventsReplay(d, batch)
-      def side(tpe: String, idAs: String, tsAs: String) =
-        s.readStream.schema(batch.schema).parquet(dir)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(idAs), col("ts").as(tsAs))
-          .withWatermark(tsAs, "1 hour")
-      val clicks = side("click", "c_user", "c_ts")
-      val purchases = side("purchase", "p_user", "p_ts")
+      val (clicks, purchases) = clickPurchaseStreams(s, d)
       val qn = s"graft_stream_join_${streamSeq.incrementAndGet()}"
-      withStateFanout(s) {
-        val q = clicks.join(purchases,
+      drainToMemory(s, qn, "append") {
+        clicks.join(purchases,
             col("c_user") === col("p_user")
               && col("p_ts") >= col("c_ts")
               && col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination(120000) finally q.stop()
       }
       s.table(qn)
         .groupBy(col("c_user").as("user_id"))
@@ -252,26 +233,14 @@ object Streaming {
     // mirrors exactly that cutoff, so the key also PINS the
     // no-data-batch + min-watermark semantics against regression.
     "stream_availablenow_left_join" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val batch = TestData.events(s, d)
-      val dir = eventsReplay(d, batch)
-      def side(tpe: String, idAs: String, tsAs: String) =
-        s.readStream.schema(batch.schema).parquet(dir)
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(idAs), col("ts").as(tsAs))
-          .withWatermark(tsAs, "1 hour")
-      val clicks = side("click", "c_user", "c_ts")
-      val purchases = side("purchase", "p_user", "p_ts")
+      val (clicks, purchases) = clickPurchaseStreams(s, d)
       val qn = s"graft_stream_ljoin_${streamSeq.incrementAndGet()}"
-      withStateFanout(s) {
-        val q = purchases.join(clicks,
+      drainToMemory(s, qn, "append") {
+        purchases.join(clicks,
             col("p_user") === col("c_user")
               && col("c_ts") <= col("p_ts")
               && col("c_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"),
             "left_outer")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination(120000) finally q.stop()
       }
       s.table(qn)
         .groupBy(col("p_user").as("user_id"))
@@ -290,12 +259,11 @@ object Streaming {
     // oracle restricted by the same final-watermark cutoff (sessions
     // still open at end-of-input never emit — mirrored in SQL).
     "stream_availablenow_sessionize" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
       val dir = eventsReplay(d, batch)
       val qn = s"graft_stream_sess_${streamSeq.incrementAndGet()}"
-      withStateFanout(s) {
-        val q = s.readStream.schema(batch.schema).parquet(dir)
+      drainToMemory(s, qn, "append") {
+        s.readStream.schema(batch.schema).parquet(dir)
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "5 minutes").as("sw"),
                    col("user_id"))
@@ -304,9 +272,6 @@ object Streaming {
                  .as("duration_us"))
           .select(col("sw.start").as("session_start"), col("user_id"),
                   col("n"), col("duration_us"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination(120000) finally q.stop()
       }
       s.table(qn).orderBy("user_id", "session_start")
     }),
@@ -321,7 +286,6 @@ object Streaming {
     // same directory inside one plan loses the input); the sink dir
     // is fresh per invocation so reruns stay deterministic.
     "stream_foreachbatch_upsert" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
       val dir = eventsReplay(d, batch)
       val snap = WriteOnce.path(s"fb_upsert_${streamSeq.incrementAndGet()}")
@@ -370,23 +334,7 @@ object Streaming {
     // is one key-shuffle join between two snapshot generations —
     // the same plan as batch CDC, amortized per micro-batch.
     "stream_snapshot_cdf" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val docs = TestData.documents(s, d)
-      val gen1 = docs.select(col("doc_id"), col("lang"), col("n_chars"))
-      val gen2 = gen1.filter(expr("doc_id % 10 != 3"))
-        .withColumn("n_chars",
-          when(expr("doc_id % 10 = 4"), col("n_chars") + lit(1000))
-            .otherwise(col("n_chars")))
-        .unionByName(gen1.filter(expr("doc_id % 10 = 5"))
-          .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-            col("lang"), (col("n_chars") + lit(7)).as("n_chars")))
-      val gen3 = gen2.filter(expr("doc_id % 10 != 6"))
-        .withColumn("n_chars",
-          when(expr("doc_id % 10 = 7"), col("n_chars") + lit(500))
-            .otherwise(col("n_chars")))
-        .unionByName(gen2.filter(expr("doc_id % 10 = 8"))
-          .select((col("doc_id") + lit(20000000L)).as("doc_id"),
-            col("lang"), (col("n_chars") + lit(11)).as("n_chars")))
+      val (gen1, gen2, gen3) = Maintenance.docGenerations(s, d)
       val tag = WriteOnce.inputTag(d, "documents")
       val srcDir = WriteOnce.sink("stream_cdf_src", d, "documents") { srcDir =>
         val dir = new java.io.File(srcDir); dir.mkdirs()
@@ -424,17 +372,8 @@ object Streaming {
             Maintenance.publishSnapshot(snapBase, g, rows.drop("gen"),
               tag, "doc_id", retain = 3)
             if (g > 1) {
-              val v1 = Maintenance.readAsOf(s, snapBase, g - 1)
-                .select(col("doc_id"), col("n_chars").as("old_n_chars"))
-              val v2 = rows
-                .select(col("doc_id"), col("n_chars").as("new_n_chars"))
-              v1.join(v2, Seq("doc_id"), "full_outer")
-                .withColumn("change",
-                  when(col("new_n_chars").isNull, lit("delete"))
-                    .when(col("old_n_chars").isNull, lit("insert"))
-                    .when(col("old_n_chars") =!= col("new_n_chars"),
-                      lit("update")))
-                .filter(col("change").isNotNull)
+              Maintenance.snapshotChanges(
+                  Maintenance.readAsOf(s, snapBase, g - 1), rows)
                 .withColumn("generation", lit(g))
                 .write.mode("append").parquet(cdfDir)
             }
@@ -459,7 +398,6 @@ object Streaming {
     // provider conf is scoped and restored — it only binds at stream
     // start, so concurrent BATCH queries are unaffected.
     "stream_tws_running" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       import graft.streaming.StreamOps
       val batch = TestData.events(s, d)
       val dir = eventsReplay(d, batch)
@@ -469,12 +407,9 @@ object Streaming {
         import s.implicits._
         val events = s.readStream.schema(batch.schema).parquet(dir)
           .as[StreamOps.Event]
-        withStateFanout(s) {
-          val q = StreamOps.runningUserStatsTws(events)
+        drainToMemory(s, qn, "update") {
+          StreamOps.runningUserStatsTws(events)
             .toDF()
-            .writeStream.format("memory").queryName(qn)
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          try q.awaitTermination(120000) finally q.stop()
         }
       }
       s.table(qn)
@@ -493,7 +428,6 @@ object Streaming {
     // source keeps its own offset tracking; the oracle is the batch
     // union by construction.
     "stream_availablenow_union" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
       val batch = TestData.events(s, d)
       val dirA = WriteOnce.sink("stream_un_a", d, "events") { dirA =>
         batch.filter(col("event_type") === "click")
@@ -504,10 +438,10 @@ object Streaming {
           .write.mode("overwrite").parquet(dirB)
       }
       val qn = s"graft_stream_union_${streamSeq.incrementAndGet()}"
-      withStateFanout(s) {
+      drainToMemory(s, qn, "complete") {
         val a = s.readStream.schema(batch.schema).parquet(dirA)
         val b = s.readStream.schema(batch.schema).parquet(dirB)
-        val q = a.unionByName(b)
+        a.unionByName(b)
           .withColumn("v_u",
             floor(col("value") * 1000000 + 0.5).cast("long"))
           .groupBy("event_type")
@@ -515,9 +449,6 @@ object Streaming {
             min("v_u").as("min_value_u"),
             max("v_u").as("max_value_u"),
             sum("v_u").as("sum_value_u"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination(120000) finally q.stop()
       }
       s.table(qn).orderBy("event_type")
     })
@@ -531,6 +462,33 @@ object Streaming {
   private def eventsReplay(d: String, batch: DataFrame): String =
     WriteOnce.sink("stream_an_source", d, "events")(batch.write.mode("overwrite").parquet(_))
 
+  /** The replayed events' click and purchase streams, (c_user, c_ts)
+    * and (p_user, p_ts), each with a 1-hour watermark on its time.
+    */
+  private def clickPurchaseStreams(s: SparkSession,
+                                   d: String): (DataFrame, DataFrame) = {
+    val batch = TestData.events(s, d)
+    val dir = eventsReplay(d, batch)
+    def side(tpe: String, idAs: String, tsAs: String) =
+      s.readStream.schema(batch.schema).parquet(dir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(idAs), col("ts").as(tsAs))
+        .withWatermark(tsAs, "1 hour")
+    (side("click", "c_user", "c_ts"), side("purchase", "p_user", "p_ts"))
+  }
+
+  /** Runs the streaming frame `stream` to its end (Trigger.AvailableNow)
+    * into the memory table `qn` in output `mode`, under
+    * [[withStateFanout]]; `stream` is built inside that scope.
+    */
+  private def drainToMemory(s: SparkSession, qn: String, mode: String)(
+      stream: => DataFrame): Unit =
+    withStateFanout(s) {
+      val q = stream.writeStream.format("memory").queryName(qn)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination(120000) finally q.stop()
+    }
+
   /** Ephemeral-checkpoint base for the gate's one-shot streaming
     * queries (r19, guide §6 / VERDICT r18 #4): with no explicit
     * location Spark puts the temp checkpoint (offset/commit WAL +
@@ -541,11 +499,14 @@ object Streaming {
     * fast path on any deployment with one; falls back to tmpdir when
     * /dev/shm is absent. A durable production stream would set its
     * own checkpointLocation explicitly — this base only catches the
-    * gate's one-shot queries.
+    * gate's one-shot queries. One directory per JVM (named by its
+    * process id) under `/dev/shm/graft_stream_ckpt`: the queries of
+    * one process never see, nor delete, another's checkpoints.
     */
-  private val shmCkptBase: Option[String] = {
+  private[graft] val shmCkptBase: Option[String] = {
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft_stream_ckpt")
+    if (shm.isDirectory && shm.canWrite)
+      Some(s"/dev/shm/graft_stream_ckpt/${ProcessHandle.current().pid()}")
     else None
   }
 

@@ -395,17 +395,8 @@ object TextAnalysis {
   }
 
   /** Coleman-Liau index per document over (doc_id, text) documents. */
-  private[graft] def colemanLiauCore(docs: DataFrame): DataFrame = {
-    val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
-    docs
-      .withColumn("n_words", size(words).cast("long"))
-      .withColumn("n_sentences", greatest(lit(1L),
-        size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-          .cast("long")))
-      .withColumn("n_letters", aggregate(
-        transform(words, w => length(w).cast("long")),
-        lit(0L), (acc, x) => acc + x))
-      .filter(col("n_words") > 0)
+  private[graft] def colemanLiauCore(docs: DataFrame): DataFrame =
+    readabilityCounts(docs)
       .withColumn("cli", r4(lit(0.0588)
         * (lit(100.0) * col("n_letters").cast("double")
           / col("n_words").cast("double"))
@@ -414,10 +405,12 @@ object TextAnalysis {
         - lit(15.8)))
       .select("doc_id", "n_words", "n_sentences", "n_letters", "cli")
       .orderBy("doc_id")
-  }
 
-  /** Automated Readability Index per document over (doc_id, text) */
-  private[graft] def ariIndexCore(docs: DataFrame): DataFrame = {
+  /** Per-doc word ([a-z0-9]+ runs), sentence (at least one) and letter
+    * counts of docs with at least one word — the inputs of the
+    * character-based readability grades.
+    */
+  private[graft] def readabilityCounts(docs: DataFrame): DataFrame = {
     val words = regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0))
     docs
       .withColumn("n_words", size(words).cast("long"))
@@ -428,6 +421,11 @@ object TextAnalysis {
         transform(words, w => length(w).cast("long")),
         lit(0L), (acc, x) => acc + x))
       .filter(col("n_words") > 0)
+  }
+
+  /** Automated Readability Index per document over (doc_id, text) */
+  private[graft] def ariIndexCore(docs: DataFrame): DataFrame =
+    readabilityCounts(docs)
       .withColumn("ari", r4(lit(4.71)
         * (col("n_letters").cast("double") / col("n_words").cast("double"))
         + lit(0.5) * (col("n_words").cast("double")
@@ -435,7 +433,6 @@ object TextAnalysis {
         - lit(21.43)))
       .select("doc_id", "n_words", "n_sentences", "n_letters", "ari")
       .orderBy("doc_id")
-  }
 
   /** SMOG grade per document over (doc_id, text) documents. */
   private[graft] def smogGradeCore(docs: DataFrame): DataFrame = {
@@ -461,21 +458,8 @@ object TextAnalysis {
     * from the corpus's over (lang, text) documents. Shared with
     * `GraftEngine.jsDivergence`.
     */
-  private[graft] def jsDivergenceCore(docs: DataFrame): DataFrame = {
-    val c = docs
-      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("lang", "tok").agg(count(lit(1)).as("c"))
-      .ckpt()
-    val nl = c.groupBy("lang").agg(sum("c").as("n_lang"))
-    val ct = c.groupBy("tok").agg(sum("c").as("c_tok"))
-    val nAll = nl.agg(sum("n_lang").as("n_corpus"))
-    c.join(broadcast(nl), "lang")
-      .join(ct, "tok")
-      .crossJoin(broadcast(nAll))
-      .withColumn("p", col("c").cast("double")
-        / col("n_lang").cast("double"))
-      .withColumn("q", col("c_tok").cast("double")
-        / col("n_corpus").cast("double"))
+  private[graft] def jsDivergenceCore(docs: DataFrame): DataFrame =
+    langTokenShares(docs)
       .withColumn("term_u", floor(
         (col("p") * log(lit(2.0) * col("p") / (col("p") + col("q")))
           + col("q") * log(lit(2.0) * col("q") / (col("p") + col("q"))))
@@ -491,6 +475,26 @@ object TextAnalysis {
             / col("n_corpus")) * log(lit(2.0))) / 2.0))
       .select("lang", "n_lang", "sum_term_u", "jsd")
       .orderBy("lang")
+
+  /** Per-(lang, tok) counts c (checkpointed) with the language's
+    * token share p = c/n_lang and the token's corpus share
+    * q = c_tok/n_corpus.
+    */
+  private[graft] def langTokenShares(docs: DataFrame): DataFrame = {
+    val c = docs
+      .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
+      .groupBy("lang", "tok").agg(count(lit(1)).as("c"))
+      .ckpt()
+    val nl = c.groupBy("lang").agg(sum("c").as("n_lang"))
+    val ct = c.groupBy("tok").agg(sum("c").as("c_tok"))
+    val nAll = nl.agg(sum("n_lang").as("n_corpus"))
+    c.join(broadcast(nl), "lang")
+      .join(ct, "tok")
+      .crossJoin(broadcast(nAll))
+      .withColumn("p", col("c").cast("double")
+        / col("n_lang").cast("double"))
+      .withColumn("q", col("c_tok").cast("double")
+        / col("n_corpus").cast("double"))
   }
 
   /** Top-`k` tokens by collection frequency with their burstiness (cf/df)
@@ -1299,20 +1303,7 @@ object TextAnalysis {
     // rows. Each p·ln(p/q) term micro-nat-quantized BEFORE the sum
     // (PSI protocol); vocabulary-shaped grid, never corpus-grain.
     "text_kl_divergence" -> ((s, d) => {
-      val c = TestData.documents(s, d)
-        .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy("lang", "tok").agg(count(lit(1)).as("c"))
-        .ckpt()
-      val nl = c.groupBy("lang").agg(sum("c").as("n_lang"))
-      val ct = c.groupBy("tok").agg(sum("c").as("c_tok"))
-      val nAll = nl.agg(sum("n_lang").as("n_corpus"))
-      c.join(broadcast(nl), "lang")
-        .join(ct, "tok")
-        .crossJoin(broadcast(nAll))
-        .withColumn("p", col("c").cast("double")
-          / col("n_lang").cast("double"))
-        .withColumn("q", col("c_tok").cast("double")
-          / col("n_corpus").cast("double"))
+      langTokenShares(TestData.documents(s, d))
         .withColumn("term_u",
           floor(col("p") * log(col("p") / col("q")) * 1000000 + 0.5)
             .cast("long"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.CkptOps
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.TestData
@@ -92,10 +92,6 @@ object TextOps {
     */
   private[graft] def jaccardSetScored(sets: DataFrame,
                                       threshold: Double): DataFrame = {
-    import graft.functions.SortedIntersectCount
-    import org.apache.spark.sql.graft.Bridge
-    def isect(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b)))
     val docs = sets
       .select(col("doc_id"), col("lang"),
         array_sort(transform(col("elems"), t => xxhash64(t))).as("th"))
@@ -114,7 +110,33 @@ object TextOps {
           && least(col("na"), col("nb")).cast("double")
                > greatest(col("na"), col("nb")) * threshold)
       .select(col("id_a"), col("id_b"), col("na"), col("nb"),
-        isect(col("ta"), col("tb")).as("inter"))
+        sortedIntersect(col("ta"), col("tb")).as("inter"))
+  }
+
+  /** The size of the intersection of two sorted hash arrays. */
+  private def sortedIntersect(a: Column, b: Column): Column = {
+    import graft.functions.SortedIntersectCount
+    import org.apache.spark.sql.graft.Bridge
+    Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b)))
+  }
+
+  /** One (doc_id, lang, n, g) row per element hash g of each doc's
+    * sorted hash set `th` of size n.
+    */
+  private def hashGrams(t: DataFrame): DataFrame =
+    t.select(col("doc_id"), col("lang"), col("n"), explode(col("th")).as("g"))
+
+  /** The prefix filter of a set-similarity join: each doc's grams
+    * ranked rarest first (per-lang document frequency, ties by hash)
+    * and kept while `keep` holds of the rank `rk`: (doc_id, lang, g).
+    */
+  private def rarePrefix(grams: DataFrame, keep: Column): DataFrame = {
+    val freq = grams.groupBy("lang", "g").agg(count(lit(1)).as("df"))
+    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("g"))
+    grams.join(freq, Seq("lang", "g"))
+      .withColumn("rk", row_number().over(w))
+      .filter(keep)
+      .select(col("doc_id"), col("lang"), col("g"))
   }
 
   /** PREFIX-FILTERED exact Jaccard set-similarity self-join (the
@@ -134,22 +156,12 @@ object TextOps {
     * Input/output contract identical to [[jaccardSetPairs]].
     */
   def jaccardPrefixSetPairs(sets: DataFrame, threshold: Double): DataFrame = {
-    import graft.functions.SortedIntersectCount
-    import org.apache.spark.sql.graft.Bridge
-    def isect(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b)))
     val docs = sets
       .select(col("doc_id"), col("lang"),
         array_sort(transform(col("elems"), t => xxhash64(t))).as("th"))
       .withColumn("n", size(col("th")))
-    val grams = docs.select(col("doc_id"), col("lang"), col("n"),
-      explode(col("th")).as("g"))
-    val freq = grams.groupBy("lang", "g").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("g"))
-    val prefix = grams.join(freq, Seq("lang", "g"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= col("n") - floor(col("n") * threshold))
-      .select(col("doc_id"), col("lang"), col("g"))
+    val prefix = rarePrefix(hashGrams(docs),
+      col("rk") <= col("n") - floor(col("n") * threshold))
     val cand = prefix.as("x").join(prefix.as("y"),
         col("x.lang") === col("y.lang") && col("x.g") === col("y.g")
           && col("x.doc_id") < col("y.doc_id"))
@@ -161,7 +173,7 @@ object TextOps {
                         col("n").as("na")), "id_a")
       .join(side.select(col("doc_id").as("id_b"), col("th").as("tb"),
                         col("n").as("nb")), "id_b")
-      .withColumn("inter", isect(col("ta"), col("tb")))
+      .withColumn("inter", sortedIntersect(col("ta"), col("tb")))
       .withColumn("jac", col("inter").cast("double")
         / (col("na") + col("nb") - col("inter")))
       .filter(col("jac") > threshold)
@@ -405,25 +417,15 @@ object TextOps {
     * sorted-merge intersect with the same integer predicate.
     */
   def containmentPrefixPairs(sets: DataFrame, threshold: Double): DataFrame = {
-    import graft.functions.SortedIntersectCount
-    import org.apache.spark.sql.graft.Bridge
     require(threshold == 0.9, "integer verify predicate is wired for t=0.9")
-    def isect(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      Bridge.column(SortedIntersectCount(
-        Bridge.expression(a), Bridge.expression(b)))
     val t = sets
       .select(col("doc_id"), col("lang"),
         array_sort(transform(array_distinct(col("elems")), x => xxhash64(x)))
           .as("th"))
       .withColumn("n", size(col("th")))
-    val grams = t.select(col("doc_id"), col("lang"), col("n"),
-      explode(col("th")).as("g"))
-    val freq = grams.groupBy("lang", "g").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("g"))
-    val prefix = grams.join(freq, Seq("lang", "g"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= col("n") - expr("(n * 9 + 9) DIV 10") + 1)
-      .select(col("doc_id"), col("lang"), col("g"))
+    val grams = hashGrams(t)
+    val prefix = rarePrefix(grams,
+      col("rk") <= col("n") - expr("(n * 9 + 9) DIV 10") + 1)
     val cand = prefix
       .join(grams.select(col("doc_id").as("cb"), col("lang").as("lb"),
           col("g").as("gb")).hint("shuffle_hash"),
@@ -436,7 +438,7 @@ object TextOps {
       .join(side.select(col("doc_id").as("id_a"), col("th").as("ta"),
         col("n").as("na")), "id_a")
       .join(side.select(col("doc_id").as("id_b"), col("th").as("tb")), "id_b")
-      .withColumn("inter", isect(col("ta"), col("tb")))
+      .withColumn("inter", sortedIntersect(col("ta"), col("tb")))
       .filter(col("inter") * 10 >= col("na") * 9)
       .select(col("id_a"), col("id_b"),
         col("inter").cast("long").as("n_shared"),
@@ -497,6 +499,29 @@ object TextOps {
               .as("shingles"))
         graft.functions.MinHashLsh.nearDupPairs(docs, 0.9).ckpt()
       })
+
+  /** The jaccard detector of [[plantedDetectorScores]] at five
+    * thresholds (micro-unit score ≥ threshold_u flags a pair): true
+    * and false positives tp / fp, and the planted positives n_pos and
+    * negatives n_neg.
+    */
+  private def jaccardThresholdCounts(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val cells = plantedDetectorScores(s, d)
+      .filter(col("detector") === "jaccard")
+      .groupBy("score_u")
+      .agg(sum("is_pos").as("pos"),
+        sum(lit(1L) - col("is_pos")).as("neg"))
+    val thr = Seq(5000L, 7000L, 8000L, 9000L, 9500L)
+      .toDF("threshold_u")
+    cells.crossJoin(broadcast(thr))
+      .groupBy("threshold_u")
+      .agg(sum(when(col("score_u") >= col("threshold_u"), col("pos"))
+          .otherwise(0L)).as("tp"),
+        sum(when(col("score_u") >= col("threshold_u"), col("neg"))
+          .otherwise(0L)).as("fp"),
+        sum("pos").as("n_pos"), sum("neg").as("n_neg"))
+  }
 
   /** Memoized planted-dup detector evaluation corpus (round 14):
     * every 5th doc gets a near-dup variant (3 appended novel tokens,
@@ -1332,21 +1357,7 @@ object TextOps {
     // a ratio of exact integers. Flagged and recall monotone
     // non-increasing in θ by construction (PropertySpec).
     "dedup_threshold_sweep" -> ((s, d) => {
-      import s.implicits._
-      val cells = plantedDetectorScores(s, d)
-        .filter(col("detector") === "jaccard")
-        .groupBy("score_u")
-        .agg(sum("is_pos").as("pos"),
-          sum(lit(1L) - col("is_pos")).as("neg"))
-      val thr = Seq(5000L, 7000L, 8000L, 9000L, 9500L)
-        .toDF("threshold_u")
-      cells.crossJoin(broadcast(thr))
-        .groupBy("threshold_u")
-        .agg(sum(when(col("score_u") >= col("threshold_u"), col("pos"))
-            .otherwise(0L)).as("tp"),
-          sum(when(col("score_u") >= col("threshold_u"), col("neg"))
-            .otherwise(0L)).as("fp"),
-          sum("pos").as("n_pos"))
+      jaccardThresholdCounts(s, d)
         .withColumn("n_flagged", col("tp") + col("fp"))
         .withColumn("precision", when(col("n_flagged") > 0,
           r4(col("tp").cast("double") / col("n_flagged").cast("double"))))
@@ -1458,21 +1469,7 @@ object TextOps {
     // products assembles in doubles on the 5-row readout, mirrored,
     // r4; any zero marginal ⇒ NULL MCC at the definition site.
     "eval_mcc_sweep" -> ((s, d) => {
-      import s.implicits._
-      val cells = plantedDetectorScores(s, d)
-        .filter(col("detector") === "jaccard")
-        .groupBy("score_u")
-        .agg(sum("is_pos").as("pos"),
-          sum(lit(1L) - col("is_pos")).as("neg"))
-      val thr = Seq(5000L, 7000L, 8000L, 9000L, 9500L)
-        .toDF("threshold_u")
-      cells.crossJoin(broadcast(thr))
-        .groupBy("threshold_u")
-        .agg(sum(when(col("score_u") >= col("threshold_u"), col("pos"))
-            .otherwise(0L)).as("tp"),
-          sum(when(col("score_u") >= col("threshold_u"), col("neg"))
-            .otherwise(0L)).as("fp"),
-          sum("pos").as("n_pos"), sum("neg").as("n_neg"))
+      jaccardThresholdCounts(s, d)
         .withColumn("fn", col("n_pos") - col("tp"))
         .withColumn("tn", col("n_neg") - col("fp"))
         .withColumn("mcc", when(

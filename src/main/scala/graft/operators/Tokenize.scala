@@ -45,6 +45,21 @@ object Tokenize {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
         .otherwise(concat(acc, array(x))))
 
+  /** The distinct words of `dw` (a `word` column) with their symbol
+    * sequences `syms` after the 3 BPE merges learned from `docs`, in
+    * merge order.
+    */
+  private def bpeEncodedVocab(docs: DataFrame, dw: DataFrame): DataFrame = {
+    val mseq = bpeMerges(docs, rounds = 3).orderBy("round").collect()
+      .map(r => (r.getString(1), r.getString(2)))
+    val vocabTok = dw.select("word").distinct()
+      .withColumn("syms", expr(
+        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
+    mseq.foldLeft(vocabTok) { case (df, (a, b)) =>
+      df.withColumn("syms", applyMerge(col("syms"), a, b))
+    }
+  }
+
   /** Learn `rounds` BPE merges from an (id, text) corpus. Returns
     * (round, sym_a, sym_b, merged, pair_count), one row per merge,
     * ties broken lexicographically.
@@ -102,17 +117,10 @@ object Tokenize {
     // 3-row driver collect (bounded).
     "pipeline_bpe_apply" -> ((s, d) => {
       val docs = TestData.documents(s, d)
-      val mseq = bpeMerges(docs, rounds = 3).orderBy("round").collect()
-        .map(r => (r.getString(1), r.getString(2)))
       val dw = docs
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0)
-      val vocabTok = dw.select("word").distinct()
-        .withColumn("syms", expr(
-          "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      val enc = mseq.foldLeft(vocabTok) { case (df, (a, b)) =>
-        df.withColumn("syms", applyMerge(col("syms"), a, b))
-      }.select(col("word"), size(col("syms")).as("n_sym"))
+      val enc = bpeEncodedVocab(docs, dw).select(col("word"), size(col("syms")).as("n_sym"))
       dw.join(broadcast(enc), "word")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_words"),
@@ -132,17 +140,10 @@ object Tokenize {
     // the corpus totals of pipeline_bpe_apply (BpeSpec).
     "pipeline_tokenizer_fertility" -> ((s, d) => {
       val docs = TestData.documents(s, d)
-      val mseq = bpeMerges(docs, rounds = 3).orderBy("round").collect()
-        .map(r => (r.getString(1), r.getString(2)))
       val dw = docs
         .select(col("lang"), explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0)
-      val vocabTok = dw.select("word").distinct()
-        .withColumn("syms", expr(
-          "transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      val enc = mseq.foldLeft(vocabTok) { case (df, (a, b)) =>
-        df.withColumn("syms", applyMerge(col("syms"), a, b))
-      }.select(col("word"), size(col("syms")).as("n_sym"),
+      val enc = bpeEncodedVocab(docs, dw).select(col("word"), size(col("syms")).as("n_sym"),
         length(col("word")).as("n_ch"))
       dw.join(broadcast(enc), "word")
         .groupBy("lang")

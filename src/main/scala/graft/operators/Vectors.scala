@@ -192,6 +192,24 @@ object Vectors {
       .orderBy("vec_id")
   }
 
+  /** Exact top-3 cosine neighbours in `corpus` of the ten query
+    * vectors vec_id < 10 of `e`, self excluded, ties by vec_id:
+    * (qid, rnk, nn_id, cos).
+    */
+  private def cosineTop3(corpus: DataFrame, e: DataFrame): DataFrame = {
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
+    corpus.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("qid"))
+      .withColumn("score", V.cosine(col("embedding"), col("qv")))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 3)
+      .select(col("qid"), col("rnk"), col("vec_id").as("nn_id"),
+              r4(col("score")).as("cos"))
+      .orderBy("qid", "rnk")
+  }
+
   val defs: Map[String, Q] = Map(
     "vec_l2_norm" -> ((s, d) =>
       TestData.embeddings(s, d)
@@ -323,17 +341,7 @@ object Vectors {
     // per-query top-3 via ranking window on the query id.
     "knn_batch_topk" -> ((s, d) => {
       val e = TestData.embeddings(s, d)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val scored = e.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("score", V.cosine(col("embedding"), col("qv")))
-      val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("qid"), col("rnk"), col("vec_id").as("nn_id"),
-                r4(col("score")).as("cos"))
-        .orderBy("qid", "rnk")
+      cosineTop3(e, e)
     }),
 
     // Same query as knn_batch_topk, but ranked by the bounded-heap
@@ -384,18 +392,7 @@ object Vectors {
     // pushed filter, so at 100 TB the scan itself shrinks.
     "knn_filtered_topk" -> ((s, d) => {
       val e = TestData.embeddings(s, d)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val scored = e.filter(col("label") === 3)
-        .crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("score", V.cosine(col("embedding"), col("qv")))
-      val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
-      scored.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("qid"), col("rnk"), col("vec_id").as("nn_id"),
-                r4(col("score")).as("cos"))
-        .orderBy("qid", "rnk")
+      cosineTop3(e.filter(col("label") === 3), e)
     }),
 
     // Near-duplicate candidate pairs, blocked on label (the exact

@@ -40,11 +40,14 @@ object ComponentsReference {
         .select(col("id"),
           least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"))
     }
-    var prevSum = labels.agg(sum(col("comp")).cast("long")).first().getLong(0)
+    // an empty node universe sums to NULL: read it as 0 (converged)
+    def labelSum(lbl: DataFrame): Long =
+      lbl.agg(coalesce(sum(col("comp")).cast("long"), lit(0L))).first().getLong(0)
+    var prevSum = labelSum(labels)
     var converged = false
     while (!converged) {
       val next = propagate(propagate(labels)).ckpt()
-      val s2 = next.agg(sum(col("comp")).cast("long")).first().getLong(0)
+      val s2 = labelSum(next)
       labels = next
       converged = s2 == prevSum
       prevSum = s2

@@ -355,6 +355,27 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a gate streaming key deletes only its own process's checkpoints") {
+    // Another process (a second test JVM, a Verify from another
+    // checkout) keeps its one-shot checkpoints in a sibling directory
+    // under the same /dev/shm base; running a key here must leave it.
+    val base = new java.io.File("/dev/shm/graft_stream_ckpt")
+    assume(base.getParentFile.isDirectory && base.getParentFile.canWrite,
+      "no writable /dev/shm: the checkpoints go to java.io.tmpdir")
+    val sibling = new java.io.File(base, s"planted-${java.util.UUID.randomUUID()}")
+    val planted = new java.io.File(sibling, "commits/0")
+    assert(planted.getParentFile.mkdirs())
+    java.nio.file.Files.write(planted.toPath, Array[Byte](1))
+    try {
+      val rows = graft.operators.Streaming.defs("stream_availablenow_dedup")(
+        spark, sf("sf0.001")).collect()
+      assert(rows.nonEmpty)
+      assert(planted.isFile, s"another process's checkpoint was deleted: $planted")
+      val own = new java.io.File(base, ProcessHandle.current().pid().toString)
+      assert(!own.exists(), s"this process's checkpoints were left behind: $own")
+    } finally org.apache.spark.network.util.JavaUtils.deleteQuietly(sibling)
+  }
+
   test("session windows merge events within gap across micro-batches") {
     val input = MemoryStream[Event](spark)
     val q = StreamOps.sessionStats(input.toDF(), "5 minutes", "10 minutes")
